@@ -1,0 +1,34 @@
+package graftbench
+
+/** Minimal JSON rendering for the run record (maps, sequences, numbers,
+  * strings, booleans, null). */
+object Json {
+  def render(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => render(x)
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double =>
+      if (d.isNaN || d.isInfinite) "null" else java.lang.Double.toString(d)
+    case f: Float => render(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case n: BigInt => n.toString
+    case n: java.math.BigDecimal => n.toPlainString
+    case n: BigDecimal => n.bigDecimal.toPlainString
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + render(x) }
+        .mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(render).mkString("[", ",", "]")
+    case xs: Array[_] => render(xs.toSeq)
+    case other => quote(other.toString)
+  }
+
+  def quote(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
+}
