@@ -258,7 +258,7 @@ object Similarity {
     * from a self-join on the gated stream — sort-merge streams and spills
     * gracefully, with no per-bucket buffer (s05's 6-bit tables have only
     * 64 buckets each, so occupancy is DENSE; the r13 one-row-per-bucket
-    * aggregation measured 2.8× slower at 10× scale, tools/R14Knn). A
+    * aggregation measured 2.8× slower at 10× scale, OPTIMIZATION_r14.md). A
     * degenerate bucket beyond the cap drops its candidates OBSERVABLY via
     * the `knn_lsh.dropped_bucket_rows` observation (the same
     * approximate-with-observable-drops discipline as minhashCandidates) —
@@ -290,8 +290,8 @@ object Similarity {
     // (per-bucket id lists, list-local pair explode) kept memory bounded
     // but measured 2.8× SLOWER than the old self-join at the
     // 10×-amplified dir (21 s vs 7 s for the pair+distinct stage,
-    // tools/R14Knn) — s05's 6-bit hyperplane tables have only 64 buckets
-    // each, so buckets are DENSE (avg occupancy ≈ n/64) and the
+    // OPTIMIZATION_r14.md) — s05's 6-bit hyperplane tables have only 64
+    // buckets each, so buckets are DENSE (avg occupancy ≈ n/64) and the
     // one-row-per-bucket shape concentrates each bucket's occupancy²
     // pair stream in a single task of the distinct's partial aggregate.
     // The r14 shape keeps r13's safety valves — the over-cap gate and

@@ -80,7 +80,7 @@ object Aggregates {
       (s, dir) => {
         // Two COUNT(DISTINCT)s in one agg make Catalyst Expand the input 3×;
         // splitting into per-key distinct aggs + a join of tiny grouped
-        // results measures ~25% faster at sf0.1 (graft.tools.DistinctExp)
+        // results measures ~25% faster at sf0.1 (BASELINE.md row B7)
         // and scales better (no row multiplication on the fact scan).
         val li = t(s, dir, "lineitem")
         val base = li.groupBy(col("l_linestatus")).agg(

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Materialize a k×-amplified copy of a driver SF dir (VERDICT r11
@@ -7,9 +8,9 @@ import org.apache.spark.sql.functions._
   * (key → key·k + i), so each copy is a disjoint, internally-consistent
   * sub-database and every join cardinality scales exactly k×. Dimension
   * tables (region/nation) copy unchanged — at 100 TB the dims stay
-  * broadcast-sized too. The scheme is ScaleStress's clone discipline,
-  * materialized to parquet so the UNMODIFIED graft.Bench can run the
-  * full headline set at sf1-equivalent facts.
+  * broadcast-sized too. Materialized to parquet so the UNMODIFIED
+  * graft.Bench can run the full headline set at sf1-equivalent facts;
+  * ScaleInvarianceSpec checks the real queries against the same clone map.
   * Usage: runMain graft.tools.AmplifyData [srcDir] [outDir] [k] */
 object AmplifyData {
   def main(a: Array[String]): Unit = {
@@ -18,20 +19,31 @@ object AmplifyData {
     val src = a.headOption.getOrElse("/root/testdata/sf0.1")
     val out = a.lift(1).getOrElse("/tmp/graft_sfa")
     val k = a.lift(2).map(_.toInt).getOrElse(10)
-    // key columns to offset per table: primary keys AND the foreign keys
-    // that reference an offset primary key — never the dim keys
-    val offsetKeys: Seq[(String, Seq[String])] = Seq(
-      "region" -> Nil,
-      "nation" -> Nil,
-      "customer" -> Seq("c_custkey"),
-      "supplier" -> Seq("s_suppkey"),
-      "part" -> Seq("p_partkey"),
-      "orders" -> Seq("o_orderkey", "o_custkey"),
-      "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
-      "events" -> Seq("event_id", "user_id"),
-      "documents" -> Seq("doc_id"),
-      "embeddings" -> Seq("vec_id"))
-    offsetKeys.foreach { case (t, keys) =>
+    amplify(spark, src, out, k).foreach { case (t, n) =>
+      println(s"[amplify] $t rows=$n")
+    }
+    spark.stop()
+  }
+
+  /** Key columns offset per table: primary keys AND the foreign keys that
+    * reference an offset primary key — never the dim keys. */
+  private val offsetKeys: Seq[(String, Seq[String])] = Seq(
+    "region" -> Nil,
+    "nation" -> Nil,
+    "customer" -> Seq("c_custkey"),
+    "supplier" -> Seq("s_suppkey"),
+    "part" -> Seq("p_partkey"),
+    "orders" -> Seq("o_orderkey", "o_custkey"),
+    "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
+    "events" -> Seq("event_id", "user_id"),
+    "documents" -> Seq("doc_id"),
+    "embeddings" -> Seq("vec_id"))
+
+  /** Write the k×-amplified copy of every table of `src` under `out`;
+    * returns each table's amplified row count. */
+  def amplify(spark: SparkSession, src: String, out: String,
+      k: Int): Seq[(String, Long)] =
+    offsetKeys.map { case (t, keys) =>
       val df = spark.read.parquet(s"$src/$t.parquet")
       val amp =
         if (keys.isEmpty) df
@@ -39,9 +51,6 @@ object AmplifyData {
           keys.foldLeft(df)((d, c) => d.withColumn(c, col(c) * k + i))
         }.reduce(_ unionByName _)
       amp.write.mode("overwrite").parquet(s"$out/$t.parquet")
-      val n = spark.read.parquet(s"$out/$t.parquet").count()
-      println(s"[amplify] $t rows=$n")
+      t -> spark.read.parquet(s"$out/$t.parquet").count()
     }
-    spark.stop()
-  }
 }

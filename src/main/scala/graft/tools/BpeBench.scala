@@ -1,5 +1,8 @@
 package graft.tools
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
 /** Wall-time probe for production-sized BPE vocab training: `numMerges`
   * merges at a given batch size over a documents table. The batched merge
   * rounds exist so a 30-50k-merge vocab doesn't mean 30-50k sequential
@@ -20,8 +23,19 @@ object BpeBench {
     val dir = a.headOption.getOrElse("/root/testdata/sf0.01")
     val merges = a.lift(1).map(_.toInt).getOrElse(256)
     val batch = a.lift(2).map(_.toInt).getOrElse(16)
-    import org.apache.spark.sql.functions._
-    val docs = if (dir.startsWith("synthetic")) {
+    val docs = corpus(spark, dir)
+    val t0 = System.nanoTime()
+    val n = graft.operators.TextAnalysis
+      .bpeTrain(docs, "text", merges, batch).count()
+    println(f"[bpe-bench] merges=$n batch=$batch " +
+      f"wall=${(System.nanoTime() - t0) / 1e9}%.1fs dir=$dir")
+    spark.stop()
+  }
+
+  /** The documents table of `dir`, or for `synthetic[:V[:D]]` a
+    * deterministic Zipf-ish corpus of V distinct words over D docs. */
+  def corpus(spark: SparkSession, dir: String): DataFrame =
+    if (dir.startsWith("synthetic")) {
       val parts = dir.split(":")
       val v = parts.lift(1).map(_.toInt).getOrElse(30000)
       val d = parts.lift(2).map(_.toInt).getOrElse(20000)
@@ -36,11 +50,4 @@ object BpeBench {
         })).as("text"))
         .localCheckpoint(true)
     } else graft.core.Tables.load(spark, dir, "documents")
-    val t0 = System.nanoTime()
-    val n = graft.operators.TextAnalysis
-      .bpeTrain(docs, "text", merges, batch).count()
-    println(f"[bpe-bench] merges=$n batch=$batch " +
-      f"wall=${(System.nanoTime() - t0) / 1e9}%.1fs dir=$dir")
-    spark.stop()
-  }
 }

@@ -11,12 +11,14 @@ import graft.queries.Q.{dec2, dsum}
   * stand-in for a production table layout where both facts are
   * hash-distributed on the join key at write time.
   *
-  * Measures the q03 join (fact side) three ways:
+  * Measures the q03 join (fact side) two ways:
   *   plain     — parquet scans, shuffle both sides (today's default)
   *   bucketed  — both facts bucketed on the order key: the li⋈ord join
   *               plans with ZERO exchange on either side
   * Prints one JSON line with medians; BucketingSpec asserts the
-  * zero-exchange property, this main measures it.
+  * zero-exchange property, this main measures it. To measure at 10×,
+  * point it at an AmplifyData output dir.
+  * Usage: runMain graft.tools.BucketedBench [sfDir]
   */
 object BucketedBench {
 
@@ -44,58 +46,10 @@ object BucketedBench {
     // broadcast via the explicit hint, exactly as at scale).
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    import spark.implicits._
 
-    // SPARK_GRAFT_AMPLIFY=k replicates the fact tables k× with per-copy
-    // key offsets (join cardinalities preserved: every copy of a lineitem
-    // finds exactly its copy of the order, every order its customer), so
-    // sf0.1 × 10 gives an honest SF1-scale (6M-row) join measurement
-    // without new source data. Amplified tables are materialized to
-    // parquet first — both layouts must pay a real scan.
-    val amplify = sys.env.getOrElse("SPARK_GRAFT_AMPLIFY", "1").toInt
-    val (li, ord, cust) = if (amplify <= 1) {
-      (Tables.load(spark, sfDir, "lineitem"),
-        Tables.load(spark, sfDir, "orders"),
-        Tables.load(spark, sfDir, "customer"))
-    } else {
-      // cache key = full source path + a fingerprint of the source files
-      // (name/size/mtime), so a different dir with the same basename or a
-      // regenerated dataset can never silently reuse stale amplified data
-      val fingerprint = {
-        val files = Seq("lineitem", "orders", "customer").flatMap { t =>
-          val f = new java.io.File(s"$sfDir/$t.parquet")
-          val all = if (f.isDirectory) f.listFiles().toSeq else Seq(f)
-          all.map(x => (x.getName, x.length, x.lastModified))
-        }
-        math.abs((sfDir, files).hashCode).toString
-      }
-      val dir = s"/tmp/graft_amplified_${amplify}x_$fingerprint"
-      if (!new java.io.File(s"$dir/_done").exists()) {
-        val li0 = Tables.load(spark, sfDir, "lineitem")
-        val ord0 = Tables.load(spark, sfDir, "orders")
-        val cust0 = Tables.load(spark, sfDir, "customer")
-        val maxO = ord0.agg(max($"o_orderkey")).head().getLong(0) + 1
-        val maxC = cust0.agg(max($"c_custkey")).head().getLong(0) + 1
-        val copies = explode(array((0 until amplify).map(lit): _*)).as("__copy")
-        li0.select($"*", copies)
-          .withColumn("l_orderkey", $"l_orderkey" + $"__copy" * maxO)
-          .drop("__copy")
-          .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-        ord0.select($"*", copies)
-          .withColumn("o_orderkey", $"o_orderkey" + $"__copy" * maxO)
-          .withColumn("o_custkey", $"o_custkey" + $"__copy" * maxC)
-          .drop("__copy")
-          .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-        cust0.select($"*", copies)
-          .withColumn("c_custkey", $"c_custkey" + $"__copy" * maxC)
-          .drop("__copy")
-          .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-        new java.io.File(s"$dir/_done").createNewFile()
-      }
-      (spark.read.parquet(s"$dir/lineitem.parquet"),
-        spark.read.parquet(s"$dir/orders.parquet"),
-        spark.read.parquet(s"$dir/customer.parquet"))
-    }
+    val li = Tables.load(spark, sfDir, "lineitem")
+    val ord = Tables.load(spark, sfDir, "orders")
+    val cust = Tables.load(spark, sfDir, "customer")
     val nat = Tables.load(spark, sfDir, "nation")
     val reg = Tables.load(spark, sfDir, "region")
 
@@ -157,7 +111,7 @@ object BucketedBench {
     val bucketed = run(q03(liB, ordB))
     println(s"""{"metric":"q03_bucketed_vs_plain","plain_sec":$plain,""" +
       s""""bucketed_sec":$bucketed,"bucket_write_sec":$tWrite,""" +
-      s""""buckets":$buckets,"amplify":$amplify,"rows":${li.count()},"sf":"$sfDir"}""")
+      s""""buckets":$buckets,"rows":${li.count()},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

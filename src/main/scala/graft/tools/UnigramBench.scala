@@ -20,20 +20,7 @@ object UnigramBench {
     val vocab = a.lift(1).map(_.toInt).getOrElse(8192)
     val cap = a.lift(2).map(_.toInt).getOrElse(4 * vocab)
     val em = a.lift(3).map(_.toInt).getOrElse(2)
-    import org.apache.spark.sql.functions._
-    val docs = if (dir.startsWith("synthetic")) {
-      val parts = dir.split(":")
-      val v = parts.lift(1).map(_.toInt).getOrElse(30000)
-      val d = parts.lift(2).map(_.toInt).getOrElse(20000)
-      spark.range(d).select(col("id").as("doc_id"),
-        concat_ws(" ", transform(sequence(lit(0), lit(59)), j => {
-          val u = (pmod(xxhash64(col("id"), j), lit(1000000L)).cast("double")
-            / 1e6)
-          concat(lit("w"), conv((u * u * u * v).cast("long").cast("string"),
-            10, 36))
-        })).as("text"))
-        .localCheckpoint(true)
-    } else graft.core.Tables.load(spark, dir, "documents")
+    val docs = BpeBench.corpus(spark, dir)
     val t0 = System.nanoTime()
     val n = graft.operators.TextAnalysis
       .unigramLmTrain(docs, "text", vocab, seedMaxLen = 4,

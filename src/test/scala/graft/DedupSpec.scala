@@ -179,6 +179,20 @@ class DedupSpec extends SparkSpec {
     assert(cleaned(3L)._2 == 0L)
   }
 
+  test("duplicate spans: one hot 8-gram shared by every doc gives one span " +
+      "per doc") {
+    // boilerplate flood: 10k docs = the same 8 words + a unique 9th token.
+    // The hot gram's 10k occurrences combine map-side in the hashed-gram
+    // count, so no single task sorts them all.
+    val hot = spark.range(10000L).select(col("id").as("doc_id"),
+      concat(lit("common cookie banner text appears on every site token"),
+        col("id")).as("text"))
+    val spans = Dedup.duplicateSpans(hot, "doc_id", "text", k = 8)
+    assert(spans.count() == 10000L)
+    assert(spans.filter(col("span_start") =!= 0 || col("span_end") =!= 7 ||
+      col("n_dup_grams") =!= 1L).isEmpty)
+  }
+
   test("duplicate spans: within-doc repetition counts as duplication") {
     val phrase = "a1 a2 a3 a4 a5 a6 a7 a8"
     val docs = Seq(
@@ -326,6 +340,17 @@ class DedupSpec extends SparkSpec {
       .filter(Dedup.bloomMightContain(bits, col("__g"), m))
       .count()
     assert(negHits < 500L, s"bloom pruned nothing: $negHits FPs of 10000")
+    // adversarial regime: the same 500 members in an undersized 1024-bit
+    // set (~95% of bits set, FP rate ≈ 0.7) — false positives must exist,
+    // yet the probe must still prune (a saturated set passes everything)
+    val small = 1 << 10
+    val smallBits = Dedup.bloomBitsOf(members, "__g", small)
+    val fpHits = spark.range(10000, 20000)
+      .select(xxhash64(col("id")).as("__g"))
+      .filter(Dedup.bloomMightContain(smallBits, col("__g"), small))
+      .count()
+    assert(fpHits > 0L && fpHits < 10000L,
+      s"undersized bloom: $fpHits FPs of 10000")
     // the probe is a joinless scan→filter that stays in whole-stage
     // codegen — the BloomProbe kernel must not fall back to an
     // interpreted Predicate (the shared-subexpression Janino trap the
@@ -452,6 +477,17 @@ class DedupSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"window sort leaked into plan:\n$plan")
     assert(plan.contains("partial_max"), s"map-side combine missing:\n$plan")
+    // one hot key holding half of 10k rows: every other key is a singleton,
+    // the hot survivor is the arg-max (999, highest id) = 4999, and its
+    // counters are exact
+    val hotKeyed = spark.range(10000L).select(
+      when($"id" < 5000L, lit("hot")).otherwise(concat(lit("k"), $"id"))
+        .as("src"), ($"id" % 1000L).as("q"), $"id")
+    val best = Dedup.keepBestPerKey(hotKeyed, "src", "q", "id")
+    assert(best.count() == 5001L)
+    val hotRow = best.filter($"src" === "hot").head()
+    assert((hotRow.getLong(1), hotRow.getLong(2), hotRow.getLong(3),
+      hotRow.getLong(4)) == ((4999L, 999L, 5000L, 2497500L)))
   }
 
   test("decontaminateSpans excises exactly the benchmark-covered tokens; " +
