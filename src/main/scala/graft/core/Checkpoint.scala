@@ -1,6 +1,10 @@
 package graft.core
 
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage cut with a selectable durability mode.
   *
@@ -24,6 +28,10 @@ import org.apache.spark.sql.DataFrame
   * it only appears to work in local mode. Checkpoint files accumulate per
   * app run; set `spark.cleaner.referenceTracking.cleanCheckpoints=true`
   * (or clean the directory between runs) on long-lived sessions.
+  *
+  * A cut's blocks live until driver GC frees them. A long-lived owner
+  * that supersedes its cuts (the SQL front door's table versions) frees
+  * them at once with [[release]].
   *
   * The reference has no equivalent (single-node MVCC storage is its
   * durability story); this is the Spark-native translation of that
@@ -58,5 +66,40 @@ object Checkpoint {
         df.checkpoint(eager = true)
       case _ => df.localCheckpoint(eager = true)
     }
+  }
+
+  /** Unpersist `cut`'s blocks, without blocking, unless one of `holders`
+    * still reads them; returns whether it released them. `cut` is a frame
+    * [[cut]] returned: a `LogicalRDD` over the checkpointed RDD. A holder
+    * reads it when its plan (subqueries included) holds an RDD whose
+    * lineage reaches that RDD: the `LogicalRDD` itself, or a frame built
+    * with `createDataFrame` over an RDD derived from it. A frame that reads
+    * released blocks fails when it runs ("checkpoint block not found"); it
+    * never returns other rows. In reliable mode the files stay in the
+    * checkpoint directory. */
+  def release(cut: DataFrame, holders: Iterable[DataFrame]): Boolean =
+    cut.queryExecution.analyzed match {
+      case own: LogicalRDD =>
+        val held = holders.exists(h => reaches(planRdds(h), own.rdd.id))
+        if (!held) own.rdd.unpersist(blocking = false)
+        !held
+      case _ => true // a streaming pass-through holds no blocks
+    }
+
+  /** The RDDs a frame's plan reads directly. */
+  private def planRdds(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collectWithSubqueries { case r: LogicalRDD => r.rdd }
+
+  /** Whether the lineage of `roots` holds the RDD `id`. A checkpointed
+    * RDD's lineage stops at its checkpoint, so the walk stays short. */
+  private def reaches(roots: Seq[RDD[_]], id: Int): Boolean = {
+    val seen = mutable.HashSet.empty[Int]
+    val todo = mutable.Stack[RDD[_]](roots: _*)
+    while (todo.nonEmpty) {
+      val r = todo.pop()
+      if (r.id == id) return true
+      if (seen.add(r.id)) r.dependencies.foreach(d => todo.push(d.rdd))
+    }
+    false
   }
 }

@@ -179,7 +179,7 @@ final case class Model private (
     val t = engine.table(tn)
     val cond = top.acc.getOrElse(lit(true))
     val n = t.filter(cond).count()
-    engine.register(tn,
+    engine.commitVersion(tn,
       graft.operators.Dml.update(t, cond,
         sets.map { case (c, v) => c.toLowerCase -> lit(v) }.toMap))
     n
@@ -192,7 +192,7 @@ final case class Model private (
     val t = engine.table(tn)
     val cond = top.acc.getOrElse(lit(true))
     val n = t.filter(cond).count()
-    engine.register(tn, graft.operators.Dml.delete(t, cond))
+    engine.commitVersion(tn, graft.operators.Dml.delete(t, cond))
     n
   }
 

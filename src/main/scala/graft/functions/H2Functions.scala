@@ -515,14 +515,18 @@ object H2Functions {
     u.register("encrypt", (a: String, k: Array[Byte], d: Array[Byte]) => encrypt(a, k, d))
     u.register("decrypt", (a: String, k: Array[Byte], d: Array[Byte]) => decrypt(a, k, d))
     // RANDOM_UUID/SYS_GUID (Function.java math group) — nondeterministic by
-    // contract, excluded from oracle queries.
-    u.register("random_uuid", () => java.util.UUID.randomUUID().toString)
+    // contract, excluded from oracle queries. Flagged nondeterministic so
+    // the optimizer never folds or duplicates a call, and the SQL front
+    // door fixes the values a DML statement writes.
+    import org.apache.spark.sql.functions.udf
+    u.register("random_uuid",
+      udf(() => java.util.UUID.randomUUID().toString).asNondeterministic())
     // SECURE_RAND(n) (Function.java SECURE_RAND): n cryptographic bytes
-    u.register("secure_rand", (n: Int) => {
+    u.register("secure_rand", udf((n: Int) => {
       val b = new Array[Byte](math.max(n, 1))
       new java.security.SecureRandom().nextBytes(b)
       b
-    })
+    }).asNondeterministic())
     u.register("truncate_value", (d: java.lang.Double, s: Int) => truncateValue(d, s))
     // FORMATDATETIME/PARSEDATETIME (2-4 args): Spark UDFs are single-arity,
     // so the Engine renames calls by argument count (renameByArity)

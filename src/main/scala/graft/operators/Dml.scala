@@ -8,6 +8,11 @@ import org.apache.spark.sql.functions._
   * mutations (dml/Merge.java:35,146, Update.java:45, Delete.java:36); the
   * Spark-native equivalent is a declarative rewrite of the full table, which
   * parallelizes over partitions and is snapshot-atomic at the file level.
+  *
+  * Each rewrite is lazy: it plans over the whole input version. A caller
+  * that chains rewrites bounds the chain itself — the SQL front door
+  * materializes every 10th version of a table (`Engine.commitDml`), so a
+  * read never re-runs more than 9 rewrites.
   */
 object Dml {
 

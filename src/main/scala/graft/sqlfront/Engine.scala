@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.core.Checkpoint
 import graft.operators.Dml
 
 /** H2-dialect SQL front door (SURVEY §4.3 "thin SQL front-door translator"
@@ -42,8 +43,12 @@ import graft.operators.Dml
   *     string-literal safety is structural, not simulated
   *
   * Tables live as temp views so translated SQL sees them; every mutation
-  * re-registers the view (snapshot semantics — readers of the old DataFrame
-  * keep their snapshot, exactly like the reference's MVCC read view).
+  * re-registers the view. Each table is a bounded version chain: one
+  * materialized base plus at most `CompactEvery - 1` lazy DML versions
+  * ([[commitDml]]). A frame returned by [[sql]] reads the table version
+  * current when its statement ran; collect or cache it before later DML
+  * compacts that table, after which it fails loudly instead of returning
+  * rows.
   */
 final class Engine(val spark: SparkSession)
     extends EngineTranslate with EngineSelect with EngineDdl
@@ -371,7 +376,8 @@ final class Engine(val spark: SparkSession)
       val phaseHit = ph == phase || (ph == "INSTEAD OF" && phase == "BEFORE")
       if (tbl == tn && up.contains(event) && phaseHit)
         triggerImpls.get(n).foreach { impl =>
-          impl(event, oldRows, newRows)
+          firing += 1
+          try impl(event, oldRows, newRows) finally firing -= 1
           if (ph == "INSTEAD OF") insteadOf = true
         }
     }
@@ -442,6 +448,64 @@ final class Engine(val spark: SparkSession)
 
   def table(name: String): DataFrame = tables(name.toLowerCase)
 
+  /** The DML statement that compacts a table's version chain: the 9
+    * statements before it stay lazy rewrites of the base. Fewer lazy
+    * versions make reads cheaper and writes dearer; on the statement-stream
+    * benchmark 10 kept most of the read gain of 3 and 6 at the lowest
+    * write latency (CHANGES.md). */
+  private[sqlfront] val CompactEvery = 10
+
+  /** Lazy DML versions over each table's base (see [[commitDml]]). */
+  private[sqlfront] val pendingDml = mutable.HashMap.empty[String, Int]
+
+  /** Bases [[commitDml]] cut and has not released yet. */
+  private[sqlfront] val cuts = mutable.ArrayBuffer.empty[DataFrame]
+
+  /** The one commit point of INSERT, MERGE, UPDATE, DELETE and upsert
+    * (and of the DSL's `Model`, through [[commitVersion]]).
+    * Register the statement's new table version as a lazy rewrite of the
+    * previous one, unless it is the table's `CompactEvery`th pending
+    * version or its rows hold a nondeterministic or current-time
+    * expression: then materialize it as the table's new base (narrow
+    * coalesce, so the partition count never grows with the inserts). A
+    * volatile version is fixed at once, so its values are those of the
+    * statement's run and do not change from read to read. The superseded
+    * base is released when the statement is done ([[releaseUnheld]]). */
+  private[sqlfront] def commitDml(name: String, df: DataFrame): Unit = {
+    val n = name.toLowerCase
+    val depth = pendingDml.getOrElse(n, 0) + 1
+    if (depth < CompactEvery && !volatile(df)) {
+      register(n, df)
+      pendingDml(n) = depth
+    } else {
+      val base = Checkpoint.cut(df.coalesce(spark.sparkContext.defaultParallelism))
+      register(n, base)
+      pendingDml(n) = 0
+      cuts += base
+    }
+  }
+
+  private def volatile(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectWithSubqueries { case p => p }
+      .exists(p => !p.deterministic || p.containsPattern(
+        org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE))
+
+  /** Release the bases that no registered frame reads: neither a table or
+    * view of the catalog nor one held by the transaction snapshot or a
+    * savepoint. Runs at the end of every statement: after a compaction
+    * (once the statement's AFTER triggers have read the version it
+    * superseded), and after COMMIT, ROLLBACK, RELEASE, BEGIN or a DROP
+    * dropped a holder. A statement a trigger runs leaves the release to
+    * the statement that fired the trigger. */
+  private def releaseUnheld(): Unit = if (cuts.nonEmpty && firing == 0) {
+    val holders = tables.values.toSeq ++
+      (txn.toSeq ++ savepointMap.values).flatMap(_.tables.map(_._2))
+    cuts.filterInPlace(c => !Checkpoint.release(c, holders))
+  }
+
+  /** Trigger implementations running now (see [[fireTriggers]]). */
+  private var firing = 0
+
   /** Whether CREATE INDEX also applies [[bucket]] on the indexed key —
     * toggled by `SET BUCKETED_INDEXES 1` (graft extension, default off). */
   private[sqlfront] var bucketedIndexes: Boolean = false
@@ -500,7 +564,13 @@ final class Engine(val spark: SparkSession)
     * path as SQL INSERT: align, identity/sequence fill, constraints. */
   def insertFrom(tableName: String, cols: Option[Seq[String]],
       src: DataFrame): Unit =
-    doInsert(tableName, cols.map(_.mkString(",")), src)
+    try doInsert(tableName, cols.map(_.mkString(",")), src)
+    finally releaseUnheld()
+  /** Commit `df` as the next DML version of table `name`, as a DML
+    * statement does ([[commitDml]]), and release superseded bases. For
+    * writers that build the version themselves (the DSL's `Model`). */
+  def commitVersion(name: String, df: DataFrame): Unit =
+    try commitDml(name, df) finally releaseUnheld()
   def tableNames: Seq[String] = tables.keys.toSeq
   def mode: String = compatibilityMode
 
@@ -509,7 +579,7 @@ final class Engine(val spark: SparkSession)
   def sql(text: String): DataFrame =
     splitStatements(Lex.normalizeBackquotes(
         Lex.normalizeDollarQuotes(Lex.stripComments(text))))
-      .map(execTimed).lastOption
+      .map(s => try execTimed(s) finally releaseUnheld()).lastOption
       .getOrElse(spark.emptyDataFrame)
 
   // ---- SET QUERY_STATISTICS (dml/Set.java; QueryStatisticsTest):
@@ -598,14 +668,17 @@ final class Engine(val spark: SparkSession)
   private[sqlfront] var refIntegrity = true
 
   // ---- transactions (TransactionStatement, Parser.java:560-650) ----
-  // A transaction is a snapshot of the catalog: every table is an immutable
-  // DataFrame and every mutation re-registers a new one (copy-on-write), so
-  // BEGIN captures the maps and ROLLBACK restores them — real single-session
-  // snapshot semantics, the 1-session degenerate case of the reference's
-  // MVCC read view. Sequences and IDENTITY counters are deliberately NOT
-  // rolled back (H2/reference semantics: Sequence values survive rollback).
-  // DDL is covered by the snapshot too — an extension; the reference
-  // auto-commits around DDL.
+  // A transaction is a snapshot of the catalog: every table version is an
+  // immutable DataFrame and every mutation registers a new one, so BEGIN
+  // captures the maps (with each table's pending-version count) and
+  // ROLLBACK restores them — real single-session snapshot semantics, the
+  // 1-session degenerate case of the reference's MVCC read view. A version
+  // a snapshot holds keeps its base's blocks alive across later
+  // compactions; they are released once COMMIT, ROLLBACK, RELEASE or a
+  // new BEGIN drops the snapshot (releaseUnheld). Sequences and IDENTITY
+  // counters are deliberately NOT rolled back (H2/reference semantics:
+  // Sequence values survive rollback). DDL is covered by the snapshot too —
+  // an extension; the reference auto-commits around DDL.
   private[sqlfront] case class CatalogSnapshot(
       tables: Seq[(String, DataFrame)],
       primaryKeys: Map[String, Seq[String]],
@@ -620,7 +693,8 @@ final class Engine(val spark: SparkSession)
       schemas: Seq[String],
       rights: Seq[(String, String, String)],
       notNullCols: Map[String, Set[String]],
-      colDefaults: Seq[(String, Seq[(String, String)])])
+      colDefaults: Seq[(String, Seq[(String, String)])],
+      pendingDml: Map[String, Int])
   private[sqlfront] var txn: Option[CatalogSnapshot] = None
   private[sqlfront] val savepointMap = mutable.LinkedHashMap.empty[String, CatalogSnapshot]
   private[sqlfront] var autocommit = true
@@ -631,7 +705,8 @@ final class Engine(val spark: SparkSession)
     tables.toSeq, primaryKeys.toMap, identityCols.toMap, indexes.toSeq,
     foreignKeys.toSeq, checks.toSeq, viewDefs.toSeq, constants.toSeq,
     domains.toSeq, triggers.toSeq, schemas.toSeq, rights.toSeq,
-    notNullCols.toMap, colDefaults.toSeq.map { case (t, m) => (t, m.toSeq) })
+    notNullCols.toMap, colDefaults.toSeq.map { case (t, m) => (t, m.toSeq) },
+    pendingDml.toMap)
 
   private[sqlfront] def restore(s: CatalogSnapshot): Unit = {
     val restored = s.tables.map(_._1).toSet
@@ -654,6 +729,7 @@ final class Engine(val spark: SparkSession)
     s.colDefaults.foreach { case (t, ds) =>
       colDefaults(t) = mutable.LinkedHashMap(ds: _*)
     }
+    pendingDml.clear(); pendingDml ++= s.pendingDml
   }
 
   /** Normalize the CREATE-statement head (Parser.java:367-369 + 3969-3987):
@@ -901,8 +977,8 @@ final class Engine(val spark: SparkSession)
         refIntegrity = v.equalsIgnoreCase("TRUE")
         if (refIntegrity)
           foreignKeys.filter(_.table == tn.toLowerCase).foreach { fk =>
-            require(Dml.fkViolations(table(fk.table), fk.cols,
-              table(fk.refTable), fk.refCols).isEmpty,
+            require(noRows(Dml.fkViolations(table(fk.table), fk.cols,
+              table(fk.refTable), fk.refCols)),
               s"FK ${fk.name} violated on revalidation")
           }
         status()
@@ -982,7 +1058,7 @@ final class Engine(val spark: SparkSession)
       case createPkRe(name, tn, cols) =>
         // CREATE PRIMARY KEY [HASH] name ON t(cols) (index-test shapes)
         val ks = cols.split(",").map(_.trim.toLowerCase).toSeq
-        require(Dml.duplicateKeys(table(tn), ks).isEmpty,
+        require(noRows(Dml.duplicateKeys(table(tn), ks)),
           s"PRIMARY KEY $name violated by existing rows")
         primaryKeys(tn.toLowerCase) = ks
         indexes(name.toLowerCase) =
@@ -1019,7 +1095,7 @@ final class Engine(val spark: SparkSession)
         }
         val ks = cols.split(",").map(_.trim.toLowerCase).toSeq
         if (unique != null)
-          require(Dml.duplicateKeys(nonNullKeyed(table(tn), ks), ks).isEmpty,
+          require(noRows(Dml.duplicateKeys(nonNullKeyed(table(tn), ks), ks)),
             s"unique index $name violated by existing rows")
         indexes(name.toLowerCase) =
           IndexDef(name.toLowerCase, tn.toLowerCase, ks, unique != null)
@@ -1137,7 +1213,7 @@ final class Engine(val spark: SparkSession)
         notNullCols.clear(); colDefaults.clear()
         roles.clear(); roles += "public"; roleGrants.clear()
         comments.clear(); rowidPk.clear(); rowidTables.clear()
-        rowidNext.clear()
+        rowidNext.clear(); pendingDml.clear()
         status()
       case createSchemaRe(ine, name, owner) =>
         val n = name.toLowerCase
@@ -1616,7 +1692,13 @@ final class Engine(val spark: SparkSession)
           t.select(keyCols: _*).distinct(), key, "left_anti")
         if (!(fireTriggers(tn, "UPDATE", "BEFORE", oldMatched, replaced) |
             fireTriggers(tn, "INSERT", "BEFORE", t.limit(0), insertedArm))) {
-          register(name, Dml.mergeInto(t, aligned, key, nullKeysMatch = false))
+          // a driver-local source is de-duplicated on the driver, so the
+          // pending version holds no window exchange for later reads
+          commitDml(name, lastPerKeyLocal(aligned, key) match {
+            case Some(src) => Dml.mergeInto(t, src, key,
+              onDupSourceKeys = "unchecked", nullKeysMatch = false)
+            case None => Dml.mergeInto(t, aligned, key, nullKeysMatch = false)
+          })
           fireTriggers(tn, "UPDATE", "AFTER", oldMatched, replaced)
           fireTriggers(tn, "INSERT", "AFTER", t.limit(0), insertedArm)
         }
@@ -1653,7 +1735,7 @@ final class Engine(val spark: SparkSession)
         val tn = name.toLowerCase
         val newRows = Dml.update(oldRows, lit(true), setMap)
         if (!fireTriggers(tn, "UPDATE", "BEFORE", oldRows, newRows)) {
-          register(name, out)
+          commitDml(name, out)
           fireTriggers(tn, "UPDATE", "AFTER", oldRows, newRows)
         }
         status()
@@ -1678,7 +1760,7 @@ final class Engine(val spark: SparkSession)
         }
         val tn = name.toLowerCase
         if (!fireTriggers(tn, "DELETE", "BEFORE", oldRows, t.limit(0))) {
-          register(name, out)
+          commitDml(name, out)
           fireTriggers(tn, "DELETE", "AFTER", oldRows, t.limit(0))
         }
         status()

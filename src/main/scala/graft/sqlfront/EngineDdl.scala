@@ -2,7 +2,10 @@ package graft.sqlfront
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.Dml
@@ -119,6 +122,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
       !(t == "COLUMN" && cn.startsWith(n + ".")) }
     tableStorage.remove(n); onCommitActions.remove(n)
     tableCodegen.remove(n)
+    pendingDml.remove(n)
     spark.catalog.dropTempView(n)
   }
 
@@ -230,23 +234,23 @@ private[sqlfront] trait EngineDdl { this: Engine =>
           .getOrElse(throw new IllegalArgumentException(
             s"no primary key on $ref to reference"))
         if (validate)
-          require(Dml.fkViolations(table(tn), cCols, table(ref), rCols).isEmpty,
+          require(noRows(Dml.fkViolations(table(tn), cCols, table(ref), rCols)),
             s"FK $cn violated by existing rows")
         foreignKeys += FkDef(cn, tn, cCols, ref.toLowerCase, rCols)
       case ckParenRe(e) =>
         if (validate)
-          require(Dml.checkViolations(table(tn), expr(e)).isEmpty,
+          require(noRows(Dml.checkViolations(table(tn), expr(e))),
             s"CHECK $cn violated by existing rows")
         checks += CheckDef(cn, tn, e.trim)
       case ckBareRe(e) =>
         if (validate)
-          require(Dml.checkViolations(table(tn), expr(e)).isEmpty,
+          require(noRows(Dml.checkViolations(table(tn), expr(e))),
             s"CHECK $cn violated by existing rows")
         checks += CheckDef(cn, tn, e.trim)
       case uqRe(ixName, cols) =>
         val ks = keys(cols)
         if (validate)
-          require(Dml.duplicateKeys(nonNullKeyed(table(tn), ks), ks).isEmpty,
+          require(noRows(Dml.duplicateKeys(nonNullKeyed(table(tn), ks), ks)),
             s"UNIQUE $cn violated by existing rows")
         indexes(Option(ixName).map(_.toLowerCase).getOrElse(cn)) =
           IndexDef(Option(ixName).map(_.toLowerCase).getOrElse(cn), tn, ks,
@@ -254,7 +258,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
       case pkRe(cols, ixName) =>
         val ks = keys(cols)
         if (validate)
-          require(Dml.duplicateKeys(table(tn), ks).isEmpty,
+          require(noRows(Dml.duplicateKeys(table(tn), ks)),
             s"PRIMARY KEY $cn violated by existing rows")
         primaryKeys(tn) = ks
         Option(ixName).foreach(ix => indexes(ix.toLowerCase) =
@@ -479,7 +483,15 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     q
   }
 
-  /** VALUES tuples → DataFrame with the target table's schema. */
+  /** VALUES tuples → a driver-local DataFrame (a LocalRelation), evaluated
+    * once. Spark's inline table folds literal tuples into a LocalRelation
+    * at analysis, with no job. What it cannot fold there — a subquery, a
+    * UDF such as RANDOM_UUID(), tuples only UNION's string promotion
+    * unifies, or CURRENT_TIMESTAMP, which it folds only at optimization —
+    * is evaluated here with one collect, so the statement writes the
+    * values of its own run and later reads never re-evaluate them. Column
+    * types are those of the `SELECT … UNION ALL SELECT …` form wherever
+    * the inline table resolves; the target's cast follows either way. */
   private[sqlfront] def parseValueRows(tableName: String, tuples0: String,
       insertCols: Option[Seq[String]] = None): DataFrame = {
     val t = table(tableName)
@@ -502,8 +514,69 @@ private[sqlfront] trait EngineDdl { this: Engine =>
         substSequences(substConstants(z, Seq(tableName.toLowerCase)))
       }
     }
-    val selects = rows.map(vs => s"SELECT ${vs.mkString(", ")}")
-    spark.sql(selects.mkString(" UNION ALL "))
+    val inline =
+      try Some(spark.sql(rows.map(_.mkString("(", ", ", ")"))
+        .mkString("SELECT * FROM VALUES ", ", ", "")))
+      catch { case scala.util.control.NonFatal(_) => None }
+    inline.filter(_.queryExecution.analyzed.collectLeaves()
+        .forall(_.isInstanceOf[LocalRelation]))
+      .getOrElse {
+        val df = inline.getOrElse(spark.sql(
+          rows.map(vs => s"SELECT ${vs.mkString(", ")}").mkString(" UNION ALL ")))
+        spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+      }
+  }
+
+  /** The rows of a driver-local frame — one whose optimized plan is a
+    * LocalRelation, such as a VALUES batch and projections of it — read
+    * without a job; None for any other frame. The leaf test on the
+    * analyzed plan spares other frames an extra optimizer pass. */
+  private[sqlfront] def localRows(df: DataFrame): Option[Array[Row]] =
+    if (!df.queryExecution.analyzed.collectLeaves()
+        .forall(_.isInstanceOf[LocalRelation])) None
+    else df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => Some(df.collect())
+      case _ => None
+    }
+
+  /** Key tuple of a row with the equality Spark groups by: binary keys by
+    * content, -0.0 equal to 0.0 and every NaN equal to every other. */
+  private def keyOf(r: Row, idx: Seq[Int]): Seq[Any] =
+    idx.map(i => r.get(i) match {
+      case b: Array[Byte] => b.toSeq
+      case d: Double => if (d.isNaN) NaNKey else if (d == 0.0) 0.0 else d
+      case f: Float => if (f.isNaN) NaNKey else if (f == 0.0f) 0.0f else f
+      case v => v
+    })
+  private case object NaNKey
+
+  /** [[Dml.lastPerKey]] on the driver, for a driver-local frame: the last
+    * row per key in row order, with every NULL-keyed row kept. None when
+    * `df` is not driver-local. */
+  private[sqlfront] def lastPerKeyLocal(df: DataFrame,
+      keys: Seq[String]): Option[DataFrame] =
+    localRows(df).map { rows =>
+      val idx = keys.map(df.schema.fieldIndex)
+      val last = rows.indices.map(i => keyOf(rows(i), idx) -> i).toMap
+      val kept = rows.indices.filter { i =>
+        val k = keyOf(rows(i), idx)
+        k.contains(null) || last(k) == i
+      }
+      spark.createDataFrame(java.util.Arrays.asList(kept.map(rows): _*), df.schema)
+    }
+
+  /** Whether a violations frame holds no row: one the optimizer folds to
+    * a LocalRelation without a job, any other in one job that stops
+    * reading each partition at its first row. (`Dataset.isEmpty` reads one
+    * partition first, then the rest in further jobs.) */
+  private[sqlfront] def noRows(violations: DataFrame): Boolean = {
+    val qe = violations.queryExecution
+    qe.optimizedPlan match {
+      case r: LocalRelation => r.data.isEmpty
+      case _ => !SQLExecution.withNewExecutionId(qe, Some("noRows")) {
+        qe.toRdd.mapPartitions(it => Iterator.single(it.hasNext)).collect()
+      }.contains(true)
+    }
   }
 
   /** Positional align + cast to the target schema (SelectUnion.java:113
@@ -651,7 +724,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     // an INSTEAD OF trigger replaces the insert (fireBeforeRow done=true)
     if (fireTriggers(tn, "INSERT", "BEFORE", t.limit(0), aligned)) return
     validateConstraints(tn, aligned)
-    register(name, t.union(aligned))
+    commitDml(name, t.union(aligned))
     fireTriggers(tn, "INSERT", "AFTER", t.limit(0), aligned)
   }
 
@@ -680,7 +753,8 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     // simultaneously and would emit one target row per duplicate — keep the
     // LAST source row per key (the net effect for assignment-style SETs);
     // NULL keys never conflict. Shared idiom: Dml.lastPerKey.
-    val src = Dml.lastPerKey(src1, key, exemptNullKeys = true)
+    val src = lastPerKeyLocal(src1, key)
+      .getOrElse(Dml.lastPerKey(src1, key, exemptNullKeys = true))
     val setPairs = splitTop(sets).map { s =>
       val Array(c, v) = s.split("=", 2)
       // VALUES(col) → the source row's value (MySQL VALUES() function)
@@ -721,7 +795,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     val oldMatched = t.alias("__t2").join(srcR, keyCond, "left_semi")
     if (fireTriggers(tn, "UPDATE", "BEFORE", oldMatched, modified) |
         fireTriggers(tn, "INSERT", "BEFORE", t.limit(0), batch)) return
-    register(name, finalTable)
+    commitDml(name, finalTable)
     fireTriggers(tn, "UPDATE", "AFTER", oldMatched, modified)
     fireTriggers(tn, "INSERT", "AFTER", t.limit(0), batch)
   }
@@ -734,17 +808,47 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     validateRowConstraints(tn, batch)
     // Unique enforcement on insert (PK + unique indexes — the per-batch
     // twin of the reference's per-row unique-index probe,
-    // GlobalUniqueIndex.java:33): a batch-internal duplicate check plus a
-    // semi join against existing keys. NULL-keyed rows never conflict
-    // (Mode.java:88-99 default).
+    // GlobalUniqueIndex.java:33). NULL-keyed rows never conflict
+    // (Mode.java:88-99 default). A driver-local batch (VALUES) finds its
+    // internal duplicates on the driver and probes the table for its keys
+    // in one single-pass job; any other batch groups its keys and semi
+    // joins them against the table's.
+    lazy val local = localRows(batch)
     uniqueKeySets(tn).foreach { ks =>
       if (ks.forall(batch.columns.contains)) {
-        val b = nonNullKeyed(batch, ks)
-        require(Dml.duplicateKeys(b, ks).isEmpty,
-          s"unique key (${ks.mkString(",")}) violated within insert batch on $tn")
-        require(b.join(table(tn).select(ks.map(col).toSeq: _*), ks, "left_semi").isEmpty,
-          s"unique key (${ks.mkString(",")}) violated: key already exists in $tn")
+        val within =
+          s"unique key (${ks.mkString(",")}) violated within insert batch on $tn"
+        val exists =
+          s"unique key (${ks.mkString(",")}) violated: key already exists in $tn"
+        local match {
+          case Some(rows) =>
+            val idx = ks.map(batch.schema.fieldIndex)
+            val keyed = rows.filter(r => idx.forall(i => !r.isNullAt(i)))
+            require(keyed.map(keyOf(_, idx)).distinct.length == keyed.length, within)
+            require(keyed.isEmpty ||
+              noRows(table(tn).filter(keyIn(batch.schema, ks, keyed.toSeq))), exists)
+          case None =>
+            val b = nonNullKeyed(batch, ks)
+            require(noRows(Dml.duplicateKeys(b, ks)), within)
+            require(noRows(
+              b.join(table(tn).select(ks.map(col).toSeq: _*), ks, "left_semi")), exists)
+        }
       }
+    }
+  }
+
+  /** `ks IN (the keys of rows)`, typed by `schema`: one IN list (an InSet
+    * beyond a few keys) over the key column, or over a struct of them. */
+  private def keyIn(schema: StructType, ks: Seq[String], rows: Seq[Row]): Column = {
+    val idx = ks.map(schema.fieldIndex)
+    val fields = idx.map(schema.fields(_))
+    def lit(v: Any, dt: DataType) = GraftColumnBridge.column(Literal.create(v, dt))
+    if (ks.size == 1)
+      col(ks.head).isin(rows.map(r => lit(r.get(idx.head), fields.head.dataType)): _*)
+    else {
+      val st = StructType(fields.map(f => StructField(f.name, f.dataType)))
+      struct(ks.map(col): _*)
+        .isin(rows.map(r => lit(Row.fromSeq(idx.map(r.get)), st)): _*)
     }
   }
 
@@ -752,12 +856,12 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     * validateConstraints / validateUniqueWithin for the two unique shapes). */
   private[sqlfront] def validateRowConstraints(tn: String, rows: DataFrame): Unit = {
     if (refIntegrity) foreignKeys.filter(_.table == tn).foreach { fk =>
-      require(Dml.fkViolations(rows, fk.cols, table(fk.refTable), fk.refCols).isEmpty,
+      require(noRows(Dml.fkViolations(rows, fk.cols, table(fk.refTable), fk.refCols)),
         s"FK ${fk.name} violated: ${fk.table}(${fk.cols.mkString(",")}) → " +
           s"${fk.refTable}(${fk.refCols.mkString(",")})")
     }
     checks.filter(_.table == tn).foreach { ck =>
-      require(Dml.checkViolations(rows, expr(ck.expr)).isEmpty,
+      require(noRows(Dml.checkViolations(rows, expr(ck.expr))),
         s"CHECK ${ck.name} violated: ${ck.expr}")
     }
   }
@@ -768,7 +872,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
   private[sqlfront] def validateUniqueWithin(tn: String, finalTable: DataFrame): Unit =
     uniqueKeySets(tn).foreach { ks =>
       if (ks.forall(finalTable.columns.contains))
-        require(Dml.duplicateKeys(nonNullKeyed(finalTable, ks), ks).isEmpty,
+        require(noRows(Dml.duplicateKeys(nonNullKeyed(finalTable, ks), ks)),
           s"unique key (${ks.mkString(",")}) violated after upsert on $tn")
     }
 

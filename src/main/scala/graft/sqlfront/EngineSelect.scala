@@ -532,6 +532,7 @@ private[sqlfront] trait EngineSelect { this: Engine =>
     tableStorage.remove(from).foreach(tableStorage(to) = _)
     onCommitActions.remove(from).foreach(onCommitActions(to) = _)
     tableCodegen.remove(from).foreach(tableCodegen(to) = _)
+    pendingDml.remove(from).foreach(pendingDml(to) = _)
     register(to, df)
   }
 

@@ -59,6 +59,12 @@ class EngineSpec extends SparkSpec {
     e.sql("MERGE INTO mt VALUES (3,'C3'), (4,'d')")
     assert(e.sql("SELECT v FROM mt WHERE k=3").head().getString(0) == "C3")
     assert(e.sql("SELECT count(*) FROM mt").head().getLong(0) == 4)
+    // a repeated source key: the last row wins; a NULL key inserts
+    e.sql("MERGE INTO mt KEY(k) VALUES (4,'d1'), (5,'e'), (4,'d2'), (NULL,'n')")
+    val after = e.sql("SELECT k, v FROM mt ORDER BY k NULLS FIRST")
+      .collect().map(r => (Option(r.get(0)), r.getString(1))).toSeq
+    assert(after == Seq((None, "n"), (Some(1), "a"), (Some(2), "B2"),
+      (Some(3), "C3"), (Some(4), "d2"), (Some(5), "e")))
   }
 
   test("UPDATE/DELETE with WHERE and LIMIT (Update.java:140-150)") {
@@ -1457,5 +1463,143 @@ class EngineSpec extends SparkSpec {
     val err = intercept[Exception](
       e.sql("SELECT NEXTVAL('nosuch') FROM SYSTEM_RANGE(1,1)"))
     assert(err.getMessage.contains("\"NOSUCH\" not found"), err.getMessage)
+  }
+
+  test("values written by DML are fixed when the statement runs") {
+    val e = freshEngine
+    e.sql("CREATE TABLE vf (k int PRIMARY KEY, s varchar(100), ts timestamp)")
+    val q = "SELECT k, s, CAST(ts AS STRING) FROM vf ORDER BY k"
+    def read = e.sql(q).collect().toSeq
+    Seq(
+      "INSERT INTO vf VALUES (1, 'a', CURRENT_TIMESTAMP)",
+      "INSERT INTO vf VALUES (2, RANDOM_UUID(), NULL)",
+      "UPDATE vf SET ts = CURRENT_TIMESTAMP WHERE k = 2",
+      "INSERT INTO vf SELECT X + 10, RANDOM_UUID(), NULL FROM SYSTEM_RANGE(1, 3)",
+      "MERGE INTO vf KEY(k) VALUES (1, RANDOM_UUID(), CURRENT_TIMESTAMP)"
+    ).foreach { stmt =>
+      e.sql(stmt)
+      val first = read
+      Thread.sleep(20) // CURRENT_TIMESTAMP would move on
+      assert(read == first, stmt)
+    }
+    assert(read.length == 5)
+  }
+
+  /** Depth of a logical plan tree. */
+  private def depth(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
+    1 + (p.children.map(depth) :+ 0).max
+
+  test("version chain: mixed DML matches a shadow map; the plan depth stays bounded") {
+    val e = freshEngine
+    e.sql("CREATE TABLE vc (k int PRIMARY KEY, v bigint)")
+    e.sql("INSERT INTO vc SELECT X, X * 10 FROM SYSTEM_RANGE(1, 20)")
+    val shadow = scala.collection.mutable.Map((1 to 20).map(k => k -> k * 10L): _*)
+    val rnd = new scala.util.Random(7)
+    var next = 21
+    val depths = (0 until 30).map { i =>
+      val present = shadow.keys.toSeq.sorted
+      val k = present(rnd.nextInt(present.size))
+      i % 4 match {
+        case 0 =>
+          e.sql(s"INSERT INTO vc VALUES ($next, $i)"); shadow(next) = i; next += 1
+        case 1 => e.sql(s"UPDATE vc SET v = $i WHERE k = $k"); shadow(k) = i
+        case 2 =>
+          val mk = if (i % 8 == 2) k else { next += 1; next - 1 }
+          e.sql(s"MERGE INTO vc KEY(k) VALUES ($mk, $i)"); shadow(mk) = i
+        case _ => e.sql(s"DELETE FROM vc WHERE k = $k"); shadow.remove(k)
+      }
+      val rows = e.sql("SELECT k, v FROM vc").collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      assert(rows == shadow.toMap, s"after statement $i")
+      depth(e.table("vc").queryExecution.logical)
+    }
+    // 9 lazy versions at most, whatever the statement count
+    assert(depths.max <= 30, depths)
+  }
+
+  test("version chain: transactions restore exact content across compactions") {
+    val e = freshEngine
+    e.sql("CREATE TABLE vt (k int PRIMARY KEY, v int)")
+    e.sql("INSERT INTO vt VALUES (1, 1), (2, 2), (3, 3)")
+    def rows = e.sql("SELECT k, v FROM vt ORDER BY k").collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSeq
+    def dml(n: Int, from: Int): Unit = (0 until n).foreach { i =>
+      if (i % 2 == 0) e.sql(s"INSERT INTO vt VALUES (${from + i}, $i)")
+      else e.sql(s"UPDATE vt SET v = v + 1 WHERE k = ${1 + i % 3}")
+    }
+    val start = rows
+    e.sql("BEGIN")
+    dml(20, 100)
+    assert(rows.length == 13)
+    e.sql("ROLLBACK")
+    assert(rows == start)
+    e.sql("BEGIN")
+    e.sql("UPDATE vt SET v = 10 WHERE k = 1")
+    e.sql("SAVEPOINT sp")
+    val atSavepoint = rows
+    dml(20, 200)
+    e.sql("ROLLBACK TO SAVEPOINT sp")
+    assert(rows == atSavepoint)
+    e.sql("COMMIT")
+    e.sql("SET AUTOCOMMIT FALSE")
+    dml(20, 300)
+    e.sql("COMMIT")
+    e.sql("SET AUTOCOMMIT TRUE")
+    val committed = rows
+    assert(committed.take(3) == Seq((1, 13), (2, 6), (3, 6)))
+    dml(12, 400) // compacts again: the committed bases are released
+    assert(rows.length == 19)
+    assert(rows.take(3) == Seq((1, 15), (2, 8), (3, 8)))
+  }
+
+  test("version chain: at most one checkpoint RDD per table, none after DROP TABLE") {
+    val e = freshEngine
+    val sc = spark.sparkContext
+    val before = sc.getRDDStorageInfo.map(_.id).toSet
+    def held = sc.getRDDStorageInfo.count(i => !before(i.id))
+    e.sql("CREATE TABLE vs (k int PRIMARY KEY, v int)")
+    e.sql("INSERT INTO vs SELECT X, X FROM SYSTEM_RANGE(1, 100)")
+    (1 to 50).foreach { i =>
+      e.sql(s"UPDATE vs SET v = v + 1 WHERE k = $i")
+      assert(held <= 1, s"after statement $i")
+    }
+    assert(held == 1)
+    assert(e.sql("SELECT sum(v) FROM vs").head().getLong(0) == 5050 + 50)
+    e.sql("DROP TABLE vs")
+    assert(held == 0)
+  }
+
+  test("version chain: tables filled from a compacted table outlive its compactions") {
+    val e = freshEngine
+    e.sql("CREATE TABLE va (k int PRIMARY KEY, v int)")
+    e.sql("INSERT INTO va SELECT X, X FROM SYSTEM_RANGE(1, 5)")
+    def compactVa(): Unit =
+      (1 to 10).foreach(_ => e.sql("UPDATE va SET v = v + 1 WHERE k = 5"))
+    compactVa()
+    // a rowid table (no single integral PK) and an IDENTITY table: their
+    // ids are assigned over an RDD whose lineage reads va's base
+    e.sql("CREATE TABLE vb (k int, v int)")
+    e.sql("CREATE TABLE vi (id int IDENTITY, k int)")
+    e.sql("INSERT INTO vb SELECT k, v FROM va")
+    e.sql("INSERT INTO vi (k) SELECT k FROM va")
+    def vb = e.sql("SELECT k, v FROM vb ORDER BY k").collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSeq
+    def vi = e.sql("SELECT k FROM vi ORDER BY k").collect().map(_.getInt(0)).toSeq
+    val filled = (1 to 4).map(k => (k, k)) :+ ((5, 15))
+    compactVa(); compactVa()
+    assert(vb == filled)
+    assert(vi == (1 to 5))
+    // a transaction snapshot holding such a version, across a ROLLBACK
+    e.sql("BEGIN")
+    e.sql("INSERT INTO vb SELECT k + 10, v FROM va WHERE k = 5")
+    compactVa(); compactVa()
+    assert(vb.last == (15, 35))
+    e.sql("ROLLBACK")
+    assert(vb == filled)
+    // vb's own compaction reads va's old base once more
+    (1 to 10).foreach(i => e.sql(s"UPDATE vb SET v = v + 1 WHERE k = ${1 + i % 5}"))
+    compactVa()
+    assert(vb == filled.map { case (k, v) => (k, v + 2) })
+    assert(vi == (1 to 5))
   }
 }

@@ -110,6 +110,13 @@ class ModelSpec extends SparkSpec {
     live.insert("id" -> 11, "name" -> "zed", "age" -> 9)
     assert(live.findCount() == before + 1)
     Model(e, "dao").eq("id", 11).delete()
+    // DSL updates and deletes count toward the table's compaction: ten
+    // in a row compact its version chain onto a materialized base
+    (1 to 10).foreach(i => Model(e, "dao").eq("id", 2).update("age" -> i))
+    assert(e.table("dao").queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD if r.rdd.isCheckpointed => r
+    }.nonEmpty)
+    assert(e.sql("SELECT age FROM dao WHERE id=2").head().getInt(0) == 10)
     // unbound models refuse mutation
     intercept[IllegalStateException] { Model(people).delete() }
   }

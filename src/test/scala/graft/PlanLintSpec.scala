@@ -97,7 +97,7 @@ class PlanLintSpec extends SparkSpec {
     "operators/TextAnalysis.scala" -> 11, // BPE top-m driver argmax (bounded by merge batch); bm25Idf's per-term df collect (bounded by the literal term universe — the IDF table embeds as plan literals, materialize-then-embed like bloomBitsOf); hashedGramClassCounts' <= dim+1 row model aggregate (weights embed as one double[] plan literal, same shape); dsirSelect's k-row top-k boundary collect (threshold embeds as two plan literals); langIdFit's bounded label-universe distinct + its <= dim+1 row per-class aggregate (models embed as C double[] plan literals); perClassClassifierFit's same bounded pair (label universe + <= dim+1 rows with 2C columns); unigramLmTrain's three vocab-bounded collects (alphabet, capped seed pieces, per-EM piece counts — all dictionary-sized, never corpus-sized)
     "dsl/Model.scala" -> 2, // findList/findOne: the DSL's intentional executors (reference Model.java parity)
     "sqlfront/Engine.scala" -> 1, // SET @v = (scalar expr): 1-row eval, reference Variable.java parity
-    "sqlfront/EngineDdl.scala" -> 1, // 1-row max(_rowid_) agg for identity backfill
+    "sqlfront/EngineDdl.scala" -> 4, // 1-row max(_rowid_) agg for identity backfill; VALUES tuples Spark cannot fold, evaluated once (statement-sized); localRows: a LocalRelation read on the driver without a job (statement-sized); noRows: one Boolean per partition
     "sqlfront/EngineTranslate.scala" -> 1, // @var scalar substitution: 1-row eval
     "streaming/StreamDecontaminate.scala" -> 1, // benchmark gram-set materialization, bounded by the benchmark (KBs-MBs), embedded as a sorted reference array — materialize-then-embed like bloomBitsOf
     "core/ModelStore.scala" -> 2, // registry reads: readAll's collect is bounded by MODEL size (dim / C·dim / merges / k·d / m·kc·subdim / mBits÷64 rows — never the corpus); corpusFingerprint's head() is a 1-row global XOR aggregate

@@ -27,7 +27,8 @@ class RefIndexProbe extends SparkSpec {
   }
 
   /** IndexTest.insert() (IndexTest.java:56-88): 3 clean inserts, then 3
-    * duplicate-key rejections (dup f2=20 / dup pk 200 / dup pk 100). */
+    * duplicate-key rejections (dup f2=20 / dup pk 200 / dup pk 100), plus
+    * two more rejected batches. */
   private def insert(e: Engine): Unit = {
     e.sql("DELETE FROM IndexTest")
     e.sql("INSERT INTO IndexTest(f1, f2, f3) VALUES(100, 10, 'a')")
@@ -39,6 +40,12 @@ class RefIndexProbe extends SparkSpec {
       e.sql("INSERT INTO IndexTest(f1, f2, f3) VALUES(200, 20, 'e')"))
     intercept[Exception](
       e.sql("INSERT INTO IndexTest(f1, f2, f3) VALUES(100, 20, 'f')"))
+    // beyond the reference: a multi-row batch with an internal duplicate
+    // pk, and an INSERT … SELECT of an existing pk
+    intercept[Exception](
+      e.sql("INSERT INTO IndexTest(f1, f2, f3) VALUES(400, 40, 'd'), (400, 41, 'e')"))
+    intercept[Exception](
+      e.sql("INSERT INTO IndexTest(f1, f2, f3) SELECT 100, 50, 'g' FROM SYSTEM_RANGE(1, 1)"))
   }
 
   private def count(e: Engine, where: String = ""): Long =
@@ -110,6 +117,44 @@ class RefIndexProbe extends SparkSpec {
     intercept[Exception](
       e.sql("INSERT INTO UniqueIndexTest(f1, f2, f3) VALUES(400, 20, 'b')"))
     assert(e.sql("SELECT count(*) FROM UniqueIndexTest").head().getLong(0) == 3)
+    // both key-check paths: a VALUES batch (checked on the driver plus one
+    // table probe) and an INSERT … SELECT batch (checked distributed)
+    def count = e.sql("SELECT count(*) FROM UniqueIndexTest").head().getLong(0)
+    val dup = intercept[Exception](e.sql(
+      "INSERT INTO UniqueIndexTest(f1, f2, f3) VALUES(500, 50, 'e'), (600, 50, 'e')"))
+    assert(dup.getMessage.contains("within insert batch"), dup.getMessage)
+    val dupSel = intercept[Exception](e.sql(
+      "INSERT INTO UniqueIndexTest(f1, f2, f3) SELECT X, 60, 'g' FROM SYSTEM_RANGE(1, 2)"))
+    assert(dupSel.getMessage.contains("within insert batch"), dupSel.getMessage)
+    intercept[Exception](e.sql(
+      "INSERT INTO UniqueIndexTest(f1, f2, f3) SELECT 700, 30, 'c' FROM SYSTEM_RANGE(1, 1)"))
+    assert(count == 3)
+    // NULL keys never conflict, not even with each other
+    e.sql("INSERT INTO UniqueIndexTest(f1, f2, f3) VALUES(800, NULL, 'b'), (900, NULL, 'b')")
+    e.sql("INSERT INTO UniqueIndexTest(f1, f2, f3) " +
+      "SELECT X + 1000, CAST(NULL AS INT), 'b' FROM SYSTEM_RANGE(1, 2)")
+    assert(count == 7)
+    // floating-point keys compare as Spark groups them (-0.0 is 0.0, NaN
+    // is NaN): within a VALUES batch, against the table, and in MERGE
+    e.sql("CREATE TABLE UniqueIndexTestD (id int PRIMARY KEY, d double, v int)")
+    e.sql("CREATE UNIQUE INDEX UniqueIndexTestD_ui ON UniqueIndexTestD(d)")
+    val (zero, negZero, nan) =
+      ("CAST('0.0' AS DOUBLE)", "CAST('-0.0' AS DOUBLE)", "CAST('NaN' AS DOUBLE)")
+    Seq(zero -> negZero, nan -> nan).foreach { case (a, b) =>
+      val d = intercept[Exception](
+        e.sql(s"INSERT INTO UniqueIndexTestD VALUES (1, $a, 1), (2, $b, 2)"))
+      assert(d.getMessage.contains("within insert batch"), d.getMessage)
+    }
+    e.sql(s"INSERT INTO UniqueIndexTestD VALUES (1, $negZero, 1), (2, $nan, 2)")
+    Seq(zero, nan).foreach { k =>
+      val d = intercept[Exception](
+        e.sql(s"INSERT INTO UniqueIndexTestD VALUES (3, $k, 3)"))
+      assert(d.getMessage.contains("already exists"), d.getMessage)
+    }
+    e.sql("MERGE INTO UniqueIndexTestD KEY(d) VALUES " +
+      s"(3, $zero, 4), (4, $negZero, 5), (5, $nan, 6), (6, $nan, 7)")
+    assert(e.sql("SELECT v FROM UniqueIndexTestD ORDER BY v").collect()
+      .map(_.getInt(0)).toSeq == Seq(5, 7))
   }
 
   test("MainIndexColumnTest: CREATE PRIMARY KEY on loaded table (MainIndexColumnTest.java:27-41)") {
