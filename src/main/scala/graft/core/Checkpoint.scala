@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{FileScanRDD, LogicalRelation}
 
 /** Lineage cut with a selectable durability mode.
   *
@@ -80,24 +81,42 @@ object Checkpoint {
   def release(cut: DataFrame, holders: Iterable[DataFrame]): Boolean =
     cut.queryExecution.analyzed match {
       case own: LogicalRDD =>
-        val held = holders.exists(h => reaches(planRdds(h), own.rdd.id))
+        val held = holders.exists(h => reaches(planRdds(h), _.id == own.rdd.id))
         if (!held) own.rdd.unpersist(blocking = false)
         !held
       case _ => true // a streaming pass-through holds no blocks
     }
 
+  /** Whether `df` reads catalog table `table`, matched case-insensitively
+    * as the session catalog matches names: through a relation in its plan,
+    * subqueries included, or through an RDD in its plan whose lineage scans
+    * the table's directory (a frame built with `createDataFrame` over a
+    * derived RDD). */
+  def readsTable(df: DataFrame, table: String): Boolean = {
+    val dir = s"/${table.toLowerCase}/"
+    df.queryExecution.analyzed
+      .collectWithSubqueries { case r: LogicalRelation => r.catalogTable }.flatten
+      .exists(_.identifier.table.equalsIgnoreCase(table)) ||
+    reaches(planRdds(df), {
+      case f: FileScanRDD => f.filePartitions.exists(
+        _.files.exists(_.filePath.toString.toLowerCase.contains(dir)))
+      case _ => false
+    })
+  }
+
   /** The RDDs a frame's plan reads directly. */
   private def planRdds(df: DataFrame): Seq[RDD[_]] =
     df.queryExecution.analyzed.collectWithSubqueries { case r: LogicalRDD => r.rdd }
 
-  /** Whether the lineage of `roots` holds the RDD `id`. A checkpointed
-    * RDD's lineage stops at its checkpoint, so the walk stays short. */
-  private def reaches(roots: Seq[RDD[_]], id: Int): Boolean = {
+  /** Whether the lineage of `roots` holds an RDD that is `hit`. A
+    * checkpointed RDD's lineage stops at its checkpoint, so the walk stays
+    * short. */
+  private def reaches(roots: Seq[RDD[_]], hit: RDD[_] => Boolean): Boolean = {
     val seen = mutable.HashSet.empty[Int]
     val todo = mutable.Stack[RDD[_]](roots: _*)
     while (todo.nonEmpty) {
       val r = todo.pop()
-      if (r.id == id) return true
+      if (hit(r)) return true
       if (seen.add(r.id)) r.dependencies.foreach(d => todo.push(d.rdd))
     }
     false

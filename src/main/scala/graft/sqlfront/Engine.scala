@@ -42,22 +42,26 @@ import graft.operators.Dml
   *   - every textual rewrite is a token-pattern pass (Rw.rewrite) —
   *     string-literal safety is structural, not simulated
   *
-  * Tables live as temp views so translated SQL sees them; every mutation
-  * re-registers the view. Each table is a bounded version chain: one
-  * materialized base plus at most `CompactEvery - 1` lazy DML versions
-  * ([[commitDml]]). A frame returned by [[sql]] reads the table version
-  * current when its statement ran; collect or cache it before later DML
-  * compacts that table, after which it fails loudly instead of returning
-  * rows.
+  * Each table or view is one [[TableEntry]] in the ordered [[catalog]]
+  * map: its frame plus every attribute keyed by the table alone. CREATE
+  * inserts an entry once the create succeeds, DROP removes it, RENAME
+  * re-keys it, DROP ALL OBJECTS clears the map, and a transaction snapshot
+  * copies the map. The objects with names of their own (indexes, CHECK and
+  * FOREIGN KEY constraints, triggers, comments) stay in ordered lists and
+  * follow their table through [[moveOwned]]. Every entry is also a temp
+  * view, so translated SQL sees it; [[install]] re-publishes the view.
+  * Each table is a bounded version chain: one materialized base plus at
+  * most `CompactEvery - 1` lazy DML versions ([[commitDml]]). A frame
+  * returned by [[sql]] reads the table version current when its statement
+  * ran; collect or cache it before later DML compacts or DROP removes that
+  * table, after which it fails loudly instead of returning rows.
   */
 final class Engine(val spark: SparkSession)
     extends EngineTranslate with EngineSelect with EngineDdl
     with EngineStatements {
 
-  private[sqlfront] val tables = mutable.LinkedHashMap.empty[String, DataFrame]
-  private[sqlfront] val primaryKeys = mutable.HashMap.empty[String, Seq[String]]
-  private[sqlfront] val identityCols = mutable.HashMap.empty[String, String]
-  private[sqlfront] val identityNext = mutable.HashMap.empty[String, Long]
+  /** Every table and view, in creation order. */
+  private[sqlfront] val catalog = mutable.LinkedHashMap.empty[String, TableEntry]
   private[sqlfront] val sequences = mutable.HashMap.empty[String, Sequence]
 
   /** One declared service method: SQL name (stored uppercase), ordered
@@ -79,26 +83,6 @@ final class Engine(val spark: SparkSession)
       codePath: Option[String])
 
   private[sqlfront] val services = mutable.HashMap.empty[String, ServiceDef]
-
-  /** CREATE TABLE model-codegen attributes (packageName, codePath) —
-    * recorded + SCRIPT-re-emitted, never executed (see createTableRe). */
-  private[sqlfront] val tableCodegen =
-    mutable.HashMap.empty[String, (Option[String], Option[String])]
-
-  /** CREATE-head storage modifiers per table (Parser.java:3969-3987):
-    * "MEMORY" / "CACHED" / "[CACHED ]LOCAL TEMPORARY" / "GLOBAL TEMPORARY".
-    * A storage-tier attribute this engine maps to Spark DataFrames
-    * uniformly (everything is in-memory/parquet) — recorded for SCRIPT
-    * re-emission, like tableCodegen. Not snapshotted in transactions
-    * (cosmetic metadata, same policy as tableCodegen). */
-  private[sqlfront] val tableStorage = mutable.HashMap.empty[String, String]
-
-  /** ON COMMIT action per temp table (Parser.java parseCreateTable WITH
-    * tail: ON COMMIT DROP | ON COMMIT DELETE ROWS) — applied when an
-    * explicit COMMIT executes. Under autocommit the reference's per-
-    * statement commit would drop the table immediately, so these tables
-    * only make sense inside BEGIN…COMMIT, which is where we honor them. */
-  private[sqlfront] val onCommitActions = mutable.HashMap.empty[String, String]
   private val serviceInstances = mutable.HashMap.empty[String, AnyRef]
 
   /** Dispatch one service call — the engine side of the reference's
@@ -309,15 +293,6 @@ final class Engine(val spark: SparkSession)
         throw new NoSuchElementException(s"sequence not found: $name"))
       .belongsToTable = flag
   private[sqlfront] var rangeViewId = 0
-  // _ROWID_ pseudo-column (StandardPrimaryIndex.java storage key;
-  // PseudoColumnTest): tables with a single integral PRIMARY KEY map
-  // _rowid_ onto that key (rowidPk); tables without one carry a REAL
-  // hidden _rowid_ column (rowidTables) — engine-assigned max+1 values,
-  // explicitly insertable, dropped from the registered view so star
-  // expansion and positional INSERT never see it.
-  private[sqlfront] val rowidPk = mutable.HashMap.empty[String, String]
-  private[sqlfront] val rowidTables = mutable.HashSet.empty[String]
-  private[sqlfront] val rowidNext = mutable.HashMap.empty[String, Long]
 
   // DDL surface recorded for INFORMATION_SCHEMA + validation
   // (ddl/CreateIndex.java, db/constraint/ConstraintReferential.java,
@@ -330,7 +305,6 @@ final class Engine(val spark: SparkSession)
   private[sqlfront] val indexes = mutable.LinkedHashMap.empty[String, IndexDef]
   private[sqlfront] val foreignKeys = mutable.ArrayBuffer.empty[FkDef]
   private[sqlfront] val checks = mutable.ArrayBuffer.empty[CheckDef]
-  private[sqlfront] val viewDefs = mutable.LinkedHashMap.empty[String, String]
   private[sqlfront] val aliases = mutable.LinkedHashMap.empty[String, String]
   // CREATE ALIAS … AS $$source$$ (FunctionAlias.loadFromSource): name →
   // method source, compiled in-memory per JVM by SourceCompiler
@@ -435,18 +409,27 @@ final class Engine(val spark: SparkSession)
   graft.functions.H2Functions.registerAll(spark)
   graft.functions.Aggregators.registerAll(spark)
 
-  def register(name: String, df: DataFrame): Unit = {
+  /** Make `df` the frame of table `name`, keeping the rest of its entry;
+    * a new name becomes a plain table. */
+  def register(name: String, df: DataFrame): Unit =
+    install(name, catalog.get(name.toLowerCase).fold(TableEntry(df))(_.copy(frame = df)))
+
+  /** Put entry `e` under `name` and publish its view (without a hidden
+    * `_rowid_`: runSelect swaps the full frame in for statements that
+    * reference `_rowid_` explicitly). */
+  private[sqlfront] def install(name: String, e: TableEntry): Unit = {
     val n = name.toLowerCase
-    tables(n) = df
-    // hidden _rowid_ never reaches the public view: star expansion and
-    // positional INSERT see the declared columns only (runSelect swaps the
-    // full frame in for statements that reference _rowid_ explicitly)
-    val v = if (rowidTables.contains(n) && df.columns.contains("_rowid_"))
-      df.drop("_rowid_") else df
-    v.createOrReplaceTempView(n)
+    catalog(n) = e
+    e.visible.createOrReplaceTempView(n)
   }
 
-  def table(name: String): DataFrame = tables(name.toLowerCase)
+  private[sqlfront] def entry(name: String): TableEntry = catalog(name.toLowerCase)
+
+  /** Replace the entry of table `name` with `f` of it; the view stays. */
+  private[sqlfront] def edit(name: String)(f: TableEntry => TableEntry): Unit =
+    catalog(name.toLowerCase) = f(entry(name))
+
+  def table(name: String): DataFrame = entry(name).frame
 
   /** The DML statement that compacts a table's version chain: the 9
     * statements before it stay lazy rewrites of the base. Fewer lazy
@@ -454,9 +437,6 @@ final class Engine(val spark: SparkSession)
     * benchmark 10 kept most of the read gain of 3 and 6 at the lowest
     * write latency (CHANGES.md). */
   private[sqlfront] val CompactEvery = 10
-
-  /** Lazy DML versions over each table's base (see [[commitDml]]). */
-  private[sqlfront] val pendingDml = mutable.HashMap.empty[String, Int]
 
   /** Bases [[commitDml]] cut and has not released yet. */
   private[sqlfront] val cuts = mutable.ArrayBuffer.empty[DataFrame]
@@ -472,15 +452,13 @@ final class Engine(val spark: SparkSession)
     * statement's run and do not change from read to read. The superseded
     * base is released when the statement is done ([[releaseUnheld]]). */
   private[sqlfront] def commitDml(name: String, df: DataFrame): Unit = {
-    val n = name.toLowerCase
-    val depth = pendingDml.getOrElse(n, 0) + 1
-    if (depth < CompactEvery && !volatile(df)) {
-      register(n, df)
-      pendingDml(n) = depth
-    } else {
+    val e = catalog.getOrElse(name.toLowerCase, TableEntry(df))
+    val depth = e.pendingDml + 1
+    if (depth < CompactEvery && !volatile(df))
+      install(name, e.copy(frame = df, pendingDml = depth))
+    else {
       val base = Checkpoint.cut(df.coalesce(spark.sparkContext.defaultParallelism))
-      register(n, base)
-      pendingDml(n) = 0
+      install(name, e.copy(frame = base, pendingDml = 0))
       cuts += base
     }
   }
@@ -490,18 +468,30 @@ final class Engine(val spark: SparkSession)
       .exists(p => !p.deterministic || p.containsPattern(
         org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE))
 
-  /** Release the bases that no registered frame reads: neither a table or
-    * view of the catalog nor one held by the transaction snapshot or a
-    * savepoint. Runs at the end of every statement: after a compaction
-    * (once the statement's AFTER triggers have read the version it
-    * superseded), and after COMMIT, ROLLBACK, RELEASE, BEGIN or a DROP
-    * dropped a holder. A statement a trigger runs leaves the release to
-    * the statement that fired the trigger. */
-  private def releaseUnheld(): Unit = if (cuts.nonEmpty && firing == 0) {
-    val holders = tables.values.toSeq ++
-      (txn.toSeq ++ savepointMap.values).flatMap(_.tables.map(_._2))
-    cuts.filterInPlace(c => !Checkpoint.release(c, holders))
-  }
+  /** Release the bases and drop the bucketed snapshots that no held frame
+    * reads: neither a table or view of the catalog nor one held by the
+    * transaction snapshot or a savepoint. Runs at the end of every
+    * statement: after a compaction or a re-bucket (once the statement's
+    * AFTER triggers have read the version it superseded), and after
+    * COMMIT, ROLLBACK, RELEASE, BEGIN, a DROP or DROP ALL OBJECTS dropped a
+    * holder. A statement a trigger runs leaves the release to the
+    * statement that fired the trigger. */
+  private def releaseUnheld(): Unit =
+    if ((cuts.nonEmpty || bucketed.nonEmpty) && firing == 0) {
+      val holders = (catalog.values ++
+        (txn.toSeq ++ savepointMap.values).flatMap(_.tables.map(_._2))).map(_.frame).toSeq
+      cuts.filterInPlace(c => !Checkpoint.release(c, holders))
+      // frames are immutable, so a snapshot goes unheld only when a frame
+      // that reads it leaves the holders: scan the rest only for those
+      val gone = heldBefore.filterNot(h => holders.exists(_ eq h))
+      bucketed.filterInPlace(t => !gone.exists(Checkpoint.readsTable(_, t)) ||
+        holders.exists(Checkpoint.readsTable(_, t)) ||
+        { spark.sql(s"DROP TABLE IF EXISTS $t"); false })
+      heldBefore = if (bucketed.nonEmpty) holders else Nil
+    }
+
+  /** The holders [[releaseUnheld]] saw last while bucketed snapshots existed. */
+  private var heldBefore = Seq.empty[DataFrame]
 
   /** Trigger implementations running now (see [[fireTriggers]]). */
   private var firing = 0
@@ -527,7 +517,7 @@ final class Engine(val spark: SparkSession)
     * via `SET BUCKETED_INDEXES 1` + `CREATE INDEX ON t(key)`. */
   def bucket(tableName: String, keys: Seq[String], buckets: Int = 32): Unit = {
     val tn = tableName.toLowerCase
-    require(tables.contains(tn), s"TABLE_NOT_FOUND: $tableName")
+    require(catalog.contains(tn), s"TABLE_NOT_FOUND: $tableName")
     require(keys.nonEmpty, "bucketing needs at least one key column")
     // EPOCHED name, never reused: a re-bucket of the same (table, keys)
     // must WRITE BEFORE DROPPING — the table's current registration may
@@ -536,8 +526,9 @@ final class Engine(val spark: SparkSession)
     // just-deleted source. The engine-instance tag keeps two engines
     // sharing one SparkSession from clobbering each other's snapshots.
     bucketEpoch += 1
-    val t = s"graft_engine_bkt_${engineTag}_${tn}_" +
-      s"${keys.mkString("_")}_${buckets}_e$bucketEpoch"
+    // lowercase, as the session catalog names the table and its directory
+    val t = (s"graft_engine_bkt_${engineTag}_${tn}_" +
+      s"${keys.mkString("_")}_${buckets}_e$bucketEpoch").toLowerCase
     // stale location from a dead session with the same (random) tag is
     // practically impossible, but the purge stays cheap and harmless
     val loc = new java.io.File(
@@ -548,17 +539,17 @@ final class Engine(val spark: SparkSession)
     }
     table(tn).write.bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*).mode("overwrite").saveAsTable(t)
+    bucketed += t
     register(tn, spark.table(t))
-    // the previous epoch's snapshot (if any) is no longer referenced
-    bucketTables.remove(tn).foreach(old => spark.sql(s"DROP TABLE IF EXISTS $old"))
-    bucketTables(tn) = t
+    // the previous epoch drops once no held frame reads it
+    releaseUnheld()
   }
 
   private val engineTag =
     java.lang.Long.toHexString(System.nanoTime() ^ System.identityHashCode(this))
   private var bucketEpoch = 0
-  /** Live bucketed-snapshot table per engine table (previous epochs drop). */
-  private val bucketTables = mutable.Map.empty[String, String]
+  /** Bucketed snapshot tables [[bucket]] wrote and has not dropped yet. */
+  private val bucketed = mutable.ArrayBuffer.empty[String]
 
   /** Programmatic insert for the ORM DAO executors (Model.insert) — same
     * path as SQL INSERT: align, identity/sequence fill, constraints. */
@@ -571,7 +562,7 @@ final class Engine(val spark: SparkSession)
     * writers that build the version themselves (the DSL's `Model`). */
   def commitVersion(name: String, df: DataFrame): Unit =
     try commitDml(name, df) finally releaseUnheld()
-  def tableNames: Seq[String] = tables.keys.toSeq
+  def tableNames: Seq[String] = catalog.keys.toSeq
   def mode: String = compatibilityMode
 
   /** Execute one or more ';'-separated statements; returns the DataFrame of
@@ -656,45 +647,34 @@ final class Engine(val spark: SparkSession)
       serialColumnIsNotPK = true, systemColumns = true)
     case _ => ModeFlags(indexDefinitionInCreateTable = true)
   }
-  // NOT NULL columns per table (Column.java nullable) — drives MySQL-mode
-  // convertInsertNullToZero and SHOW COLUMNS
-  private[sqlfront] val notNullCols = mutable.HashMap.empty[String, Set[String]]
-  // column DEFAULT / computed-AS expressions (Column.java defaultExpression):
-  // applied when an insert omits the column or writes the DEFAULT keyword
-  private[sqlfront] val colDefaults =
-    mutable.HashMap.empty[String, mutable.LinkedHashMap[String, String]]
   // SET REFERENTIAL_INTEGRITY toggle (AlterTableSet.java): FALSE suspends
   // FK validation (bulk-load pattern), TRUE [CHECK] revalidates
   private[sqlfront] var refIntegrity = true
 
   // ---- transactions (TransactionStatement, Parser.java:560-650) ----
-  // A transaction is a snapshot of the catalog: every table version is an
-  // immutable DataFrame and every mutation registers a new one, so BEGIN
-  // captures the maps (with each table's pending-version count) and
-  // ROLLBACK restores them — real single-session snapshot semantics, the
-  // 1-session degenerate case of the reference's MVCC read view. A version
-  // a snapshot holds keeps its base's blocks alive across later
-  // compactions; they are released once COMMIT, ROLLBACK, RELEASE or a
-  // new BEGIN drops the snapshot (releaseUnheld). Sequences and IDENTITY
-  // counters are deliberately NOT rolled back (H2/reference semantics:
-  // Sequence values survive rollback). DDL is covered by the snapshot too —
-  // an extension; the reference auto-commits around DDL.
+  // A transaction is a snapshot of the catalog: every table entry is an
+  // immutable value and every statement installs a new one, so BEGIN and
+  // SAVEPOINT copy the entry map and the name-keyed lists, and ROLLBACK
+  // puts them back: real single-session snapshot semantics, the 1-session
+  // degenerate case of the reference's MVCC read view. A version a
+  // snapshot holds keeps its base's blocks and its bucketed snapshot alive
+  // across later compactions and drops; they go once COMMIT, ROLLBACK,
+  // RELEASE or a new BEGIN drops the snapshot (releaseUnheld). Sequences
+  // and the IDENTITY and _rowid_ counters are NOT rolled back: an id a
+  // rolled-back insert drew stays used (H2/reference Sequence semantics).
+  // DDL is covered by the snapshot too, an extension: the reference
+  // auto-commits around DDL.
   private[sqlfront] case class CatalogSnapshot(
-      tables: Seq[(String, DataFrame)],
-      primaryKeys: Map[String, Seq[String]],
-      identityCols: Map[String, String],
+      tables: Seq[(String, TableEntry)],
       indexes: Seq[(String, IndexDef)],
       foreignKeys: Seq[FkDef],
       checks: Seq[CheckDef],
-      viewDefs: Seq[(String, String)],
+      triggers: Seq[(String, (String, String))],
+      comments: Seq[((String, String), String)],
       constants: Seq[(String, String)],
       domains: Seq[(String, String)],
-      triggers: Seq[(String, (String, String))],
       schemas: Seq[String],
-      rights: Seq[(String, String, String)],
-      notNullCols: Map[String, Set[String]],
-      colDefaults: Seq[(String, Seq[(String, String)])],
-      pendingDml: Map[String, Int])
+      rights: Seq[(String, String, String)])
   private[sqlfront] var txn: Option[CatalogSnapshot] = None
   private[sqlfront] val savepointMap = mutable.LinkedHashMap.empty[String, CatalogSnapshot]
   private[sqlfront] var autocommit = true
@@ -702,52 +682,45 @@ final class Engine(val spark: SparkSession)
   private[sqlfront] val sessionSettings = mutable.LinkedHashMap.empty[String, String]
 
   private[sqlfront] def snapshot(): CatalogSnapshot = CatalogSnapshot(
-    tables.toSeq, primaryKeys.toMap, identityCols.toMap, indexes.toSeq,
-    foreignKeys.toSeq, checks.toSeq, viewDefs.toSeq, constants.toSeq,
-    domains.toSeq, triggers.toSeq, schemas.toSeq, rights.toSeq,
-    notNullCols.toMap, colDefaults.toSeq.map { case (t, m) => (t, m.toSeq) },
-    pendingDml.toMap)
+    catalog.toSeq, indexes.toSeq, foreignKeys.toSeq, checks.toSeq,
+    triggers.toSeq, comments.toSeq, constants.toSeq, domains.toSeq,
+    schemas.toSeq, rights.toSeq)
 
   private[sqlfront] def restore(s: CatalogSnapshot): Unit = {
-    val restored = s.tables.map(_._1).toSet
-    tables.keys.filterNot(restored).toSeq.foreach(spark.catalog.dropTempView)
-    tables.clear(); tables ++= s.tables
-    s.tables.foreach { case (n, df) => register(n, df) } // keeps _rowid_ hidden
-    primaryKeys.clear(); primaryKeys ++= s.primaryKeys
-    identityCols.clear(); identityCols ++= s.identityCols
+    val live = catalog.clone()
+    live.keys.filterNot(s.tables.map(_._1).toSet).foreach(spark.catalog.dropTempView)
+    catalog.clear()
+    s.tables.foreach { case (n, e) =>
+      install(n, live.get(n).fold(e)(l => e.copy(
+        identityNext = e.identityNext max l.identityNext,
+        rowidNext = e.rowidNext max l.rowidNext)))
+    }
     indexes.clear(); indexes ++= s.indexes
     foreignKeys.clear(); foreignKeys ++= s.foreignKeys
     checks.clear(); checks ++= s.checks
-    viewDefs.clear(); viewDefs ++= s.viewDefs
+    triggers.clear(); triggers ++= s.triggers
+    comments.clear(); comments ++= s.comments
     constants.clear(); constants ++= s.constants
     domains.clear(); domains ++= s.domains
-    triggers.clear(); triggers ++= s.triggers
     schemas.clear(); schemas ++= s.schemas
     rights.clear(); rights ++= s.rights
-    notNullCols.clear(); notNullCols ++= s.notNullCols
-    colDefaults.clear()
-    s.colDefaults.foreach { case (t, ds) =>
-      colDefaults(t) = mutable.LinkedHashMap(ds: _*)
-    }
-    pendingDml.clear(); pendingDml ++= s.pendingDml
   }
 
   /** Normalize the CREATE-statement head (Parser.java:367-369 + 3969-3987):
     * `DECLARE …` is an alias for CREATE ("support for DECLARE GLOBAL
     * TEMPORARY TABLE"), and the [MEMORY|CACHED] [LOCAL|GLOBAL]
-    * [TEMP|TEMPORARY] storage prefixes on TABLE are recorded
-    * ([[tableStorage]], SCRIPT re-emission) and stripped — the storage
-    * tier is a physical attribute this engine maps to Spark uniformly.
-    * Bare TEMP/TEMPORARY reads as GLOBAL TEMPORARY (Parser.java:3984-3986
+    * [TEMP|TEMPORARY] storage prefixes on TABLE are stripped and returned
+    * for the table's entry (SCRIPT re-emission) — the storage tier is a
+    * physical attribute this engine maps to Spark uniformly. Bare
+    * TEMP/TEMPORARY reads as GLOBAL TEMPORARY (Parser.java:3984-3986
     * passes globalTemp=true). */
-  private[sqlfront] def normalizeCreateHead(stmt: String): String = {
-    pendingStorage = None // a prior statement's stage dies with it
+  private[sqlfront] def normalizeCreateHead(stmt: String): (String, Option[String]) = {
     val ts = Lex.tokens(stmt)
     def word(i: Int): String =
       if (i < ts.length && ts(i).kind == Lex.Word) ts(i).text(stmt).toUpperCase
       else ""
     val head = word(0)
-    if (head != "CREATE" && head != "DECLARE") return stmt
+    if (head != "CREATE" && head != "DECLARE") return (stmt, None)
     var i = 1
     var mem = "" // MEMORY | CACHED | ""
     var tmp = "" // LOCAL TEMPORARY | GLOBAL TEMPORARY | ""
@@ -758,31 +731,12 @@ final class Engine(val spark: SparkSession)
       tmp = "GLOBAL TEMPORARY"; i += 1
     }
     if (word(i) != "TABLE") // DECLARE of any other create → CREATE (367-369)
-      return if (head == "DECLARE" && ts.length > 1)
+      return (if (head == "DECLARE" && ts.length > 1)
         "CREATE " + stmt.substring(ts(1).start)
-      else stmt
-    var j = i + 1
-    if (word(j) == "IF" && word(j + 1) == "NOT" && word(j + 2) == "EXISTS")
-      j += 3
-    val tn =
-      if (j < ts.length) ts(j).text(stmt).stripPrefix("\"").stripSuffix("\"")
-        .toLowerCase
-      else ""
-    // EVERY create-table head clears stale DDL-tail metadata first: a
-    // prefixed / codegen-tailed create that died with a ROLLBACK (these
-    // maps are not snapshotted) must not leak its attributes onto a later
-    // plain CREATE TABLE of the same name via SCRIPT
-    if (tn.nonEmpty && !tables.contains(tn)) {
-      tableStorage.remove(tn); onCommitActions.remove(tn)
-      tableCodegen.remove(tn)
-    }
-    if (head == "CREATE" && mem.isEmpty && tmp.isEmpty) return stmt
-    val prefix = Seq(mem, tmp).filter(_.nonEmpty).mkString(" ")
-    // staged, not recorded: a FAILED create (duplicate table, bad column
-    // defs) must not leave the prefix behind for SCRIPT to re-emit onto
-    // the surviving table — the createTable case commits it on success
-    if (tn.nonEmpty && prefix.nonEmpty) pendingStorage = Some(tn -> prefix)
-    "CREATE " + stmt.substring(ts(i).start)
+      else stmt, None)
+    if (head == "CREATE" && mem.isEmpty && tmp.isEmpty) return (stmt, None)
+    ("CREATE " + stmt.substring(ts(i).start),
+      Some(Seq(mem, tmp).filter(_.nonEmpty).mkString(" ")).filter(_.nonEmpty))
   }
 
   /** Built-in type names (DataType.java:164-261): the FIRST name of each
@@ -808,39 +762,20 @@ final class Engine(val spark: SparkSession)
     "MEDIUMBLOB", "LONGBLOB", "IMAGE", "OID", "TINYTEXT", "TEXT",
     "MEDIUMTEXT", "LONGTEXT", "NTEXT", "NCLOB")
 
-  /** Storage prefix staged by [[normalizeCreateHead]] for the CREATE in
-    * flight; committed to [[tableStorage]] by [[commitPendingStorage]]
-    * only after the create succeeds (and discarded at the next
-    * statement's head-normalization either way). */
-  private[sqlfront] var pendingStorage: Option[(String, String)] = None
-
-  private[sqlfront] def commitPendingStorage(tn: String): Unit = {
-    pendingStorage.filter(_._1 == tn)
-      .foreach { case (t, p) => tableStorage(t) = p }
-    pendingStorage = None
-  }
-
-  /** Record an ON COMMIT action — the reference only parses the clause on
-    * temp tables (Parser.java reads it inside the temp branch). */
-  private[sqlfront] def registerOnCommit(tn: String, action: String): Unit = {
-    require(pendingStorage.collect { case (`tn`, p) => p }
-        .orElse(tableStorage.get(tn)).exists(_.contains("TEMPORARY")),
-      s"ON COMMIT is only valid on a TEMPORARY table (Parser.java): $tn")
-    onCommitActions(tn) = action
-  }
-
   /** Apply ON COMMIT DROP / DELETE ROWS at an explicit COMMIT. DROP
-    * removes the table (and its action); DELETE ROWS truncates and stays
-    * armed for the next commit — Table.java onCommitDrop/onCommitTruncate. */
+    * removes the table; DELETE ROWS truncates and stays armed for the next
+    * commit — Table.java onCommitDrop/onCommitTruncate. Under autocommit
+    * the reference's per-statement commit would drop the table at once, so
+    * these tables only make sense inside BEGIN…COMMIT, where they apply. */
   private[sqlfront] def applyOnCommit(): Unit =
-    onCommitActions.toSeq.foreach { case (tn, act) =>
-      if (!tables.contains(tn)) onCommitActions.remove(tn)
-      else if (act == "DROP") { dropOneTable(tn); onCommitActions.remove(tn) }
-      else register(tn, graft.operators.Dml.truncate(table(tn)))
+    catalog.toSeq.foreach { case (tn, e) =>
+      e.onCommit.foreach(act =>
+        if (act == "DROP") dropOneTable(tn)
+        else register(tn, Dml.truncate(e.frame)))
     }
 
   private[sqlfront] def execOne(stmt0: String): DataFrame = {
-    val stmt = normalizeCreateHead(stmt0.trim)
+    val (stmt, storage) = normalizeCreateHead(stmt0.trim)
     Stmt(stmt) match {
       case explainAnalyzeRe(q) =>
         // EXPLAIN ANALYZE (Explain.java setExecuteCommand): execute, then
@@ -942,14 +877,11 @@ final class Engine(val spark: SparkSession)
         // CreateView.java:90-98: an existing object under the name means
         // IF NOT EXISTS → silent no-op; otherwise only OR REPLACE over an
         // existing VIEW may proceed (a TABLE is never replaceable)
-        if (tables.contains(name.toLowerCase)) {
+        if (catalog.contains(name.toLowerCase)) {
           if (ine != null) return status()
-          require(orReplace != null && viewDefs.contains(name.toLowerCase),
+          require(orReplace != null && entry(name).view.nonEmpty,
             s"VIEW_ALREADY_EXISTS: $name (CreateView.java:95)")
         }
-        viewDefs(name.toLowerCase) = query.trim
-        // COMMENT IS 'remark' in the definition (Parser.java parseCreateView)
-        Option(cmt).foreach(c => comments(("VIEW", name.toLowerCase)) = c)
         val df0 = runSelect(query)
         // optional view column list renames positionally, count-mismatch
         // TOLERATED (TableView.java; documented in ViewTest.java:109-121:
@@ -962,11 +894,12 @@ final class Engine(val spark: SparkSession)
             if (i < names.length) names(i) else c.toLowerCase }
           df0.toDF(full.toSeq: _*)
         }.getOrElse(df0)
-        register(name, df); status()
+        install(name, TableEntry(df, view = Some(query.trim)))
+        // COMMENT IS 'remark' in the definition (Parser.java parseCreateView)
+        Option(cmt).foreach(c => comments(("VIEW", name.toLowerCase)) = c)
+        status()
       case dropViewRe(name) =>
-        viewDefs.remove(name.toLowerCase)
-        tables.remove(name.toLowerCase)
-        spark.catalog.dropTempView(name.toLowerCase); status()
+        dropOneTable(name.toLowerCase); status()
       case alterRenameTableRe(a, b) =>
         renameTable(a.toLowerCase, b.toLowerCase); status()
       case alterAddConstraintRe(tn, cn, body) =>
@@ -983,22 +916,21 @@ final class Engine(val spark: SparkSession)
           }
         status()
       case alterDropPkRe(tn) =>
-        primaryKeys.remove(tn.toLowerCase); status()
+        edit(tn)(_.copy(primaryKey = None)); status()
       case alterDropConstraintRe(_, cn) =>
         val n = cn.toLowerCase
         foreignKeys.filterInPlace(_.name != n)
         checks.filterInPlace(_.name != n)
         indexes.remove(n); status()
       case alterDropColRe(tn, ie, c) =>
-        val t0 = table(tn)
+        val e = entry(tn)
         val cl = c.toLowerCase
-        if (t0.columns.contains(cl)) {
+        if (e.frame.columns.contains(cl)) {
           // AlterTableAlterColumn.java:191 CANNOT_DROP_LAST_COLUMN — a
           // table must keep at least one (visible) column
-          require(t0.columns.count(_ != "_rowid_") > 1,
+          require(e.frame.columns.count(_ != "_rowid_") > 1,
             s"cannot drop last column $c (AlterTableAlterColumn.java:191)")
-          register(tn, t0.drop(cl))
-          colDefaults.get(tn.toLowerCase).foreach(_.remove(cl))
+          install(tn, e.copy(frame = e.frame.drop(cl), defaults = e.defaults - cl))
         } else {
           // Table.getColumn: unknown column errors without IF EXISTS
           require(ie != null, s"COLUMN_NOT_FOUND: $c (ALTER TABLE DROP)")
@@ -1009,28 +941,25 @@ final class Engine(val spark: SparkSession)
         require(table(tn).columns.map(_.toLowerCase)
           .contains(from.toLowerCase), s"COLUMN_NOT_FOUND: $from (CHANGE)")
         execOne(s"ALTER TABLE $tn ALTER COLUMN $from RENAME TO $to")
-      case alterRenameColRe(tn, from, to) =>
-        register(tn, table(tn).withColumnRenamed(from.toLowerCase, to.toLowerCase))
-        primaryKeys.get(tn.toLowerCase).foreach { ks =>
-          primaryKeys(tn.toLowerCase) =
-            ks.map(k => if (k == from.toLowerCase) to.toLowerCase else k)
-        }
-        if (identityCols.get(tn.toLowerCase).contains(from.toLowerCase))
-          identityCols(tn.toLowerCase) = to.toLowerCase
-        colDefaults.get(tn.toLowerCase).foreach { ds =>
-          ds.remove(from.toLowerCase).foreach(d => ds(to.toLowerCase) = d)
-        }
-        notNullCols.get(tn.toLowerCase).foreach { nn =>
-          if (nn(from.toLowerCase))
-            notNullCols(tn.toLowerCase) = nn - from.toLowerCase + to.toLowerCase
-        }
+      case alterRenameColRe(tn, from0, to0) =>
+        val (from, to) = (from0.toLowerCase, to0.toLowerCase)
+        def re(c: String) = if (c == from) to else c
+        val e = entry(tn)
+        install(tn, e.copy(frame = e.frame.withColumnRenamed(from, to),
+          primaryKey = e.primaryKey.map(_.map(re)), identity = e.identity.map(re),
+          rowid = e.rowid match {
+            case RowidKind.Pk(c) => RowidKind.Pk(re(c))
+            case r => r
+          },
+          notNull = e.notNull.map(re),
+          defaults = e.defaults.get(from).fold(e.defaults)(d =>
+            e.defaults - from + (to -> d))))
         status()
       case alterColSetDefaultRe(tn, c, d) =>
-        colDefaults.getOrElseUpdate(tn.toLowerCase,
-          mutable.LinkedHashMap.empty)(c.toLowerCase) = d.trim
+        edit(tn)(e => e.copy(defaults = e.defaults.updated(c.toLowerCase, d.trim)))
         status()
       case alterColDropDefaultRe(tn, c) =>
-        colDefaults.get(tn.toLowerCase).foreach(_.remove(c.toLowerCase)); status()
+        edit(tn)(e => e.copy(defaults = e.defaults - c.toLowerCase)); status()
       case alterColNullRe(_, _) =>
         // nullability is advisory in a snapshot engine; accepted for parity
         status()
@@ -1060,7 +989,7 @@ final class Engine(val spark: SparkSession)
         val ks = cols.split(",").map(_.trim.toLowerCase).toSeq
         require(noRows(Dml.duplicateKeys(table(tn), ks)),
           s"PRIMARY KEY $name violated by existing rows")
-        primaryKeys(tn.toLowerCase) = ks
+        edit(tn)(_.copy(primaryKey = Some(ks)))
         indexes(name.toLowerCase) =
           IndexDef(name.toLowerCase, tn.toLowerCase, ks, unique = true)
         status()
@@ -1167,8 +1096,8 @@ final class Engine(val spark: SparkSession)
         require(!builtinTypeNames(name.toUpperCase),
           s"USER_DATA_TYPE_ALREADY_EXISTS: $name (CreateUserDataType.java:68)")
         if (hiddenTypeNames(name.toUpperCase))
-          require(tables.isEmpty,
-            s"USER_DATA_TYPE_ALREADY_EXISTS: $name (${tables.keys.head}) " +
+          require(catalog.isEmpty,
+            s"USER_DATA_TYPE_ALREADY_EXISTS: $name (${catalog.keys.head}) " +
               "(CreateUserDataType.java:72)")
         // resolves through parseType, so the domain is usable in CREATE
         // TABLE column definitions (CreateUserDataType.java)
@@ -1203,17 +1132,13 @@ final class Engine(val spark: SparkSession)
       case dropTriggerRe(name) =>
         triggers.remove(name.toLowerCase); status()
       case dropAllRe() =>
-        tables.keys.toSeq.foreach(spark.catalog.dropTempView)
-        tables.clear(); primaryKeys.clear(); identityCols.clear()
-        identityNext.clear(); sequences.clear(); indexes.clear()
-        services.clear(); serviceInstances.clear()
-        foreignKeys.clear(); checks.clear(); viewDefs.clear()
+        catalog.keys.foreach(spark.catalog.dropTempView)
+        catalog.clear(); indexes.clear(); foreignKeys.clear(); checks.clear()
+        triggers.clear(); comments.clear()
+        sequences.clear(); services.clear(); serviceInstances.clear()
         aliases.clear(); aliasSources.clear(); userAggs.clear()
-        constants.clear(); domains.clear(); triggers.clear(); rights.clear()
-        notNullCols.clear(); colDefaults.clear()
+        constants.clear(); domains.clear(); rights.clear()
         roles.clear(); roles += "public"; roleGrants.clear()
-        comments.clear(); rowidPk.clear(); rowidTables.clear()
-        rowidNext.clear(); pendingDml.clear()
         status()
       case createSchemaRe(ine, name, owner) =>
         val n = name.toLowerCase
@@ -1365,13 +1290,13 @@ final class Engine(val spark: SparkSession)
         val tail = qname.toLowerCase.split("\\.")
           .takeRight(if (t == "COLUMN") 2 else 1).mkString(".")
         t match {
-          case "TABLE" => require(tables.contains(tail),
+          case "TABLE" => require(catalog.contains(tail),
             s"table $qname not found")
           case "COLUMN" =>
             tail.split("\\.") match {
               case Array(tn, cn) =>
-                require(tables.get(tn).exists(
-                  _.columns.map(_.toLowerCase).contains(cn)),
+                require(catalog.get(tn).exists(
+                  _.frame.columns.map(_.toLowerCase).contains(cn)),
                   s"column $qname not found")
               case _ => throw new IllegalArgumentException(
                 s"COMMENT ON COLUMN needs table.column, got $qname")
@@ -1385,19 +1310,16 @@ final class Engine(val spark: SparkSession)
           text.stripPrefix("'").stripSuffix("'").replace("''", "'")
         status()
       case createTableAsRe(ine, name, query) =>
-        if (tables.contains(name.toLowerCase)) {
+        if (catalog.contains(name.toLowerCase)) {
           // TABLE_OR_VIEW_ALREADY_EXISTS_1 (CreateTable.java:125-129):
           // IF NOT EXISTS returns without touching the existing table
           require(ine != null,
             s"TABLE_OR_VIEW_ALREADY_EXISTS: $name (CreateTable.java:129)")
-        } else {
-          register(name, runSelect(query))
-          commitPendingStorage(name.toLowerCase)
-        }
+        } else install(name, TableEntry(runSelect(query), storage = storage))
         status()
       case createTableRe(ine, name, colDefs, tableTail) =>
         val tn = name.toLowerCase
-        if (tables.contains(tn)) {
+        if (catalog.contains(tn)) {
           // TABLE_OR_VIEW_ALREADY_EXISTS_1 (CreateTable.java:125-129) —
           // the reference checks BEFORE evaluating column defs / tails,
           // and IF NOT EXISTS leaves the existing table untouched
@@ -1405,16 +1327,18 @@ final class Engine(val spark: SparkSession)
             s"TABLE_OR_VIEW_ALREADY_EXISTS: $name (CreateTable.java:129)")
           return status()
         }
-        // model-codegen attributes (CreateTable.java packageName/genCode):
-        // recorded for SCRIPT round trip AFTER the create succeeds (a
-        // failed create must not leak them — same contract as
-        // commitPendingStorage); the generator itself is a build-time
+        // model-codegen attributes (CreateTable.java packageName/genCode)
+        // are recorded for SCRIPT; the generator itself is a build-time
         // artifact (writes .java files), not query semantics
-        val (cgPkg, cgCode, cgOc) =
+        val (cgPkg, cgCode, onCommit) =
           parseTableTail(Option(tableTail).getOrElse(""))
-        cgOc.foreach(registerOnCommit(tn, _))
+        // the reference only parses ON COMMIT on temp tables (Parser.java
+        // reads it inside the temp branch)
+        require(onCommit.isEmpty || storage.exists(_.contains("TEMPORARY")),
+          s"ON COMMIT is only valid on a TEMPORARY table (Parser.java): $tn")
         val (schema, pks0, inlineIdx, inlineCons) = parseColumnDefs(colDefs)
         var pks = pks0
+        var identity: Option[String] = None
         val notNull = mutable.Set.empty[String]
         // IDENTITY / AUTO_INCREMENT / SERIAL column (Column.java
         // auto-increment + backing Sequence, Sequence.java:25):
@@ -1426,54 +1350,27 @@ final class Engine(val spark: SparkSession)
           val typeTok = up.split("\\s+").drop(1).headOption.getOrElse("")
           val serial = typeTok.startsWith("SERIAL") || typeTok.startsWith("BIGSERIAL")
           if (up.contains("IDENTITY") || up.contains("AUTO_INCREMENT") || serial) {
-            identityCols(tn) = cn
-            identityNext(tn) = 1L
+            identity = Some(cn)
             if (serial && !modeFlags.serialColumnIsNotPK && !pks.contains(cn))
               pks = pks :+ cn
           }
           if (up.contains("NOT NULL") || up.contains("PRIMARY KEY")) notNull += cn
         }
-        if (pks.nonEmpty) { primaryKeys(tn) = pks; notNull ++= pks }
-        notNullCols(tn) = notNull.toSet
-        // domain CHECKs attach to every column declared with the domain
-        // type (UserDataType column constraint): VALUE → the column name,
-        // enforced by the same per-batch validator as table CHECKs
-        splitTop(colDefs).map(_.trim).foreach { d =>
-          val toks = d.split("\\s+")
-          if (toks.length >= 2) {
-            val cn = toks(0).toLowerCase
-            val base = toks(1).takeWhile(c => c.isLetter || c == '_').toLowerCase
-            domainChecks.get(base).foreach { chk =>
-              checks += CheckDef(s"${tn}_${cn}_domain", tn,
-                chk.replaceAll("(?i)\\bVALUE\\b", cn))
-            }
-          }
-        }
+        notNull ++= pks
         // DEFAULT expr / computed `AS expr` column options (Column.java
         // defaultExpression) — applied on omitted columns and the DEFAULT
-        // keyword in VALUES
-        // trailing column options (NOT NULL / AUTO_INCREMENT / UNIQUE) are
-        // not part of the default expression
-        // token scan: DEFAULT keyword + trailing-option stripping can
-        // never bind inside a default literal (DEFAULT 'x NOT NULL' is
-        // one token)
-        splitTop(colDefs).map(_.trim).foreach { d0 =>
-          defaultClause(d0, leadIdent = true) match {
-            case Some((cn, dflt)) if !cn.equalsIgnoreCase("PRIMARY") =>
-              colDefaults.getOrElseUpdate(tn,
-                mutable.LinkedHashMap.empty)(cn.toLowerCase) = dflt.trim
-            case _ =>
-          }
-        }
-        inlineIdx.foreach { case (ixName, cols, unique) =>
-          indexes(ixName) = IndexDef(ixName, tn, cols, unique)
-        }
-
+        // keyword in VALUES. The token scan strips trailing column options
+        // (NOT NULL / AUTO_INCREMENT / UNIQUE) and never binds inside a
+        // default literal (DEFAULT 'x NOT NULL' is one token).
+        val defaults = splitTop(colDefs).map(_.trim).flatMap(d0 =>
+          defaultClause(d0, leadIdent = true).collect {
+            case (cn, dflt) if !cn.equalsIgnoreCase("PRIMARY") =>
+              cn.toLowerCase -> dflt.trim
+          })
         // _ROWID_ pseudo-column wiring (PseudoColumnTest): a single
         // integral PRIMARY KEY IS the row id (StandardPrimaryIndex
         // clustered key); otherwise a hidden engine-assigned column —
         // unless the user declared _rowid_ as an ordinary column.
-        import org.apache.spark.sql.types._
         val intPk = pks match {
           case Seq(pk) => schema.fields
             .find(_.name.equalsIgnoreCase(pk))
@@ -1482,50 +1379,63 @@ final class Engine(val spark: SparkSession)
             .map(_ => pk.toLowerCase)
           case _ => None
         }
-        val declaredRowid =
-          schema.fieldNames.exists(_.equalsIgnoreCase("_rowid_"))
-        val finalSchema = intPk match {
-          case Some(pk) => rowidPk(tn) = pk; schema
-          case None if !declaredRowid =>
-            rowidTables += tn; rowidNext(tn) = 1L
-            schema.add("_rowid_", LongType)
-          case None => schema
+        val (rowid, finalSchema) = intPk match {
+          case Some(pk) => (RowidKind.Pk(pk), schema)
+          case None if !schema.fieldNames.exists(_.equalsIgnoreCase("_rowid_")) =>
+            (RowidKind.Hidden, schema.add("_rowid_", LongType))
+          case None => (RowidKind.Absent, schema)
         }
-        register(name, spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], finalSchema))
-        if (cgPkg.isDefined || cgCode.isDefined)
-          tableCodegen(tn) = (cgPkg, cgCode)
-        commitPendingStorage(tn)
-        // inline table constraints route through the SAME machinery as
-        // ALTER TABLE ADD CONSTRAINT — AFTER registration (the validator
-        // reads the just-created empty table; vacuous now, then the
-        // recorded constraint guards every mutation); unnamed ones get a
-        // reference-style generated name
-        inlineCons.zipWithIndex.foreach { case ((cn, body), i) =>
-          addConstraint(tn, cn.getOrElse(s"${tn}_cons_$i"), body)
-        }
+        install(tn, TableEntry(
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], finalSchema),
+          primaryKey = Some(pks).filter(_.nonEmpty), identity = identity,
+          rowid = rowid, notNull = notNull.toSet,
+          defaults = scala.collection.immutable.VectorMap.from(defaults),
+          storage = storage, onCommit = onCommit, codegen = (cgPkg, cgCode)))
+        // the objects with names of their own come after the entry and go
+        // with it if one fails: domain CHECKs, inline indexes, and inline
+        // table constraints through the SAME machinery as ALTER TABLE ADD
+        // CONSTRAINT (validated against the just-created empty table;
+        // unnamed ones get a reference-style generated name)
+        try {
+          // domain CHECKs attach to every column declared with the domain
+          // type (UserDataType column constraint): VALUE → the column name,
+          // enforced by the same per-batch validator as table CHECKs
+          splitTop(colDefs).map(_.trim).foreach { d =>
+            val toks = d.split("\\s+")
+            if (toks.length >= 2) {
+              val cn = toks(0).toLowerCase
+              val base = toks(1).takeWhile(c => c.isLetter || c == '_').toLowerCase
+              domainChecks.get(base).foreach { chk =>
+                checks += CheckDef(s"${tn}_${cn}_domain", tn,
+                  chk.replaceAll("(?i)\\bVALUE\\b", cn))
+              }
+            }
+          }
+          inlineIdx.foreach { case (ixName, cols, unique) =>
+            indexes(ixName) = IndexDef(ixName, tn, cols, unique)
+          }
+          inlineCons.zipWithIndex.foreach { case ((cn, body), i) =>
+            addConstraint(tn, cn.getOrElse(s"${tn}_cons_$i"), body)
+          }
+        } catch { case e: Exception => dropOneTable(tn); throw e }
         status()
       case dropTableRe(ifExists, tail) =>
         val (names, restrict) = dropTableTail(tail)
         names.foreach { n0 =>
           val n = n0.toLowerCase
-          if (!tables.contains(n))
+          if (!catalog.contains(n))
             // TABLE_OR_VIEW_NOT_FOUND_1 (DropTable.java:76-78)
             require(ifExists != null, s"table not found: $n0")
           else {
             // dependent views: RESTRICT refuses naming them (CANNOT_DROP_2,
             // DropTable.java:84-93); CASCADE (the default) drops them too
-            val deps = viewDefs.toSeq.collect { case (vn, q)
-                if Lex.tokens(q).exists(_.isIdent(q, n)) => vn }
+            val deps = catalog.toSeq.collect { case (vn, e)
+                if e.view.exists(q => Lex.tokens(q).exists(_.isIdent(q, n))) => vn }
             if (restrict && deps.nonEmpty)
               throw new IllegalArgumentException(
                 s"cannot drop $n0, dependent views exist: ${deps.mkString(", ")}")
-            deps.foreach { vn =>
-              viewDefs.remove(vn); tables.remove(vn)
-              comments.remove(("VIEW", vn))
-              spark.catalog.dropTempView(vn)
-            }
-            dropOneTable(n)
+            (deps :+ n).foreach(dropOneTable)
           }
         }
         status()
@@ -1612,9 +1522,7 @@ final class Engine(val spark: SparkSession)
             // INSERT INTO t DEFAULT VALUES (Parser.java:1033): one row,
             // every declared column at its DEFAULT (hidden _rowid_ and
             // IDENTITY columns fill themselves downstream)
-            val tn = name.toLowerCase
-            val n = table(name).columns
-              .count(c => !(rowidTables.contains(tn) && c == "_rowid_"))
+            val n = entry(name).visible.columns.length
             doInsert(name, None,
               parseValueRows(name, "(" + Seq.fill(n)("DEFAULT").mkString(", ") + ")"))
           case InsSelect(query) =>
@@ -1640,12 +1548,12 @@ final class Engine(val spark: SparkSession)
           Option(cols).map(splitTop(_).map(_.trim)), src)
         // hidden-rowid tables: merged rows take fresh ids (storage keys are
         // not stable across H2 updates either)
-        val aligned = if (rowidTables.contains(name.toLowerCase))
+        val aligned = if (entry(name).hiddenRowid)
           fillRowid(name.toLowerCase, aligned0m, Option(cols).exists(
             splitTop(_).exists(_.trim.equalsIgnoreCase("_rowid_"))))
         else aligned0m
         val key = Option(keys).map(_.split(",").map(_.trim.toLowerCase).toSeq)
-          .orElse(primaryKeys.get(name.toLowerCase))
+          .orElse(entry(name).primaryKey)
           .getOrElse(Seq(t.columns.head))
         // Merge.java merge(): "contains null values" fires only when a key
         // value was never SET — the key column is absent from the column
@@ -1663,8 +1571,7 @@ final class Engine(val spark: SparkSession)
               s"Column $k contains null values (Merge.java merge())")
           }
           if (source.trim.toUpperCase.startsWith("VALUES")) {
-            val defaults = colDefaults.getOrElse(name.toLowerCase,
-              mutable.LinkedHashMap.empty[String, String])
+            val defaults = entry(name).defaults
             splitTop(source.trim.substring(6).trim).map(_.trim)
               .filter(v => v.startsWith("(") && v.endsWith(")")).foreach { tup =>
                 splitTop(tup.substring(1, tup.length - 1)).zipWithIndex
@@ -1829,13 +1736,13 @@ final class Engine(val spark: SparkSession)
         // FIELD/TYPE/NULL/KEY/DEFAULT shape (Parser.java:922-933); KEY is
         // PRI for a primary-key column, UNI for a unique-indexed one
         val t = tn.toLowerCase
-        val pk = primaryKeys.getOrElse(t, Seq.empty).toSet
+        val e = entry(t)
+        val pk = e.primaryKey.getOrElse(Nil).toSet
         val uni = indexes.values.filter(ix => ix.unique && ix.table == t)
           .flatMap(_.cols).toSet
-        val nn = notNullCols.getOrElse(t, Set.empty)
-        val defs = colDefaults.getOrElse(t,
-          mutable.LinkedHashMap.empty[String, String])
-        table(t).schema.fields.toSeq.map { f =>
+        val nn = e.notNull
+        val defs = e.defaults
+        e.frame.schema.fields.toSeq.map { f =>
           (f.name, f.dataType.catalogString.toUpperCase,
             // PRIMARY KEY implies NOT NULL (Column.java PK nullability)
             if (f.nullable && !pk(f.name) && !nn(f.name)) "YES" else "NO",

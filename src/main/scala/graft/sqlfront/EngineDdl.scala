@@ -108,22 +108,37 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     (names.toSeq, restrict)
   }
 
-  /** Remove one table and every per-table registry entry keyed on it
-    * (the single-name body of the old DROP TABLE dispatch). */
+  /** Drop table or view `n` with everything it owns. Its bucketed
+    * snapshot, if any, goes at the end of the statement (releaseUnheld). */
   private[sqlfront] def dropOneTable(n: String): Unit = {
-    tables.remove(n)
-    rowidPk.remove(n); rowidTables.remove(n)
-    rowidNext.remove(n)
-    // comments die with the object (as DROP ROLE already does and the
-    // reference does for every schema object) — otherwise a re-created
-    // table of the same name inherits the stale remark via script()
-    comments.remove(("TABLE", n))
-    comments.filterInPlace { case ((t, cn), _) =>
-      !(t == "COLUMN" && cn.startsWith(n + ".")) }
-    tableStorage.remove(n); onCommitActions.remove(n)
-    tableCodegen.remove(n)
-    pendingDml.remove(n)
+    catalog.remove(n)
+    moveOwned(n, None)
     spark.catalog.dropTempView(n)
+  }
+
+  /** Re-key to `to` (RENAME), or drop with `to` = None (DROP), the objects
+    * with names of their own that table `from` owns: its indexes, CHECK
+    * and FOREIGN KEY constraints, triggers, and table, view and column
+    * comments. A FOREIGN KEY of another table that references `from`
+    * follows it too: H2 drops a referential constraint with either of its
+    * tables. Every list keeps its order. */
+  private[sqlfront] def moveOwned(from: String, to: Option[String]): Unit = {
+    def re(t: String): Option[String] = if (t == from) to else Some(t)
+    def rekey[K, V](m: mutable.LinkedHashMap[K, V])(f: ((K, V)) => Option[(K, V)]) = {
+      val kept = m.toSeq.flatMap(f)
+      m.clear(); m ++= kept
+    }
+    rekey(indexes) { case (n, ix) => re(ix.table).map(t => n -> ix.copy(table = t)) }
+    checks.flatMapInPlace(ck => re(ck.table).map(t => ck.copy(table = t)))
+    foreignKeys.flatMapInPlace(fk => for (t <- re(fk.table); r <- re(fk.refTable))
+      yield fk.copy(table = t, refTable = r))
+    rekey(triggers) { case (n, (t, timing)) => re(t).map(t2 => n -> (t2, timing)) }
+    rekey(comments) {
+      case ((k @ ("TABLE" | "VIEW"), n), c) => re(n).map(t => (k, t) -> c)
+      case (("COLUMN", tc), c) if tc.startsWith(from + ".") =>
+        to.map(t => ("COLUMN", t + tc.drop(from.length)) -> c)
+      case kc => Some(kc)
+    }
   }
 
   /** Parsed CREATE/ALTER SEQUENCE option tail. `min`/`max`: outer None =
@@ -230,7 +245,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
         val cCols = keys(cols)
         val ref = Option(ref0).getOrElse(tn) // REFERENCES(f2) = self-table
         val rCols = Option(refCols).map(keys)
-          .orElse(primaryKeys.get(ref.toLowerCase))
+          .orElse(catalog.get(ref.toLowerCase).flatMap(_.primaryKey))
           .getOrElse(throw new IllegalArgumentException(
             s"no primary key on $ref to reference"))
         if (validate)
@@ -260,7 +275,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
         if (validate)
           require(noRows(Dml.duplicateKeys(table(tn), ks)),
             s"PRIMARY KEY $cn violated by existing rows")
-        primaryKeys(tn) = ks
+        edit(tn)(_.copy(primaryKey = Some(ks)))
         Option(ixName).foreach(ix => indexes(ix.toLowerCase) =
           IndexDef(ix.toLowerCase, tn, ks, unique = true))
       case ixRe(ixName, cols) =>
@@ -284,7 +299,8 @@ private[sqlfront] trait EngineDdl { this: Engine =>
       before: Option[String], after: Option[String]): Unit = {
     val tn = tn0.toLowerCase
     val cName = cName0.toLowerCase
-    val t = table(tn)
+    val e0 = entry(tn)
+    val t = e0.frame
     if (t.columns.contains(cName)) return // IF NOT EXISTS semantics
     var typeSpec = typeSpec0.trim
     var default: Option[String] = None
@@ -299,12 +315,6 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     }
     val up = maskedUpper(typeSpec)
     val isIdentity = up.contains("IDENTITY") || up.contains("AUTO_INCREMENT")
-    if (isIdentity) {
-      identityCols(tn) = cName
-      identityNext.getOrElseUpdate(tn, 1L)
-    }
-    default.foreach(d => colDefaults.getOrElseUpdate(tn,
-      mutable.LinkedHashMap.empty)(cName) = d)
     val newCol = default.filter(!_.toUpperCase.startsWith("NEXTVAL"))
       .map(d => expr(substConstants(d, Seq(tn))))
       .getOrElse(lit(null))
@@ -321,20 +331,21 @@ private[sqlfront] trait EngineDdl { this: Engine =>
         t.select((cols.take(i + 1) :+ newCol) ++ cols.drop(i + 1): _*)
       case _ => t.select(cols :+ newCol: _*)
     }
+    val e = e0.copy(defaults = default.fold(e0.defaults)(e0.defaults.updated(cName, _)))
     if (isIdentity) {
       // the reference's ADD COLUMN rebuilds the table row-by-row, so an
       // identity column backfills existing rows with sequence values
       // (AlterTableAlterColumn.java copyData; OnlineDDLTest reads f4=1,2)
-      val (filled, n) = Dml.assignContiguous(out, cName, identityNext(tn))
-      identityNext(tn) += n
-      register(tn, filled)
-    } else register(tn, out)
+      val (filled, n) = Dml.assignContiguous(out, cName, e.identityNext)
+      install(tn, e.copy(frame = filled, identity = Some(cName),
+        identityNext = e.identityNext + n))
+    } else install(tn, e.copy(frame = out))
   }
 
   /** BACKUP-style snapshot (dml/Backup.java): every table to parquet. */
   def backup(dir: String): Unit =
-    tables.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
+    catalog.foreach { case (name, e) =>
+      e.frame.write.mode("overwrite").parquet(s"$dir/$name.parquet")
     }
 
   // ---- helpers ----
@@ -496,8 +507,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
       insertCols: Option[Seq[String]] = None): DataFrame = {
     val t = table(tableName)
     val posCols: Seq[String] = insertCols.getOrElse(t.columns.toSeq)
-    val defaults = colDefaults.getOrElse(tableName.toLowerCase,
-      mutable.LinkedHashMap.empty[String, String])
+    val defaults = entry(tableName).defaults
     val rows = splitTop(tuples0.trim).map(_.trim).filter(_.nonEmpty).map { tup =>
       require(tup.startsWith("(") && tup.endsWith(")"), s"bad VALUES tuple: $tup")
       splitTop(tup.substring(1, tup.length - 1)).zipWithIndex.map { case (v0, i) =>
@@ -585,8 +595,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     * defaults stay NULL here and fill per-row afterwards. */
   private[sqlfront] def alignTo(tn: String, target: DataFrame, cols: Option[Seq[String]],
       src: DataFrame): DataFrame = {
-    val defaults = colDefaults.getOrElse(tn.toLowerCase,
-      mutable.LinkedHashMap.empty[String, String])
+    val defaults = entry(tn).defaults
     cols match {
       case None =>
         require(src.columns.length == target.columns.length,
@@ -620,7 +629,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
   private[sqlfront] def alignForWrite(tn: String, colsSeq: Option[Seq[String]],
       src: DataFrame): DataFrame = {
     val t = table(tn)
-    val hidden = rowidTables.contains(tn)
+    val hidden = entry(tn).hiddenRowid
     val tAlign = if (hidden && colsSeq.isEmpty) t.drop("_rowid_") else t
     val a = alignTo(tn, tAlign, colsSeq, src)
     if (hidden && colsSeq.isEmpty) a.withColumn("_rowid_", lit(null).cast("long"))
@@ -633,10 +642,10 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     * "manual 2, next auto row gets 3" contract. */
   private[sqlfront] def fillRowid(tn: String, df: DataFrame,
       mayHaveExplicit: Boolean): DataFrame = {
-    val start = rowidNext(tn)
+    val start = entry(tn).rowidNext
     if (!mayHaveExplicit) {
       val (filled, n) = Dml.assignContiguous(df, "_rowid_", start)
-      rowidNext(tn) = start + n
+      edit(tn)(_.copy(rowidNext = start + n))
       filled
     } else {
       val explicit = df.filter(col("_rowid_").isNotNull)
@@ -645,17 +654,17 @@ private[sqlfront] trait EngineDdl { this: Engine =>
       var next = start + n
       val mx = explicit.agg(max(col("_rowid_"))).head()
       if (!mx.isNullAt(0)) next = math.max(next, mx.getLong(0) + 1L)
-      rowidNext(tn) = next
+      edit(tn)(_.copy(rowidNext = next))
       explicit.union(filled)
     }
   }
 
   private[sqlfront] def fillIdentity(tn: String, df: DataFrame): DataFrame =
-    identityCols.get(tn) match {
+    entry(tn).identity match {
       case Some(idCol) =>
-        val start = identityNext(tn)
+        val start = entry(tn).identityNext
         val (filled, n) = Dml.assignContiguous(df, idCol, start)
-        identityNext(tn) = start + n
+        edit(tn)(_.copy(identityNext = start + n))
         if (n > 0) lastIdentity = Some(start + n - 1)
         filled
       case None => df
@@ -672,18 +681,17 @@ private[sqlfront] trait EngineDdl { this: Engine =>
       specified: Option[Set[String]]): DataFrame = {
     var df = df0
     val seqRef = """(?i)^NEXTVAL\s*\(\s*'(\w+)'\s*\)$""".r
-    colDefaults.getOrElse(tn, mutable.LinkedHashMap.empty[String, String])
-      .foreach { case (c, d) =>
-        val omitted = specified.exists(s => !s.contains(c))
-        if (omitted) seqRef.findFirstMatchIn(d.trim).foreach { m =>
-          sequences.get(m.group(1).toLowerCase).foreach { sq =>
-            val start = sq.next // peek; advance only by what the batch used
-            val (filled, n) = Dml.assignContiguous(df, c, start)
-            if (n > 0) { sq.advance(n); lastSeqVal = Some(start + (n - 1) * sq.inc) }
-            df = filled
-          }
+    entry(tn).defaults.foreach { case (c, d) =>
+      val omitted = specified.exists(s => !s.contains(c))
+      if (omitted) seqRef.findFirstMatchIn(d.trim).foreach { m =>
+        sequences.get(m.group(1).toLowerCase).foreach { sq =>
+          val start = sq.next // peek; advance only by what the batch used
+          val (filled, n) = Dml.assignContiguous(df, c, start)
+          if (n > 0) { sq.advance(n); lastSeqVal = Some(start + (n - 1) * sq.inc) }
+          df = filled
         }
       }
+    }
     df
   }
 
@@ -691,10 +699,10 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     * a NOT NULL column becomes 0 / '' / the current timestamp instead of
     * erroring. The engine-filled IDENTITY column is exempt. */
   private[sqlfront] def convertNullToZero(tn: String, t: DataFrame, df: DataFrame): DataFrame = {
-    val nn = notNullCols.getOrElse(tn, Set.empty)
-    if (nn.isEmpty) df
+    val e = entry(tn)
+    if (e.notNull.isEmpty) df
     else df.select(t.schema.fields.toSeq.map { f =>
-      if (!nn(f.name) || identityCols.get(tn).contains(f.name)) col(f.name)
+      if (!e.notNull(f.name) || e.identity.contains(f.name)) col(f.name)
       else {
         val zero: Column = f.dataType match {
           case StringType => lit("")
@@ -716,7 +724,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     val aligned0 = alignForWrite(tn, colsSeq, src)
     val specified = cols.map(c => splitTop(c).map(_.trim.toLowerCase).toSet)
     var aligned = fillSequenceDefaults(tn, fillIdentity(tn, aligned0), specified)
-    if (rowidTables.contains(tn)) aligned = fillRowid(tn, aligned,
+    if (entry(tn).hiddenRowid) aligned = fillRowid(tn, aligned,
       colsSeq.exists(_.exists(_.equalsIgnoreCase("_rowid_"))))
     if (modeFlags.convertInsertNullToZero)
       aligned = convertNullToZero(tn, t, aligned)
@@ -739,13 +747,13 @@ private[sqlfront] trait EngineDdl { this: Engine =>
       sets: String): Unit = {
     val t = table(name)
     val tn = name.toLowerCase
-    val key = primaryKeys.get(tn)
+    val key = entry(tn).primaryKey
       .orElse(indexes.values.find(ix => ix.unique && ix.table == tn).map(_.cols))
       .getOrElse(throw new IllegalArgumentException(
         s"ON DUPLICATE KEY UPDATE needs a PRIMARY KEY or unique index on $name"))
     val src1a = fillIdentity(tn,
       alignForWrite(tn, cols.map(c => splitTop(c).map(_.trim)), src0))
-    val src1 = if (rowidTables.contains(tn))
+    val src1 = if (entry(tn).hiddenRowid)
       fillRowid(tn, src1a, cols.exists(
         splitTop(_).exists(_.trim.equalsIgnoreCase("_rowid_"))))
     else src1a
@@ -877,6 +885,6 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     }
 
   private[sqlfront] def uniqueKeySets(tn: String): Seq[Seq[String]] =
-    (primaryKeys.get(tn).toSeq ++
+    (entry(tn).primaryKey.toSeq ++
       indexes.values.filter(ix => ix.table == tn && ix.unique).map(_.cols)).distinct
 }

@@ -21,17 +21,17 @@ private[sqlfront] trait EngineSelect { this: Engine =>
     // Known divergence: `SELECT *` in such a statement shows _rowid_.
     val restoreHidden = mutable.Buffer.empty[String]
     if (referencedOutsideLiterals(q, "_ROWID_")) {
-      def refed(tn: String) = referencedOutsideLiterals(q, tn)
-      val hid = rowidTables.toSeq.filter(refed)
-      val pkT = rowidPk.toSeq.filter { case (tn, _) => refed(tn) }
+      val refed = catalog.toSeq.filter { case (tn, _) => referencedOutsideLiterals(q, tn) }
+      val hid = refed.collect { case (tn, e) if e.hiddenRowid => tn }
+      val pkT = refed.map(_._2.rowid).collect { case RowidKind.Pk(c) => c }
       if (hid.isEmpty && pkT.size == 1)
-        q = Rw.rewrite(q, Rw.Kw("_ROWID_"))(_ => pkT.head._2)
+        q = Rw.rewrite(q, Rw.Kw("_ROWID_"))(_ => pkT.head)
       hid.foreach { tn =>
-        tables(tn).createOrReplaceTempView(tn); restoreHidden += tn }
+        table(tn).createOrReplaceTempView(tn); restoreHidden += tn }
     }
     try runSelectTranslated(q)
     finally restoreHidden.foreach(tn =>
-      tables(tn).drop("_rowid_").createOrReplaceTempView(tn))
+      entry(tn).visible.createOrReplaceTempView(tn))
   }
 
   /** Word-boundary occurrence of `word` outside string literals. */
@@ -122,7 +122,7 @@ private[sqlfront] trait EngineSelect { this: Engine =>
     val fromSeg = Stmt(q.substring(fromIdx + 4, whereIdx)).masked
     val realCols: Set[String] = """\b\w+\b""".r.findAllIn(fromSeg)
       .map(_.toLowerCase).toSet
-      .flatMap((t: String) => tables.get(t).toSeq.flatMap(_.columns.map(_.toLowerCase)))
+      .flatMap((t: String) => catalog.get(t).toSeq.flatMap(_.frame.columns.map(_.toLowerCase)))
     val aliases = splitTop(selectList).map(_.trim).collect {
       case aliasRe(e, a) if !realCols(a.toLowerCase) => a.toLowerCase -> e
     }.toMap
@@ -247,14 +247,12 @@ private[sqlfront] trait EngineSelect { this: Engine =>
     val view = s"graft_info_$name"
     val df = name match {
       case "tables" =>
-        tables.keys.toSeq.map(t => ("graft", "public", t, "TABLE", "PARQUET"))
+        catalog.keys.toSeq.map(t => ("graft", "public", t, "TABLE", "PARQUET"))
           .toDF("table_catalog", "table_schema", "table_name", "table_type",
             "storage_type")
       case "columns" =>
-        tables.toSeq.flatMap { case (t, df0) =>
-          df0.schema.fields
-            .filterNot(f => rowidTables.contains(t) && f.name == "_rowid_")
-            .zipWithIndex.map { case (f, i) =>
+        catalog.toSeq.flatMap { case (t, e) =>
+          e.visible.schema.fields.zipWithIndex.map { case (f, i) =>
               (t, f.name, i + 1, f.dataType.catalogString.toUpperCase,
                 if (f.nullable) "YES" else "NO")
             }
@@ -268,8 +266,8 @@ private[sqlfront] trait EngineSelect { this: Engine =>
           sessionSettings.toSeq.map { case (k, v) => (k, v) })
           .toDF("setting_name", "setting_value")
       case "constraints" =>
-        (primaryKeys.toSeq.map { case (t, ks) =>
-          (t, "PRIMARY_KEY", "PRIMARY KEY", ks.mkString(",")) } ++
+        (catalog.toSeq.flatMap { case (t, e) => e.primaryKey.map(ks =>
+          (t, "PRIMARY_KEY", "PRIMARY KEY", ks.mkString(","))) } ++
          foreignKeys.toSeq.map(fk => (fk.table, fk.name, "REFERENTIAL",
            fk.cols.mkString(",") + "->" + fk.refTable + "(" +
              fk.refCols.mkString(",") + ")")) ++
@@ -288,7 +286,7 @@ private[sqlfront] trait EngineSelect { this: Engine =>
           "column_name", "index_type")
       case "views" =>
         // MetaTable.java VIEWS (id 14)
-        viewDefs.toSeq.map { case (n, sql) => ("graft", "public", n, sql) }
+        catalog.toSeq.flatMap { case (n, e) => e.view.map(("graft", "public", n, _)) }
           .toDF("table_catalog", "table_schema", "table_name",
             "view_definition")
       case "function_aliases" =>
@@ -419,20 +417,17 @@ private[sqlfront] trait EngineSelect { this: Engine =>
     * sequence statements for the current catalog. Data itself snapshots to
     * parquet via `backup`. */
   def script(): Seq[String] = {
-    val ddl = tables.toSeq.map { case (name, df) =>
-      val cols = df.schema.fields
-        .filterNot(f => rowidTables.contains(name) && f.name == "_rowid_")
-        .map { f =>
-          val pk = primaryKeys.get(name).exists(_.contains(f.name.toLowerCase))
-          s"${f.name} ${f.dataType.sql}${if (pk) " PRIMARY KEY" else ""}"
-        }
-      val cg = tableCodegen.get(name).map { case (pkg, code) =>
-        pkg.map(v => s" PACKAGE '$v'").getOrElse("") +
-          code.map(v => s" GENERATE CODE '$v'").getOrElse("")
-      }.getOrElse("")
+    val ddl = catalog.toSeq.collect { case (name, e) if e.view.isEmpty =>
+      val cols = e.visible.schema.fields.map { f =>
+        val pk = e.primaryKey.exists(_.contains(f.name.toLowerCase))
+        s"${f.name} ${f.dataType.sql}${if (pk) " PRIMARY KEY" else ""}"
+      }
+      val (pkg, code) = e.codegen
+      val cg = pkg.map(v => s" PACKAGE '$v'").getOrElse("") +
+        code.map(v => s" GENERATE CODE '$v'").getOrElse("")
       // storage prefix + ON COMMIT tail round-trip (Parser.java:3969-3987)
-      val st = tableStorage.get(name).map(_ + " ").getOrElse("")
-      val oc = onCommitActions.get(name).map(a => s" ON COMMIT $a").getOrElse("")
+      val st = e.storage.map(_ + " ").getOrElse("")
+      val oc = e.onCommit.map(a => s" ON COMMIT $a").getOrElse("")
       s"CREATE ${st}TABLE $name (${cols.mkString(", ")})$oc$cg;"
     }
     val seqs = sequences.toSeq.map { case (n, s) =>
@@ -452,8 +447,11 @@ private[sqlfront] trait EngineSelect { this: Engine =>
     } ++ checks.toSeq.map { ck =>
       s"ALTER TABLE ${ck.table} ADD CONSTRAINT ${ck.name} CHECK (${ck.expr});"
     }
-    val vws = viewDefs.toSeq.map { case (n, sql) =>
-      s"CREATE VIEW $n AS $sql;"
+    val vws = catalog.toSeq.flatMap { case (n, e) =>
+      e.view.map(sql => s"CREATE VIEW $n AS $sql;")
+    }
+    val trgs = triggers.toSeq.map { case (n, (t, timing)) =>
+      s"CREATE TRIGGER $n $timing ON $t;"
     }
     val als = aliases.toSeq.map { case (n, t) =>
       s"""CREATE ALIAS $n FOR "$t";"""
@@ -482,8 +480,8 @@ private[sqlfront] trait EngineSelect { this: Engine =>
         svc.implementBy.map(c => s" IMPLEMENT BY '$c'").getOrElse("") +
         svc.codePath.map(g => s" GENERATE CODE '$g'").getOrElse("") + ";"
     }
-    val defs = colDefaults.toSeq.flatMap { case (t, ds) =>
-      ds.toSeq.map { case (c, d) =>
+    val defs = catalog.toSeq.flatMap { case (t, e) =>
+      e.defaults.toSeq.map { case (c, d) =>
         s"ALTER TABLE $t ALTER COLUMN $c SET DEFAULT $d;"
       }
     }
@@ -502,38 +500,21 @@ private[sqlfront] trait EngineSelect { this: Engine =>
     // (the models themselves are parquet on disk, not DDL)
     val reg = sessionSettings.get("MODEL_REGISTRY").toSeq.map(v =>
       s"SET MODEL_REGISTRY ${if (v.startsWith("'")) v else s"'$v'"};")
-    ddl ++ seqs ++ ixs ++ cons ++ defs ++ vws ++ als ++ consts ++ doms ++
+    ddl ++ seqs ++ ixs ++ cons ++ defs ++ vws ++ trgs ++ als ++ consts ++ doms ++
       svcs ++ usrs ++ rls ++ rgs ++ cmts ++ dbs ++ reg
   }
 
   // ---- DDL helpers ----
 
+  /** ALTER TABLE … RENAME TO (AlterTableRename.java): the entry moves to
+    * the new name whole, and so do the objects the table owns. */
   private[sqlfront] def renameTable(from: String, to: String): Unit = {
-    val df = tables.remove(from).getOrElse(
+    require(!catalog.contains(to), s"TABLE_OR_VIEW_ALREADY_EXISTS: $to")
+    val e = catalog.remove(from).getOrElse(
       throw new IllegalArgumentException(s"no table $from"))
     spark.catalog.dropTempView(from)
-    primaryKeys.remove(from).foreach(primaryKeys(to) = _)
-    identityCols.remove(from).foreach(identityCols(to) = _)
-    identityNext.remove(from).foreach(identityNext(to) = _)
-    indexes.mapValuesInPlace((_, ix) =>
-      if (ix.table == from) ix.copy(table = to) else ix)
-    foreignKeys.indices.foreach { i =>
-      val fk0 = foreignKeys(i)
-      var fk = fk0
-      if (fk.table == from) fk = fk.copy(table = to)
-      if (fk.refTable == from) fk = fk.copy(refTable = to)
-      if (fk ne fk0) foreignKeys(i) = fk
-    }
-    checks.indices.foreach { i =>
-      if (checks(i).table == from) checks(i) = checks(i).copy(table = to)
-    }
-    notNullCols.remove(from).foreach(notNullCols(to) = _)
-    colDefaults.remove(from).foreach(colDefaults(to) = _)
-    tableStorage.remove(from).foreach(tableStorage(to) = _)
-    onCommitActions.remove(from).foreach(onCommitActions(to) = _)
-    tableCodegen.remove(from).foreach(tableCodegen(to) = _)
-    pendingDml.remove(from).foreach(pendingDml(to) = _)
-    register(to, df)
+    install(to, e)
+    moveOwned(from, Some(to))
   }
 
 }

@@ -41,7 +41,7 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
           fromPart.charAt(fToks.last.start) == ')' && fToks.last.depth == 0
         if (isCall) {
           val fn = fToks.head.text(fromPart)
-          if (!tables.contains(fn.toLowerCase) &&
+          if (!catalog.contains(fn.toLowerCase) &&
               !tableFns.contains(fn.toLowerCase) &&
               splitTop(fromPart).size == 1)
             fromPart = s"(SELECT $fromPart AS ${fn.toLowerCase})"
@@ -300,9 +300,9 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
     if (constants.isEmpty) return q0
     var q = q0
     val qToks = Lex.tokens(q)
-    val colNames = tables.keys
+    val colNames = catalog.keys
       .filter(t => context.contains(t) || qToks.exists(_.isIdent(q, t)))
-      .flatMap(t => tables(t).columns.map(_.toLowerCase)).toSet
+      .flatMap(t => table(t).columns.map(_.toLowerCase)).toSet
     constants.foreach { case (n, v) =>
       if (!colNames.contains(n))
         q = Rw.rewrite(q, Rw.Kw(n))(_ => v)

@@ -151,13 +151,43 @@ class BucketingSpec extends SparkSpec {
         "SELECT SUM(v) FROM bx_fact JOIN bx_dim ON bx_fact.k = bx_dim.k")
         .head().getLong(0)
       assert(viaSql == (1 to 500).map(_ * 2L).sum)
+      // a table filled from the layout (its ids are assigned over an RDD
+      // whose lineage scans the snapshot) keeps the snapshot alive after
+      // bx_fact's DROP
+      en.sql("CREATE TABLE bx_copy(k INT, v INT)")
+      en.sql("INSERT INTO bx_copy SELECT k, v FROM bx_fact")
+      // and so does a version that reads it only inside a scalar subquery,
+      // once it is the last holder
+      en.sql("CREATE TABLE bx_max(v INT)")
+      en.sql("INSERT INTO bx_max VALUES (0)")
+      en.sql("UPDATE bx_max SET v = (SELECT MAX(v) FROM bx_fact)")
+      en.sql("DROP TABLE bx_fact")
+      assert(en.sql("SELECT SUM(v) FROM bx_copy").head().getLong(0) == viaSql)
+      en.sql("DROP TABLE bx_copy")
+      assert(en.sql("SELECT v FROM bx_max").head().getInt(0) == 1000)
+      en.sql("DROP TABLE bx_max")
+      // a mixed-case key through the programmatic door: the layout holds
+      // the table's rows across its own release check and a re-bucket
+      en.sql("CREATE TABLE bx_u(userId INT, v INT)")
+      en.sql("INSERT INTO bx_u SELECT X, X FROM SYSTEM_RANGE(1, 50)")
+      en.bucket("bx_u", Seq("userId"))
+      assert(en.sql("SELECT SUM(v) FROM bx_u").head().getLong(0) == 1275L)
+      en.bucket("bx_u", Seq("userId"), 8)
+      assert(en.sql("SELECT SUM(v) FROM bx_u").head().getLong(0) == 1275L)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
         (64L * 1024 * 1024).toString)
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       en.sql("SET BUCKETED_INDEXES 0")
-      en.sql("DROP TABLE bx_fact"); en.sql("DROP TABLE bx_dim")
+      en.sql("DROP TABLE IF EXISTS bx_fact"); en.sql("DROP TABLE bx_dim")
+      en.sql("DROP TABLE IF EXISTS bx_u")
     }
+    // the bucketed snapshots, the superseded epoch included, drop with
+    // their tables
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(t => t.startsWith("graft_engine_bkt_") &&
+        Seq("_bx_fact_", "_bx_dim_", "_bx_u_").exists(t.contains))
+    assert(left.isEmpty, left.toSeq)
   }
 
   test("date-partitioned layout prunes partitions at the scan") {

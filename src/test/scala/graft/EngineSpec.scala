@@ -611,6 +611,28 @@ class EngineSpec extends SparkSpec {
     // DDL is covered by the snapshot (extension beyond the reference)
     e.sql("BEGIN; CREATE TABLE tx2 (x int); ROLLBACK")
     assert(!e.tableNames.contains("tx2"))
+    // a rolled-back create leaves no hidden _rowid_ behind for a later
+    // create of the same name; a rolled-back drop brings the table back whole
+    e.sql("CREATE TABLE tx2 (a int PRIMARY KEY, b int)")
+    e.sql("INSERT INTO tx2 VALUES (1, 2)")
+    assert(e.sql("SELECT count(*) FROM tx2").head().getLong(0) == 1)
+    e.sql("CREATE TABLE tx3 (a int, b int)")
+    e.sql("INSERT INTO tx3 VALUES (1, 2)")
+    e.sql("BEGIN; DROP TABLE tx3; ROLLBACK")
+    assert(e.sql("SELECT * FROM tx3").columns.toSeq == Seq("a", "b"))
+    e.sql("INSERT INTO tx3 VALUES (3, 4)")
+    assert(e.sql("SELECT count(*) FROM tx3").head().getLong(0) == 2)
+    // identity and _rowid_ counters survive a ROLLBACK: the id a
+    // rolled-back insert drew stays used
+    e.sql("CREATE TABLE txi (id BIGINT AUTO_INCREMENT, v int)")
+    e.sql("CREATE TABLE txr (v int)")
+    e.sql("INSERT INTO txi(v) VALUES (10); INSERT INTO txr VALUES (10)")
+    e.sql("BEGIN; INSERT INTO txi(v) VALUES (11); INSERT INTO txr VALUES (11); ROLLBACK")
+    e.sql("INSERT INTO txi(v) VALUES (12); INSERT INTO txr VALUES (12)")
+    assert(e.sql("SELECT id FROM txi ORDER BY id").collect().map(_.getLong(0)).toSeq
+      == Seq(1L, 3L))
+    assert(e.sql("SELECT _rowid_ FROM txr ORDER BY 1").collect().map(_.getLong(0)).toSeq
+      == Seq(1L, 3L))
   }
 
   test("SAVEPOINT / ROLLBACK TO SAVEPOINT / SET AUTOCOMMIT (Parser.java:560-650)") {
@@ -827,13 +849,34 @@ class EngineSpec extends SparkSpec {
     // DROP COLUMN
     e.sql("ALTER TABLE at DROP COLUMN c")
     assert(!e.table("at").columns.contains("c"))
-    // RENAME TO moves metadata with the table
+    // RENAME TO moves metadata with the table: the int-PK row id, a
+    // comment and a trigger follow it
+    e.sql("COMMENT ON TABLE at IS 'evolved'")
+    e.sql("COMMENT ON COLUMN at.label IS 'renamed b'")
+    e.sql("CREATE TRIGGER at_trg AFTER INSERT ON at FOR EACH ROW CALL \"x\"")
     e.sql("ALTER TABLE at RENAME TO at2")
     assert(e.sql("SELECT count(*) FROM at2").head().getLong(0) == 2)
     intercept[Exception] { e.table("at") }
+    assert(e.sql("SELECT _rowid_ FROM at2 ORDER BY 1").collect().map(_.getLong(0)).toSeq
+      == Seq(1L, 2L))
+    assert(e.commentText("TABLE", "at2").contains("evolved"))
+    assert(e.commentText("COLUMN", "at2.label").contains("renamed b"))
+    assert(e.commentText("TABLE", "at").isEmpty)
+    assert(e.sql("SELECT table_name FROM INFORMATION_SCHEMA.TRIGGERS")
+      .collect().map(_.getString(0)).toSeq == Seq("at2"))
+    // a table with a hidden _rowid_ keeps it hidden, and counting, under
+    // its new name
+    e.sql("CREATE TABLE rw (a int, b int)")
+    e.sql("INSERT INTO rw VALUES (1, 2)")
+    e.sql("ALTER TABLE rw RENAME TO rw2")
+    assert(e.sql("SELECT * FROM rw2").columns.toSeq == Seq("a", "b"))
+    e.sql("INSERT INTO rw2 VALUES (3, 4)")
+    assert(e.sql("SELECT _rowid_, a FROM rw2 ORDER BY 1").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSeq == Seq((1L, 1), (2L, 3)))
     // SCRIPT round-trips the evolved schema
     val ddl = e.sql("SCRIPT").collect().map(_.getString(0))
     assert(ddl.exists(s => s.startsWith("CREATE TABLE at2") && s.contains("label")))
+    assert(ddl.contains("CREATE TABLE rw2 (a INT, b INT);"), ddl.toSeq)
   }
 
   test("CREATE/DROP INDEX recorded + INFORMATION_SCHEMA.INDEXES (ddl/CreateIndex.java)") {
@@ -1311,9 +1354,8 @@ class EngineSpec extends SparkSpec {
     val err = intercept[Exception](
       e.sql("CREATE TABLE oops (x int) ON COMMIT DROP"))
     assert(err.getMessage.contains("TEMPORARY"), err.getMessage)
-    // a prefixed create that died with ROLLBACK (storage metadata is not
-    // snapshotted) must not leak its prefix onto a later plain CREATE of
-    // the same name via SCRIPT
+    // a prefixed create that died with ROLLBACK must not leak its prefix
+    // onto a later plain CREATE of the same name via SCRIPT
     e.sql("SET AUTOCOMMIT OFF")
     e.sql("CREATE MEMORY TABLE leak1 (x int)")
     e.sql("ROLLBACK")
@@ -1366,16 +1408,15 @@ class EngineSpec extends SparkSpec {
     val e = freshEngine
     e.sql("CREATE TABLE st1 (a int)")
     // duplicate create with a MEMORY prefix fails — the surviving table's
-    // SCRIPT DDL must stay prefix-free (the prefix is staged, committed
-    // only on success)
+    // SCRIPT DDL must stay prefix-free (the prefix lives in the entry a
+    // successful create inserts)
     intercept[Exception](e.sql("CREATE MEMORY TABLE st1 (b int)"))
     val ddl1 = e.sql("SCRIPT").collect().map(_.getString(0))
       .filter(_.toUpperCase.contains("ST1"))
     assert(ddl1.exists(_.toUpperCase.startsWith("CREATE TABLE")), ddl1.toSeq)
     assert(!ddl1.exists(_.toUpperCase.contains("MEMORY")), ddl1.toSeq)
     // a codegen-tailed create that dies in a rolled-back transaction must
-    // not leak PACKAGE/GENERATE CODE onto a later plain create (the
-    // tableCodegen twin of the storage-prefix stale-clear)
+    // not leak PACKAGE/GENERATE CODE onto a later plain create
     e.sql("BEGIN")
     e.sql("CREATE TABLE st2 (a int) PACKAGE 'com.x' GENERATE CODE 'src'")
     e.sql("ROLLBACK")
@@ -1384,7 +1425,7 @@ class EngineSpec extends SparkSpec {
       .filter(_.toUpperCase.contains("ST2"))
     assert(!ddl2.exists(_.toUpperCase.contains("PACKAGE")), ddl2.toSeq)
     // a temp-table create that FAILS later in the statement leaves no ON
-    // COMMIT action armed, and the staged prefix still serves ON COMMIT
+    // COMMIT action armed, and the prefix still serves ON COMMIT
     // validation on the success path
     e.sql("CREATE GLOBAL TEMPORARY TABLE st3 (a int) ON COMMIT DELETE ROWS")
     val ddl3 = e.sql("SCRIPT").collect().map(_.getString(0))
@@ -1601,5 +1642,37 @@ class EngineSpec extends SparkSpec {
     compactVa()
     assert(vb == filled.map { case (k, v) => (k, v + 2) })
     assert(vi == (1 to 5))
+  }
+
+  test("SCRIPT replays after any DDL history (Script.java round trip)") {
+    val e = freshEngine
+    e.sql("CREATE TABLE sk (id int PRIMARY KEY, a int, b varchar(10), CHECK (a > 0))")
+    e.sql("CREATE INDEX sk_b ON sk(b)")
+    e.sql("CREATE TRIGGER sk_trg BEFORE INSERT ON sk FOR EACH ROW CALL \"x\"")
+    e.sql("COMMENT ON TABLE sk IS 'keyed'")
+    e.sql("CREATE VIEW sk_v AS SELECT id, a FROM sk")
+    e.sql("CREATE TABLE fk (id int, sid int, FOREIGN KEY (sid) REFERENCES sk(id))")
+    e.sql("CREATE TABLE rw (a int, b int)")
+    e.sql("INSERT INTO rw VALUES (1, 2)")
+    e.sql("ALTER TABLE rw RENAME TO rw2")
+    e.sql("CREATE TABLE t (c int, d int)")
+    e.sql("CREATE UNIQUE INDEX t_d ON t(d)")
+    e.sql("ALTER TABLE t ADD CONSTRAINT t_ck CHECK (c > 0)")
+    e.sql("DROP TABLE t")
+    e.sql("BEGIN; CREATE TABLE gone (x int); COMMENT ON TABLE gone IS 'no'; ROLLBACK")
+    val replay = freshEngine
+    e.sql("SCRIPT").collect().map(_.getString(0)).foreach(replay.sql)
+    def meta(en: Engine, view: String, cols: String): Seq[String] =
+      en.sql(s"SELECT $cols FROM INFORMATION_SCHEMA.$view").collect()
+        .map(_.mkString("|")).toSeq.sorted
+    Seq(
+      "TABLES" -> "table_name, table_type",
+      "COLUMNS" -> "table_name, column_name, data_type",
+      "INDEXES" -> "table_name, index_name, non_unique, column_name",
+      "CONSTRAINTS" -> "table_name, constraint_name, constraint_type",
+      "TRIGGERS" -> "trigger_name, table_name, timing").foreach { case (v, cols) =>
+      assert(meta(replay, v, cols) == meta(e, v, cols), v)
+    }
+    assert(meta(e, "TABLES", "table_name") == Seq("fk", "rw2", "sk", "sk_v"))
   }
 }

@@ -193,5 +193,38 @@ class RefIndexProbe extends SparkSpec {
     // TABLE_OR_VIEW_NOT_FOUND without IF EXISTS; silent with it
     intercept[Exception](e.sql("DROP TABLE dt_a"))
     e.sql("DROP TABLE IF EXISTS dt_a")
+    // a table drops with everything it owns: a re-created table of the
+    // same name inherits nothing from it
+    def n(sql: String): Long = e.sql(sql).head().getLong(0)
+    def recreate(old: String, plain: String): Unit =
+      e.sql(s"DROP TABLE IF EXISTS dr; $old; DROP TABLE dr; $plain")
+    recreate("CREATE TABLE dr(id INT PRIMARY KEY, v INT)", "CREATE TABLE dr(id INT, v INT)")
+    e.sql("INSERT INTO dr VALUES (1, 1), (1, 2)")
+    assert(n("SELECT count(*) FROM dr") == 2)
+    recreate("CREATE TABLE dr(a INT, b INT DEFAULT 7)", "CREATE TABLE dr(a INT, b INT)")
+    e.sql("INSERT INTO dr(a) VALUES (1)")
+    assert(e.sql("SELECT b FROM dr").head().isNullAt(0))
+    recreate("CREATE TABLE dr(a INT, CHECK (a > 0))", "CREATE TABLE dr(a INT)")
+    e.sql("INSERT INTO dr VALUES (-1)")
+    recreate("CREATE TABLE dr(a INT, b INT); CREATE UNIQUE INDEX dr_ix ON dr(b)",
+      "CREATE TABLE dr(a INT, b INT)")
+    e.sql("INSERT INTO dr VALUES (1, 5), (2, 5)")
+    recreate("CREATE TABLE dr(id BIGINT AUTO_INCREMENT, v INT); INSERT INTO dr(v) VALUES (10)",
+      "CREATE TABLE dr(id BIGINT, v INT)")
+    e.sql("INSERT INTO dr(v) VALUES (11)")
+    assert(e.sql("SELECT id FROM dr").head().isNullAt(0))
+    e.sql("CREATE TABLE dr_p(id INT PRIMARY KEY)")
+    recreate("CREATE TABLE dr(id INT, pid INT, FOREIGN KEY (pid) REFERENCES dr_p(id))",
+      "CREATE TABLE dr(id INT, pid INT)")
+    e.sql("INSERT INTO dr VALUES (1, 99)")
+    recreate("CREATE TABLE dr(a INT); " +
+      "CREATE TRIGGER dr_trg BEFORE INSERT ON dr FOR EACH ROW CALL \"x\"", "SELECT 1")
+    assert(n("SELECT count(*) FROM INFORMATION_SCHEMA.TRIGGERS") == 0)
+    // a FOREIGN KEY drops with the table it references too (H2 drops a
+    // referential constraint with either of its tables)
+    e.sql("CREATE TABLE dr(id INT, pid INT, FOREIGN KEY (pid) REFERENCES dr_p(id))")
+    e.sql("DROP TABLE dr_p")
+    e.sql("INSERT INTO dr VALUES (1, 99)")
+    assert(n("SELECT count(*) FROM INFORMATION_SCHEMA.CROSS_REFERENCES") == 0)
   }
 }
