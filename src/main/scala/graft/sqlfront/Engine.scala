@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Checkpoint
 import graft.operators.Dml
+import graft.plans.KeyLookup
 
 /** H2-dialect SQL front door (SURVEY §4.3 "thin SQL front-door translator"
   * + §7 modules catalog/ and sqlfront/).
@@ -51,7 +52,12 @@ import graft.operators.Dml
   * follow their table through [[moveOwned]]. Every entry is also a temp
   * view, so translated SQL sees it; [[install]] re-publishes the view.
   * Each table is a bounded version chain: one materialized base plus at
-  * most `CompactEvery - 1` lazy DML versions ([[commitDml]]). A frame
+  * most `CompactEvery - 1` lazy DML versions ([[commitDml]]). The base of
+  * a table with one integral PRIMARY KEY is keyed: range-partitioned and
+  * sorted on the key with its partitions' key bounds registered, so a
+  * read that bounds the key with literals runs only the partitions that
+  * can hold the keys and compiles no code per key
+  * ([[graft.plans.KeyLookup]]); every other base is coalesced. A frame
   * returned by [[sql]] reads the table version current when its statement
   * ran; collect or cache it before later DML compacts or DROP removes that
   * table, after which it fails loudly instead of returning rows.
@@ -286,8 +292,8 @@ final class Engine(val spark: SparkSession)
     * `schema.findSequence("myseq").setBelongsToTable(false)` flips engine
     * state mid-test so the subsequent DROP SEQUENCE succeeds): flip the
     * named sequence's table-ownership flag. Throws on a missing sequence,
-    * as the reference's `findSequence(...)` chain would NPE. Used by the
-    * faithful-replay harness (RefSqlFaithful), not by any SQL path. */
+    * as the reference's `findSequence(...)` chain would NPE. For callers
+    * that replay the reference's Java tests; no SQL path uses it. */
   def setSequenceBelongsToTable(name: String, flag: Boolean): Unit =
     sequences.getOrElse(name.toLowerCase,
         throw new NoSuchElementException(s"sequence not found: $name"))
@@ -446,22 +452,41 @@ final class Engine(val spark: SparkSession)
     * Register the statement's new table version as a lazy rewrite of the
     * previous one, unless it is the table's `CompactEvery`th pending
     * version or its rows hold a nondeterministic or current-time
-    * expression: then materialize it as the table's new base (narrow
-    * coalesce, so the partition count never grows with the inserts). A
-    * volatile version is fixed at once, so its values are those of the
-    * statement's run and do not change from read to read. The superseded
-    * base is released when the statement is done ([[releaseUnheld]]). */
+    * expression: then materialize it as the table's new base. A table
+    * with an integral primary key ([[keyOf]]) gets a keyed base:
+    * range-partitioned and sorted on the key, and registered with its
+    * partitions' key bounds, so key reads plan as a
+    * [[graft.plans.KeyLookup]]. Any other table gets a narrow coalesce, so
+    * the partition count never grows with the inserts. A volatile version
+    * is fixed at once, so its values are those of the statement's run and
+    * do not change from read to read. The superseded base is released
+    * when the statement is done ([[releaseUnheld]]). */
   private[sqlfront] def commitDml(name: String, df: DataFrame): Unit = {
     val e = catalog.getOrElse(name.toLowerCase, TableEntry(df))
     val depth = e.pendingDml + 1
     if (depth < CompactEvery && !volatile(df))
       install(name, e.copy(frame = df, pendingDml = depth))
     else {
-      val base = Checkpoint.cut(df.coalesce(spark.sparkContext.defaultParallelism))
+      val n = spark.sparkContext.defaultParallelism
+      val base = keyOf(e, df) match {
+        case Some(k) =>
+          val b = Checkpoint.cut(df.repartitionByRange(n, col(k)).sortWithinPartitions(k))
+          KeyLookup.register(b, k)
+          b
+        case None => Checkpoint.cut(df.coalesce(n))
+      }
       install(name, e.copy(frame = base, pendingDml = 0))
       cuts += base
     }
   }
+
+  /** The integral PRIMARY KEY column of `df`, a version of table `e`. */
+  private def keyOf(e: TableEntry, df: DataFrame): Option[String] =
+    e.rowid match {
+      case RowidKind.Pk(k) => df.schema.fields
+        .find(f => f.name.equalsIgnoreCase(k) && KeyLookup.keyable(f.dataType)).map(_.name)
+      case _ => None
+    }
 
   private def volatile(df: DataFrame): Boolean =
     df.queryExecution.analyzed.collectWithSubqueries { case p => p }
@@ -1374,8 +1399,7 @@ final class Engine(val spark: SparkSession)
         val intPk = pks match {
           case Seq(pk) => schema.fields
             .find(_.name.equalsIgnoreCase(pk))
-            .filter(f => Seq(ByteType, ShortType, IntegerType, LongType)
-              .contains(f.dataType))
+            .filter(f => KeyLookup.keyable(f.dataType))
             .map(_ => pk.toLowerCase)
           case _ => None
         }

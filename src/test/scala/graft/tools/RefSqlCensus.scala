@@ -17,7 +17,7 @@ import scala.jdk.CollectionConverters._
   * chains broken by Java variables (the extracted text has holes).
   *
   * Scratch harness — requires /root/reference on disk; not a spec.
-  * Usage: runMain graft.tools.RefSqlCensus [refTestRoot] [-v]
+  * Usage: Test/runMain graft.tools.RefSqlCensus [refTestRoot] [-v]
   */
 object RefSqlCensus {
 
