@@ -7,8 +7,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{FileScanRDD, LogicalRelation}
 
-import graft.plans.KeyLookup
-
 /** Lineage cut with a selectable durability mode.
   *
   * Iterative operators (LSH dedup, label propagation, recursive CTEs) must
@@ -72,8 +70,7 @@ object Checkpoint {
   }
 
   /** Unpersist `cut`'s blocks, without blocking, unless one of `holders`
-    * still reads them, and drop its key bounds ([[graft.plans.KeyLookup]])
-    * with them; returns whether it released them. `cut` is a frame
+    * still reads them; returns whether it released them. `cut` is a frame
     * [[cut]] returned: a `LogicalRDD` over the checkpointed RDD. A holder
     * reads it when its plan (subqueries included) holds an RDD whose
     * lineage reaches that RDD: the `LogicalRDD` itself, or a frame built
@@ -85,10 +82,7 @@ object Checkpoint {
     cut.queryExecution.analyzed match {
       case own: LogicalRDD =>
         val held = holders.exists(h => reaches(planRdds(h), _.id == own.rdd.id))
-        if (!held) {
-          own.rdd.unpersist(blocking = false)
-          KeyLookup.forget(own.rdd)
-        }
+        if (!held) own.rdd.unpersist(blocking = false)
         !held
       case _ => true // a streaming pass-through holds no blocks
     }

@@ -53,10 +53,10 @@ import graft.plans.KeyLookup
   * view, so translated SQL sees it; [[install]] re-publishes the view.
   * Each table is a bounded version chain: one materialized base plus at
   * most `CompactEvery - 1` lazy DML versions ([[commitDml]]). The base of
-  * a table with one integral PRIMARY KEY is keyed: range-partitioned and
-  * sorted on the key with its partitions' key bounds registered, so a
-  * read that bounds the key with literals runs only the partitions that
-  * can hold the keys and compiles no code per key
+  * a table with one integral PRIMARY KEY is keyed: split on the key and
+  * sorted on it within each partition, with its partitions' key spans
+  * registered, so a read that bounds the key with literals to a few
+  * partitions runs only those and compiles no code per key
   * ([[graft.plans.KeyLookup]]); every other base is coalesced. A frame
   * returned by [[sql]] reads the table version current when its statement
   * ran; collect or cache it before later DML compacts or DROP removes that
@@ -453,11 +453,13 @@ final class Engine(val spark: SparkSession)
     * previous one, unless it is the table's `CompactEvery`th pending
     * version or its rows hold a nondeterministic or current-time
     * expression: then materialize it as the table's new base. A table
-    * with an integral primary key ([[keyOf]]) gets a keyed base:
-    * range-partitioned and sorted on the key, and registered with its
-    * partitions' key bounds, so key reads plan as a
-    * [[graft.plans.KeyLookup]]. Any other table gets a narrow coalesce, so
-    * the partition count never grows with the inserts. A volatile version
+    * with an integral primary key ([[keyOf]]) gets a keyed base
+    * ([[graft.plans.KeyLookup.cut]]): partitioned on key split points
+    * estimated from its previous base (at its first compaction, from the
+    * version itself once materialized), sorted on the key within each
+    * partition, and registered with its partitions' key spans, so key
+    * reads plan as lookups. Any other table gets a narrow coalesce. Either
+    * way the partition count never grows with the inserts. A volatile version
     * is fixed at once, so its values are those of the statement's run and
     * do not change from read to read. The superseded base is released
     * when the statement is done ([[releaseUnheld]]). */
@@ -467,13 +469,9 @@ final class Engine(val spark: SparkSession)
     if (depth < CompactEvery && !volatile(df))
       install(name, e.copy(frame = df, pendingDml = depth))
     else {
-      val n = spark.sparkContext.defaultParallelism
       val base = keyOf(e, df) match {
-        case Some(k) =>
-          val b = Checkpoint.cut(df.repartitionByRange(n, col(k)).sortWithinPartitions(k))
-          KeyLookup.register(b, k)
-          b
-        case None => Checkpoint.cut(df.coalesce(n))
+        case Some(k) => KeyLookup.cut(df, k)
+        case None => Checkpoint.cut(df.coalesce(spark.sparkContext.defaultParallelism))
       }
       install(name, e.copy(frame = base, pendingDml = 0))
       cuts += base
@@ -505,7 +503,11 @@ final class Engine(val spark: SparkSession)
     if ((cuts.nonEmpty || bucketed.nonEmpty) && firing == 0) {
       val holders = (catalog.values ++
         (txn.toSeq ++ savepointMap.values).flatMap(_.tables.map(_._2))).map(_.frame).toSeq
-      cuts.filterInPlace(c => !Checkpoint.release(c, holders))
+      cuts.filterInPlace { c =>
+        val released = Checkpoint.release(c, holders)
+        if (released) KeyLookup.forget(c)
+        !released
+      }
       // frames are immutable, so a snapshot goes unheld only when a frame
       // that reads it leaves the holders: scan the rest only for those
       val gone = heldBefore.filterNot(h => holders.exists(_ eq h))

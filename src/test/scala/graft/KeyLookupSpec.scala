@@ -12,9 +12,10 @@ import graft.plans.{KeyLookup, KeyLookupExec}
 import graft.sqlfront.Engine
 
 /** Primary-key reads over a compacted integral-PK table plan as a
-  * `KeyLookupExec` that reads only the partitions whose key bounds admit
-  * the keys, and compile the same code for every key; every other shape
-  * keeps Spark's own plan; and a random stream of DML, key reads and
+  * `KeyLookupExec` that reads only the partitions whose key spans admit
+  * the keys, and compile the same code for every key; wide ranges and
+  * every other shape keep Spark's own plan; compactions split the keys on
+  * the previous base's spans; and a random stream of DML, key reads and
   * transactions reads what a shadow map holds. */
 class KeyLookupSpec extends SparkSpec {
 
@@ -59,6 +60,11 @@ class KeyLookupSpec extends SparkSpec {
     assert(none.collect().isEmpty)
     assert(lookups(none).map(_.parts.size) == Seq(0))
 
+    // a range over more than half the partitions keeps the compiled scan
+    val wide = en.sql("SELECT COUNT(*), SUM(f2) FROM kl WHERE f1 BETWEEN 2 AND 900")
+    assert(wide.head().getLong(0) == 899L && wide.head().getLong(1) == (2 to 900).map(_ * 10L).sum)
+    assert(lookups(wide).isEmpty)
+
     // the key is bound at run time: two keys, one plan string, one
     // generated code (the aggregate's own attribute ids differ per query)
     def plan(q: String) = { val df = en.sql(q); df.collect(); df.queryExecution.executedPlan }
@@ -67,6 +73,41 @@ class KeyLookupSpec extends SparkSpec {
     val aggQ = "SELECT COUNT(*), SUM(f2) FROM kl WHERE f1 BETWEEN %1$d AND %1$d + 10"
     val sources = Seq(5, 640).map(k => codegenStringSeq(plan(aggQ.format(k))).map(_._2))
     assert(sources.head.nonEmpty && sources.head == sources.last)
+  }
+
+  test("a compaction splits the keys on the previous base's spans, so drift evens out") {
+    val en = new Engine(spark)
+    compacted(en, "sp", 1000)
+    def spans = KeyLookup.lookup(en.table("sp").queryExecution.analyzed
+      .asInstanceOf[LogicalRDD].rdd).get.spans.toSeq.flatten
+    def inKeyOrder(ss: Seq[KeyLookup.Span]) =
+      ss.zip(ss.drop(1)).forall { case (a, b) => a.max < b.min }
+    val n = spark.sparkContext.defaultParallelism
+    // a thousand keys above the old ones, then nine no-op DMLs: the
+    // second compaction splits on the first base's spans, so the new
+    // keys all land in the last partition
+    en.sql("INSERT INTO sp SELECT X, X * 10 FROM SYSTEM_RANGE(1001, 2000)")
+    (1 to 9).foreach(_ => en.sql("DELETE FROM sp WHERE f1 = -1"))
+    val second = spans
+    assert(inKeyOrder(second) && second.map(_.rows).sum == 2000L, second)
+    assert(second.last.max == 2000L && second.last.rows >= 1000L, second)
+    // the third splits on the second's spans, which saw the drift
+    (1 to 10).foreach(_ => en.sql("DELETE FROM sp WHERE f1 = -1"))
+    val third = spans
+    assert(inKeyOrder(third) && third.size == n, third)
+    assert(third.forall(s => s.rows * n <= 2000L * 3 / 2), third)
+    assert(en.sql("SELECT SUM(f2) FROM sp WHERE f1 BETWEEN 990 AND 1010").head().getLong(0) ==
+      (990 to 1010).map(_ * 10L).sum)
+
+    // the estimate takes each span's rows as spread evenly, overlaps too
+    import KeyLookup.{Span, splits}
+    assert(splits(Seq(Span(1, 100, 100)), 4) == Seq(25L, 50L, 75L))
+    assert(splits(Seq(Span(1, 100, 100), Span(1, 100, 100)), 2) == Seq(50L))
+    assert(splits(Seq(Span(1, 10, 300), Span(11, 1000, 100)), 4) == Seq(4L, 7L, 10L))
+    // the whole Long range, within the double estimate's precision
+    val Seq(mid) = splits(Seq(Span(Long.MinValue, Long.MaxValue, 10)), 2)
+    assert(math.abs(mid) <= 4096L, mid)
+    assert(splits(Seq(Span(7, 7, 5)), 3) == Seq(7L, 7L))
   }
 
   test("shapes the lookup does not recognise keep Spark's plan and read correctly") {

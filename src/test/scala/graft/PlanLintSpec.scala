@@ -103,7 +103,7 @@ class PlanLintSpec extends SparkSpec {
     "core/ModelStore.scala" -> 2, // registry reads: readAll's collect is bounded by MODEL size (dim / C·dim / merges / k·d / m·kc·subdim / mBits÷64 rows — never the corpus); corpusFingerprint's head() is a 1-row global XOR aggregate
     "operators/Eval.scala" -> 1, // rank-sum offset pass: #partitions driver rows (the packSequences shape), never row-scaled
     "operators/Incremental.scala" -> 3, // readPackHighWater + readCfg: 1-row state reads; recordedVersion: 1-row lookup in the #batches-sized scoring log
-    "plans/KeyLookup.scala" -> 1 // register: one (min, max) key pair per partition of a keyed base (#partitions rows, the Sampling count-array shape)
+    "plans/KeyLookup.scala" -> 1 // spansOf: one (min, max, rows) key span per partition of a materialized frame (#partitions rows, the Sampling count-array shape)
   )
 
   test("driver collect() surface matches the audited per-file record") {
