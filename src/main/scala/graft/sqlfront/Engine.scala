@@ -14,8 +14,8 @@ import graft.plans.KeyLookup
   *
   * The reference parses its dialect with a 5k-line recursive-descent parser
   * (lealone-sql Parser.java); Spark already has a full SQL parser, so this
-  * layer only (a) keeps a mutable catalog of named DataFrames (the
-  * Database→Schema→Table registry, Schema.java), (b) executes DDL/DML as
+  * layer only (a) keeps a catalog of named DataFrames and schema objects
+  * (the Database→Schema→Table registry, Schema.java), (b) executes DDL/DML as
   * copy-on-write snapshot rewrites via [[graft.operators.Dml]], and
   * (c) rewrites the H2-only surface into Spark SQL before delegating to
   * `spark.sql`:
@@ -43,14 +43,17 @@ import graft.plans.KeyLookup
   *   - every textual rewrite is a token-pattern pass (Rw.rewrite) —
   *     string-literal safety is structural, not simulated
   *
-  * Each table or view is one [[TableEntry]] in the ordered [[catalog]]
-  * map: its frame plus every attribute keyed by the table alone. CREATE
-  * inserts an entry once the create succeeds, DROP removes it, RENAME
-  * re-keys it, DROP ALL OBJECTS clears the map, and a transaction snapshot
-  * copies the map. The objects with names of their own (indexes, CHECK and
-  * FOREIGN KEY constraints, triggers, comments) stay in ordered lists and
-  * follow their table through [[moveOwned]]. Every entry is also a temp
-  * view, so translated SQL sees it; [[install]] re-publishes the view.
+  * Every schema object is part of one immutable [[Catalog]] value, held
+  * in one `var` and written only through its setter, which publishes the
+  * change to the Spark session: a temp view per table, a temp function
+  * per alias and aggregate. Each table or view is one [[TableEntry]]: its
+  * frame plus every attribute keyed by the table alone. CREATE adds an
+  * entry once the create succeeds, DROP removes it, RENAME re-keys it, and
+  * the objects with names of their own (indexes, CHECK and FOREIGN KEY
+  * constraints, triggers, comments, rights) follow it through
+  * [[Catalog.moveOwned]]. A transaction snapshot is the value itself;
+  * ROLLBACK assigns it back and DROP ALL OBJECTS assigns
+  * [[Catalog.dropAll]].
   * Each table is a bounded version chain: one materialized base plus at
   * most `CompactEvery - 1` lazy DML versions ([[commitDml]]). The base of
   * a table with one integral PRIMARY KEY is keyed: split on the key and
@@ -66,30 +69,39 @@ final class Engine(val spark: SparkSession)
     extends EngineTranslate with EngineSelect with EngineDdl
     with EngineStatements {
 
-  /** Every table and view, in creation order. */
-  private[sqlfront] val catalog = mutable.LinkedHashMap.empty[String, TableEntry]
-  private[sqlfront] val sequences = mutable.HashMap.empty[String, Sequence]
+  private var current = Catalog.empty
 
-  /** One declared service method: SQL name (stored uppercase), ordered
-    * (paramName, sqlType) pairs, declared return type ("void" = no return
-    * value — the reference executer's NO_RETURN_VALUE contract). */
-  private[sqlfront] final case class ServiceMethod(
-      name: String, params: Seq[(String, String)], retType: String)
+  /** Every schema object of this engine. */
+  private[sqlfront] def catalog: Catalog = current
 
-  /** CREATE SERVICE registration (ddl/CreateService.java,
-    * SqlScript.java:166-191): the service's typed method list plus the
-    * PACKAGE / IMPLEMENT BY / GENERATE CODE attributes. PACKAGE and
-    * GENERATE CODE drive the reference's client/executer CODE GENERATOR —
-    * a build-time artifact, recorded here but not emitted (a Spark
-    * library has no client-proxy build step); IMPLEMENT BY is the live
-    * contract: the class whose camelCased methods the dispatcher calls. */
-  private[sqlfront] final case class ServiceDef(
-      name: String, methods: Map[String, ServiceMethod],
-      packageName: Option[String], implementBy: Option[String],
-      codePath: Option[String])
+  /** The one write of the catalog. It publishes to the Spark session what
+    * differs from the value it replaces: the temp view of every table or
+    * view added, removed or given another frame, and the temp function of
+    * every alias and aggregate added, replaced or removed. An alias that
+    * fails to register stays recorded, as CREATE FORCE ALIAS leaves it,
+    * and fails at its first use. */
+  private[sqlfront] def catalog_=(next: Catalog): Unit = {
+    val prev = current
+    current = next
+    publish(prev.tables, next.tables)((p, e) => (p.frame eq e.frame) && p.rowid == e.rowid)(
+      spark.catalog.dropTempView, (n, e) => e.visible.createOrReplaceTempView(n))
+    publish(prev.aliases, next.aliases)(_ == _)(
+      n => spark.sql(s"DROP TEMPORARY FUNCTION IF EXISTS $n"),
+      (n, a) => scala.util.Try(ReflectAlias.register(spark, n, a)))
+    publish(prev.aggregates, next.aggregates)(_ == _)(
+      n => spark.sql(s"DROP TEMPORARY FUNCTION IF EXISTS ${UserAggregate.finisherName(n)}"),
+      (n, cls) => UserAggregate.register(spark, n, cls))
+  }
 
-  private[sqlfront] val services = mutable.HashMap.empty[String, ServiceDef]
-  private val serviceInstances = mutable.HashMap.empty[String, AnyRef]
+  private def publish[V](prev: Map[String, V], next: Map[String, V])(
+      same: (V, V) => Boolean)(drop: String => Unit, put: (String, V) => Unit): Unit =
+    if (prev ne next) {
+      prev.keys.foreach(n => if (!next.contains(n)) drop(n))
+      next.foreach { case (n, v) => if (!prev.get(n).exists(same(_, v))) put(n, v) }
+    }
+
+  /** Instances of IMPLEMENT BY classes, per service definition. */
+  private val serviceInstances = mutable.HashMap.empty[ServiceDef, AnyRef]
 
   /** Dispatch one service call — the engine side of the reference's
     * EXECUTE_SERVICE_{NO_,WITH_}RETURN_VALUE('SERVICE.METHOD', json)
@@ -111,13 +123,13 @@ final class Engine(val spark: SparkSession)
     require(dot > 0, s"service method must be SERVICE.METHOD: $target")
     val sn = target.substring(0, dot).toUpperCase
     val mn = target.substring(dot + 1).toUpperCase
-    val svc = services.getOrElse(sn,
+    val svc = catalog.services.getOrElse(sn,
       throw new IllegalArgumentException(s"service $sn not found"))
     val m = svc.methods.getOrElse(mn,
       throw new IllegalArgumentException(s"no method: $mn"))
     val impl = svc.implementBy.getOrElse(throw new IllegalArgumentException(
       s"service $sn has no IMPLEMENT BY class"))
-    val inst = serviceInstances.getOrElseUpdate(sn,
+    val inst = serviceInstances.getOrElseUpdate(svc,
       Class.forName(impl).getDeclaredConstructor().newInstance()
         .asInstanceOf[AnyRef])
     val camel = {
@@ -295,36 +307,22 @@ final class Engine(val spark: SparkSession)
     * as the reference's `findSequence(...)` chain would NPE. For callers
     * that replay the reference's Java tests; no SQL path uses it. */
   def setSequenceBelongsToTable(name: String, flag: Boolean): Unit =
-    sequences.getOrElse(name.toLowerCase,
+    putSequence(name, catalog.sequences.getOrElse(name.toLowerCase,
         throw new NoSuchElementException(s"sequence not found: $name"))
-      .belongsToTable = flag
+      .copy(belongsToTable = flag))
+
+  private[sqlfront] def putSequence(name: String, s: Sequence): Unit =
+    catalog = catalog.copy(sequences = catalog.sequences.updated(name.toLowerCase, s))
+
+  /** NEXTVAL of sequence `name`. */
+  private[sqlfront] def nextVal(name: String): Long = {
+    val s = seqOrFail(name).drawn
+    putSequence(name, s)
+    lastSeqVal = Some(s.curr)
+    s.curr
+  }
   private[sqlfront] var rangeViewId = 0
 
-  // DDL surface recorded for INFORMATION_SCHEMA + validation
-  // (ddl/CreateIndex.java, db/constraint/ConstraintReferential.java,
-  // ConstraintCheck.java, ddl/CreateFunctionAlias.java, TableView.java)
-  private[sqlfront] case class IndexDef(name: String, table: String, cols: Seq[String],
-      unique: Boolean)
-  private[sqlfront] case class FkDef(name: String, table: String, cols: Seq[String],
-      refTable: String, refCols: Seq[String])
-  private[sqlfront] case class CheckDef(name: String, table: String, expr: String)
-  private[sqlfront] val indexes = mutable.LinkedHashMap.empty[String, IndexDef]
-  private[sqlfront] val foreignKeys = mutable.ArrayBuffer.empty[FkDef]
-  private[sqlfront] val checks = mutable.ArrayBuffer.empty[CheckDef]
-  private[sqlfront] val aliases = mutable.LinkedHashMap.empty[String, String]
-  // CREATE ALIAS … AS $$source$$ (FunctionAlias.loadFromSource): name →
-  // method source, compiled in-memory per JVM by SourceCompiler
-  private[sqlfront] val aliasSources = mutable.LinkedHashMap.empty[String, String]
-  // CREATE AGGREGATE name FOR "class" (db/UserAggregate.java): name →
-  // user class; call sites rewrite to the collect_list-fed finisher UDF
-  private[sqlfront] val userAggs = mutable.LinkedHashMap.empty[String, String]
-  // CREATE CONSTANT (schema/Constant.java), CREATE DOMAIN
-  // (ddl/CreateUserDataType.java), CREATE TRIGGER (recorded; row-hook
-  // execution is out of engine scope per BASELINE — the streaming
-  // foreachBatch hook is the batch twin)
-  private[sqlfront] val constants = mutable.LinkedHashMap.empty[String, String]
-  private[sqlfront] val domains = mutable.LinkedHashMap.empty[String, String]
-  private[sqlfront] val triggers = mutable.LinkedHashMap.empty[String, (String, String)]
   // Registered row-hook implementations — the batch twin of the reference's
   // api/Trigger.java fire(conn, oldRow, newRow), invoked at the statement
   // sites where the reference fires per row (Insert.java:130,157-161,
@@ -349,7 +347,7 @@ final class Engine(val spark: SparkSession)
   private[sqlfront] def fireTriggers(tn: String, event: String, phase: String,
       oldRows: DataFrame, newRows: DataFrame): Boolean = {
     var insteadOf = false
-    triggers.foreach { case (n, (tbl, timing)) =>
+    catalog.triggers.foreach { case (n, (tbl, timing)) =>
       val up = timing.toUpperCase
       val ph = if (up.startsWith("INSTEAD OF")) "INSTEAD OF"
         else if (up.startsWith("BEFORE")) "BEFORE" else "AFTER"
@@ -369,71 +367,25 @@ final class Engine(val spark: SparkSession)
   private[sqlfront] var lastIdentity: Option[Long] = None
   private[sqlfront] var lastSeqVal: Option[Long] = None
 
-  /** Full reference sequence semantics (schema/Sequence.java): MINVALUE /
-    * MAXVALUE default per Sequence.java:146-160, bound check + CYCLE wrap
-    * or SEQUENCE_EXHAUSTED per Sequence.java:239-247, attribute validation
-    * per Sequence.java:137-144, BELONGS_TO_TABLE drop guard enforced at
-    * the DROP SEQUENCE dispatch. CACHE sizes are accepted and ignored
-    * (a persistence-flush margin; no disk here). */
-  private[sqlfront] final class Sequence(var next: Long, var inc: Long,
-      minOpt: Option[Long] = None, maxOpt: Option[Long] = None,
-      var cycle: Boolean = false, var belongsToTable: Boolean = false) {
-    var minV: Long = minOpt.getOrElse(defaultMin)
-    var maxV: Long = maxOpt.getOrElse(defaultMax)
-    private def defaultMin: Long =
-      if (inc >= 0) math.min(1L, next) else Long.MinValue
-    private def defaultMax: Long =
-      if (inc >= 0) Long.MaxValue else math.max(-1L, next)
-    validate()
-    def validate(): Unit =
-      require(minV <= next && next <= maxV && maxV > minV && inc != 0 &&
-          (BigInt(inc).abs < BigInt(maxV) - BigInt(minV)),
-        s"SEQUENCE_ATTRIBUTES_INVALID value=$next min=$minV max=$maxV increment=$inc (Sequence.java:137)")
-    var curr: Long = next - inc
-    def nextVal(): Long = {
-      if ((inc > 0 && next > maxV) || (inc < 0 && next < minV)) {
-        if (cycle) next = if (inc > 0) minV else maxV
-        else throw new IllegalStateException(
-          s"SEQUENCE_EXHAUSTED (Sequence.java:246)")
-      }
-      curr = next; next += inc; lastSeqVal = Some(curr); curr
-    }
-    /** Bulk advance after a per-row multi-occurrence fill (SequenceValue
-      * semantics: every evaluation increments). The arithmetic fill cannot
-      * express a CYCLE wrap, so crossing a bound fails loudly either way. */
-    def advance(n: Long): Unit =
-      if (n > 0) {
-        val end = next + (n - 1) * inc
-        if ((inc > 0 && end > maxV) || (inc < 0 && end < minV))
-          throw new IllegalStateException(
-            if (cycle) "bulk INSERT…SELECT NEXTVAL cannot CYCLE-wrap mid-fill; use single-row inserts"
-            else "SEQUENCE_EXHAUSTED (Sequence.java:246)")
-        next += n * inc; curr = next - inc
-      }
-  }
-
   graft.functions.H2Functions.registerAll(spark)
   graft.functions.Aggregators.registerAll(spark)
 
   /** Make `df` the frame of table `name`, keeping the rest of its entry;
     * a new name becomes a plain table. */
   def register(name: String, df: DataFrame): Unit =
-    install(name, catalog.get(name.toLowerCase).fold(TableEntry(df))(_.copy(frame = df)))
+    install(name, catalog.tables.get(name.toLowerCase).fold(TableEntry(df))(_.copy(frame = df)))
 
-  /** Put entry `e` under `name` and publish its view (without a hidden
-    * `_rowid_`: runSelect swaps the full frame in for statements that
-    * reference `_rowid_` explicitly). */
-  private[sqlfront] def install(name: String, e: TableEntry): Unit = {
-    val n = name.toLowerCase
-    catalog(n) = e
-    e.visible.createOrReplaceTempView(n)
-  }
+  /** Put entry `e` under `name`. Its view leaves out a hidden `_rowid_`:
+    * runSelect swaps the full frame in for statements that reference
+    * `_rowid_` explicitly. */
+  private[sqlfront] def install(name: String, e: TableEntry): Unit =
+    catalog = catalog.copy(tables = catalog.tables.updated(name.toLowerCase, e))
 
-  private[sqlfront] def entry(name: String): TableEntry = catalog(name.toLowerCase)
+  private[sqlfront] def entry(name: String): TableEntry = catalog.tables(name.toLowerCase)
 
-  /** Replace the entry of table `name` with `f` of it; the view stays. */
+  /** Replace the entry of table `name` with `f` of it. */
   private[sqlfront] def edit(name: String)(f: TableEntry => TableEntry): Unit =
-    catalog(name.toLowerCase) = f(entry(name))
+    install(name, f(entry(name)))
 
   def table(name: String): DataFrame = entry(name).frame
 
@@ -464,7 +416,7 @@ final class Engine(val spark: SparkSession)
     * do not change from read to read. The superseded base is released
     * when the statement is done ([[releaseUnheld]]). */
   private[sqlfront] def commitDml(name: String, df: DataFrame): Unit = {
-    val e = catalog.getOrElse(name.toLowerCase, TableEntry(df))
+    val e = catalog.tables.getOrElse(name.toLowerCase, TableEntry(df))
     val depth = e.pendingDml + 1
     if (depth < CompactEvery && !volatile(df))
       install(name, e.copy(frame = df, pendingDml = depth))
@@ -501,8 +453,8 @@ final class Engine(val spark: SparkSession)
     * statement that fired the trigger. */
   private def releaseUnheld(): Unit =
     if ((cuts.nonEmpty || bucketed.nonEmpty) && firing == 0) {
-      val holders = (catalog.values ++
-        (txn.toSeq ++ savepointMap.values).flatMap(_.tables.map(_._2))).map(_.frame).toSeq
+      val holders = (catalog +: (txn.toSeq ++ savepointMap.values))
+        .flatMap(_.tables.values.map(_.frame))
       cuts.filterInPlace { c =>
         val released = Checkpoint.release(c, holders)
         if (released) KeyLookup.forget(c)
@@ -544,7 +496,7 @@ final class Engine(val spark: SparkSession)
     * via `SET BUCKETED_INDEXES 1` + `CREATE INDEX ON t(key)`. */
   def bucket(tableName: String, keys: Seq[String], buckets: Int = 32): Unit = {
     val tn = tableName.toLowerCase
-    require(catalog.contains(tn), s"TABLE_NOT_FOUND: $tableName")
+    require(catalog.tables.contains(tn), s"TABLE_NOT_FOUND: $tableName")
     require(keys.nonEmpty, "bucketing needs at least one key column")
     // EPOCHED name, never reused: a re-bucket of the same (table, keys)
     // must WRITE BEFORE DROPPING — the table's current registration may
@@ -589,7 +541,7 @@ final class Engine(val spark: SparkSession)
     * writers that build the version themselves (the DSL's `Model`). */
   def commitVersion(name: String, df: DataFrame): Unit =
     try commitDml(name, df) finally releaseUnheld()
-  def tableNames: Seq[String] = catalog.keys.toSeq
+  def tableNames: Seq[String] = catalog.tables.keys.toSeq
   def mode: String = compatibilityMode
 
   /** Execute one or more ';'-separated statements; returns the DataFrame of
@@ -679,59 +631,25 @@ final class Engine(val spark: SparkSession)
   private[sqlfront] var refIntegrity = true
 
   // ---- transactions (TransactionStatement, Parser.java:560-650) ----
-  // A transaction is a snapshot of the catalog: every table entry is an
-  // immutable value and every statement installs a new one, so BEGIN and
-  // SAVEPOINT copy the entry map and the name-keyed lists, and ROLLBACK
-  // puts them back: real single-session snapshot semantics, the 1-session
-  // degenerate case of the reference's MVCC read view. A version a
-  // snapshot holds keeps its base's blocks and its bucketed snapshot alive
-  // across later compactions and drops; they go once COMMIT, ROLLBACK,
-  // RELEASE or a new BEGIN drops the snapshot (releaseUnheld). Sequences
-  // and the IDENTITY and _rowid_ counters are NOT rolled back: an id a
-  // rolled-back insert drew stays used (H2/reference Sequence semantics).
-  // DDL is covered by the snapshot too, an extension: the reference
-  // auto-commits around DDL.
-  private[sqlfront] case class CatalogSnapshot(
-      tables: Seq[(String, TableEntry)],
-      indexes: Seq[(String, IndexDef)],
-      foreignKeys: Seq[FkDef],
-      checks: Seq[CheckDef],
-      triggers: Seq[(String, (String, String))],
-      comments: Seq[((String, String), String)],
-      constants: Seq[(String, String)],
-      domains: Seq[(String, String)],
-      schemas: Seq[String],
-      rights: Seq[(String, String, String)])
-  private[sqlfront] var txn: Option[CatalogSnapshot] = None
-  private[sqlfront] val savepointMap = mutable.LinkedHashMap.empty[String, CatalogSnapshot]
+  // A transaction snapshot is the catalog value itself: BEGIN and SAVEPOINT
+  // keep it, and ROLLBACK assigns it back: real single-session snapshot
+  // semantics, the 1-session degenerate case of the reference's MVCC read
+  // view. A version a snapshot holds keeps its base's blocks and its
+  // bucketed snapshot alive across later compactions and drops; they go
+  // once COMMIT, ROLLBACK, RELEASE or a new BEGIN drops the snapshot
+  // (releaseUnheld). The IDENTITY, _rowid_ and sequence counters of the
+  // objects that survive are NOT rolled back: an id or value a rolled-back
+  // statement drew stays used (H2/reference Sequence semantics). DDL is
+  // covered by the snapshot too, an extension: the reference auto-commits
+  // around DDL.
+  private[sqlfront] var txn: Option[Catalog] = None
+  private[sqlfront] val savepointMap = mutable.LinkedHashMap.empty[String, Catalog]
   private[sqlfront] var autocommit = true
   // recorded session options (dml/Set.java SetTypes) → SETTINGS meta view
   private[sqlfront] val sessionSettings = mutable.LinkedHashMap.empty[String, String]
 
-  private[sqlfront] def snapshot(): CatalogSnapshot = CatalogSnapshot(
-    catalog.toSeq, indexes.toSeq, foreignKeys.toSeq, checks.toSeq,
-    triggers.toSeq, comments.toSeq, constants.toSeq, domains.toSeq,
-    schemas.toSeq, rights.toSeq)
-
-  private[sqlfront] def restore(s: CatalogSnapshot): Unit = {
-    val live = catalog.clone()
-    live.keys.filterNot(s.tables.map(_._1).toSet).foreach(spark.catalog.dropTempView)
-    catalog.clear()
-    s.tables.foreach { case (n, e) =>
-      install(n, live.get(n).fold(e)(l => e.copy(
-        identityNext = e.identityNext max l.identityNext,
-        rowidNext = e.rowidNext max l.rowidNext)))
-    }
-    indexes.clear(); indexes ++= s.indexes
-    foreignKeys.clear(); foreignKeys ++= s.foreignKeys
-    checks.clear(); checks ++= s.checks
-    triggers.clear(); triggers ++= s.triggers
-    comments.clear(); comments ++= s.comments
-    constants.clear(); constants ++= s.constants
-    domains.clear(); domains ++= s.domains
-    schemas.clear(); schemas ++= s.schemas
-    rights.clear(); rights ++= s.rights
-  }
+  private[sqlfront] def restore(s: Catalog): Unit =
+    catalog = s.keepingCountersOf(catalog)
 
   /** Normalize the CREATE-statement head (Parser.java:367-369 + 3969-3987):
     * `DECLARE …` is an alias for CREATE ("support for DECLARE GLOBAL
@@ -795,7 +713,7 @@ final class Engine(val spark: SparkSession)
     * the reference's per-statement commit would drop the table at once, so
     * these tables only make sense inside BEGIN…COMMIT, where they apply. */
   private[sqlfront] def applyOnCommit(): Unit =
-    catalog.toSeq.foreach { case (tn, e) =>
+    catalog.tables.foreach { case (tn, e) =>
       e.onCommit.foreach(act =>
         if (act == "DROP") dropOneTable(tn)
         else register(tn, Dml.truncate(e.frame)))
@@ -850,10 +768,10 @@ final class Engine(val spark: SparkSession)
         // coercion differences are handled by ANSI-off session conf
         compatibilityMode = mode.toUpperCase; status()
       case beginRe() =>
-        txn = Some(snapshot()); savepointMap.clear(); status()
+        txn = Some(catalog); savepointMap.clear(); status()
       case commitRe() =>
         applyOnCommit()
-        txn = if (autocommit) None else Some(snapshot())
+        txn = if (autocommit) None else Some(catalog)
         savepointMap.clear(); status()
       case rollbackToRe(name) =>
         val sp = savepointMap.getOrElse(name.toLowerCase,
@@ -865,15 +783,15 @@ final class Engine(val spark: SparkSession)
         status()
       case rollbackRe() =>
         txn.foreach(restore)
-        txn = if (autocommit) None else Some(snapshot())
+        txn = if (autocommit) None else Some(catalog)
         savepointMap.clear(); status()
       case savepointStmtRe(name) =>
-        savepointMap(name.toLowerCase) = snapshot(); status()
+        savepointMap(name.toLowerCase) = catalog; status()
       case releaseSavepointRe(name) =>
         savepointMap.remove(name.toLowerCase); status()
       case setAutocommitRe(v) =>
         val on = Set("ON", "TRUE", "1")(v.toUpperCase)
-        if (!on && autocommit) { autocommit = false; txn = Some(snapshot()) }
+        if (!on && autocommit) { autocommit = false; txn = Some(catalog) }
         else if (on && !autocommit) {
           autocommit = true; txn = None; savepointMap.clear()
         }
@@ -904,7 +822,7 @@ final class Engine(val spark: SparkSession)
         // CreateView.java:90-98: an existing object under the name means
         // IF NOT EXISTS → silent no-op; otherwise only OR REPLACE over an
         // existing VIEW may proceed (a TABLE is never replaceable)
-        if (catalog.contains(name.toLowerCase)) {
+        if (catalog.tables.contains(name.toLowerCase)) {
           if (ine != null) return status()
           require(orReplace != null && entry(name).view.nonEmpty,
             s"VIEW_ALREADY_EXISTS: $name (CreateView.java:95)")
@@ -923,8 +841,8 @@ final class Engine(val spark: SparkSession)
         }.getOrElse(df0)
         install(name, TableEntry(df, view = Some(query.trim)))
         // COMMENT IS 'remark' in the definition (Parser.java parseCreateView)
-        Option(cmt).foreach(c => comments(("VIEW", name.toLowerCase)) = c)
-        status()
+        change(c => Option(cmt).fold(c)(t =>
+          c.copy(comments = c.comments.updated(("VIEW", name.toLowerCase), t))))
       case dropViewRe(name) =>
         dropOneTable(name.toLowerCase); status()
       case alterRenameTableRe(a, b) =>
@@ -936,7 +854,7 @@ final class Engine(val spark: SparkSession)
         // checks (bulk-load pattern); TRUE revalidates the table's FKs
         refIntegrity = v.equalsIgnoreCase("TRUE")
         if (refIntegrity)
-          foreignKeys.filter(_.table == tn.toLowerCase).foreach { fk =>
+          catalog.foreignKeys.filter(_.table == tn.toLowerCase).foreach { fk =>
             require(noRows(Dml.fkViolations(table(fk.table), fk.cols,
               table(fk.refTable), fk.refCols)),
               s"FK ${fk.name} violated on revalidation")
@@ -946,9 +864,8 @@ final class Engine(val spark: SparkSession)
         edit(tn)(_.copy(primaryKey = None)); status()
       case alterDropConstraintRe(_, cn) =>
         val n = cn.toLowerCase
-        foreignKeys.filterInPlace(_.name != n)
-        checks.filterInPlace(_.name != n)
-        indexes.remove(n); status()
+        change(c => c.copy(foreignKeys = c.foreignKeys.filter(_.name != n),
+          checks = c.checks.filter(_.name != n)).without("INDEX", n))
       case alterDropColRe(tn, ie, c) =>
         val e = entry(tn)
         val cl = c.toLowerCase
@@ -1017,52 +934,44 @@ final class Engine(val spark: SparkSession)
         require(noRows(Dml.duplicateKeys(table(tn), ks)),
           s"PRIMARY KEY $name violated by existing rows")
         edit(tn)(_.copy(primaryKey = Some(ks)))
-        indexes(name.toLowerCase) =
-          IndexDef(name.toLowerCase, tn.toLowerCase, ks, unique = true)
+        putIndex(IndexDef(name.toLowerCase, tn.toLowerCase, ks, unique = true))
         status()
       case dropSeqRe(name) =>
         // SEQUENCE_BELONGS_TO_A_TABLE_1 (ddl/DropSequence.java via
         // SequenceTest.java drop()): a table-owned sequence refuses DROP
-        sequences.get(name.toLowerCase).foreach { s =>
-          require(!s.belongsToTable,
-            s"SEQUENCE_BELONGS_TO_A_TABLE: $name (SequenceTest.java drop)")
-        }
-        sequences.remove(name.toLowerCase); status()
+        require(!catalog.sequences.get(name.toLowerCase).exists(_.belongsToTable),
+          s"SEQUENCE_BELONGS_TO_A_TABLE: $name (SequenceTest.java drop)")
+        change(_.without("SEQUENCE", name.toLowerCase))
       case createDatabaseRe(ifNotExists, name) =>
         // DATABASE_ALREADY_EXISTS_1 without IF NOT EXISTS (DatabaseTest —
         // including the always-present root database)
-        require(ifNotExists != null || !databases.contains(name.toLowerCase),
+        require(ifNotExists != null || !catalog.databases.contains(name.toLowerCase),
           s"DATABASE_ALREADY_EXISTS: $name (ddl/CreateDatabase.java)")
-        databases += name.toLowerCase; status()
+        change(c => c.copy(databases = c.databases + name.toLowerCase))
       case alterDatabaseRe(name) =>
         // the reference resolves the database first (Parser.java:4720)
-        require(databases.contains(name.toLowerCase),
+        require(catalog.databases.contains(name.toLowerCase),
           s"DATABASE_NOT_FOUND: $name (ddl/AlterDatabase.java)")
         status()
       case dropDatabaseRe(name) =>
         require(name.toLowerCase != "graft", "cannot drop the current database")
-        databases -= name.toLowerCase; status()
+        change(_.without("DATABASE", name.toLowerCase))
       case createIndexRe(unique, ine, name, tn, cols) =>
-        if (indexes.contains(name.toLowerCase)) {
-          // INDEX_ALREADY_EXISTS_1 (CreateIndex.java:87)
-          require(ine != null,
-            s"INDEX_ALREADY_EXISTS: $name (CreateIndex.java:87)")
-          return status()
-        }
+        // INDEX_ALREADY_EXISTS_1 (CreateIndex.java:87)
+        if (alreadyExists(catalog.indexes.contains(name.toLowerCase), ine,
+            s"INDEX_ALREADY_EXISTS: $name (CreateIndex.java:87)")) return status()
         val ks = cols.split(",").map(_.trim.toLowerCase).toSeq
         if (unique != null)
           require(noRows(Dml.duplicateKeys(nonNullKeyed(table(tn), ks), ks)),
             s"unique index $name violated by existing rows")
-        indexes(name.toLowerCase) =
-          IndexDef(name.toLowerCase, tn.toLowerCase, ks, unique != null)
+        putIndex(IndexDef(name.toLowerCase, tn.toLowerCase, ks, unique != null))
         // under SET BUCKETED_INDEXES 1, the index also takes physical
         // effect: the table's rows materialize bucketed on the key, so
         // joins on it plan co-located (the reference's secondary index
         // gives key-ordered locality; bucketBy is the Spark-native form)
         if (bucketedIndexes) bucket(tn, ks)
         status()
-      case dropIndexRe(name) =>
-        indexes.remove(name.toLowerCase); status()
+      case dropIndexRe(name) => change(_.without("INDEX", name.toLowerCase))
       case csvWriteRe(path, querySql) =>
         // H2's CSVWRITE returns the written row count; the path is a
         // directory (Spark writes partitioned files — coalesced to one for
@@ -1073,49 +982,34 @@ final class Engine(val spark: SparkSession)
         df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
         Seq(n).toDF("rows_written")
       case createAliasRe(force, ine, name, target) =>
-        registerAliasChecked(name, ine != null, force != null, aliases, target)(
-          () => ReflectAlias.register(spark, name.toLowerCase, target))
+        createAlias(name, ine, force != null, AliasDef(target, source = false))
       case createAliasSrcRe(force, ine, name, src) =>
-        registerAliasChecked(name, ine != null, force != null, aliasSources, src)(
-          () => ReflectAlias.registerSource(spark, name.toLowerCase, src))
-      case dropAliasRe(name) =>
-        aliases.remove(name.toLowerCase)
-        aliasSources.remove(name.toLowerCase)
-        spark.sql(s"DROP TEMPORARY FUNCTION IF EXISTS ${name.toLowerCase}")
-        status()
+        createAlias(name, ine, force != null, AliasDef(src, source = true))
+      case dropAliasRe(name) => change(_.without("ALIAS", name.toLowerCase))
       case createAggregateRe(force, ifNotExists, name, className) =>
         val n = name.toLowerCase
         // Parser.java:4455: a built-in aggregate/function name is taken
-        require(!Engine.builtinAggregates.contains(n) && !aliases.contains(n)
-            && !aliasSources.contains(n),
+        require(!Engine.builtinAggregates.contains(n) && !catalog.aliases.contains(n),
           s"FUNCTION_ALIAS_ALREADY_EXISTS: $name (Parser.java:4455)")
-        if (userAggs.contains(n)) {
-          require(ifNotExists != null,
-            s"FUNCTION_ALIAS_ALREADY_EXISTS: $name (ddl/CreateAggregate.java:45)")
-        } else {
+        if (!alreadyExists(catalog.aggregates.contains(n), ifNotExists,
+            s"FUNCTION_ALIAS_ALREADY_EXISTS: $name (ddl/CreateAggregate.java:45)")) {
           if (force == null) UserAggregate.validate(className) // eager unless FORCE
-          UserAggregate.register(spark, n, className)
-          userAggs(n) = className
+          catalog = catalog.copy(aggregates = catalog.aggregates.updated(n, className))
         }
         status()
-      case dropAggregateRe(name) =>
-        userAggs.remove(name.toLowerCase); status()
+      case dropAggregateRe(name) => change(_.without("AGGREGATE", name.toLowerCase))
       case createConstantRe(ine, name, value) =>
-        if (constants.contains(name.toLowerCase))
-          // CONSTANT_ALREADY_EXISTS_1 (CreateConstant.java:61)
-          require(ine != null,
-            s"CONSTANT_ALREADY_EXISTS: $name (CreateConstant.java:61)")
-        else constants(name.toLowerCase) = value.trim
-        status()
-      case dropConstantRe(name) =>
-        constants.remove(name.toLowerCase); status()
+        val n = name.toLowerCase
+        // CONSTANT_ALREADY_EXISTS_1 (CreateConstant.java:61)
+        if (alreadyExists(catalog.constants.contains(n), ine,
+            s"CONSTANT_ALREADY_EXISTS: $name (CreateConstant.java:61)")) status()
+        else change(c => c.copy(constants = c.constants.updated(n, value.trim)))
+      case dropConstantRe(name) => change(_.without("CONSTANT", name.toLowerCase))
       case createDomainRe(ine, name, baseType, check) =>
-        if (domains.contains(name.toLowerCase)) {
-          // USER_DATA_TYPE_ALREADY_EXISTS_1 (CreateUserDataType.java:63)
-          require(ine != null,
-            s"USER_DATA_TYPE_ALREADY_EXISTS: $name (CreateUserDataType.java:63)")
+        // USER_DATA_TYPE_ALREADY_EXISTS_1 (CreateUserDataType.java:63)
+        if (alreadyExists(catalog.domains.contains(name.toLowerCase), ine,
+            s"USER_DATA_TYPE_ALREADY_EXISTS: $name (CreateUserDataType.java:63)"))
           return status()
-        }
         // a NON-HIDDEN built-in type name is never creatable, even under
         // IF NOT EXISTS; a HIDDEN alias (int, bool, text, …) is
         // shadowable only while no user table exists
@@ -1123,24 +1017,18 @@ final class Engine(val spark: SparkSession)
         require(!builtinTypeNames(name.toUpperCase),
           s"USER_DATA_TYPE_ALREADY_EXISTS: $name (CreateUserDataType.java:68)")
         if (hiddenTypeNames(name.toUpperCase))
-          require(catalog.isEmpty,
-            s"USER_DATA_TYPE_ALREADY_EXISTS: $name (${catalog.keys.head}) " +
+          require(catalog.tables.isEmpty,
+            s"USER_DATA_TYPE_ALREADY_EXISTS: $name (${catalog.tables.keys.head}) " +
               "(CreateUserDataType.java:72)")
         // resolves through parseType, so the domain is usable in CREATE
         // TABLE column definitions (CreateUserDataType.java)
-        domains(name.toLowerCase) = baseType.trim
-        Option(check).foreach(c => domainChecks(name.toLowerCase) = c.trim)
-        status()
-      case dropDomainRe(name) =>
-        domains.remove(name.toLowerCase)
-        domainChecks.remove(name.toLowerCase); status()
+        change(c => c.copy(domains = c.domains.updated(name.toLowerCase,
+          Domain(baseType.trim, Option(check).map(_.trim)))))
+      case dropDomainRe(name) => change(_.without("DOMAIN", name.toLowerCase))
       case createTriggerRe(ine, name, timing, tableName, tail) =>
-        if (triggers.contains(name.toLowerCase)) {
-          // TRIGGER_ALREADY_EXISTS_1 (CreateTrigger.java:105)
-          require(ine != null,
-            s"TRIGGER_ALREADY_EXISTS: $name (CreateTrigger.java:105)")
-          return status()
-        }
+        // TRIGGER_ALREADY_EXISTS_1 (CreateTrigger.java:105)
+        if (alreadyExists(catalog.triggers.contains(name.toLowerCase), ine,
+            s"TRIGGER_ALREADY_EXISTS: $name (CreateTrigger.java:105)")) return status()
         val ev = timing.trim.toUpperCase.replaceAll("\\s+", " ")
         // QUEUE must be non-negative (ddl/CreateTrigger.setQueueSize →
         // ErrorCode.INVALID_VALUE_2, TriggerObjectTest)
@@ -1154,190 +1042,165 @@ final class Engine(val spark: SparkSession)
         if (Rw.contains(tail, Rw.Kw("FOR"), Rw.Kw("EACH"), Rw.Kw("ROW")))
           require(!ev.split("[ ,]+").contains("SELECT"),
             s"TRIGGER_SELECT_AND_ROW_BASED_NOT_SUPPORTED: $name")
-        triggers(name.toLowerCase) = (tableName.toLowerCase, ev)
-        status()
-      case dropTriggerRe(name) =>
-        triggers.remove(name.toLowerCase); status()
-      case dropAllRe() =>
-        catalog.keys.foreach(spark.catalog.dropTempView)
-        catalog.clear(); indexes.clear(); foreignKeys.clear(); checks.clear()
-        triggers.clear(); comments.clear()
-        sequences.clear(); services.clear(); serviceInstances.clear()
-        aliases.clear(); aliasSources.clear(); userAggs.clear()
-        constants.clear(); domains.clear(); rights.clear()
-        roles.clear(); roles += "public"; roleGrants.clear()
-        status()
+        change(c => c.copy(triggers =
+          c.triggers.updated(name.toLowerCase, (tableName.toLowerCase, ev))))
+      case dropTriggerRe(name) => change(_.without("TRIGGER", name.toLowerCase))
+      case dropAllRe() => change(_.dropAll)
       case createSchemaRe(ine, name, owner) =>
         val n = name.toLowerCase
         // SCHEMA_ALREADY_EXISTS without IF NOT EXISTS; AUTHORIZATION needs
         // an existing ADMIN user (ADMIN_RIGHTS_REQUIRED — SchemaTest)
-        if (schemas.contains(n))
-          require(ine != null, s"SCHEMA_ALREADY_EXISTS: $name")
-        else {
-          Option(owner).map(_.toLowerCase).foreach { o =>
-            require(users.contains(o), s"USER_NOT_FOUND: $owner")
-            require(users(o), s"ADMIN_RIGHTS_REQUIRED: $owner (SchemaTest)")
-            schemaOwners(n) = o
-          }
-          schemas += n
+        if (alreadyExists(catalog.schemas.contains(n), ine, s"SCHEMA_ALREADY_EXISTS: $name"))
+          return status()
+        val o = Option(owner).map(_.toLowerCase)
+        o.foreach { o =>
+          require(catalog.users.contains(o), s"USER_NOT_FOUND: $owner")
+          require(catalog.users(o), s"ADMIN_RIGHTS_REQUIRED: $owner (SchemaTest)")
         }
-        status()
+        change(c => c.copy(schemas = c.schemas.updated(n, o)))
       case dropSchemaRe(ie, name) =>
         val n = name.toLowerCase
         // SCHEMA_CAN_NOT_BE_DROPPED covers the system schemas
         require(n != "public" && n != "information_schema",
           s"SCHEMA_CAN_NOT_BE_DROPPED: $name")
         // DropSchema.java:54 — missing schema errors without IF EXISTS
-        if (!schemas.contains(n))
+        if (!catalog.schemas.contains(n))
           require(ie != null, s"SCHEMA_NOT_FOUND: $name (DropSchema.java:54)")
-        schemas -= n; schemaOwners.remove(n); status()
+        change(_.without("SCHEMA", n))
       case alterSchemaRenameRe(from, to) =>
         val f = from.toLowerCase
         require(f != "information_schema" && f != "public",
           s"schema $from can not be renamed") // SCHEMA_CAN_NOT_BE_DROPPED
-        require(schemas.contains(f), s"SCHEMA_NOT_FOUND: $from")
+        val t = to.toLowerCase
+        require(catalog.schemas.contains(f), s"SCHEMA_NOT_FOUND: $from")
         // AlterSchemaRename.java:57 — target name taken
-        require(!schemas.contains(to.toLowerCase),
+        require(!catalog.schemas.contains(t),
           s"SCHEMA_ALREADY_EXISTS: $to (AlterSchemaRename.java:57)")
-        schemas.remove(f)
-        schemas += to.toLowerCase
-        schemaOwners.remove(f).foreach(o => schemaOwners(to.toLowerCase) = o)
-        status()
+        change(c => c.copy(schemas = c.schemas - f + (t -> c.schemas(f)))
+          .moveNamed("SCHEMA", f, Some(t)))
       case createUserRe(ine, name, cmt, admin) =>
-        createUserChecked(name, ine != null, cmt, admin != null)
+        createUserChecked(name, ine, cmt, admin != null)
       case createUserSaltRe(ine, name, cmt, admin) =>
-        createUserChecked(name, ine != null, cmt, admin != null)
+        createUserChecked(name, ine, cmt, admin != null)
       case createUserIdentRe(ine, name, cmt, admin) =>
-        createUserChecked(name, ine != null, cmt, admin != null)
+        createUserChecked(name, ine, cmt, admin != null)
       case alterUserRenameRe(from, to) =>
+        val (f, t) = (from.toLowerCase, to.toLowerCase)
         // USER_ALREADY_EXISTS when the target name is taken (UserTest)
-        require(users.contains(from.toLowerCase),
-          s"USER_NOT_FOUND: $from")
-        require(!users.contains(to.toLowerCase),
+        require(catalog.users.contains(f), s"USER_NOT_FOUND: $from")
+        require(!catalog.users.contains(t),
           s"USER_ALREADY_EXISTS: $to (AlterUser rename)")
-        users.remove(from.toLowerCase).foreach(a => users(to.toLowerCase) = a)
-        schemaOwners.mapValuesInPlace((_, o) =>
-          if (o == from.toLowerCase) to.toLowerCase else o)
-        status()
+        change(c => c.copy(users = c.users - f + (t -> c.users(f)),
+          schemas = c.schemas.map { case (s, o) => s -> o.map(u => if (u == f) t else u) })
+          .moveNamed("USER", f, Some(t)))
       case alterUserPasswordRe(name) =>
-        require(users.contains(name.toLowerCase), s"user $name not found")
+        require(catalog.users.contains(name.toLowerCase), s"user $name not found")
         status()
       case alterUserSaltRe(name) =>
         // salt+hash recorded as set, like passwords (single-user engine)
-        require(users.contains(name.toLowerCase), s"user $name not found")
+        require(catalog.users.contains(name.toLowerCase), s"user $name not found")
         status()
       case alterUserAdminRe(name, admin) =>
         val n = name.toLowerCase
-        require(users.contains(n), s"user $name not found")
+        require(catalog.users.contains(n), s"user $name not found")
         // revoking ADMIN while the user owns a schema refuses
         // (ErrorCode.CANNOT_DROP_2 — UserTest: drop the schema first)
         if (!admin.equalsIgnoreCase("TRUE"))
-          require(!schemaOwners.values.exists(_ == n),
+          require(!catalog.schemas.values.exists(_.contains(n)),
             s"CANNOT_DROP: $name owns a schema (UserTest)")
-        users(n) = admin.equalsIgnoreCase("TRUE"); status()
+        change(c => c.copy(users = c.users.updated(n, admin.equalsIgnoreCase("TRUE"))))
       case dropUserRe(ifEx, name, cascade) =>
         val n = name.toLowerCase
-        if (!users.contains(n)) {
+        if (!catalog.users.contains(n)) {
           require(ifEx != null, s"USER_NOT_FOUND: $name (DropUser)")
         } else {
-          if (cascade == null)
-            require(!schemaOwners.values.exists(_ == n),
-              s"CANNOT_DROP: $name owns a schema (UserTest)")
-          else {
-            val owned = schemaOwners.collect { case (s, o) if o == n => s }
-            owned.foreach { s => schemas -= s; schemaOwners.remove(s) }
-          }
-          users.remove(n)
+          val owned = catalog.schemas.collect { case (s, o) if o.contains(n) => s }
+          require(cascade != null || owned.isEmpty,
+            s"CANNOT_DROP: $name owns a schema (UserTest)")
+          catalog = owned.foldLeft(catalog.without("USER", n))(_.without("SCHEMA", _))
         }
         status()
       case alterIndexRenameRe(from, to) =>
-        val ix = indexes.remove(from.toLowerCase).getOrElse(
+        val (f, t) = (from.toLowerCase, to.toLowerCase)
+        val ix = catalog.indexes.getOrElse(f,
           throw new IllegalArgumentException(s"INDEX_NOT_FOUND: $from"))
-        indexes(to.toLowerCase) = ix.copy(name = to.toLowerCase); status()
+        change(c => c.copy(indexes = c.indexes - f + (t -> ix.copy(name = t)))
+          .moveNamed("INDEX", f, Some(t)))
       case grantRe(privs, obj, grantee) =>
         // a role name inside an ON-form right list is the reference's
         // ROLES_AND_RIGHT_CANNOT_BE_MIXED error (GrantRevoke.java)
-        if (privs.split(",").map(_.trim.toLowerCase).exists(roles.contains))
+        if (privs.split(",").map(_.trim.toLowerCase).exists(catalog.roles.contains))
           throw new IllegalArgumentException(
             "roles and rights cannot be mixed")
-        privs.split(",").map(_.trim.toUpperCase).foreach(p =>
-          rights += ((grantee.toLowerCase, p, obj.toLowerCase)))
-        status()
+        change(c => c.copy(rights = c.rights ++
+          privs.split(",").map(p => (grantee.toLowerCase, p.trim.toUpperCase, obj.toLowerCase))))
       case revokeRe(privs, obj, grantee) =>
         val revoked = privs.split(",").map(_.trim.toUpperCase).toSet
-        rights.filterInPlace { case (g, p, o) =>
-          !(g == grantee.toLowerCase && o == obj.toLowerCase && revoked(p))
-        }
-        status()
+        change(c => c.copy(rights = c.rights.filterNot { case (g, p, o) =>
+          g == grantee.toLowerCase && o == obj.toLowerCase && revoked(p) }))
       case createRoleRe(ifNot, name) =>
         val n = name.toLowerCase
-        if (users.contains(n)) // USER_ALREADY_EXISTS_1, even under IF NOT EXISTS
+        if (catalog.users.contains(n)) // USER_ALREADY_EXISTS_1, even under IF NOT EXISTS
           throw new IllegalArgumentException(s"user $name already exists")
-        if (roles.contains(n)) {
-          if (ifNot == null)
-            throw new IllegalArgumentException(s"role $name already exists")
-        } else roles += n
-        status()
+        alreadyExists(catalog.roles.contains(n), ifNot, s"role $name already exists")
+        change(c => c.copy(roles = c.roles + n))
       case dropRoleRe(ifEx, name) =>
         val n = name.toLowerCase
         if (n == "public") // DbObjectTestBase: the system role is undroppable
           throw new IllegalArgumentException("role PUBLIC cannot be dropped")
-        if (!roles.remove(n) && ifEx == null)
+        if (!catalog.roles.contains(n) && ifEx == null)
           throw new IllegalArgumentException(s"role $name not found")
-        roleGrants.filterInPlace { case (r, g) => r != n && g != n }
-        comments.remove(("ROLE", n))
-        status()
+        change(_.without("ROLE", n))
       case grantRoleRe(items0, grantee) =>
         val items = items0.split(",").map(_.trim)
-        val (rs, nonRoles) = items.partition(i => roles.contains(i.toLowerCase))
+        val (rs, nonRoles) = items.partition(i => catalog.roles.contains(i.toLowerCase))
         if (rs.nonEmpty && nonRoles.nonEmpty)
           throw new IllegalArgumentException("roles and rights cannot be mixed")
         val g = grantee.toLowerCase
         if (rs.isEmpty)
           // object-less system right (GRANT ALTER ANY SCHEMA TO u)
-          items.map(_.toUpperCase).foreach(p => rights += ((g, p, "*")))
+          catalog = catalog.copy(rights = catalog.rights ++ items.map(p => (g, p.toUpperCase, "*")))
         else rs.foreach { r =>
           val rn = r.toLowerCase
           // duplicate (incl. transitive) or cycle → ROLE_ALREADY_GRANTED_1
           if (rn == g || hasRole(g).contains(rn) || hasRole(rn).contains(g))
             throw new IllegalArgumentException(s"role $r already granted")
-          roleGrants += ((rn, g))
+          catalog = catalog.copy(roleGrants = catalog.roleGrants :+ ((rn, g)))
         }
         status()
       case revokeRoleRe(items0, grantee) =>
         val g = grantee.toLowerCase
         val items = items0.split(",").map(_.trim.toLowerCase).toSet
-        roleGrants.filterInPlace { case (r, gr) =>
-          !(gr == g && items.contains(r)) }
-        rights.filterInPlace { case (gr, p, o) =>
-          !(gr == g && o == "*" && items.contains(p.toLowerCase)) }
-        status()
+        change(c => c.copy(
+          roleGrants = c.roleGrants.filterNot { case (r, gr) => gr == g && items(r) },
+          rights = c.rights.filterNot { case (gr, p, o) =>
+            gr == g && o == "*" && items(p.toLowerCase) }))
       case commentRe(typ, qname, text) =>
         val t = typ.toUpperCase
         val tail = qname.toLowerCase.split("\\.")
           .takeRight(if (t == "COLUMN") 2 else 1).mkString(".")
         t match {
-          case "TABLE" => require(catalog.contains(tail),
+          case "TABLE" => require(catalog.tables.contains(tail),
             s"table $qname not found")
           case "COLUMN" =>
             tail.split("\\.") match {
               case Array(tn, cn) =>
-                require(catalog.get(tn).exists(
+                require(catalog.tables.get(tn).exists(
                   _.frame.columns.map(_.toLowerCase).contains(cn)),
                   s"column $qname not found")
               case _ => throw new IllegalArgumentException(
                 s"COMMENT ON COLUMN needs table.column, got $qname")
             }
-          case "ROLE" => require(roles.contains(tail), s"role $qname not found")
-          case "USER" => require(users.contains(tail), s"user $qname not found")
+          case "ROLE" => require(catalog.roles.contains(tail), s"role $qname not found")
+          case "USER" => require(catalog.users.contains(tail), s"user $qname not found")
           case _ =>
         }
-        if (text.equalsIgnoreCase("NULL")) comments.remove((t, tail))
-        else comments((t, tail)) =
-          text.stripPrefix("'").stripSuffix("'").replace("''", "'")
-        status()
+        change(c => c.copy(comments =
+          if (text.equalsIgnoreCase("NULL")) c.comments - ((t, tail))
+          else c.comments.updated((t, tail),
+            text.stripPrefix("'").stripSuffix("'").replace("''", "'"))))
       case createTableAsRe(ine, name, query) =>
-        if (catalog.contains(name.toLowerCase)) {
+        if (catalog.tables.contains(name.toLowerCase)) {
           // TABLE_OR_VIEW_ALREADY_EXISTS_1 (CreateTable.java:125-129):
           // IF NOT EXISTS returns without touching the existing table
           require(ine != null,
@@ -1346,7 +1209,7 @@ final class Engine(val spark: SparkSession)
         status()
       case createTableRe(ine, name, colDefs, tableTail) =>
         val tn = name.toLowerCase
-        if (catalog.contains(tn)) {
+        if (catalog.tables.contains(tn)) {
           // TABLE_OR_VIEW_ALREADY_EXISTS_1 (CreateTable.java:125-129) —
           // the reference checks BEFORE evaluating column defs / tails,
           // and IF NOT EXISTS leaves the existing table untouched
@@ -1411,6 +1274,7 @@ final class Engine(val spark: SparkSession)
             (RowidKind.Hidden, schema.add("_rowid_", LongType))
           case None => (RowidKind.Absent, schema)
         }
+        val before = catalog
         install(tn, TableEntry(
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], finalSchema),
@@ -1431,32 +1295,31 @@ final class Engine(val spark: SparkSession)
             val toks = d.split("\\s+")
             if (toks.length >= 2) {
               val cn = toks(0).toLowerCase
-              val base = toks(1).takeWhile(c => c.isLetter || c == '_').toLowerCase
-              domainChecks.get(base).foreach { chk =>
-                checks += CheckDef(s"${tn}_${cn}_domain", tn,
-                  chk.replaceAll("(?i)\\bVALUE\\b", cn))
+              catalog.domains.get(typeName(toks(1))).flatMap(_.check).foreach { chk =>
+                catalog = catalog.copy(checks = catalog.checks :+ CheckDef(
+                  s"${tn}_${cn}_domain", tn, chk.replaceAll("(?i)\\bVALUE\\b", cn)))
               }
             }
           }
           inlineIdx.foreach { case (ixName, cols, unique) =>
-            indexes(ixName) = IndexDef(ixName, tn, cols, unique)
+            putIndex(IndexDef(ixName, tn, cols, unique))
           }
           inlineCons.zipWithIndex.foreach { case ((cn, body), i) =>
             addConstraint(tn, cn.getOrElse(s"${tn}_cons_$i"), body)
           }
-        } catch { case e: Exception => dropOneTable(tn); throw e }
+        } catch { case e: Exception => catalog = before; throw e }
         status()
       case dropTableRe(ifExists, tail) =>
         val (names, restrict) = dropTableTail(tail)
         names.foreach { n0 =>
           val n = n0.toLowerCase
-          if (!catalog.contains(n))
+          if (!catalog.tables.contains(n))
             // TABLE_OR_VIEW_NOT_FOUND_1 (DropTable.java:76-78)
             require(ifExists != null, s"table not found: $n0")
           else {
             // dependent views: RESTRICT refuses naming them (CANNOT_DROP_2,
             // DropTable.java:84-93); CASCADE (the default) drops them too
-            val deps = catalog.toSeq.collect { case (vn, e)
+            val deps = catalog.tables.toSeq.collect { case (vn, e)
                 if e.view.exists(q => Lex.tokens(q).exists(_.isIdent(q, n))) => vn }
             if (restrict && deps.nonEmpty)
               throw new IllegalArgumentException(
@@ -1474,29 +1337,21 @@ final class Engine(val spark: SparkSession)
         // not emitted); dispatch happens via the
         // EXECUTE_SERVICE_*_RETURN_VALUE function pair (substServices)
         val key = name.toUpperCase
-        if (services.contains(key))
-          require(ifNotExists != null,
-            s"service already exists: $name (ddl/CreateService.java)")
-        else {
-          val methods = parseServiceMethods(body)
-          val (pkg, impl, code) = parseServiceTail(Option(rest).getOrElse(""))
-          services(key) = ServiceDef(key,
-            methods.map(m => m.name -> m).toMap, pkg, impl, code)
-        }
-        status()
+        if (alreadyExists(catalog.services.contains(key), ifNotExists,
+            s"service already exists: $name (ddl/CreateService.java)")) return status()
+        val methods = parseServiceMethods(body)
+        val (pkg, impl, code) = parseServiceTail(Option(rest).getOrElse(""))
+        change(c => c.copy(services = c.services.updated(key,
+          ServiceDef(key, methods.map(m => m.name -> m).toMap, pkg, impl, code))))
       case dropServiceRe(ifExists, name) =>
         val key = name.toUpperCase
-        if (!services.contains(key))
+        if (!catalog.services.contains(key))
           require(ifExists != null, s"service $key not found")
-        services.remove(key); serviceInstances.remove(key)
-        status()
+        change(_.without("SERVICE", key))
       case createSeqRe(ine, name, rest) =>
-        if (sequences.contains(name.toLowerCase)) {
-          // SEQUENCE_ALREADY_EXISTS_1 (CreateSequence.java:67)
-          require(ine != null,
-            s"SEQUENCE_ALREADY_EXISTS: $name (CreateSequence.java:67)")
-          return status()
-        }
+        // SEQUENCE_ALREADY_EXISTS_1 (CreateSequence.java:67)
+        if (alreadyExists(catalog.sequences.contains(name.toLowerCase), ine,
+            s"SEQUENCE_ALREADY_EXISTS: $name (CreateSequence.java:67)")) return status()
         val o = parseSeqOptions(Option(rest).getOrElse(""))
         val inc = o.inc.getOrElse(1L)
         // default start = min bound for ascending, max for descending
@@ -1504,23 +1359,21 @@ final class Engine(val spark: SparkSession)
         val start = o.start.getOrElse(
           if (inc >= 0) o.min.flatten.getOrElse(1L)
           else o.max.flatten.getOrElse(-1L))
-        sequences(name.toLowerCase) = new Sequence(start, inc,
-          o.min.getOrElse(None), o.max.getOrElse(None),
-          cycle = o.cycle.getOrElse(false), belongsToTable = o.belongsToTable)
+        putSequence(name, Sequence.create(start, inc, o.min.getOrElse(None),
+          o.max.getOrElse(None), o.cycle.getOrElse(false), o.belongsToTable))
         status()
       case alterSeqRe(name, rest) =>
-        val s = seqOrFail(name)
+        val s0 = seqOrFail(name)
         val o = parseSeqOptions(Option(rest).getOrElse(""))
         // AlterSequence semantics (Sequence.java:103-126): provided values
         // replace, RESTART WITH resets the live value, then re-validate
-        o.inc.foreach(s.inc = _)
-        o.min.foreach(m => s.minV = m.getOrElse(
-          if (s.inc >= 0) math.min(1L, s.next) else Long.MinValue))
-        o.max.foreach(m => s.maxV = m.getOrElse(
-          if (s.inc >= 0) Long.MaxValue else math.max(-1L, s.next)))
-        o.cycle.foreach(s.cycle = _)
-        o.start.foreach { v => s.next = v; s.curr = v - s.inc }
-        s.validate()
+        val s = s0.copy(inc = o.inc.getOrElse(s0.inc))
+        val altered = s.copy(
+          minV = o.min.fold(s.minV)(_.getOrElse(Sequence.defaultMin(s.inc, s.next))),
+          maxV = o.max.fold(s.maxV)(_.getOrElse(Sequence.defaultMax(s.inc, s.next))),
+          cycle = o.cycle.getOrElse(s.cycle))
+        putSequence(name, o.start.fold(altered)(v =>
+          altered.copy(next = v, curr = v - altered.inc)).validated)
         status()
       case InsertStmt(name, cols, body) =>
         body match {
@@ -1704,7 +1557,7 @@ final class Engine(val spark: SparkSession)
             w.toUpperCase.replace("'", "''")}%'").mkString(" WHERE ", " AND ", "")
         runSelect(s"SELECT * FROM INFORMATION_SCHEMA.HELP$where")
       case useRe(schema) =>
-        require(schemas.contains(schema.toLowerCase) ||
+        require(catalog.schemas.contains(schema.toLowerCase) ||
           schema.equalsIgnoreCase("information_schema"),
           s"schema $schema not found")
         sessionSettings("SCHEMA") = schema.toLowerCase; status()
@@ -1764,7 +1617,7 @@ final class Engine(val spark: SparkSession)
         val t = tn.toLowerCase
         val e = entry(t)
         val pk = e.primaryKey.getOrElse(Nil).toSet
-        val uni = indexes.values.filter(ix => ix.unique && ix.table == t)
+        val uni = catalog.indexes.values.filter(ix => ix.unique && ix.table == t)
           .flatMap(_.cols).toSet
         val nn = e.notNull
         val defs = e.defaults
@@ -1788,17 +1641,14 @@ final class Engine(val spark: SparkSession)
     * role name blocks even under IF NOT EXISTS (ROLE_ALREADY_EXISTS), an
     * existing user errors without it (USER_ALREADY_EXISTS), COMMENT [IS]
     * records to the comments registry. */
-  private def createUserChecked(name: String, ifNotExists: Boolean,
+  private def createUserChecked(name: String, ifNotExists: String,
       comment: String, admin: Boolean): DataFrame = {
     val n = name.toLowerCase
-    require(!roles.contains(n), s"ROLE_ALREADY_EXISTS: $name (CreateUser)")
-    if (users.contains(n)) {
-      require(ifNotExists, s"USER_ALREADY_EXISTS: $name (CreateUser)")
-    } else {
-      users(n) = admin
-      Option(comment).foreach(c => comments(("USER", n)) = c)
-    }
-    status()
+    require(!catalog.roles.contains(n), s"ROLE_ALREADY_EXISTS: $name (CreateUser)")
+    if (alreadyExists(catalog.users.contains(n), ifNotExists,
+        s"USER_ALREADY_EXISTS: $name (CreateUser)")) status()
+    else change(c => c.copy(users = c.users.updated(n, admin), comments =
+      Option(comment).fold(c.comments)(c.comments.updated(("USER", n), _))))
   }
 
   /** The shared CREATE ALIAS contract (ddl/CreateFunctionAlias.java +
@@ -1806,21 +1656,32 @@ final class Engine(val spark: SparkSession)
     * a user aggregate (Parser.java:4575), an existing alias errors without
     * IF NOT EXISTS, and FORCE records the alias even when resolution or
     * compilation fails — the failure then surfaces at first use. */
-  private def registerAliasChecked(name: String, ifNotExists: Boolean,
-      force: Boolean, store: mutable.LinkedHashMap[String, String],
-      payload: String)(doRegister: () => Unit): DataFrame = {
+  private def createAlias(name: String, ifNotExists: String, force: Boolean,
+      a: AliasDef): DataFrame = {
     val n = name.toLowerCase
-    require(!Engine.builtinAggregates.contains(n) && !userAggs.contains(n),
+    require(!Engine.builtinAggregates.contains(n) && !catalog.aggregates.contains(n),
       s"FUNCTION_ALIAS_ALREADY_EXISTS: $name (Parser.java:4575)")
-    val exists = aliases.contains(n) || aliasSources.contains(n)
-    if (exists) {
-      require(ifNotExists,
-        s"FUNCTION_ALIAS_ALREADY_EXISTS: $name (ddl/CreateFunctionAlias.java)")
-    } else {
-      try doRegister()
-      catch { case e: Exception => if (!force) throw e }
-      store(n) = payload
+    if (alreadyExists(catalog.aliases.contains(n), ifNotExists,
+        s"FUNCTION_ALIAS_ALREADY_EXISTS: $name (ddl/CreateFunctionAlias.java)")) status()
+    else {
+      if (!force) ReflectAlias.validate(n, a)
+      change(c => c.copy(aliases = c.aliases.updated(n, a)))
     }
+  }
+
+  /** Whether CREATE finds its object existing (`found`): an error `err`
+    * unless IF NOT EXISTS was given, which leaves the object as it is. */
+  private def alreadyExists(found: Boolean, ifNotExists: String, err: => String): Boolean = {
+    require(!found || ifNotExists != null, err)
+    found
+  }
+
+  private[sqlfront] def putIndex(ix: IndexDef): Unit =
+    catalog = catalog.copy(indexes = catalog.indexes.updated(ix.name, ix))
+
+  /** Assign `f` of the catalog; returns a DDL statement's status frame. */
+  private def change(f: Catalog => Catalog): DataFrame = {
+    catalog = f(catalog)
     status()
   }
 

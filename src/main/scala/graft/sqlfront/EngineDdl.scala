@@ -110,36 +110,8 @@ private[sqlfront] trait EngineDdl { this: Engine =>
 
   /** Drop table or view `n` with everything it owns. Its bucketed
     * snapshot, if any, goes at the end of the statement (releaseUnheld). */
-  private[sqlfront] def dropOneTable(n: String): Unit = {
-    catalog.remove(n)
-    moveOwned(n, None)
-    spark.catalog.dropTempView(n)
-  }
-
-  /** Re-key to `to` (RENAME), or drop with `to` = None (DROP), the objects
-    * with names of their own that table `from` owns: its indexes, CHECK
-    * and FOREIGN KEY constraints, triggers, and table, view and column
-    * comments. A FOREIGN KEY of another table that references `from`
-    * follows it too: H2 drops a referential constraint with either of its
-    * tables. Every list keeps its order. */
-  private[sqlfront] def moveOwned(from: String, to: Option[String]): Unit = {
-    def re(t: String): Option[String] = if (t == from) to else Some(t)
-    def rekey[K, V](m: mutable.LinkedHashMap[K, V])(f: ((K, V)) => Option[(K, V)]) = {
-      val kept = m.toSeq.flatMap(f)
-      m.clear(); m ++= kept
-    }
-    rekey(indexes) { case (n, ix) => re(ix.table).map(t => n -> ix.copy(table = t)) }
-    checks.flatMapInPlace(ck => re(ck.table).map(t => ck.copy(table = t)))
-    foreignKeys.flatMapInPlace(fk => for (t <- re(fk.table); r <- re(fk.refTable))
-      yield fk.copy(table = t, refTable = r))
-    rekey(triggers) { case (n, (t, timing)) => re(t).map(t2 => n -> (t2, timing)) }
-    rekey(comments) {
-      case ((k @ ("TABLE" | "VIEW"), n), c) => re(n).map(t => (k, t) -> c)
-      case (("COLUMN", tc), c) if tc.startsWith(from + ".") =>
-        to.map(t => ("COLUMN", t + tc.drop(from.length)) -> c)
-      case kc => Some(kc)
-    }
-  }
+  private[sqlfront] def dropOneTable(n: String): Unit =
+    catalog = catalog.withoutTable(n)
 
   /** Parsed CREATE/ALTER SEQUENCE option tail. `min`/`max`: outer None =
     * not mentioned, Some(None) = NOMINVALUE/NO MINVALUE (reset to the
@@ -245,43 +217,42 @@ private[sqlfront] trait EngineDdl { this: Engine =>
         val cCols = keys(cols)
         val ref = Option(ref0).getOrElse(tn) // REFERENCES(f2) = self-table
         val rCols = Option(refCols).map(keys)
-          .orElse(catalog.get(ref.toLowerCase).flatMap(_.primaryKey))
+          .orElse(catalog.tables.get(ref.toLowerCase).flatMap(_.primaryKey))
           .getOrElse(throw new IllegalArgumentException(
             s"no primary key on $ref to reference"))
         if (validate)
           require(noRows(Dml.fkViolations(table(tn), cCols, table(ref), rCols)),
             s"FK $cn violated by existing rows")
-        foreignKeys += FkDef(cn, tn, cCols, ref.toLowerCase, rCols)
+        catalog = catalog.copy(foreignKeys =
+          catalog.foreignKeys :+ FkDef(cn, tn, cCols, ref.toLowerCase, rCols))
       case ckParenRe(e) =>
         if (validate)
           require(noRows(Dml.checkViolations(table(tn), expr(e))),
             s"CHECK $cn violated by existing rows")
-        checks += CheckDef(cn, tn, e.trim)
+        catalog = catalog.copy(checks = catalog.checks :+ CheckDef(cn, tn, e.trim))
       case ckBareRe(e) =>
         if (validate)
           require(noRows(Dml.checkViolations(table(tn), expr(e))),
             s"CHECK $cn violated by existing rows")
-        checks += CheckDef(cn, tn, e.trim)
+        catalog = catalog.copy(checks = catalog.checks :+ CheckDef(cn, tn, e.trim))
       case uqRe(ixName, cols) =>
         val ks = keys(cols)
         if (validate)
           require(noRows(Dml.duplicateKeys(nonNullKeyed(table(tn), ks), ks)),
             s"UNIQUE $cn violated by existing rows")
-        indexes(Option(ixName).map(_.toLowerCase).getOrElse(cn)) =
-          IndexDef(Option(ixName).map(_.toLowerCase).getOrElse(cn), tn, ks,
-            unique = true)
+        putIndex(IndexDef(Option(ixName).map(_.toLowerCase).getOrElse(cn), tn, ks,
+          unique = true))
       case pkRe(cols, ixName) =>
         val ks = keys(cols)
         if (validate)
           require(noRows(Dml.duplicateKeys(table(tn), ks)),
             s"PRIMARY KEY $cn violated by existing rows")
         edit(tn)(_.copy(primaryKey = Some(ks)))
-        Option(ixName).foreach(ix => indexes(ix.toLowerCase) =
-          IndexDef(ix.toLowerCase, tn, ks, unique = true))
+        Option(ixName).foreach(ix => putIndex(IndexDef(ix.toLowerCase, tn, ks, unique = true)))
       case ixRe(ixName, cols) =>
         // an INDEX "constraint" is just a secondary index (no-op execution)
         val n = Option(ixName).map(_.toLowerCase).getOrElse(cn)
-        indexes(n) = IndexDef(n, tn, keys(cols), unique = false)
+        putIndex(IndexDef(n, tn, keys(cols), unique = false))
       case other => throw new IllegalArgumentException(
         s"unsupported constraint: $other")
     }
@@ -344,7 +315,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
 
   /** BACKUP-style snapshot (dml/Backup.java): every table to parquet. */
   def backup(dir: String): Unit =
-    catalog.foreach { case (name, e) =>
+    catalog.tables.foreach { case (name, e) =>
       e.frame.write.mode("overwrite").parquet(s"$dir/$name.parquet")
     }
 
@@ -414,11 +385,16 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     (StructType(fields), pks.toSeq, inlineIdx.toSeq, inlineCons.toSeq)
   }
 
+  /** The type identifier a column type starts with, lowercase: a domain
+    * name such as `pos2`, or a built-in type's name. */
+  private[sqlfront] def typeName(t: String): String =
+    t.trim.takeWhile(c => c.isLetterOrDigit || c == '_').toLowerCase
+
   private[sqlfront] def parseType(t0: String): DataType = {
+    // user-defined domain resolves to its base type (CreateUserDataType)
+    catalog.domains.get(typeName(t0)).foreach(d => return parseType(d.baseType))
     val t = t0.trim.toUpperCase
     val base = t.takeWhile(c => c.isLetter || c == '_')
-    // user-defined domain resolves to its base type (CreateUserDataType)
-    domains.get(base.toLowerCase).foreach(d => return parseType(d))
     base match {
       case "INT" | "INTEGER" | "MEDIUMINT" | "SERIAL" => IntegerType
       case "BIGINT" | "LONG" | "IDENTITY" | "BIGSERIAL" => LongType
@@ -684,10 +660,13 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     entry(tn).defaults.foreach { case (c, d) =>
       val omitted = specified.exists(s => !s.contains(c))
       if (omitted) seqRef.findFirstMatchIn(d.trim).foreach { m =>
-        sequences.get(m.group(1).toLowerCase).foreach { sq =>
+        catalog.sequences.get(m.group(1).toLowerCase).foreach { sq =>
           val start = sq.next // peek; advance only by what the batch used
           val (filled, n) = Dml.assignContiguous(df, c, start)
-          if (n > 0) { sq.advance(n); lastSeqVal = Some(start + (n - 1) * sq.inc) }
+          if (n > 0) {
+            putSequence(m.group(1), sq.advanced(n))
+            lastSeqVal = Some(start + (n - 1) * sq.inc)
+          }
           df = filled
         }
       }
@@ -748,7 +727,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     val t = table(name)
     val tn = name.toLowerCase
     val key = entry(tn).primaryKey
-      .orElse(indexes.values.find(ix => ix.unique && ix.table == tn).map(_.cols))
+      .orElse(catalog.indexes.values.find(ix => ix.unique && ix.table == tn).map(_.cols))
       .getOrElse(throw new IllegalArgumentException(
         s"ON DUPLICATE KEY UPDATE needs a PRIMARY KEY or unique index on $name"))
     val src1a = fillIdentity(tn,
@@ -863,12 +842,12 @@ private[sqlfront] trait EngineDdl { this: Engine =>
   /** FK + CHECK validation over a row set (no uniqueness — see
     * validateConstraints / validateUniqueWithin for the two unique shapes). */
   private[sqlfront] def validateRowConstraints(tn: String, rows: DataFrame): Unit = {
-    if (refIntegrity) foreignKeys.filter(_.table == tn).foreach { fk =>
+    if (refIntegrity) catalog.foreignKeys.filter(_.table == tn).foreach { fk =>
       require(noRows(Dml.fkViolations(rows, fk.cols, table(fk.refTable), fk.refCols)),
         s"FK ${fk.name} violated: ${fk.table}(${fk.cols.mkString(",")}) → " +
           s"${fk.refTable}(${fk.refCols.mkString(",")})")
     }
-    checks.filter(_.table == tn).foreach { ck =>
+    catalog.checks.filter(_.table == tn).foreach { ck =>
       require(noRows(Dml.checkViolations(rows, expr(ck.expr))),
         s"CHECK ${ck.name} violated: ${ck.expr}")
     }
@@ -886,5 +865,5 @@ private[sqlfront] trait EngineDdl { this: Engine =>
 
   private[sqlfront] def uniqueKeySets(tn: String): Seq[Seq[String]] =
     (entry(tn).primaryKey.toSeq ++
-      indexes.values.filter(ix => ix.table == tn && ix.unique).map(_.cols)).distinct
+      catalog.indexes.values.filter(ix => ix.table == tn && ix.unique).map(_.cols)).distinct
 }

@@ -21,7 +21,7 @@ private[sqlfront] trait EngineSelect { this: Engine =>
     // Known divergence: `SELECT *` in such a statement shows _rowid_.
     val restoreHidden = mutable.Buffer.empty[String]
     if (referencedOutsideLiterals(q, "_ROWID_")) {
-      val refed = catalog.toSeq.filter { case (tn, _) => referencedOutsideLiterals(q, tn) }
+      val refed = catalog.tables.toSeq.filter { case (tn, _) => referencedOutsideLiterals(q, tn) }
       val hid = refed.collect { case (tn, e) if e.hiddenRowid => tn }
       val pkT = refed.map(_._2.rowid).collect { case RowidKind.Pk(c) => c }
       if (hid.isEmpty && pkT.size == 1)
@@ -122,7 +122,7 @@ private[sqlfront] trait EngineSelect { this: Engine =>
     val fromSeg = Stmt(q.substring(fromIdx + 4, whereIdx)).masked
     val realCols: Set[String] = """\b\w+\b""".r.findAllIn(fromSeg)
       .map(_.toLowerCase).toSet
-      .flatMap((t: String) => catalog.get(t).toSeq.flatMap(_.frame.columns.map(_.toLowerCase)))
+      .flatMap((t: String) => catalog.tables.get(t).toSeq.flatMap(_.frame.columns.map(_.toLowerCase)))
     val aliases = splitTop(selectList).map(_.trim).collect {
       case aliasRe(e, a) if !realCols(a.toLowerCase) => a.toLowerCase -> e
     }.toMap
@@ -151,7 +151,7 @@ private[sqlfront] trait EngineSelect { this: Engine =>
     * column reference. */
   private[sqlfront] def normalizeSeqRefs(q0: String): String = {
     var q = q0
-    sequences.keys.toSeq.sorted.foreach { n =>
+    catalog.sequences.keys.toSeq.sorted.foreach { n =>
       q = Rw.rewrite(q, Rw.W(n), Rw.Sy('.'), Rw.Kw("NEXTVAL"))(_ =>
         s"NEXTVAL('$n')")
       q = Rw.rewrite(q, Rw.W(n), Rw.Sy('.'), Rw.Kw("CURRVAL"))(_ =>
@@ -185,7 +185,7 @@ private[sqlfront] trait EngineSelect { this: Engine =>
     * SEQUENCE_NOT_FOUND_1: `Sequence "X" not found`) instead of a bare
     * map NoSuchElementException. */
   private[sqlfront] def seqOrFail(name: String): Sequence =
-    sequences.getOrElse(name.toLowerCase,
+    catalog.sequences.getOrElse(name.toLowerCase,
       throw new IllegalArgumentException(
         s"""Sequence "${name.toUpperCase}" not found"""))
 
@@ -198,9 +198,8 @@ private[sqlfront] trait EngineSelect { this: Engine =>
     // (the 'name' literal is matched as ONE token).
     Rw.rewrite(normalizeSeqRefs(q0), Rw.W("NEXTVAL", "CURRVAL"), Rw.Sy('('),
         seqNameLit, Rw.Sy(')')) { c =>
-      val s = seqOrFail(c(1))
-      if (c(0).equalsIgnoreCase("NEXTVAL")) s.nextVal().toString
-      else s.curr.toString
+      if (c(0).equalsIgnoreCase("NEXTVAL")) nextVal(c(1)).toString
+      else seqOrFail(c(1)).curr.toString
     }
   }
 
@@ -235,7 +234,7 @@ private[sqlfront] trait EngineSelect { this: Engine =>
     }
     val df = runSelect(out)
     val n = df.count()
-    bySeq.foreach { case (s, k) => sequences(s).advance(n * k) }
+    bySeq.foreach { case (s, k) => putSequence(s, seqOrFail(s).advanced(n * k)) }
     df
   }
 
@@ -247,11 +246,11 @@ private[sqlfront] trait EngineSelect { this: Engine =>
     val view = s"graft_info_$name"
     val df = name match {
       case "tables" =>
-        catalog.keys.toSeq.map(t => ("graft", "public", t, "TABLE", "PARQUET"))
+        catalog.tables.keys.toSeq.map(t => ("graft", "public", t, "TABLE", "PARQUET"))
           .toDF("table_catalog", "table_schema", "table_name", "table_type",
             "storage_type")
       case "columns" =>
-        catalog.toSeq.flatMap { case (t, e) =>
+        catalog.tables.toSeq.flatMap { case (t, e) =>
           e.visible.schema.fields.zipWithIndex.map { case (f, i) =>
               (t, f.name, i + 1, f.dataType.catalogString.toUpperCase,
                 if (f.nullable) "YES" else "NO")
@@ -259,26 +258,26 @@ private[sqlfront] trait EngineSelect { this: Engine =>
         }.toDF("table_name", "column_name", "ordinal_position", "data_type",
           "is_nullable")
       case "sequences" =>
-        sequences.toSeq.map { case (n, s) => (n, s.curr, s.inc) }
+        catalog.sequences.toSeq.map { case (n, s) => (n, s.curr, s.inc) }
           .toDF("sequence_name", "current_value", "increment")
       case "settings" =>
         (spark.conf.getAll.toSeq.sortBy(_._1) ++
           sessionSettings.toSeq.map { case (k, v) => (k, v) })
           .toDF("setting_name", "setting_value")
       case "constraints" =>
-        (catalog.toSeq.flatMap { case (t, e) => e.primaryKey.map(ks =>
+        (catalog.tables.toSeq.flatMap { case (t, e) => e.primaryKey.map(ks =>
           (t, "PRIMARY_KEY", "PRIMARY KEY", ks.mkString(","))) } ++
-         foreignKeys.toSeq.map(fk => (fk.table, fk.name, "REFERENTIAL",
+         catalog.foreignKeys.map(fk => (fk.table, fk.name, "REFERENTIAL",
            fk.cols.mkString(",") + "->" + fk.refTable + "(" +
              fk.refCols.mkString(",") + ")")) ++
-         checks.toSeq.map(ck => (ck.table, ck.name, "CHECK", ck.expr)) ++
-         indexes.values.filter(_.unique).toSeq.map(ix =>
+         catalog.checks.map(ck => (ck.table, ck.name, "CHECK", ck.expr)) ++
+         catalog.indexes.values.filter(_.unique).toSeq.map(ix =>
            (ix.table, ix.name, "UNIQUE", ix.cols.mkString(","))))
           .toDF("table_name", "constraint_name", "constraint_type",
             "column_list")
       case "indexes" =>
         // MetaTable.java INDEXES (id 3): one row per indexed column
-        indexes.values.toSeq.flatMap { ix =>
+        catalog.indexes.values.toSeq.flatMap { ix =>
           ix.cols.zipWithIndex.map { case (c, i) =>
             (ix.table, ix.name, !ix.unique, i + 1, c, "BTREE")
           }
@@ -286,18 +285,18 @@ private[sqlfront] trait EngineSelect { this: Engine =>
           "column_name", "index_type")
       case "views" =>
         // MetaTable.java VIEWS (id 14)
-        catalog.toSeq.flatMap { case (n, e) => e.view.map(("graft", "public", n, _)) }
+        catalog.tables.toSeq.flatMap { case (n, e) => e.view.map(("graft", "public", n, _)) }
           .toDF("table_catalog", "table_schema", "table_name",
             "view_definition")
       case "function_aliases" =>
         // MetaTable.java FUNCTION_ALIASES (id 12); source aliases carry no
         // class/method target (FunctionAlias.loadFromSource compiles the
         // body — the reference lists them with the source, not a target)
-        (aliases.toSeq.map { case (n, target) =>
-          val dot = target.lastIndexOf('.')
-          ("graft", "public", n, target.substring(0, dot max 0),
-            target.substring(dot + 1))
-        } ++ aliasSources.keys.toSeq.map(n => ("graft", "public", n, "", "")))
+        catalog.aliases.toSeq.map { case (n, a) =>
+          val dot = if (a.source) 0 else a.body.lastIndexOf('.')
+          ("graft", "public", n, a.body.substring(0, dot max 0),
+            if (a.source) "" else a.body.substring(dot + 1))
+        }
           .toDF("alias_catalog", "alias_schema", "alias_name", "java_class",
             "java_method")
       case "sessions" =>
@@ -306,7 +305,7 @@ private[sqlfront] trait EngineSelect { this: Engine =>
           .toDF("id", "user_name", "session_start")
       case "users" =>
         // MetaTable.java USERS (id 9): the implicit admin + recorded DDL
-        users.toSeq.map { case (n, a) => (n.toUpperCase, a) }
+        catalog.users.toSeq.map { case (n, a) => (n.toUpperCase, a) }
           .toDF("name", "admin")
       case "table_types" => // id 3
         Seq("SYSTEM TABLE", "TABLE", "VIEW").toDF("type")
@@ -327,19 +326,19 @@ private[sqlfront] trait EngineSelect { this: Engine =>
         Seq.empty[(Int, String, String, String)]
           .toDF("id", "section", "topic", "syntax")
       case "roles" => // id 10: created roles + COMMENT ON remarks
-        roles.toSeq.map(r => (r.toUpperCase,
-            comments.get(("ROLE", r))
+        catalog.roles.toSeq.map(r => (r.toUpperCase,
+            catalog.comments.get(("ROLE", r))
               .getOrElse(if (r == "public") "system role" else null)))
           .toDF("name", "remarks")
       case "rights" => // id 11: recorded grants (enforcement out of scope)
-        (rights.toSeq.map { case (g, p, o) =>
-            (g, if (roles.contains(g)) "ROLE" else "USER", p, o) } ++
-          roleGrants.toSeq.map { case (r, g) =>
-            (g, if (roles.contains(g)) "ROLE" else "USER",
+        (catalog.rights.map { case (g, p, o) =>
+            (g, if (catalog.roles.contains(g)) "ROLE" else "USER", p, o) } ++
+          catalog.roleGrants.map { case (r, g) =>
+            (g, if (catalog.roles.contains(g)) "ROLE" else "USER",
               s"ROLE ${r.toUpperCase}", "") })
           .toDF("grantee", "granteetype", "rights", "table_name")
       case "schemata" => // id 13
-        schemas.toSeq.map(s => ("graft", s, "SA", "OFF")).toDF(
+        catalog.schemas.keys.toSeq.map(s => ("graft", s, "SA", "OFF")).toDF(
           "catalog_name", "schema_name", "schema_owner", "default_collation_name")
       case "table_privileges" => // id 14
         Seq.empty[(String, String, String, String)]
@@ -353,14 +352,15 @@ private[sqlfront] trait EngineSelect { this: Engine =>
       case "in_doubt" => // id 18: no 2PC transactions exist
         Seq.empty[(String, Int)].toDF("transaction_name", "transaction_state")
       case "cross_references" => // id 19: FK edges, one row per column pair
-        foreignKeys.toSeq.flatMap { fk =>
+        catalog.foreignKeys.flatMap { fk =>
           fk.refCols.zip(fk.cols).zipWithIndex.map { case ((pc, fc), i) =>
             (fk.refTable, pc, fk.table, fc, i + 1, fk.name)
           }
         }.toDF("pktable_name", "pkcolumn_name", "fktable_name",
           "fkcolumn_name", "ordinal_position", "fk_name")
       case "function_columns" => // id 21: alias parameters via reflection
-        aliases.toSeq.flatMap { case (n, target) =>
+        catalog.aliases.toSeq.collect { case (n, AliasDef(target, false)) => (n, target) }
+          .flatMap { case (n, target) =>
           scala.util.Try {
             val dot = target.lastIndexOf('.')
             Class.forName(target.substring(0, dot)).getMethods
@@ -373,13 +373,13 @@ private[sqlfront] trait EngineSelect { this: Engine =>
           }.getOrElse(Seq.empty)
         }.toDF("alias_name", "pos", "type_name")
       case "constants" => // id 22
-        constants.toSeq.map { case (n, v) => ("graft", "public", n, v) }
+        catalog.constants.toSeq.map { case (n, v) => ("graft", "public", n, v) }
           .toDF("constant_catalog", "constant_schema", "constant_name", "sql")
       case "domains" => // id 23
-        domains.toSeq.map { case (n, t) => (n, t.toUpperCase) }
+        catalog.domains.toSeq.map { case (n, d) => (n, d.baseType.toUpperCase) }
           .toDF("domain_name", "type_name")
       case "triggers" => // id 24
-        triggers.toSeq.map { case (n, (tbl, timing)) => (n, tbl, timing) }
+        catalog.triggers.toSeq.map { case (n, (tbl, timing)) => (n, tbl, timing) }
           .toDF("trigger_name", "table_name", "timing")
       case "locks" => // id 26: a snapshot engine never holds row locks
         Seq.empty[(String, String, String)]
@@ -395,7 +395,7 @@ private[sqlfront] trait EngineSelect { this: Engine =>
             "max_execution_time", "cumulative_execution_time",
             "average_execution_time")
       case "databases" => // id 29
-        databases.toSeq.toDF("database_name")
+        catalog.databases.toSeq.toDF("database_name")
       case "models" => // graft extension: the trained-artifact registry
         // (core/ModelStore) under SET MODEL_REGISTRY '<root>' — empty
         // (same schema) when no registry is configured
@@ -417,7 +417,7 @@ private[sqlfront] trait EngineSelect { this: Engine =>
     * sequence statements for the current catalog. Data itself snapshots to
     * parquet via `backup`. */
   def script(): Seq[String] = {
-    val ddl = catalog.toSeq.collect { case (name, e) if e.view.isEmpty =>
+    val ddl = catalog.tables.toSeq.collect { case (name, e) if e.view.isEmpty =>
       val cols = e.visible.schema.fields.map { f =>
         val pk = e.primaryKey.exists(_.contains(f.name.toLowerCase))
         s"${f.name} ${f.dataType.sql}${if (pk) " PRIMARY KEY" else ""}"
@@ -430,47 +430,47 @@ private[sqlfront] trait EngineSelect { this: Engine =>
       val oc = e.onCommit.map(a => s" ON COMMIT $a").getOrElse("")
       s"CREATE ${st}TABLE $name (${cols.mkString(", ")})$oc$cg;"
     }
-    val seqs = sequences.toSeq.map { case (n, s) =>
+    val seqs = catalog.sequences.toSeq.map { case (n, s) =>
       s"CREATE SEQUENCE $n START WITH ${s.next} INCREMENT BY ${s.inc}" +
         s" MINVALUE ${s.minV} MAXVALUE ${s.maxV}" +
         (if (s.cycle) " CYCLE" else "") +
         (if (s.belongsToTable) " BELONGS_TO_TABLE" else "") + ";"
     }
-    val ixs = indexes.values.toSeq.map { ix =>
+    val ixs = catalog.indexes.values.toSeq.map { ix =>
       s"CREATE ${if (ix.unique) "UNIQUE " else ""}INDEX ${ix.name} " +
         s"ON ${ix.table} (${ix.cols.mkString(", ")});"
     }
-    val cons = foreignKeys.toSeq.map { fk =>
+    val cons = catalog.foreignKeys.map { fk =>
       s"ALTER TABLE ${fk.table} ADD CONSTRAINT ${fk.name} FOREIGN KEY " +
         s"(${fk.cols.mkString(", ")}) REFERENCES ${fk.refTable} " +
         s"(${fk.refCols.mkString(", ")});"
-    } ++ checks.toSeq.map { ck =>
+    } ++ catalog.checks.map { ck =>
       s"ALTER TABLE ${ck.table} ADD CONSTRAINT ${ck.name} CHECK (${ck.expr});"
     }
-    val vws = catalog.toSeq.flatMap { case (n, e) =>
+    val vws = catalog.tables.toSeq.flatMap { case (n, e) =>
       e.view.map(sql => s"CREATE VIEW $n AS $sql;")
     }
-    val trgs = triggers.toSeq.map { case (n, (t, timing)) =>
+    val trgs = catalog.triggers.toSeq.map { case (n, (t, timing)) =>
       s"CREATE TRIGGER $n $timing ON $t;"
     }
-    val als = aliases.toSeq.map { case (n, t) =>
-      s"""CREATE ALIAS $n FOR "$t";"""
-    } ++ aliasSources.toSeq.map { case (n, src) =>
+    val als = catalog.aliases.toSeq.map {
+      case (n, AliasDef(t, false)) => s"""CREATE ALIAS $n FOR "$t";"""
       // the single-quote string form round-trips ANY body ('' escaping);
       // $$…$$ would truncate on a body containing $$ itself
-      s"CREATE ALIAS $n AS '${src.replace("'", "''")}';"
-    } ++ userAggs.toSeq.map { case (n, cls) =>
+      case (n, AliasDef(src, true)) => s"CREATE ALIAS $n AS '${src.replace("'", "''")}';"
+    } ++ catalog.aggregates.toSeq.map { case (n, cls) =>
       // FORCE: re-running the script must not need the class on the
       // driver classpath at parse time (UserAggregate.java force flag)
       s"""CREATE FORCE AGGREGATE $n FOR "$cls";"""
     }
-    val consts = constants.toSeq.map { case (n, v) =>
+    val consts = catalog.constants.toSeq.map { case (n, v) =>
       s"CREATE CONSTANT $n VALUE $v;"
     }
-    val doms = domains.toSeq.map { case (n, t) =>
-      s"CREATE DOMAIN $n AS ${t.toUpperCase};"
+    val doms = catalog.domains.toSeq.map { case (n, d) =>
+      s"CREATE DOMAIN $n AS ${d.baseType.toUpperCase}" +
+        d.check.map(c => s" CHECK ($c)").getOrElse("") + ";"
     }
-    val svcs = services.values.toSeq.map { svc =>
+    val svcs = catalog.services.values.toSeq.map { svc =>
       val ms = svc.methods.values.toSeq.sortBy(_.name).map { m =>
         val ps = m.params.map { case (pn, pt) => s"$pn $pt" }.mkString(", ")
         s"${m.name.toLowerCase}($ps) ${m.retType}"
@@ -480,21 +480,21 @@ private[sqlfront] trait EngineSelect { this: Engine =>
         svc.implementBy.map(c => s" IMPLEMENT BY '$c'").getOrElse("") +
         svc.codePath.map(g => s" GENERATE CODE '$g'").getOrElse("") + ";"
     }
-    val defs = catalog.toSeq.flatMap { case (t, e) =>
+    val defs = catalog.tables.toSeq.flatMap { case (t, e) =>
       e.defaults.toSeq.map { case (c, d) =>
         s"ALTER TABLE $t ALTER COLUMN $c SET DEFAULT $d;"
       }
     }
-    val usrs = users.toSeq
+    val usrs = catalog.users.toSeq
       .filter(u => u._1 != "sa" && u._1 != "root") // the implicit admins
       .map { case (n, a) =>
         s"CREATE USER $n PASSWORD ''${if (a) " ADMIN" else ""};"
       }
-    val rls = roles.toSeq.filter(_ != "public").map(r => s"CREATE ROLE $r;")
-    val rgs = roleGrants.toSeq.map { case (r, g) => s"GRANT $r TO $g;" }
-    val cmts = comments.toSeq.map { case ((t, n), c) =>
+    val rls = catalog.roles.toSeq.filter(_ != "public").map(r => s"CREATE ROLE $r;")
+    val rgs = catalog.roleGrants.map { case (r, g) => s"GRANT $r TO $g;" }
+    val cmts = catalog.comments.toSeq.map { case ((t, n), c) =>
       s"COMMENT ON $t $n IS '${c.replace("'", "''")}';" }
-    val dbs = databases.toSeq.filter(_ != "graft").map(d =>
+    val dbs = catalog.databases.toSeq.filter(_ != "graft").map(d =>
       s"CREATE DATABASE $d;")
     // the trained-artifact registry binding survives a SCRIPT round trip
     // (the models themselves are parquet on disk, not DDL)
@@ -509,12 +509,9 @@ private[sqlfront] trait EngineSelect { this: Engine =>
   /** ALTER TABLE … RENAME TO (AlterTableRename.java): the entry moves to
     * the new name whole, and so do the objects the table owns. */
   private[sqlfront] def renameTable(from: String, to: String): Unit = {
-    require(!catalog.contains(to), s"TABLE_OR_VIEW_ALREADY_EXISTS: $to")
-    val e = catalog.remove(from).getOrElse(
-      throw new IllegalArgumentException(s"no table $from"))
-    spark.catalog.dropTempView(from)
-    install(to, e)
-    moveOwned(from, Some(to))
+    require(!catalog.tables.contains(to), s"TABLE_OR_VIEW_ALREADY_EXISTS: $to")
+    require(catalog.tables.contains(from), s"no table $from")
+    catalog = catalog.renamedTable(from, to)
   }
 
 }

@@ -3,11 +3,11 @@ package graft.sqlfront
 import scala.collection.mutable
 
 /** The statement-pattern face of [[Engine]] (split out mechanically — one
-  * class across files via self-typed traits; state stays where it is
-  * declared): every `Pat.P` statement extractor of the DDL/DML dispatch,
-  * the custom token-shape extractors (INSERT bodies, WHERE/LIMIT tails),
-  * and the registries those patterns declare inline. See Engine's scaladoc
-  * for the full surface inventory. */
+  * class across files via self-typed traits): every `Pat.P` statement
+  * extractor of the DDL/DML dispatch, the custom token-shape extractors
+  * (INSERT bodies, WHERE/LIMIT tails), and the session's variables and
+  * prepared statements. See Engine's scaladoc for the full surface
+  * inventory. */
 private[sqlfront] trait EngineStatements { this: Engine =>
 
   // Stmt (the literal-masked statement view) lives in Pat.scala with the
@@ -78,7 +78,6 @@ private[sqlfront] trait EngineStatements { this: Engine =>
   private[sqlfront] val dropDatabaseRe =
     P(Kw("DROP"), AltKw(Seq("DATABASE"), Seq("TENANT")), Opt("IF", "EXISTS"),
       Ident, Eos)
-  private[sqlfront] val databases = mutable.LinkedHashSet("graft")
   // ── tokenizer-first INSERT family (Parser.java:1014 parseInsert) ──
   // One token scan classifies every INSERT body form — SET assignments
   // (Parser.java:1052), [DIRECT] VALUES with an optional depth-0
@@ -395,7 +394,6 @@ private[sqlfront] trait EngineStatements { this: Engine =>
   private[sqlfront] val dropDomainRe =
     P(Kw("DROP"), AltKw(Seq("DOMAIN"), Seq("TYPE"), Seq("DATATYPE")),
       Opt("IF", "EXISTS"), Ident, Eos)
-  private[sqlfront] val domainChecks = mutable.HashMap.empty[String, String]
   // CREATE [FORCE] TRIGGER … [FOR EACH ROW] [QUEUE n] [NOWAIT]
   // [CALL "class"] (Parser.parseCreateTrigger; TriggerObjectTest shapes) —
   // the tail is captured for the reference's validation errors
@@ -415,10 +413,6 @@ private[sqlfront] trait EngineStatements { this: Engine =>
       OptG(Kw("AUTHORIZATION"), Ident), Eos)
   private[sqlfront] val dropSchemaRe =
     P(Kw("DROP", "SCHEMA"), OptCap("IF", "EXISTS"), Ident, Eos)
-  // schema → owning user (CREATE SCHEMA … AUTHORIZATION u): DROP USER and
-  // ALTER USER … ADMIN FALSE refuse while the user owns a schema
-  // (ErrorCode.CANNOT_DROP_2, UserTest)
-  private[sqlfront] val schemaOwners = mutable.HashMap.empty[String, String]
   // ALTER SCHEMA … RENAME TO (SchemaTest): system schemas are immutable
   private[sqlfront] val alterSchemaRenameRe =
     P(Kw("ALTER", "SCHEMA"), Ident, Kw("RENAME", "TO"), Ident, Eos)
@@ -458,21 +452,12 @@ private[sqlfront] trait EngineStatements { this: Engine =>
   // ALTER INDEX name RENAME TO name2 (Parser.java:4737 AlterIndexRename)
   private[sqlfront] val alterIndexRenameRe =
     P(Kw("ALTER", "INDEX"), Ident, Kw("RENAME", "TO"), Ident, Eos)
-  // name → admin; ROOT is the reference's implicit superuser
-  // (LealoneDatabase creates it; UserTest renames it as a positive test),
-  // SA the H2-family session default this engine reports from USER()
-  private[sqlfront] val users = mutable.LinkedHashMap("root" -> true, "sa" -> true)
   private[sqlfront] val grantRe =
     P(Kw("GRANT"), CapUntil("ON"), Kw("ON"), Ident, Kw("TO"), Ident, Eos)
   private[sqlfront] val revokeRe =
     P(Kw("REVOKE"), CapUntil("ON"), Kw("ON"), Ident, Kw("FROM"), Ident, Eos)
-  private[sqlfront] val schemas = mutable.LinkedHashSet("public")
-  private[sqlfront] val rights = mutable.ArrayBuffer.empty[(String, String, String)]
   // Roles + role grants (db/auth/Role.java, ddl/GrantRevoke.java; RoleTest/
-  // RightTest): PUBLIC is the built-in role every user implicitly holds.
-  // roleGrants edges are (role, grantee) — "grantee HAS role".
-  private[sqlfront] val roles = mutable.LinkedHashSet("public")
-  private[sqlfront] val roleGrants = mutable.ArrayBuffer.empty[(String, String)]
+  // RightTest)
   private[sqlfront] val createRoleRe =
     P(Kw("CREATE", "ROLE"), OptCap("IF", "NOT", "EXISTS"), Ident, Eos)
   private[sqlfront] val dropRoleRe =
@@ -491,14 +476,13 @@ private[sqlfront] trait EngineStatements { this: Engine =>
       AltCap("TABLE", "COLUMN", "ROLE", "USER", "VIEW", "INDEX", "SEQUENCE",
         "CONSTANT", "DOMAIN", "TRIGGER", "ALIAS", "SCHEMA"),
       DottedIdent, Kw("IS"), NullOrLit, Eos)
-  private[sqlfront] val comments = mutable.LinkedHashMap.empty[(String, String), String]
   /** Transitive closure of roles `grantee` possesses (Role.isRoleGranted
     * recursion) — tiny in-memory BFS over the grant edges. */
   private[sqlfront] def hasRole(grantee: String): Set[String] = {
     var acc = Set.empty[String]
     var frontier = Set(grantee)
     while (frontier.nonEmpty) {
-      val next = roleGrants.collect {
+      val next = catalog.roleGrants.collect {
         case (r, g) if frontier.contains(g) && !acc.contains(r) => r
       }.toSet
       acc ++= next; frontier = next
@@ -510,7 +494,7 @@ private[sqlfront] trait EngineStatements { this: Engine =>
     * findComment surface. Type is e.g. "ROLE"/"TABLE"; COLUMN names are
     * "table.column". */
   def commentText(typ: String, name: String): Option[String] =
-    comments.get((typ.toUpperCase, name.toLowerCase))
+    catalog.comments.get((typ.toUpperCase, name.toLowerCase))
 
   private[sqlfront] val explainRe = P(Kw("EXPLAIN"), Opt("PLAN", "FOR"), Rest)
   private[sqlfront] val setVarRe =

@@ -41,7 +41,7 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
           fromPart.charAt(fToks.last.start) == ')' && fToks.last.depth == 0
         if (isCall) {
           val fn = fToks.head.text(fromPart)
-          if (!catalog.contains(fn.toLowerCase) &&
+          if (!catalog.tables.contains(fn.toLowerCase) &&
               !tableFns.contains(fn.toLowerCase) &&
               splitTop(fromPart).size == 1)
             fromPart = s"(SELECT $fromPart AS ${fn.toLowerCase})"
@@ -172,7 +172,7 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
     // → graft_ua_name(collect_list(expr)). collect_list's partial buffers
     // merge map-side; the opaque add/getResult finisher runs once per
     // group, the reference's own per-group cost model.
-    if (userAggs.nonEmpty) q = rewriteUserAggregates(q)
+    if (catalog.aggregates.nonEmpty) q = rewriteUserAggregates(q)
     // H2 function-name surface → the registered UDF names / Spark natives
     // (Function.java registry): H2's DATEADD/DATEDIFF take a unit STRING
     // (vs Spark's keyword/2-arg forms), so the quoted-unit call shape maps
@@ -297,13 +297,13 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
     * silently mis-binds. Applied to SELECTs and to UPDATE/DELETE/VALUES
     * scalar expressions alike. */
   private[sqlfront] def substConstants(q0: String, context: Seq[String] = Nil): String = {
-    if (constants.isEmpty) return q0
+    if (catalog.constants.isEmpty) return q0
     var q = q0
     val qToks = Lex.tokens(q)
-    val colNames = catalog.keys
+    val colNames = catalog.tables.keys
       .filter(t => context.contains(t) || qToks.exists(_.isIdent(q, t)))
       .flatMap(t => table(t).columns.map(_.toLowerCase)).toSet
-    constants.foreach { case (n, v) =>
+    catalog.constants.foreach { case (n, v) =>
       if (!colNames.contains(n))
         q = Rw.rewrite(q, Rw.Kw(n))(_ => v)
     }
@@ -671,7 +671,7 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
     * re-scanned, so nested user-aggregate calls in the argument resolve. */
   private[sqlfront] def rewriteUserAggregates(q0: String): String = {
     var q = q0
-    userAggs.keys.foreach { name =>
+    catalog.aggregates.keys.foreach { name =>
       var from = 0
       var continue = true
       while (continue) {

@@ -52,15 +52,26 @@ private[sqlfront] object ReflectAlias {
     }
   }
 
-  def register(spark: SparkSession, name: String, target: String): Unit =
-    registerResolved(spark, name, new TargetResolver(target))
-
-  /** `CREATE ALIAS name AS $$source$$`: the class is named after the
+  /** Register alias `name` as a Spark function. A source alias
+    * (`CREATE ALIAS name AS $$source$$`) compiles a class named after the
     * alias (FunctionAlias.loadFromSource — USER_PACKAGE "." aliasName;
-    * here unpackaged) and the entry point is its first public static
+    * here unpackaged) whose entry point is its first public static
     * method. */
-  def registerSource(spark: SparkSession, name: String, source: String): Unit =
-    registerResolved(spark, name, new SourceResolver(name, source))
+  def register(spark: SparkSession, name: String, a: AliasDef): Unit =
+    registerResolved(spark, name, resolver(name, a))
+
+  /** The checks [[register]] makes, without registering anything. */
+  def validate(name: String, a: AliasDef): Unit = signature(resolver(name, a).resolve())
+
+  private def resolver(name: String, a: AliasDef): Resolver =
+    if (a.source) new SourceResolver(name, a.body) else new TargetResolver(a.body)
+
+  /** The return type of alias method `m`, which takes at most 3 arguments. */
+  private def signature(m: java.lang.reflect.Method): DataType = {
+    require(m.getParameterCount <= 3,
+      s"alias arity ${m.getParameterCount} not supported (max 3)")
+    sparkType(m.getReturnType)
+  }
 
   /** Serializable lazy method lookup — ships strings, resolves per JVM. */
   private[sqlfront] sealed trait Resolver extends Serializable {
@@ -77,7 +88,7 @@ private[sqlfront] object ReflectAlias {
   private def registerResolved(spark: SparkSession, name: String,
       resolver: Resolver): Unit = {
     val m = resolver.resolve() // fail fast on the driver
-    val returnType = sparkType(m.getReturnType)
+    val returnType = signature(m)
     // Serializable wrapper: captures only strings, resolves lazily per JVM.
     class Fn extends Serializable {
       @transient private lazy val method = resolver.resolve()
@@ -127,8 +138,7 @@ private[sqlfront] object ReflectAlias {
         new UDF3[AnyRef, AnyRef, AnyRef, Any] {
           def call(a: AnyRef, b: AnyRef, c: AnyRef) = fn.call(Array(a, b, c))
         }, returnType)
-      case n => throw new IllegalArgumentException(
-        s"alias arity $n not supported (max 3)")
+      case n => throw new IllegalStateException(s"alias arity $n")
     }
   }
 }

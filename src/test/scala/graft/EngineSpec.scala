@@ -1675,4 +1675,165 @@ class EngineSpec extends SparkSpec {
     }
     assert(meta(e, "TABLES", "table_name") == Seq("fk", "rw2", "sk", "sk_v"))
   }
+
+  /** One schema object of one catalog family, for the family test below.
+    * `prep` sets up what it needs and may run twice (again after DROP ALL
+    * OBJECTS), `create` and `drop` make and remove it, and every check of
+    * `probe` reads true while the object exists and false once it is gone,
+    * from INFORMATION_SCHEMA, SCRIPT or behaviour. `keptByDropAll` marks
+    * the objects DROP ALL OBJECTS keeps: users, schemas, databases and
+    * what belongs to them. */
+  private case class Family(name: String, prep: Seq[String], create: Seq[String],
+      drop: Seq[String], keptByDropAll: Boolean = false)(
+      val probe: Engine => Seq[Boolean])
+
+  private lazy val families: Seq[Family] = {
+    import scala.util.Try
+    def ok(f: => Any): Boolean = Try(f).isSuccess
+    def has(e: Engine, view: String, where: String): Boolean =
+      e.sql(s"SELECT * FROM INFORMATION_SCHEMA.$view WHERE $where").count() > 0
+    def ins(e: Engine, t: String, v: Int): Boolean =
+      ok(e.sql(s"INSERT INTO $t VALUES ($v)"))
+    def script(e: Engine, prefix: String): Boolean =
+      e.sql("SCRIPT").collect().exists(_.getString(0).startsWith(prefix))
+    val tbl = "CREATE TABLE cf_b (a INT)"
+    def domain(d: String, t: String)(e: Engine) = Seq(
+      has(e, "DOMAINS", s"domain_name = '$d'"),
+      { ok(e.sql(s"CREATE TABLE $t (a $d)")); !ins(e, t, -1) })
+    Seq(
+      Family("table", Nil, Seq("CREATE TABLE cf_t (a INT)"), Seq("DROP TABLE cf_t"))(e => Seq(
+        has(e, "TABLES", "table_name = 'cf_t'"), ok(e.sql("SELECT a FROM cf_t").collect()))),
+      Family("view", Seq(tbl), Seq("CREATE VIEW cf_v AS SELECT a FROM cf_b"),
+          Seq("DROP VIEW cf_v"))(e => Seq(
+        has(e, "VIEWS", "table_name = 'cf_v'"), ok(e.sql("SELECT a FROM cf_v").collect()))),
+      Family("index", Seq(tbl), Seq("CREATE UNIQUE INDEX cf_i ON cf_b(a)"),
+          Seq("DROP INDEX cf_i"))(e => Seq(
+        has(e, "INDEXES", "index_name = 'cf_i'"), ins(e, "cf_b", 1) && !ins(e, "cf_b", 1))),
+      Family("foreign key",
+          Seq("CREATE TABLE cf_p (k INT PRIMARY KEY)", "CREATE TABLE cf_c (k INT)"),
+          Seq("ALTER TABLE cf_c ADD CONSTRAINT cf_fk FOREIGN KEY (k) REFERENCES cf_p(k)"),
+          Seq("ALTER TABLE cf_c DROP CONSTRAINT cf_fk"))(e => Seq(
+        has(e, "CONSTRAINTS", "constraint_name = 'cf_fk'"), !ins(e, "cf_c", 5))),
+      Family("check", Seq(tbl), Seq("ALTER TABLE cf_b ADD CONSTRAINT cf_ck CHECK (a > 0)"),
+          Seq("ALTER TABLE cf_b DROP CONSTRAINT cf_ck"))(e => Seq(
+        has(e, "CONSTRAINTS", "constraint_name = 'cf_ck'"), !ins(e, "cf_b", -1))),
+      Family("trigger", Seq(tbl),
+          Seq("CREATE TRIGGER cf_tr BEFORE INSERT ON cf_b FOR EACH ROW CALL \"x\""),
+          Seq("DROP TRIGGER cf_tr"))(e => Seq(
+        has(e, "TRIGGERS", "trigger_name = 'cf_tr'"), {
+          var fired = false
+          e.registerTriggerImpl("cf_tr", (_, _, _) => fired = true)
+          ins(e, "cf_b", 5)
+          fired
+        })),
+      Family("comment", Seq(tbl), Seq("COMMENT ON TABLE cf_b IS 'note'"),
+          Seq("COMMENT ON TABLE cf_b IS NULL"))(e => Seq(
+        e.commentText("TABLE", "cf_b").isDefined, script(e, "COMMENT ON TABLE cf_b"))),
+      Family("sequence", Nil, Seq("CREATE SEQUENCE cf_s"), Seq("DROP SEQUENCE cf_s"))(e => Seq(
+        has(e, "SEQUENCES", "sequence_name = 'cf_s'"),
+        ok(e.sql("SELECT NEXTVAL('cf_s')").collect()))),
+      Family("service", Nil, Seq("CREATE SERVICE cf_sv (say_goodbye_to(name varchar) " +
+          "varchar) IMPLEMENT BY 'graft.GraftHelloWorldServiceImpl'"),
+          Seq("DROP SERVICE cf_sv"))(e => Seq(
+        script(e, "CREATE SERVICE CF_SV"),
+        ok(e.sql("CALL EXECUTE_SERVICE_WITH_RETURN_VALUE(" +
+          "'CF_SV.SAY_GOODBYE_TO', '[\"x\"]')").collect()))),
+      Family("alias", Nil, Seq("CREATE ALIAS cf_bits FOR \"java.lang.Integer.bitCount\""),
+          Seq("DROP ALIAS cf_bits"))(e => Seq(
+        has(e, "FUNCTION_ALIASES", "alias_name = 'cf_bits'"),
+        ok(e.sql("SELECT cf_bits(7)").collect()))),
+      Family("source alias", Nil,
+          Seq("CREATE ALIAS cf_twice AS $$ int cf_twice(int x) { return 2 * x; } $$"),
+          Seq("DROP ALIAS cf_twice"))(e => Seq(
+        has(e, "FUNCTION_ALIASES", "alias_name = 'cf_twice'"),
+        ok(e.sql("SELECT cf_twice(3)").collect()))),
+      Family("aggregate", Nil, Seq("CREATE AGGREGATE cf_med FOR \"graft.MedianFixture\""),
+          Seq("DROP AGGREGATE cf_med"))(e => Seq(
+        script(e, "CREATE FORCE AGGREGATE cf_med"),
+        ok(e.sql("SELECT cf_med(X) FROM SYSTEM_RANGE(1, 3)").collect()))),
+      Family("constant", Nil, Seq("CREATE CONSTANT cf_k VALUE 7"),
+          Seq("DROP CONSTANT cf_k"))(e => Seq(
+        has(e, "CONSTANTS", "constant_name = 'cf_k'"), ok(e.sql("SELECT cf_k").collect()))),
+      // the probe's CREATE DOMAIN succeeds only once the domain is gone,
+      // and must then bring no CHECK of the old domain back
+      Family("domain with CHECK", Nil, Seq("CREATE DOMAIN cf_d AS INT CHECK (VALUE > 0)"),
+          Seq("DROP DOMAIN cf_d"))(e => Seq(
+        has(e, "DOMAINS", "domain_name = 'cf_d'"),
+        !ok(e.sql("CREATE DOMAIN cf_d AS INT")),
+        { ok(e.sql("CREATE TABLE cf_dt (a cf_d)")); !ins(e, "cf_dt", -1) })),
+      Family("domain named with a digit", Nil,
+          Seq("CREATE DOMAIN cf_pos2 AS INT CHECK (VALUE > 0)"),
+          Seq("DROP DOMAIN cf_pos2"))(domain("cf_pos2", "cf_dt2")),
+      // a column of domain cf_q2 takes cf_q2's CHECK, never that of cf_q
+      Family("domain named by another's prefix",
+          Seq("CREATE DOMAIN cf_q AS INT CHECK (VALUE > 0)"),
+          Seq("CREATE DOMAIN cf_q2 AS INT CHECK (VALUE < 10)"),
+          Seq("DROP DOMAIN cf_q2"))(e => Seq(
+        has(e, "DOMAINS", "domain_name = 'cf_q2'"), {
+          ok(e.sql("CREATE TABLE cf_qt (a cf_q2)"))
+          !ins(e, "cf_qt", 50) && ins(e, "cf_qt", -1)
+        })),
+      Family("user", Nil, Seq("CREATE USER cf_u PASSWORD 'x'"), Seq("DROP USER cf_u"),
+          keptByDropAll = true)(e => Seq(
+        has(e, "USERS", "name = 'CF_U'"), !ok(e.sql("CREATE ROLE cf_u")))),
+      Family("comment of a user", Seq("CREATE USER IF NOT EXISTS cf_uc PASSWORD 'x'"),
+          Seq("COMMENT ON USER cf_uc IS 'c'"), Seq("DROP USER cf_uc"),
+          keptByDropAll = true)(e => Seq(e.commentText("USER", "cf_uc").isDefined)),
+      Family("right of a user", Seq(tbl, "CREATE USER IF NOT EXISTS cf_ur PASSWORD 'x'"),
+          Seq("GRANT SELECT ON cf_b TO cf_ur"), Seq("DROP USER cf_ur"))(e => Seq(
+        has(e, "RIGHTS", "grantee = 'cf_ur'"))),
+      Family("comment of a sequence", Seq("CREATE SEQUENCE cf_s2"),
+          Seq("COMMENT ON SEQUENCE cf_s2 IS 'old'"), Seq("DROP SEQUENCE cf_s2"))(e => Seq(
+        e.commentText("SEQUENCE", "cf_s2").isDefined)),
+      Family("right", Seq(tbl, "CREATE USER IF NOT EXISTS cf_rg PASSWORD 'x'"),
+          Seq("GRANT SELECT ON cf_b TO cf_rg"), Seq("REVOKE SELECT ON cf_b FROM cf_rg"))(e =>
+        Seq(has(e, "RIGHTS", "grantee = 'cf_rg'"))),
+      Family("role", Nil, Seq("CREATE ROLE cf_r"), Seq("DROP ROLE cf_r"))(e => Seq(
+        has(e, "ROLES", "name = 'CF_R'"), !ok(e.sql("CREATE USER cf_r PASSWORD 'x'")))),
+      Family("role grant",
+          Seq("CREATE ROLE cf_rr", "CREATE USER IF NOT EXISTS cf_ru PASSWORD 'x'"),
+          Seq("GRANT cf_rr TO cf_ru"), Seq("REVOKE cf_rr FROM cf_ru"))(e => Seq(
+        has(e, "RIGHTS", "grantee = 'cf_ru' AND rights = 'ROLE CF_RR'"),
+        !ok(e.sql("GRANT cf_rr TO cf_ru")))),
+      Family("schema with owner", Seq("CREATE USER IF NOT EXISTS cf_so PASSWORD 'x' ADMIN"),
+          Seq("CREATE SCHEMA cf_sc AUTHORIZATION cf_so"), Seq("DROP SCHEMA cf_sc"),
+          keptByDropAll = true)(e => Seq(
+        has(e, "SCHEMATA", "schema_name = 'cf_sc'"),
+        !ok(e.sql("ALTER USER cf_so ADMIN FALSE")))),
+      Family("database", Nil, Seq("CREATE DATABASE cf_db"), Seq("DROP DATABASE cf_db"),
+          keptByDropAll = true)(e => Seq(
+        has(e, "DATABASES", "database_name = 'cf_db'"), ok(e.sql("ALTER DATABASE cf_db")))))
+  }
+
+  test("catalog families: ROLLBACK and DROP ALL OBJECTS treat every family alike") {
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    families.foreach { f =>
+      def fresh(): Engine = { val e = freshEngine; f.prep.foreach(e.sql); e }
+      def expect(e: Engine, exists: Boolean, when: String): Unit = {
+        val got = f.probe(e)
+        if (got.exists(_ != exists)) failed += s"${f.name}, $when: $got"
+      }
+      val created = fresh()
+      created.sql("BEGIN"); f.create.foreach(created.sql); created.sql("ROLLBACK")
+      expect(created, exists = false, "BEGIN, CREATE, ROLLBACK")
+      val dropped = fresh()
+      f.create.foreach(dropped.sql)
+      dropped.sql("BEGIN"); f.drop.foreach(dropped.sql)
+      expect(dropped, exists = false, "CREATE, BEGIN, DROP")
+      dropped.sql("ROLLBACK")
+      expect(dropped, exists = true, "CREATE, BEGIN, DROP, ROLLBACK")
+      val all = fresh()
+      f.create.foreach(all.sql)
+      all.sql("DROP ALL OBJECTS"); f.prep.foreach(all.sql)
+      expect(all, f.keptByDropAll, "CREATE, DROP ALL OBJECTS")
+    }
+    assert(failed.isEmpty, failed.mkString("\n", "\n", ""))
+    // a sequence value drawn inside a rolled-back transaction stays used,
+    // as an IDENTITY or _rowid_ value does
+    val e = freshEngine
+    e.sql("CREATE SEQUENCE cf_n")
+    e.sql("BEGIN; SELECT NEXTVAL('cf_n'); SELECT NEXTVAL('cf_n'); ROLLBACK")
+    assert(e.sql("SELECT NEXTVAL('cf_n')").head().get(0).toString == "3")
+    assert(e.sql("SELECT CURRVAL('cf_n')").head().get(0).toString == "3")
+  }
 }

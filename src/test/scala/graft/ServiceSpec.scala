@@ -15,6 +15,11 @@ class GraftHelloWorldServiceImpl {
   def sayGoodbyeTo(name: String): String = "goodbye " + name
 }
 
+/** A second implementation of HELLO_WORLD_SERVICE's SAY_GOODBYE_TO. */
+class GraftFarewellServiceImpl {
+  def sayGoodbyeTo(name: String): String = "farewell " + name
+}
+
 /** Scalar-type coercion surface: INT/LONG/DOUBLE/BOOLEAN/VARCHAR params. */
 class GraftCalcServiceImpl {
   def add(a: Int, b: Long): Long = a + b
@@ -199,5 +204,22 @@ class ServiceSpec extends SparkSpec {
     assert(e2.sql("CALL EXECUTE_SERVICE_WITH_RETURN_VALUE(" +
       "'HELLO_WORLD_SERVICE.SAY_GOODBYE_TO', '[\"x\"]')").collect()
       .head.getString(0) == "goodbye x")
+  }
+
+  test("a service re-created with another IMPLEMENT BY calls the new class") {
+    val e = new Engine(spark)
+    def create(impl: String): Unit = e.sql("CREATE SERVICE greeter " +
+      s"(say_goodbye_to(name varchar) varchar) IMPLEMENT BY 'graft.$impl'")
+    def call(): String = e.sql("CALL EXECUTE_SERVICE_WITH_RETURN_VALUE(" +
+      "'GREETER.SAY_GOODBYE_TO', '[\"x\"]')").head().getString(0)
+    e.sql("BEGIN")
+    create("GraftHelloWorldServiceImpl")
+    assert(call() == "goodbye x")
+    e.sql("ROLLBACK")
+    create("GraftFarewellServiceImpl")
+    assert(call() == "farewell x")
+    e.sql("DROP SERVICE greeter")
+    create("GraftHelloWorldServiceImpl")
+    assert(call() == "goodbye x")
   }
 }
