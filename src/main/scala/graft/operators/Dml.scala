@@ -10,9 +10,12 @@ import org.apache.spark.sql.functions._
   * parallelizes over partitions and is snapshot-atomic at the file level.
   *
   * Each rewrite is lazy: it plans over the whole input version. A caller
-  * that chains rewrites bounds the chain itself — the SQL front door
+  * that chains rewrites bounds the chain itself. The SQL front door
   * materializes every 10th version of a table (`Engine.commitDml`), so a
-  * read never re-runs more than 9 rewrites.
+  * read never re-runs more than 9 rewrites; on a table with a keyed base
+  * it applies `update` and `delete` to the base and to the rows written
+  * since apart (`graft.plans.KeyLookup.rewritten`), so a compaction
+  * merges those rows into the base's partitions.
   */
 object Dml {
 

@@ -3,12 +3,15 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.optimizer.{ReplaceExpressions, RewriteWithExpression}
 import org.apache.spark.sql.catalyst.planning.PhysicalOperation
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, Union}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.execution.{LeafExecNode, LogicalRDD, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.functions.{col, lit, when}
@@ -29,6 +32,12 @@ import graft.core.Checkpoint
   * filter and the projection above it interpreted, so the keys never
   * reach generated code and a new key compiles nothing. Every other shape
   * keeps Spark's own plan.
+  *
+  * Writes keep a keyed table's version in a normal form: row-local
+  * rewrites of its base, UNION ALL the rows written since, held on the
+  * driver ([[rewritten]]), the reference's B-tree page plus redo log. A
+  * compaction merges those rows into the base's partitions in place
+  * ([[merged]]) instead of cutting the version whole.
   *
   * The registry holds its bases weakly: a base that nothing reads any more
   * leaves it with its RDD, and its owner drops it with [[forget]] as soon
@@ -52,15 +61,34 @@ object KeyLookup {
     case _ => false
   }
 
-  /** Materialize `df` as a keyed base on its integral column `key`, with
-    * the partition count of the session's default parallelism, and
-    * register it. The rows go to partitions by split points estimated from
-    * the spans of the registered bases `df` reads (its table's previous
-    * base, as a rule), so `df` is evaluated once and nothing samples it. A
-    * frame that reads no keyed base (a table's first compaction) has
-    * nothing to estimate from: it is materialized as it is first, and its
-    * rows are split from there on its own spans. */
-  def cut(df: DataFrame, key: String): DataFrame = {
+  /** Materialize `df`, a version of a keyed table, as a keyed base on its
+    * integral column `key` and register it. A version in normal form
+    * ([[normalBase]]) whose base can take its rows is merged into that base's
+    * partitions in one narrow job ([[merged]]); any other is cut whole
+    * ([[reshuffled]]). */
+  def cut(df: DataFrame, key: String): DataFrame =
+    register(merged(df, key).getOrElse(reshuffled(df, key)), key)
+
+  /** [[cut]] without the merge: `df` split on key points and sorted. */
+  private[graft] def fullCut(df: DataFrame, key: String): DataFrame =
+    register(reshuffled(df, key), key)
+
+  private def register(base: DataFrame, key: String): DataFrame = {
+    val (rdd, k, spans) = spansOf(base, key)
+    install(base.sparkSession)
+    bases.synchronized { bases(rdd) = Keyed(k, spans) }
+    base
+  }
+
+  /** `df` materialized with the partition count of the session's default
+    * parallelism, split on key points and sorted on the key within each
+    * partition. The split points are estimated from the spans of the
+    * registered bases `df` reads (its table's previous base, as a rule),
+    * so `df` is evaluated once and nothing samples it. A frame that reads
+    * no keyed base (a table's first compaction) has nothing to estimate
+    * from: it is materialized as it is first, and its rows are split from
+    * there on its own spans. */
+  private def reshuffled(df: DataFrame, key: String): DataFrame = {
     val n = df.sparkSession.sparkContext.defaultParallelism
     val read = df.queryExecution.analyzed.collectLeaves().flatMap {
       case l: LogicalRDD => lookup(l.rdd).toSeq
@@ -76,10 +104,177 @@ object KeyLookup {
       else from.repartitionById(n, partitionOf(col(key), splits(spans, n)))
     val base = Checkpoint.cut(laid.sortWithinPartitions(key))
     flat.foreach(Checkpoint.release(_, Nil))
-    val (rdd, k, baseSpans) = spansOf(base, key)
-    install(base.sparkSession)
-    bases.synchronized { bases(rdd) = Keyed(k, baseSpans) }
     base
+  }
+
+  /** Whether `df` is a version of a keyed table in normal form, and then
+    * the keyed base it reads: deterministic, row-local `Filter` and
+    * `Project` rewrites of a registered keyed base that pass its key `key`
+    * through unchanged, UNION ALL one driver-local relation (a
+    * `LocalRelation`) of the rows written since the base was cut; or such
+    * a rewrite alone. */
+  private[graft] def normalBase(df: DataFrame, key: String): Option[LogicalRDD] =
+    normal(df.queryExecution.analyzed, key).map(_._3)
+
+  /** The next version of `v`, a version in normal form ([[normalBase]]):
+    * `f` applied to the rewrite of its base and, on the driver with no
+    * job, to its rows written since, with the rows of `added`, a frame
+    * over a driver-local relation, after those. None when `v` is not in
+    * normal form, when `f` or `added` cannot be evaluated on the driver
+    * or changes a column's type, or when `f` does not keep the form (it
+    * changes the key or is nondeterministic). */
+  def rewritten(v: DataFrame, key: String, f: DataFrame => DataFrame,
+      added: Option[DataFrame] = None): Option[DataFrame] =
+    normal(v.queryExecution.analyzed, key).flatMap { case (rewrite, local, _) =>
+      val spark = v.sparkSession
+      val next = f(GraftColumnBridge.ofRows(spark, rewrite)).queryExecution.analyzed
+      // `f`'s rewrites, moved from the old rewrite onto the rows written since
+      def onLocal(p: LogicalPlan): Option[LogicalPlan] =
+        if (p eq rewrite) Some(LocalRelation(rewrite.output, local.fold(Seq.empty[InternalRow])(_.data)))
+        else p match {
+          case _: Filter | _: Project => onLocal(p.children.head).map(c => p.withNewChildren(Seq(c)))
+          case _ => None
+        }
+      def typed(p: LogicalPlan) = p.output.map(_.dataType) == rewrite.output.map(_.dataType)
+      for {
+        kept <- onLocal(next).filter(_ => typed(next)).flatMap(folded)
+        more <- added.fold(Option(Seq.empty[InternalRow]))(a =>
+          Some(a.queryExecution.analyzed).filter(typed).flatMap(folded))
+        version = GraftColumnBridge.ofRows(spark, Union(Seq(next, LocalRelation(
+          next.output.map(_.withNullability(true).newInstance()), kept ++ more))))
+        if normalBase(version, key).isDefined
+      } yield version
+    }
+
+  /** The non-null values of the integral column `key` of `df`, a frame
+    * over a driver-local relation, computed on the driver ([[folded]]). */
+  def keysOf(df: DataFrame, key: String): Option[Seq[Any]] = {
+    val k = df.schema.fields.indexWhere(_.name.equalsIgnoreCase(key))
+    val dt = df.schema.fields.lift(k).map(_.dataType).filter(keyable)
+    dt.flatMap(t => folded(df.queryExecution.analyzed).map(_.filterNot(_.isNullAt(k)).map(_.get(k, t))))
+  }
+
+  /** The rows of `plan`, a chain of row-local `Filter` and `Project`
+    * ([[stepOf]]) over a driver-local relation, computed on the driver:
+    * the expressions the optimizer would replace are replaced as it does,
+    * then each rewrite runs interpreted, so nothing plans, compiles or
+    * runs a job. None for any other plan. */
+  private def folded(plan: LogicalPlan): Option[Seq[InternalRow]] = {
+    def eval(p: LogicalPlan): Option[Iterator[InternalRow]] = p match {
+      case l: LocalRelation => Some(l.data.iterator)
+      case _ => stepOf(p).flatMap(step => eval(p.children.head).map(step(0)))
+    }
+    eval(RewriteWithExpression(ReplaceExpressions(EliminateSubqueryAliases(plan))))
+      .map(_.map(_.copy()).toVector)
+  }
+
+  /** The rewrite, the rows written since and the base of `plan`, a
+    * version in normal form ([[normalBase]]). */
+  private def normal(plan: LogicalPlan,
+      key: String): Option[(LogicalPlan, Option[LocalRelation], LogicalRDD)] = {
+    val (rewrite, local) = plan match {
+      case Union(Seq(b, l: LocalRelation), false, false) => (b, Some(l))
+      case b => (b, None)
+    }
+    rewriteOf(rewrite, key).map(r => (rewrite, local, r._1))
+  }
+
+  /** A row-local rewrite: a `Filter` or `Project` with deterministic
+    * expressions and no subquery, as the iterator it makes of partition
+    * i's rows of its child. Filter and projection are interpreted, and a
+    * projection's rows are reused buffers. */
+  private def stepOf(op: LogicalPlan): Option[Int => Iterator[InternalRow] => Iterator[InternalRow]] = {
+    def rowLocal(e: Expression) = e.deterministic && !SubqueryExpression.hasSubquery(e) &&
+      !e.containsPattern(TreePattern.CURRENT_LIKE)
+    op match {
+      case Filter(c, child) if rowLocal(c) =>
+        val bound = BindReferences.bindReference(c, child.output)
+        Some { i: Int =>
+          val pred = Predicate.createInterpreted(bound)
+          pred.initialize(i)
+          _.filter(pred.eval)
+        }
+      case Project(list, child) if list.forall(rowLocal) =>
+        val bound = BindReferences.bindReferences(list, child.output)
+        Some { i: Int =>
+          val proj = InterpretedUnsafeProjection.createProjection(bound)
+          proj.initialize(i)
+          _.map(proj)
+        }
+      case _ => None
+    }
+  }
+
+  /** The base `plan` rewrites, its registration, and the rewrites from the
+    * base up, when `plan` is a chain of row-local rewrites ([[stepOf]])
+    * over a registered keyed base whose key is `key`, and every `Project`
+    * passes the key through. */
+  private def rewriteOf(plan: LogicalPlan, key: String): Option[
+      (LogicalRDD, Keyed, Seq[Int => Iterator[InternalRow] => Iterator[InternalRow]])] = {
+    def chain(p: LogicalPlan): Option[(LogicalRDD, Seq[LogicalPlan])] = p match {
+      case l: LogicalRDD => Some((l, Nil))
+      case Filter(_, child) => chain(child).map { case (l, ops) => (l, ops :+ p) }
+      case Project(_, child) => chain(child).map { case (l, ops) => (l, ops :+ p) }
+      case _ => None
+    }
+    for {
+      (base, ops) <- chain(plan)
+      keyed <- lookup(base.rdd)
+      k = base.output(keyed.key)
+      if k.name.equalsIgnoreCase(key) && ops.forall {
+        case Project(list, _) => list.exists { case a: Attribute => a.exprId == k.exprId; case _ => false }
+        case _ => true
+      }
+      steps = ops.flatMap(stepOf)
+      if steps.size == ops.size
+    } yield (base, keyed, steps)
+  }
+
+  /** `df`, a version in normal form ([[normalBase]]), merged into the
+    * partitions of the base it rewrites, in one narrow job with no
+    * exchange: partition i of the new base is partition i of the old one,
+    * rewritten (filters and projections evaluated interpreted, so nothing
+    * compiles), with the written rows whose keys the old partition's span
+    * reaches merged into its key order. A written row goes to the first
+    * partition whose greatest key is at least its own, past the last to
+    * the last, and a null key to partition 0. None when `df` is in no
+    * normal form, when the base's spans are not disjoint and ascending,
+    * when it holds no row, or when a partition would hold more than twice
+    * an even share of the rows: then the version is cut whole, which
+    * splits it afresh. */
+  private[graft] def merged(df: DataFrame, key: String): Option[DataFrame] = for {
+    (rewrite, local, _) <- normal(df.queryExecution.analyzed, key)
+    optimized = GraftColumnBridge.ofRows(df.sparkSession, rewrite).queryExecution.optimizedPlan
+    (base, keyed, steps) <- rewriteOf(optimized, key)
+    filled = keyed.spans.indices.filter(keyed.spans(_).isDefined)
+    if filled.nonEmpty && filled.zip(filled.drop(1)).forall { case (a, b) =>
+      keyed.spans(a).get.max < keyed.spans(b).get.min }
+    k = optimized.output.indexWhere(_.exprId == base.output(keyed.key).exprId)
+    read = reader(optimized.output(k).dataType, k)
+    written = local.fold(Seq.empty[InternalRow])(_.data).groupBy { r =>
+      if (r.isNullAt(k)) 0
+      else filled.find(keyed.spans(_).get.max >= read(r)).getOrElse(filled.last)
+    }
+    rows = keyed.spans.indices.map(i =>
+      keyed.spans(i).fold(0L)(_.rows) + written.get(i).fold(0)(_.size))
+    if rows.max * rows.size <= 2 * rows.sum
+  } yield {
+    val before = (a: InternalRow, b: InternalRow) =>
+      a.isNullAt(k) || !b.isNullAt(k) && read(a) <= read(b)
+    val into = keyed.spans.indices.map(i =>
+      written.getOrElse(i, Nil).sortWith(before).toArray).toArray
+    val rdd = base.rdd.mapPartitionsWithIndex { (i, it) =>
+      val rewritten = steps.foldLeft(it)((rs, step) => step(i)(rs)).buffered
+      val adds = into(i).iterator.buffered
+      new Iterator[InternalRow] {
+        def hasNext: Boolean = rewritten.hasNext || adds.hasNext
+        def next(): InternalRow =
+          if (!adds.hasNext || rewritten.hasNext && before(rewritten.head, adds.head))
+            rewritten.next()
+          else adds.next()
+      }
+    }
+    Checkpoint.cut(GraftColumnBridge.internalFrame(df.sparkSession, rdd, df.schema))
   }
 
   /** The partition of a row whose key is `key`: the number of `splits`

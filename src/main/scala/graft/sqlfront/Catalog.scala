@@ -142,7 +142,9 @@ private[sqlfront] final case class Catalog(
   /** This snapshot as ROLLBACK restores it over the `live` value: every
     * table and sequence both hold keeps the live IDENTITY, `_rowid_` and
     * sequence counters if they drew further, so an id or value drawn by
-    * the rolled-back work stays used. */
+    * the rolled-back work stays used. ROLLBACK applies it once per value
+    * that held an object the transaction dropped, then once for the live
+    * value, so each counter ends at the largest of them. */
   def keepingCountersOf(live: Catalog): Catalog = copy(
     tables = tables.map { case (n, e) => n -> live.tables.get(n).fold(e)(l =>
       e.copy(identityNext = e.identityNext max l.identityNext,

@@ -83,6 +83,9 @@ final class Engine(val spark: SparkSession)
   private[sqlfront] def catalog_=(next: Catalog): Unit = {
     val prev = current
     current = next
+    if (txn.nonEmpty && (prev.tables.keys.exists(!next.tables.contains(_)) ||
+        prev.sequences.keys.exists(!next.sequences.contains(_))))
+      dropped :+= prev
     publish(prev.tables, next.tables)((p, e) => (p.frame eq e.frame) && p.rowid == e.rowid)(
       spark.catalog.dropTempView, (n, e) => e.visible.createOrReplaceTempView(n))
     publish(prev.aliases, next.aliases)(_ == _)(
@@ -406,12 +409,15 @@ final class Engine(val spark: SparkSession)
     * version or its rows hold a nondeterministic or current-time
     * expression: then materialize it as the table's new base. A table
     * with an integral primary key ([[keyOf]]) gets a keyed base
-    * ([[graft.plans.KeyLookup.cut]]): partitioned on key split points
-    * estimated from its previous base (at its first compaction, from the
-    * version itself once materialized), sorted on the key within each
-    * partition, and registered with its partitions' key spans, so key
-    * reads plan as lookups. Any other table gets a narrow coalesce. Either
-    * way the partition count never grows with the inserts. A volatile version
+    * ([[graft.plans.KeyLookup.cut]]), sorted on the key within each
+    * partition and registered with its partitions' key spans, so key
+    * reads plan as lookups. A version in normal form, which the DML arms
+    * build through [[keyedVersion]], is merged into the previous base's
+    * partitions in one narrow job; any other is partitioned on key split
+    * points estimated from its previous base (at its first compaction,
+    * from the version itself once materialized). Any other table gets a
+    * narrow coalesce. Either way the partition count never grows with the
+    * inserts. A volatile version
     * is fixed at once, so its values are those of the statement's run and
     * do not change from read to read. The superseded base is released
     * when the statement is done ([[releaseUnheld]]). */
@@ -428,6 +434,19 @@ final class Engine(val spark: SparkSession)
       install(name, e.copy(frame = base, pendingDml = 0))
       cuts += base
     }
+  }
+
+  /** The next version of keyed table `name` in normal form
+    * ([[graft.plans.KeyLookup.rewritten]]): `f` applied to the rewrite of
+    * the table's base and, on the driver, to the rows written since, and
+    * the rows of `added`, a driver-local frame, after those. None when the
+    * table has no keyed base or the version cannot keep the form: the
+    * caller then rewrites the whole version. */
+  private[sqlfront] def keyedVersion(name: String, f: DataFrame => DataFrame,
+      added: Option[DataFrame] = None): Option[DataFrame] = {
+    val t = table(name)
+    keyOf(entry(name), t).flatMap(k =>
+      scala.util.Try(KeyLookup.rewritten(t, k, f, added)).toOption.flatten)
   }
 
   /** The integral PRIMARY KEY column of `df`, a version of table `e`. */
@@ -637,19 +656,26 @@ final class Engine(val spark: SparkSession)
   // view. A version a snapshot holds keeps its base's blocks and its
   // bucketed snapshot alive across later compactions and drops; they go
   // once COMMIT, ROLLBACK, RELEASE or a new BEGIN drops the snapshot
-  // (releaseUnheld). The IDENTITY, _rowid_ and sequence counters of the
-  // objects that survive are NOT rolled back: an id or value a rolled-back
-  // statement drew stays used (H2/reference Sequence semantics). DDL is
+  // (releaseUnheld). The IDENTITY, _rowid_ and sequence counters are NOT
+  // rolled back, not even those of an object the transaction dropped: an
+  // id or value a rolled-back statement drew stays used (H2/reference
+  // Sequence semantics). DDL is
   // covered by the snapshot too, an extension: the reference auto-commits
   // around DDL.
-  private[sqlfront] var txn: Option[Catalog] = None
+  private var snapshot: Option[Catalog] = None
+  private[sqlfront] def txn: Option[Catalog] = snapshot
+  /** Start (Some) or end (None) the transaction snapshot. */
+  private[sqlfront] def txn_=(s: Option[Catalog]): Unit = { snapshot = s; dropped = Vector.empty }
+  /** The values that held a table or sequence a statement of the open
+    * transaction dropped: ROLLBACK keeps the counters they drew too. */
+  private var dropped = Vector.empty[Catalog]
   private[sqlfront] val savepointMap = mutable.LinkedHashMap.empty[String, Catalog]
   private[sqlfront] var autocommit = true
   // recorded session options (dml/Set.java SetTypes) → SETTINGS meta view
   private[sqlfront] val sessionSettings = mutable.LinkedHashMap.empty[String, String]
 
   private[sqlfront] def restore(s: Catalog): Unit =
-    catalog = s.keepingCountersOf(catalog)
+    catalog = (dropped :+ catalog).foldLeft(s)(_ keepingCountersOf _)
 
   /** Normalize the CREATE-statement head (Parser.java:367-369 + 3969-3987):
     * `DECLARE …` is an alias for CREATE ("support for DECLARE GLOBAL
@@ -1479,10 +1505,21 @@ final class Engine(val spark: SparkSession)
         if (!(fireTriggers(tn, "UPDATE", "BEFORE", oldMatched, replaced) |
             fireTriggers(tn, "INSERT", "BEFORE", t.limit(0), insertedArm))) {
           // a driver-local source is de-duplicated on the driver, so the
-          // pending version holds no window exchange for later reads
+          // pending version holds no window exchange for later reads; on
+          // a keyed table its keys leave the base and its rows join the
+          // rows written since (NULL keys match nothing, as in the join)
           commitDml(name, lastPerKeyLocal(aligned, key) match {
-            case Some(src) => Dml.mergeInto(t, src, key,
-              onDupSourceKeys = "unchecked", nullKeysMatch = false)
+            case Some(src) =>
+              val srcKeys = key match {
+                case Seq(k) if keyOf(entry(name), t).exists(_.equalsIgnoreCase(k)) =>
+                  KeyLookup.keysOf(src, k).map(_.distinct)
+                case _ => None
+              }
+              srcKeys.flatMap(ks => keyedVersion(name,
+                  v => if (ks.isEmpty) v else Dml.delete(v, col(key.head).isin(ks: _*)),
+                  Some(src)))
+                .getOrElse(Dml.mergeInto(t, src, key,
+                  onDupSourceKeys = "unchecked", nullKeysMatch = false))
             case None => Dml.mergeInto(t, aligned, key, nullKeysMatch = false)
           })
           fireTriggers(tn, "UPDATE", "AFTER", oldMatched, replaced)
@@ -1502,7 +1539,9 @@ final class Engine(val spark: SparkSession)
         // LIMIT restricts the row-hook delta to the rows actually updated
         val (out, oldRows) = Option(limit) match {
           case None =>
-            (Dml.update(t, cond0, setMap), t.filter(coalesce(cond0, lit(false))))
+            (keyedVersion(name, Dml.update(_, cond0, setMap))
+                .getOrElse(Dml.update(t, cond0, setMap)),
+              t.filter(coalesce(cond0, lit(false))))
           case Some(n) => // H2 UPDATE..LIMIT: first n matching rows.
             // orderBy+limit plans as TakeOrderedAndProject (no full sort
             // shuffle), and the ≤n victim ids broadcast back to the scan.
@@ -1534,7 +1573,8 @@ final class Engine(val spark: SparkSession)
         // actually deleted (Delete.java fire sites)
         val (out, oldRows) = Option(limit) match {
           case None =>
-            (Dml.delete(t, cond0), t.filter(coalesce(cond0, lit(false))))
+            (keyedVersion(name, Dml.delete(_, cond0)).getOrElse(Dml.delete(t, cond0)),
+              t.filter(coalesce(cond0, lit(false))))
           case Some(n) =>
             val rid = t.withColumn("__rid", monotonically_increasing_id())
             val victims = rid.filter(cond0).orderBy(col("__rid")).limit(n.toInt)

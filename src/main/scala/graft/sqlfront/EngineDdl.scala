@@ -390,14 +390,17 @@ private[sqlfront] trait EngineDdl { this: Engine =>
   private[sqlfront] def typeName(t: String): String =
     t.trim.takeWhile(c => c.isLetterOrDigit || c == '_').toLowerCase
 
+  /** The Spark type of a column type: a domain's base type, else the
+    * built-in type its whole identifier names (`INT8`, `FLOAT8`), else the
+    * one its letters before the first digit name (`INT4`, `VARCHAR2`),
+    * else VARCHAR. */
   private[sqlfront] def parseType(t0: String): DataType = {
     // user-defined domain resolves to its base type (CreateUserDataType)
     catalog.domains.get(typeName(t0)).foreach(d => return parseType(d.baseType))
     val t = t0.trim.toUpperCase
-    val base = t.takeWhile(c => c.isLetter || c == '_')
-    base match {
+    def builtin(name: String): Option[DataType] = Option(name match {
       case "INT" | "INTEGER" | "MEDIUMINT" | "SERIAL" => IntegerType
-      case "BIGINT" | "LONG" | "IDENTITY" | "BIGSERIAL" => LongType
+      case "BIGINT" | "INT8" | "LONG" | "IDENTITY" | "BIGSERIAL" => LongType
       case "SMALLINT" => ShortType
       case "TINYINT" => ByteType
       case "DOUBLE" | "FLOAT8" => DoubleType
@@ -415,8 +418,11 @@ private[sqlfront] trait EngineDdl { this: Engine =>
       case "TIME" => TimeType(6)
       case "TIMESTAMP" | "DATETIME" => TimestampType
       case "BINARY" | "VARBINARY" | "BLOB" | "BYTEA" => BinaryType
-      case _ => StringType // VARCHAR/CHAR/CLOB/TEXT/UUID/…
-    }
+      case _ => null
+    })
+    builtin(typeName(t0).toUpperCase)
+      .orElse(builtin(t.takeWhile(c => c.isLetter || c == '_')))
+      .getOrElse(StringType) // VARCHAR/CHAR/CLOB/TEXT/UUID/…
   }
 
   /** Like [[splitTop]] but also treats `[…]` as nesting (ARRAY literals). */
@@ -711,7 +717,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     // an INSTEAD OF trigger replaces the insert (fireBeforeRow done=true)
     if (fireTriggers(tn, "INSERT", "BEFORE", t.limit(0), aligned)) return
     validateConstraints(tn, aligned)
-    commitDml(name, t.union(aligned))
+    commitDml(name, keyedVersion(name, identity, Some(aligned)).getOrElse(t.union(aligned)))
     fireTriggers(tn, "INSERT", "AFTER", t.limit(0), aligned)
   }
 

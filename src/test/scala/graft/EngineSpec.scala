@@ -1836,4 +1836,28 @@ class EngineSpec extends SparkSpec {
     assert(e.sql("SELECT NEXTVAL('cf_n')").head().get(0).toString == "3")
     assert(e.sql("SELECT CURRVAL('cf_n')").head().get(0).toString == "3")
   }
+
+  test("a column type names a built-in type by its whole identifier first") {
+    val e = freshEngine
+    e.sql("CREATE TABLE tt (a INT8, b FLOAT8, c INT4, d VARCHAR2(10), m DECIMAL(10,2))")
+    assert(e.sql("SELECT * FROM tt").schema.fields.map(_.dataType.sql).toSeq ==
+      Seq("BIGINT", "DOUBLE", "INT", "STRING", "DECIMAL(10,2)"))
+  }
+
+  test("ROLLBACK keeps the counter of a sequence or IDENTITY table the transaction dropped") {
+    val e = freshEngine
+    e.sql("CREATE SEQUENCE fs")
+    e.sql("BEGIN")
+    assert(e.sql("SELECT NEXTVAL('fs')").head().get(0).toString == "1")
+    e.sql("DROP SEQUENCE fs; ROLLBACK")
+    assert(e.sql("SELECT NEXTVAL('fs')").head().get(0).toString == "2")
+    e.sql("CREATE TABLE fi (id BIGINT AUTO_INCREMENT, v int)")
+    e.sql("BEGIN; INSERT INTO fi(v) VALUES (10); DROP TABLE fi; ROLLBACK")
+    e.sql("INSERT INTO fi(v) VALUES (11)")
+    assert(e.sql("SELECT id FROM fi").collect().map(_.getLong(0)).toSeq == Seq(2L))
+    // a savepoint rollback brings a dropped sequence back past its draws too
+    e.sql("BEGIN; SAVEPOINT a; SELECT NEXTVAL('fs'); DROP SEQUENCE fs; ROLLBACK TO SAVEPOINT a")
+    assert(e.sql("SELECT NEXTVAL('fs')").head().get(0).toString == "4")
+    e.sql("COMMIT")
+  }
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.debug.{codegenString, codegenStringSeq}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
+import graft.core.Checkpoint
 import graft.plans.{KeyLookup, KeyLookupExec}
 import graft.sqlfront.Engine
 
@@ -15,8 +16,10 @@ import graft.sqlfront.Engine
   * `KeyLookupExec` that reads only the partitions whose key spans admit
   * the keys, and compile the same code for every key; wide ranges and
   * every other shape keep Spark's own plan; compactions split the keys on
-  * the previous base's spans; and a random stream of DML, key reads and
-  * transactions reads what a shadow map holds. */
+  * the previous base's spans, or merge the rows written since into them
+  * with no shuffle and the rows and key order of a whole cut; and a
+  * random stream of DML, key reads and transactions reads what a shadow
+  * map holds. */
 class KeyLookupSpec extends SparkSpec {
 
   private def lookups(df: DataFrame): Seq[KeyLookupExec] =
@@ -33,6 +36,47 @@ class KeyLookupSpec extends SparkSpec {
     en.sql(s"INSERT INTO $t SELECT X, X * 10 FROM SYSTEM_RANGE(1, $n)")
     (1 to 9).foreach(_ => en.sql(s"DELETE FROM $t WHERE f1 = -1"))
     assert(en.table(t).queryExecution.analyzed.isInstanceOf[LogicalRDD])
+  }
+
+  /** Each partition of a materialized frame as its (f1, f2) rows, in order. */
+  private def partitions(base: DataFrame): Seq[Seq[(Int, Long)]] =
+    base.rdd.mapPartitions(it => Iterator(it.map(r => (r.getInt(0), r.getLong(1))).toVector))
+      .collect().toSeq
+
+  /** Check a compacted base: every partition is in key order, the
+    * partitions follow each other in key order, and the spans registered
+    * for it hold exactly each partition's keys. */
+  private def keyed(base: DataFrame, what: String): Seq[Seq[(Int, Long)]] = {
+    val ps = partitions(base)
+    val keys = ps.flatten.map(_._1)
+    assert(keys == keys.sorted, what)
+    val spans = KeyLookup.lookup(base.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd)
+      .get.spans.toSeq
+    assert(spans == ps.map(p => if (p.isEmpty) None
+      else Some(KeyLookup.Span(p.head._1, p.last._1, p.size))), what)
+    ps
+  }
+
+  /** Cut version `v` in normal form both ways, merged into its base's
+    * partitions and whole: the same rows in the same key order, the merge
+    * keeps every row of the base's partition i in partition i, and the
+    * spans registered for each hold its keys. False when the merge falls
+    * back to the whole cut. */
+  private def mergesLikeFullCut(v: DataFrame, what: String): Boolean = {
+    val Some(old) = KeyLookup.normalBase(v, "f1")
+    KeyLookup.merged(v, "f1").exists { m =>
+      val full = KeyLookup.fullCut(v, "f1")
+      val mp = partitions(m)
+      val fp = keyed(full, what)
+      assert(mp.flatten == fp.flatten, what)
+      assert(mp.size == old.rdd.getNumPartitions, what)
+      val was = old.rdd.mapPartitions(it => Iterator(it.map(_.getInt(0)).toSet)).collect()
+      val at = mp.zipWithIndex.flatMap { case (p, i) => p.map(_._1 -> i) }.toMap
+      assert(was.zipWithIndex.forall { case (ks, i) => ks.forall(k => at.get(k).forall(_ == i)) },
+        what)
+      Seq(m, full).foreach { c => Checkpoint.release(c, Nil); KeyLookup.forget(c) }
+      true
+    }
   }
 
   test("key =, IN and BETWEEN on a compacted base read only the admitted partitions") {
@@ -167,17 +211,24 @@ class KeyLookupSpec extends SparkSpec {
         "ROLLBACK TO SAVEPOINT a", "ROLLBACK TO SAVEPOINT b").map(Txn))
 
     for (seed <- 1L to 3L) {
-      val stream = Gen.listOfN(70, st).pureApply(Gen.Parameters.default, Seed(seed))
+      // on the compacted base (keys 1..200): a MERGE of a key past its
+      // last split point, then an UPDATE and a DELETE of keys held only in
+      // the rows written since
+      val stream = List(Mrg(250, 1L), Ins(230, 2L), Upd(250, 3L), Del(230), Point(250)) ++
+        Gen.listOfN(70, st).pureApply(Gen.Parameters.default, Seed(seed))
       val en = new Engine(spark)
-      en.sql("CREATE TABLE rs (f1 INT PRIMARY KEY, f2 BIGINT)")
-      en.sql("INSERT INTO rs SELECT X, X * 10 FROM SYSTEM_RANGE(1, 200)")
+      compacted(en, "rs", 200)
       var shadow: Map[Int, Long] = (1 to 200).map(k => k -> k * 10L).toMap
+      def base = en.table("rs").queryExecution.analyzed.collectLeaves()
+        .collect { case l: LogicalRDD => l.rdd.id }
+      var merges = 0
       var txn: Option[Map[Int, Long]] = None
       var savepoints = Vector.empty[(String, Map[Int, Long])]
       var keyedReads = 0
       def ok[A](step: Int, s: St, got: A, want: A): Unit =
         assert(got == want, s"seed $seed, statement $step: $s")
       stream.zipWithIndex.foreach { case (s, step) =>
+        val was = base
         s match {
           case Ins(k, v) =>
             val r = Try(en.sql(s"INSERT INTO rs VALUES ($k, $v)"))
@@ -222,7 +273,13 @@ class KeyLookupSpec extends SparkSpec {
                 if (i >= 0) { shadow = savepoints(i)._2; savepoints = savepoints.take(i + 1) }
             }
         }
+        val v = en.table("rs")
+        if (base != was && v.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+          keyed(v, s"seed $seed, compaction at statement $step: $s")
+        else if (KeyLookup.normalBase(v, "f1").isDefined &&
+            mergesLikeFullCut(v, s"seed $seed, statement $step: $s")) merges += 1
       }
+      assert(merges > 0, s"seed $seed: no version merged")
       val all = en.sql("SELECT f1, f2 FROM rs").collect().map(r => r.getInt(0) -> r.getLong(1))
       assert(all.toMap == shadow && all.length == shadow.size, s"seed $seed: final table")
       assert(keyedReads > 0, s"seed $seed: no point read planned a KeyLookup")
@@ -249,5 +306,72 @@ class KeyLookupSpec extends SparkSpec {
     assert(en.sql("SELECT f2 FROM lk WHERE f1 = 30").head().getLong(0) == 30L)
     en.sql("DROP TABLE lk")
     assert(ours.isEmpty, ours)
+  }
+
+  test("a merge compaction keeps the base's partitions and equals a whole cut") {
+    val en = new Engine(spark)
+    compacted(en, "mc", 1000)
+    val n = spark.sparkContext.defaultParallelism
+    // every normal-form shape: keys past the last split point and below
+    // the first, keys held only in the rows written since, base keys
+    Seq(
+      "INSERT INTO mc VALUES (1500, 1)", "MERGE INTO mc KEY(f1) VALUES (2000, 2)",
+      "MERGE INTO mc KEY(f1) VALUES (10, 3)", "UPDATE mc SET f2 = 5 WHERE f1 = 1500",
+      "DELETE FROM mc WHERE f1 = 2000", "DELETE FROM mc WHERE f1 = 500",
+      "UPDATE mc SET f2 = f2 + 1 WHERE f1 BETWEEN 100 AND 120",
+      "MERGE INTO mc KEY(f1) VALUES (600, 8), (1700, 9), (-3, 6), (1001, 7)"
+    ).foreach { q =>
+      en.sql(q)
+      assert(mergesLikeFullCut(en.table("mc"), q), q)
+      assert(!en.table("mc").queryExecution.analyzed.isInstanceOf[LogicalRDD], q)
+    }
+    // an INSERT … SELECT leaves the form: its compaction cuts the whole version
+    en.sql("INSERT INTO mc SELECT X, X FROM SYSTEM_RANGE(3000, 3001)")
+    assert(KeyLookup.normalBase(en.table("mc"), "f1").isEmpty)
+    en.sql("DELETE FROM mc WHERE f1 = 3001") // the tenth: compacts
+    val ps = keyed(en.table("mc"), "compacted")
+    assert(ps.size == n)
+    val want = ((1 to 1000).map(k => k -> k * 10L).toMap - 500 ++
+      (100 to 120).map(k => k -> (k * 10L + 1)) ++
+      Map(1500 -> 5L, 10 -> 3L, -3 -> 6L, 1001 -> 7L, 600 -> 8L, 1700 -> 9L, 3000 -> 3000L))
+    assert(ps.flatten.toMap == want && ps.flatten.size == want.size)
+  }
+
+  test("a steady-state compaction under normal-form DML shuffles nothing in at most 3 jobs") {
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import org.apache.spark.GraftTestAccess
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val en = new Engine(spark)
+    compacted(en, "sj", 20000)
+    val before = partitions(en.table("sj"))
+    Seq("INSERT INTO sj VALUES (30000, 1)", "MERGE INTO sj KEY(f1) VALUES (5, 2)",
+      "MERGE INTO sj KEY(f1) VALUES (30001, 3)", "UPDATE sj SET f2 = 4 WHERE f1 = 30000",
+      "DELETE FROM sj WHERE f1 = 30001", "DELETE FROM sj WHERE f1 = 7",
+      "UPDATE sj SET f2 = f2 + 1 WHERE f1 BETWEEN 100 AND 200",
+      "INSERT INTO sj VALUES (-3, 5)", "MERGE INTO sj KEY(f1) VALUES (9, 7), (40000, 8)"
+    ).foreach { q =>
+      en.sql(q)
+      assert(KeyLookup.normalBase(en.table("sj"), "f1").isDefined, q)
+    }
+    val jobs = new AtomicInteger
+    val shuffled = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    GraftTestAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      en.sql("UPDATE sj SET f2 = 9 WHERE f1 = 11") // the tenth: compacts
+      GraftTestAccess.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(en.table("sj").queryExecution.analyzed.isInstanceOf[LogicalRDD])
+    assert(shuffled.get == 0L && jobs.get <= 3, (shuffled.get, jobs.get))
+    val after = keyed(en.table("sj"), "compacted")
+    assert(after.size == before.size)
+    assert(after.flatten.size == 20000 + 4 - 2 &&
+      after.head.head == (-3 -> 5L) && after.last.last == (40000 -> 8L))
   }
 }
