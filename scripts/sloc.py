@@ -1,11 +1,12 @@
 #!/usr/bin/env python3
 """Count non-blank, non-comment Scala lines.
 
-    python3 scripts/sloc.py DIR
+    python3 scripts/sloc.py DIR [DIR ...]
 
-Prints one line per .scala file under DIR (count, then path relative to
-DIR) and a total. A line does not count when it is blank, when it holds
-only a `//` comment, or when it lies wholly inside a `/* ... */` block
+Prints, for each DIR, one line per .scala file under it (count, then path
+relative to DIR) and its total; given more than one DIR, a grand total
+follows. A line does not count when it is blank, when it holds only a
+`//` comment, or when it lies wholly inside a `/* ... */` block
 (scaladoc included). A line that mixes code and a comment counts.
 String literals are not parsed: a `//` or `/*` inside a string on a code
 line does not change that line's count, but an unclosed `/*` inside a
@@ -47,10 +48,8 @@ def count(path):
     return n
 
 
-def main(argv):
-    if len(argv) != 2 or not os.path.isdir(argv[1]):
-        sys.exit(__doc__.strip())
-    root = argv[1]
+def tally(root):
+    """Print the counts under `root` and return their total."""
     total = 0
     for d, _, files in sorted(os.walk(root)):
         for name in sorted(files):
@@ -60,6 +59,21 @@ def main(argv):
                 total += c
                 print(f"{c:6d}  {os.path.relpath(p, root)}")
     print(f"{total:6d}  total")
+    return total
+
+
+def main(argv):
+    roots = argv[1:]
+    if not roots or not all(os.path.isdir(r) for r in roots):
+        sys.exit(__doc__.strip())
+    if len(roots) == 1:
+        tally(roots[0])
+        return
+    grand = 0
+    for r in roots:
+        print(r)
+        grand += tally(r)
+    print(f"{grand:6d}  grand total")
 
 
 if __name__ == "__main__":

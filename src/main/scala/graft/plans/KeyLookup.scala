@@ -7,11 +7,12 @@ import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.optimizer.{ReplaceExpressions, RewriteWithExpression}
+import org.apache.spark.sql.catalyst.optimizer.{ComputeCurrentTime, ReplaceExpressions, RewriteWithExpression}
 import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, Union}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.trees.TreePattern
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LeafExecNode, LogicalRDD, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.functions.{col, lit, when}
@@ -38,6 +39,10 @@ import graft.core.Checkpoint
   * driver ([[rewritten]]), the reference's B-tree page plus redo log. A
   * compaction merges those rows into the base's partitions in place
   * ([[merged]]) instead of cutting the version whole.
+  *
+  * The same interpreted operators read driver-local frames, such as a
+  * VALUES batch: [[localRows]] is the one place the engine reads their
+  * rows, with no planning, job or SQL execution.
   *
   * The registry holds its bases weakly: a base that nothing reads any more
   * leaves it with its RDD, and its owner drops it with [[forget]] as soon
@@ -146,25 +151,31 @@ object KeyLookup {
       } yield version
     }
 
-  /** The non-null values of the integral column `key` of `df`, a frame
-    * over a driver-local relation, computed on the driver ([[folded]]). */
-  def keysOf(df: DataFrame, key: String): Option[Seq[Any]] = {
-    val k = df.schema.fields.indexWhere(_.name.equalsIgnoreCase(key))
-    val dt = df.schema.fields.lift(k).map(_.dataType).filter(keyable)
-    dt.flatMap(t => folded(df.queryExecution.analyzed).map(_.filterNot(_.isNullAt(k)).map(_.get(k, t))))
-  }
+  /** The rows of `df` when it is driver-local: a chain of `Filter` and
+    * `Project` ([[stepOf]]) over a driver-local relation (a
+    * `LocalRelation`), such as a VALUES batch aligned to a table. They are
+    * computed on the driver: current-time expressions take the statement's
+    * time and the expressions the optimizer would replace are replaced as
+    * it does, then each operator runs interpreted, so nothing plans,
+    * compiles or runs a job. This is the one place a driver-local frame's
+    * rows are read. None for any other frame. */
+  def localRows(df: DataFrame): Option[Seq[InternalRow]] = folded(df.queryExecution.analyzed)
 
-  /** The rows of `plan`, a chain of row-local `Filter` and `Project`
-    * ([[stepOf]]) over a driver-local relation, computed on the driver:
-    * the expressions the optimizer would replace are replaced as it does,
-    * then each rewrite runs interpreted, so nothing plans, compiles or
-    * runs a job. None for any other plan. */
+  /** A frame of `df`'s columns over the driver-local relation `rows`. */
+  def localFrame(df: DataFrame, rows: Seq[InternalRow]): DataFrame =
+    GraftColumnBridge.ofRows(df.sparkSession, LocalRelation(DataTypeUtils.toAttributes(df.schema), rows))
+
+  /** [[localRows]] of a plan. */
   private def folded(plan: LogicalPlan): Option[Seq[InternalRow]] = {
+    def evaluable(e: Expression) = !SubqueryExpression.hasSubquery(e) &&
+      !e.exists(x => x.isInstanceOf[Unevaluable] && !x.isInstanceOf[Attribute])
     def eval(p: LogicalPlan): Option[Iterator[InternalRow]] = p match {
       case l: LocalRelation => Some(l.data.iterator)
-      case _ => stepOf(p).flatMap(step => eval(p.children.head).map(step(0)))
+      case _ if p.expressions.forall(evaluable) =>
+        stepOf(p).flatMap(step => eval(p.children.head).map(step(0)))
+      case _ => None
     }
-    eval(RewriteWithExpression(ReplaceExpressions(EliminateSubqueryAliases(plan))))
+    eval(RewriteWithExpression(ReplaceExpressions(ComputeCurrentTime(EliminateSubqueryAliases(plan)))))
       .map(_.map(_.copy()).toVector)
   }
 
@@ -179,22 +190,19 @@ object KeyLookup {
     rewriteOf(rewrite, key).map(r => (rewrite, local, r._1))
   }
 
-  /** A row-local rewrite: a `Filter` or `Project` with deterministic
-    * expressions and no subquery, as the iterator it makes of partition
-    * i's rows of its child. Filter and projection are interpreted, and a
+  /** A `Filter` or `Project` as the iterator it makes of partition i's
+    * rows of its child. Filter and projection are interpreted, and a
     * projection's rows are reused buffers. */
-  private def stepOf(op: LogicalPlan): Option[Int => Iterator[InternalRow] => Iterator[InternalRow]] = {
-    def rowLocal(e: Expression) = e.deterministic && !SubqueryExpression.hasSubquery(e) &&
-      !e.containsPattern(TreePattern.CURRENT_LIKE)
+  private def stepOf(op: LogicalPlan): Option[Int => Iterator[InternalRow] => Iterator[InternalRow]] =
     op match {
-      case Filter(c, child) if rowLocal(c) =>
+      case Filter(c, child) =>
         val bound = BindReferences.bindReference(c, child.output)
         Some { i: Int =>
           val pred = Predicate.createInterpreted(bound)
           pred.initialize(i)
           _.filter(pred.eval)
         }
-      case Project(list, child) if list.forall(rowLocal) =>
+      case Project(list, child) =>
         val bound = BindReferences.bindReferences(list, child.output)
         Some { i: Int =>
           val proj = InterpretedUnsafeProjection.createProjection(bound)
@@ -203,12 +211,13 @@ object KeyLookup {
         }
       case _ => None
     }
-  }
 
   /** The base `plan` rewrites, its registration, and the rewrites from the
-    * base up, when `plan` is a chain of row-local rewrites ([[stepOf]])
-    * over a registered keyed base whose key is `key`, and every `Project`
-    * passes the key through. */
+    * base up, when `plan` is a chain of row-local rewrites over a
+    * registered keyed base whose key is `key`, and every `Project` passes
+    * the key through. A row-local rewrite is a `Filter` or `Project` with
+    * deterministic expressions, no current time and no subquery, so it
+    * reads alike each time the base is read. */
   private def rewriteOf(plan: LogicalPlan, key: String): Option[
       (LogicalRDD, Keyed, Seq[Int => Iterator[InternalRow] => Iterator[InternalRow]])] = {
     def chain(p: LogicalPlan): Option[(LogicalRDD, Seq[LogicalPlan])] = p match {
@@ -224,10 +233,9 @@ object KeyLookup {
       if k.name.equalsIgnoreCase(key) && ops.forall {
         case Project(list, _) => list.exists { case a: Attribute => a.exprId == k.exprId; case _ => false }
         case _ => true
-      }
-      steps = ops.flatMap(stepOf)
-      if steps.size == ops.size
-    } yield (base, keyed, steps)
+      } && ops.flatMap(_.expressions).forall(e => e.deterministic &&
+        !SubqueryExpression.hasSubquery(e) && !e.containsPattern(TreePattern.CURRENT_LIKE))
+    } yield (base, keyed, ops.flatMap(stepOf))
   }
 
   /** `df`, a version in normal form ([[normalBase]]), merged into the

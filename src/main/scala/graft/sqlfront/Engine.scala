@@ -346,9 +346,10 @@ final class Engine(val spark: SparkSession)
   /** Fire the table's registered triggers for `event` at `phase`
     * (BEFORE | AFTER). Returns true if an INSTEAD OF trigger fired —
     * the caller then suppresses the operation, the batch analogue of
-    * fireBeforeRow returning done=true (Insert.java:157-161). */
+    * fireBeforeRow returning done=true (Insert.java:157-161). The deltas
+    * are built only when a bound trigger reads them. */
   private[sqlfront] def fireTriggers(tn: String, event: String, phase: String,
-      oldRows: DataFrame, newRows: DataFrame): Boolean = {
+      oldRows: => DataFrame, newRows: => DataFrame): Boolean = {
     var insteadOf = false
     catalog.triggers.foreach { case (n, (tbl, timing)) =>
       val up = timing.toUpperCase
@@ -1492,16 +1493,14 @@ final class Engine(val spark: SparkSession)
         }
         // row hooks per arm (H2 MERGE fires update-else-insert row
         // triggers, Merge.java:146): replaced = source rows whose key
-        // exists, inserted = the rest; deltas are lazy
+        // exists, inserted = the rest; a delta is built only when a bound
+        // trigger reads it
         val tn = name.toLowerCase
-        val srcAligned = aligned.toDF(t.columns.toSeq: _*)
-        val keyCols = key.map(col)
-        val oldMatched = t.join(
-          srcAligned.select(keyCols: _*).distinct(), key, "left_semi")
-        val replaced = srcAligned.join(
-          t.select(keyCols: _*).distinct(), key, "left_semi")
-        val insertedArm = srcAligned.join(
-          t.select(keyCols: _*).distinct(), key, "left_anti")
+        lazy val srcAligned = aligned.toDF(t.columns.toSeq: _*)
+        lazy val tKeys = t.select(key.map(col): _*).distinct()
+        lazy val oldMatched = t.join(srcAligned.select(key.map(col): _*).distinct(), key, "left_semi")
+        lazy val replaced = srcAligned.join(tKeys, key, "left_semi")
+        lazy val insertedArm = srcAligned.join(tKeys, key, "left_anti")
         if (!(fireTriggers(tn, "UPDATE", "BEFORE", oldMatched, replaced) |
             fireTriggers(tn, "INSERT", "BEFORE", t.limit(0), insertedArm))) {
           // a driver-local source is de-duplicated on the driver, so the
@@ -1512,7 +1511,9 @@ final class Engine(val spark: SparkSession)
             case Some(src) =>
               val srcKeys = key match {
                 case Seq(k) if keyOf(entry(name), t).exists(_.equalsIgnoreCase(k)) =>
-                  KeyLookup.keysOf(src, k).map(_.distinct)
+                  val i = src.schema.fieldIndex(k)
+                  KeyLookup.localRows(src).map(rows => rows.filterNot(_.isNullAt(i))
+                    .map(_.get(i, src.schema(i).dataType)).distinct)
                 case _ => None
               }
               srcKeys.flatMap(ks => keyedVersion(name,
@@ -1535,30 +1536,15 @@ final class Engine(val spark: SparkSession)
           val Array(c, v) = s.split("=", 2)
           c.trim -> expr(substSequences(substConstants(v.trim, Seq(name.toLowerCase))))
         }.toMap
-        // (out, oldRows): the rewritten table plus the exact victim set —
-        // LIMIT restricts the row-hook delta to the rows actually updated
-        val (out, oldRows) = Option(limit) match {
-          case None =>
-            (keyedVersion(name, Dml.update(_, cond0, setMap))
-                .getOrElse(Dml.update(t, cond0, setMap)),
-              t.filter(coalesce(cond0, lit(false))))
-          case Some(n) => // H2 UPDATE..LIMIT: first n matching rows.
-            // orderBy+limit plans as TakeOrderedAndProject (no full sort
-            // shuffle), and the ≤n victim ids broadcast back to the scan.
-            val rid = t.withColumn("__rid", monotonically_increasing_id())
-            val victims = rid.filter(cond0).orderBy(col("__rid")).limit(n.toInt)
-              .select(col("__rid").as("__vic"))
-            (Dml.update(
-                rid.join(broadcast(victims), col("__rid") === col("__vic"), "left"),
-                col("__vic").isNotNull, setMap)
-              .drop("__rid", "__vic"),
-              rid.join(broadcast(victims), col("__rid") === col("__vic"), "left_semi")
-                .drop("__rid"))
-        }
+        val (marked, hit) = victims(t, cond0, limit)
+        val out = if (limit == null)
+            keyedVersion(name, Dml.update(_, cond0, setMap)).getOrElse(Dml.update(t, cond0, setMap))
+          else Dml.update(marked, hit, setMap).drop("__vic")
         // row-hook deltas: old = updated rows, new = those rows with the
         // SET list applied (Update.java fire sites, batched)
         val tn = name.toLowerCase
-        val newRows = Dml.update(oldRows, lit(true), setMap)
+        lazy val oldRows = marked.filter(hit).drop("__vic")
+        lazy val newRows = Dml.update(oldRows, lit(true), setMap)
         if (!fireTriggers(tn, "UPDATE", "BEFORE", oldRows, newRows)) {
           commitDml(name, out)
           fireTriggers(tn, "UPDATE", "AFTER", oldRows, newRows)
@@ -1569,22 +1555,13 @@ final class Engine(val spark: SparkSession)
         val cond0 = Option(where).map(w =>
           expr(substSequences(substConstants(w, Seq(name.toLowerCase)))))
           .getOrElse(lit(true))
-        // (out, oldRows): LIMIT restricts the row-hook delta to the rows
-        // actually deleted (Delete.java fire sites)
-        val (out, oldRows) = Option(limit) match {
-          case None =>
-            (keyedVersion(name, Dml.delete(_, cond0)).getOrElse(Dml.delete(t, cond0)),
-              t.filter(coalesce(cond0, lit(false))))
-          case Some(n) =>
-            val rid = t.withColumn("__rid", monotonically_increasing_id())
-            val victims = rid.filter(cond0).orderBy(col("__rid")).limit(n.toInt)
-              .select(col("__rid").as("__vic"))
-            (rid.join(broadcast(victims), col("__rid") === col("__vic"), "left_anti")
-              .drop("__rid"),
-              rid.join(broadcast(victims), col("__rid") === col("__vic"), "left_semi")
-                .drop("__rid"))
-        }
+        val (marked, hit) = victims(t, cond0, limit)
+        val out = if (limit == null)
+            keyedVersion(name, Dml.delete(_, cond0)).getOrElse(Dml.delete(t, cond0))
+          else Dml.delete(marked, hit).drop("__vic")
+        // row-hook delta: the deleted rows (Delete.java fire sites)
         val tn = name.toLowerCase
+        lazy val oldRows = marked.filter(hit).drop("__vic")
         if (!fireTriggers(tn, "DELETE", "BEFORE", oldRows, t.limit(0))) {
           commitDml(name, out)
           fireTriggers(tn, "DELETE", "AFTER", oldRows, t.limit(0))
@@ -1672,10 +1649,26 @@ final class Engine(val spark: SparkSession)
     }
   }
 
-  private[sqlfront] def status(): DataFrame = {
+  /** The frame of a statement that returns no rows, built once. */
+  private[sqlfront] def status(): DataFrame = statusFrame
+  private lazy val statusFrame = {
     import spark.implicits._
     Seq("OK").toDF("status")
   }
+
+  /** The frame UPDATE or DELETE rewrites and the predicate of the rows
+    * it writes: `t` and `cond`, or with LIMIT n (H2: the first n rows
+    * matching `cond`) `t` with a column `__vic`, non-null on exactly those
+    * rows. orderBy+limit plans as TakeOrderedAndProject (no full sort
+    * shuffle), and the ≤n victim ids broadcast back to the scan. */
+  private def victims(t: DataFrame, cond: Column, limit: String): (DataFrame, Column) =
+    Option(limit).fold((t, coalesce(cond, lit(false)))) { n =>
+      val rid = t.withColumn("__rid", monotonically_increasing_id())
+      val ids = rid.filter(cond).orderBy(col("__rid")).limit(n.toInt)
+        .select(col("__rid").as("__vic"))
+      (rid.join(broadcast(ids), col("__rid") === col("__vic"), "left").drop("__rid"),
+        col("__vic").isNotNull)
+    }
 
   /** The shared CREATE USER contract (ddl/CreateUser.java; UserTest): a
     * role name blocks even under IF NOT EXISTS (ROLE_ALREADY_EXISTS), an

@@ -2,18 +2,22 @@ package graft.sqlfront
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.Dml
+import graft.plans.KeyLookup
 
 /** The DDL/DML-helper face of [[Engine]] (mechanical split, see
   * [[EngineTranslate]]): column-def fragment clause scanners, constraint
   * bodies, column add/alter, H2 type parsing, VALUES-row parsing, and
-  * insert alignment/validation. */
+  * insert alignment/validation. A driver-local batch (VALUES) is read
+  * once, on the driver, through [[graft.plans.KeyLookup.localRows]]: its
+  * unique-key checks and MERGE's last row per key read those rows. */
 private[sqlfront] trait EngineDdl { this: Engine =>
 
   /** Token twin of the old masked `defOptRe` column-def fragment regex
@@ -519,42 +523,32 @@ private[sqlfront] trait EngineDdl { this: Engine =>
       }
   }
 
-  /** The rows of a driver-local frame — one whose optimized plan is a
-    * LocalRelation, such as a VALUES batch and projections of it — read
-    * without a job; None for any other frame. The leaf test on the
-    * analyzed plan spares other frames an extra optimizer pass. */
-  private[sqlfront] def localRows(df: DataFrame): Option[Array[Row]] =
-    if (!df.queryExecution.analyzed.collectLeaves()
-        .forall(_.isInstanceOf[LocalRelation])) None
-    else df.queryExecution.optimizedPlan match {
-      case _: LocalRelation => Some(df.collect())
-      case _ => None
-    }
-
-  /** Key tuple of a row with the equality Spark groups by: binary keys by
-    * content, -0.0 equal to 0.0 and every NaN equal to every other. */
-  private def keyOf(r: Row, idx: Seq[Int]): Seq[Any] =
-    idx.map(i => r.get(i) match {
+  /** The key tuple of columns `ks` of a row of `schema`, with the
+    * equality Spark groups by: binary keys by content, -0.0 equal to 0.0
+    * and every NaN equal to every other; null for a NULL column. */
+  private def keyOf(schema: StructType, ks: Seq[String]): InternalRow => Seq[Any] = {
+    val cols = ks.map { k => val i = schema.fieldIndex(k); (i, schema(i).dataType) }
+    r => cols.map { case (i, dt) => r.get(i, dt) match {
       case b: Array[Byte] => b.toSeq
       case d: Double => if (d.isNaN) NaNKey else if (d == 0.0) 0.0 else d
       case f: Float => if (f.isNaN) NaNKey else if (f == 0.0f) 0.0f else f
       case v => v
-    })
+    }}
+  }
   private case object NaNKey
 
-  /** [[Dml.lastPerKey]] on the driver, for a driver-local frame: the last
-    * row per key in row order, with every NULL-keyed row kept. None when
-    * `df` is not driver-local. */
+  /** [[Dml.lastPerKey]] on the driver, for a driver-local frame
+    * ([[KeyLookup.localRows]]): the last row per key in row order, with
+    * every NULL-keyed row kept, as a frame over a driver-local relation.
+    * None when `df` is not driver-local. */
   private[sqlfront] def lastPerKeyLocal(df: DataFrame,
       keys: Seq[String]): Option[DataFrame] =
-    localRows(df).map { rows =>
-      val idx = keys.map(df.schema.fieldIndex)
-      val last = rows.indices.map(i => keyOf(rows(i), idx) -> i).toMap
-      val kept = rows.indices.filter { i =>
-        val k = keyOf(rows(i), idx)
-        k.contains(null) || last(k) == i
-      }
-      spark.createDataFrame(java.util.Arrays.asList(kept.map(rows): _*), df.schema)
+    KeyLookup.localRows(df).map { rows =>
+      val key = keyOf(df.schema, keys)
+      val last = rows.indices.map(i => key(rows(i)) -> i).toMap
+      KeyLookup.localFrame(df, rows.indices.collect {
+        case i if key(rows(i)).contains(null) || last(key(rows(i))) == i => rows(i)
+      })
     }
 
   /** Whether a violations frame holds no row: one the optimizer folds to
@@ -716,9 +710,12 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     // row hooks fire around the statement (Insert.java:130,157-161,178);
     // an INSTEAD OF trigger replaces the insert (fireBeforeRow done=true)
     if (fireTriggers(tn, "INSERT", "BEFORE", t.limit(0), aligned)) return
-    validateConstraints(tn, aligned)
-    commitDml(name, keyedVersion(name, identity, Some(aligned)).getOrElse(t.union(aligned)))
-    fireTriggers(tn, "INSERT", "AFTER", t.limit(0), aligned)
+    // a driver-local batch (VALUES) is evaluated here, once; every reader
+    // below reads its rows
+    val batch = KeyLookup.localRows(aligned).fold(aligned)(KeyLookup.localFrame(aligned, _))
+    validateConstraints(tn, batch)
+    commitDml(name, keyedVersion(name, identity, Some(batch)).getOrElse(t.union(batch)))
+    fireTriggers(tn, "INSERT", "AFTER", t.limit(0), batch)
   }
 
   /** MySQL `INSERT … ON DUPLICATE KEY UPDATE` (Mode.java
@@ -783,9 +780,9 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     val finalTable = updated.union(batch)
     validateUniqueWithin(tn, finalTable)
     // row hooks (Insert.java/Update.java fire sites — the reference fires
-    // them from MERGE/upsert too); deltas are lazy, so unbound triggers
-    // cost nothing beyond the map lookup
-    val oldMatched = t.alias("__t2").join(srcR, keyCond, "left_semi")
+    // them from MERGE/upsert too); a delta is built only when a bound
+    // trigger reads it
+    lazy val oldMatched = t.alias("__t2").join(srcR, keyCond, "left_semi")
     if (fireTriggers(tn, "UPDATE", "BEFORE", oldMatched, modified) |
         fireTriggers(tn, "INSERT", "BEFORE", t.limit(0), batch)) return
     commitDml(name, finalTable)
@@ -806,7 +803,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     // internal duplicates on the driver and probes the table for its keys
     // in one single-pass job; any other batch groups its keys and semi
     // joins them against the table's.
-    lazy val local = localRows(batch)
+    lazy val local = KeyLookup.localRows(batch)
     uniqueKeySets(tn).foreach { ks =>
       if (ks.forall(batch.columns.contains)) {
         val within =
@@ -815,11 +812,11 @@ private[sqlfront] trait EngineDdl { this: Engine =>
           s"unique key (${ks.mkString(",")}) violated: key already exists in $tn"
         local match {
           case Some(rows) =>
-            val idx = ks.map(batch.schema.fieldIndex)
-            val keyed = rows.filter(r => idx.forall(i => !r.isNullAt(i)))
-            require(keyed.map(keyOf(_, idx)).distinct.length == keyed.length, within)
+            val key = keyOf(batch.schema, ks)
+            val keyed = rows.filterNot(key(_).contains(null))
+            require(keyed.map(key).distinct.length == keyed.length, within)
             require(keyed.isEmpty ||
-              noRows(table(tn).filter(keyIn(batch.schema, ks, keyed.toSeq))), exists)
+              noRows(table(tn).filter(keyIn(batch.schema, ks, keyed))), exists)
           case None =>
             val b = nonNullKeyed(batch, ks)
             require(noRows(Dml.duplicateKeys(b, ks)), within)
@@ -832,18 +829,17 @@ private[sqlfront] trait EngineDdl { this: Engine =>
 
   /** `ks IN (the keys of rows)`, typed by `schema`: one IN list (an InSet
     * beyond a few keys) over the key column, or over a struct of them. */
-  private def keyIn(schema: StructType, ks: Seq[String], rows: Seq[Row]): Column = {
-    val idx = ks.map(schema.fieldIndex)
-    val fields = idx.map(schema.fields(_))
-    def lit(v: Any, dt: DataType) = GraftColumnBridge.column(Literal.create(v, dt))
-    if (ks.size == 1)
-      col(ks.head).isin(rows.map(r => lit(r.get(idx.head), fields.head.dataType)): _*)
+  private def keyIn(schema: StructType, ks: Seq[String], rows: Seq[InternalRow]): Column = {
+    val fields = ks.map { k => val i = schema.fieldIndex(k); (i, schema(i).dataType) }
+    def values(r: InternalRow) = fields.map { case (i, dt) => r.get(i, dt) }
+    def lit(v: Any, dt: DataType) = GraftColumnBridge.column(Literal(v, dt))
+    if (ks.size == 1) col(ks.head).isin(rows.map(r => lit(values(r).head, fields.head._2)): _*)
     else {
-      val st = StructType(fields.map(f => StructField(f.name, f.dataType)))
-      struct(ks.map(col): _*)
-        .isin(rows.map(r => lit(Row.fromSeq(idx.map(r.get)), st)): _*)
+      val st = StructType(ks.zip(fields).map { case (k, (_, dt)) => StructField(k, dt) })
+      struct(ks.map(col): _*).isin(rows.map(r => lit(InternalRow.fromSeq(values(r)), st)): _*)
     }
   }
+
 
   /** FK + CHECK validation over a row set (no uniqueness — see
     * validateConstraints / validateUniqueWithin for the two unique shapes). */

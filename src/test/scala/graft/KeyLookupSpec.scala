@@ -374,4 +374,41 @@ class KeyLookupSpec extends SparkSpec {
     assert(after.flatten.size == 20000 + 4 - 2 &&
       after.head.head == (-3 -> 5L) && after.last.last == (40000 -> 8L))
   }
+
+  test("writes that do not compact run no SQL execution but INSERT's key probe") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.GraftTestAccess
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val en = new Engine(spark)
+    compacted(en, "sx", 2000)
+    val started = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => started.add(s.sparkPlanInfo.nodeName)
+        case _ =>
+      }
+    }
+    // executions, not jobs: reading a driver-local relation runs no job.
+    // Every write also publishes the table's new frame as a temp view, a
+    // command execution of its own, which is not counted.
+    def executions(q: String): Seq[String] = {
+      GraftTestAccess.drain(sc)
+      started.clear()
+      en.sql(q)
+      GraftTestAccess.drain(sc)
+      started.asScala.toSeq.filterNot(_.contains("CreateViewCommand"))
+    }
+    sc.addSparkListener(listener)
+    val runs = try Seq("INSERT INTO sx VALUES (3000, 1)", "MERGE INTO sx KEY(f1) VALUES (5, 2)",
+        "MERGE INTO sx KEY(f1) VALUES (3001, 3)", "UPDATE sx SET f2 = 4 WHERE f1 = 3000")
+      .map(q => q -> executions(q))
+    finally sc.removeSparkListener(listener)
+    assert(runs.map(_._2.size) == Seq(1, 0, 0, 0), runs)
+    assert(KeyLookup.normalBase(en.table("sx"), "f1").isDefined)
+    assert(en.sql("SELECT f1, f2 FROM sx WHERE f1 IN (5, 3000, 3001) ORDER BY f1").collect()
+      .map(r => (r.getInt(0), r.getLong(1))).toSeq == Seq((5, 2L), (3000, 4L), (3001, 3L)))
+  }
 }
