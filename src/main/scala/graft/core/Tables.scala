@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Mirrors the reference's Database → Schema → Table registry
   * (lealone-db/src/main/java/org/lealone/db/schema/Schema.java) as a plain
-  * view registry over parquet directories — SURVEY §1.2. Spark's catalog +
-  * parquet footers replace Lealone's DDL-declared fixed schemas; schemas are
+  * name → frame loader over parquet directories — SURVEY §1.2. Parquet
+  * footers replace Lealone's DDL-declared fixed schemas; schemas are
   * self-describing, and Catalyst gets pushdown/pruning for free.
   */
 object Tables {
@@ -47,10 +47,6 @@ object Tables {
   def save(df: DataFrame, dir: String, name: String,
       mode: String = "errorifexists"): Unit =
     df.write.mode(mode).parquet(s"$dir/$name.parquet")
-
-  /** Register every corpus table as a temp view (idempotent). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
   /** Opt-in co-located layout for repeated-join workloads: materialize
     * `name` bucketed (and per-bucket sorted) on `keys` as a managed table —

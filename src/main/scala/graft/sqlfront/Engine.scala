@@ -44,9 +44,11 @@ import graft.plans.KeyLookup
   *     string-literal safety is structural, not simulated
   *
   * Every schema object is part of one immutable [[Catalog]] value, held
-  * in one `var` and written only through its setter, which publishes the
-  * change to the Spark session: a temp view per table, a temp function
-  * per alias and aggregate. Each table or view is one [[TableEntry]]: its
+  * in one `var` and written only through its setter, which publishes a
+  * temp function per alias and aggregate to the Spark session. Tables are
+  * not published: a statement binds each table name it reads when it
+  * runs, from the value itself ([[Resolve]]), so the session's namespace
+  * holds no copy of them. Each table or view is one [[TableEntry]]: its
   * frame plus every attribute keyed by the table alone. CREATE adds an
   * entry once the create succeeds, DROP removes it, RENAME re-keys it, and
   * the objects with names of their own (indexes, CHECK and FOREIGN KEY
@@ -74,33 +76,29 @@ final class Engine(val spark: SparkSession)
   /** Every schema object of this engine. */
   private[sqlfront] def catalog: Catalog = current
 
-  /** The one write of the catalog. It publishes to the Spark session what
-    * differs from the value it replaces: the temp view of every table or
-    * view added, removed or given another frame, and the temp function of
-    * every alias and aggregate added, replaced or removed. An alias that
-    * fails to register stays recorded, as CREATE FORCE ALIAS leaves it,
-    * and fails at its first use. */
+  /** The one write of the catalog. It publishes to the Spark session the
+    * temp function of every alias and aggregate added, replaced or removed
+    * since the value it replaces. An alias that fails to register stays
+    * recorded, as CREATE FORCE ALIAS leaves it, and fails at its first use. */
   private[sqlfront] def catalog_=(next: Catalog): Unit = {
     val prev = current
     current = next
     if (txn.nonEmpty && (prev.tables.keys.exists(!next.tables.contains(_)) ||
         prev.sequences.keys.exists(!next.sequences.contains(_))))
       dropped :+= prev
-    publish(prev.tables, next.tables)((p, e) => (p.frame eq e.frame) && p.rowid == e.rowid)(
-      spark.catalog.dropTempView, (n, e) => e.visible.createOrReplaceTempView(n))
-    publish(prev.aliases, next.aliases)(_ == _)(
+    publish(prev.aliases, next.aliases)(
       n => spark.sql(s"DROP TEMPORARY FUNCTION IF EXISTS $n"),
       (n, a) => scala.util.Try(ReflectAlias.register(spark, n, a)))
-    publish(prev.aggregates, next.aggregates)(_ == _)(
+    publish(prev.aggregates, next.aggregates)(
       n => spark.sql(s"DROP TEMPORARY FUNCTION IF EXISTS ${UserAggregate.finisherName(n)}"),
       (n, cls) => UserAggregate.register(spark, n, cls))
   }
 
   private def publish[V](prev: Map[String, V], next: Map[String, V])(
-      same: (V, V) => Boolean)(drop: String => Unit, put: (String, V) => Unit): Unit =
+      drop: String => Unit, put: (String, V) => Unit): Unit =
     if (prev ne next) {
       prev.keys.foreach(n => if (!next.contains(n)) drop(n))
-      next.foreach { case (n, v) => if (!prev.get(n).exists(same(_, v))) put(n, v) }
+      next.foreach { case (n, v) => if (!prev.get(n).contains(v)) put(n, v) }
     }
 
   /** Instances of IMPLEMENT BY classes, per service definition. */
@@ -195,34 +193,21 @@ final class Engine(val spark: SparkSession)
     * (package, implementBy, codePath). */
   private[sqlfront] def parseServiceTail(
       frag0: String): (Option[String], Option[String], Option[String]) = {
-    val frag = frag0.trim
-    val ts = Lex.tokens(frag)
-    var i = 0
+    val c = new Lex.Cursor(frag0.trim)
+    import c._
     var pkg, impl, code: Option[String] = None
-    def has: Boolean = i < ts.length
-    def word: String =
-      if (has && ts(i).kind == Lex.Word) ts(i).text(frag).toUpperCase else ""
-    def readIf(w: String): Boolean = { if (word == w) { i += 1; true } else false }
-    def readLit(): String = {
-      require(has && ts(i).kind == Lex.Lit,
-        s"expected a 'string' in service options at: " +
-          frag.substring(if (has) ts(i).start else frag.length))
-      val t = ts(i); i += 1
-      frag.substring(t.start + 1, t.end - 1).replace("''", "'")
-    }
     while (has) {
-      if (readIf("PACKAGE")) pkg = Some(readLit())
+      if (readIf("PACKAGE")) pkg = Some(readLit("service"))
       else if (readIf("IMPLEMENT")) {
         require(readIf("BY"), "IMPLEMENT requires BY (CreateService)")
-        impl = Some(readLit())
+        impl = Some(readLit("service"))
       }
       else if (readIf("GENERATE")) {
         require(readIf("CODE"), "GENERATE requires CODE (CreateService)")
-        code = Some(readLit())
+        code = Some(readLit("service"))
       }
-      else if (readIf("COMMENT")) { readIf("IS"); readLit() }
-      else throw new IllegalArgumentException(
-        s"unknown service option: ${frag.substring(ts(i).start)}")
+      else if (readIf("COMMENT")) { readIf("IS"); readLit("service") }
+      else throw new IllegalArgumentException(s"unknown service option: $rest")
     }
     (pkg, impl, code)
   }
@@ -245,27 +230,14 @@ final class Engine(val spark: SparkSession)
     * reorderings, never a different interpretation. */
   private[sqlfront] def parseTableTail(frag0: String)
       : (Option[String], Option[String], Option[String]) = {
-    val frag = frag0.trim
-    if (frag.isEmpty) return (None, None, None)
-    val ts = Lex.tokens(frag)
-    var i = 0
+    val c = new Lex.Cursor(frag0.trim)
+    import c._
     var pkg, code, onCommit: Option[String] = None
-    def has: Boolean = i < ts.length
-    def word: String =
-      if (has && ts(i).kind == Lex.Word) ts(i).text(frag).toUpperCase else ""
-    def readIf(w: String): Boolean = { if (word == w) { i += 1; true } else false }
-    def readLit(): String = {
-      require(has && ts(i).kind == Lex.Lit,
-        s"expected a 'string' in table options at: " +
-          frag.substring(if (has) ts(i).start else frag.length))
-      val t = ts(i); i += 1
-      frag.substring(t.start + 1, t.end - 1).replace("''", "'")
-    }
     while (has) {
-      if (readIf("PACKAGE")) pkg = Some(readLit())
+      if (readIf("PACKAGE")) pkg = Some(readLit("table"))
       else if (readIf("GENERATE")) {
         require(readIf("CODE"), "GENERATE requires CODE (CreateTable)")
-        code = Some(readLit())
+        code = Some(readLit("table"))
       }
       else if (readIf("ENGINE")) {
         // engine name: a bare word or a 'string' (Parser readIdentifier)
@@ -273,12 +245,12 @@ final class Engine(val spark: SparkSession)
           "ENGINE requires a storage engine name (CreateTable)")
         i += 1
         if (readIf("WITH")) { // WITH(k=v, …) parameter list: skip the paren
-          require(has && ts(i).kind == Lex.Sym && frag.charAt(ts(i).start) == '(',
+          require(has && ts(i).kind == Lex.Sym && src.charAt(ts(i).start) == '(',
             "ENGINE … WITH requires a (parameter list)")
           val d = ts(i).depth
           i += 1
           while (has && !(ts(i).kind == Lex.Sym &&
-            frag.charAt(ts(i).start) == ')' && ts(i).depth == d)) i += 1
+            src.charAt(ts(i).start) == ')' && ts(i).depth == d)) i += 1
           require(has, "unbalanced ENGINE WITH(…) parameter list")
           i += 1
         }
@@ -296,8 +268,7 @@ final class Engine(val spark: SparkSession)
         require(readIf("PERSISTENT"), "NOT requires PERSISTENT (CreateTable)")
       }
       else if (readIf("HIDDEN")) ()
-      else throw new IllegalArgumentException(
-        s"unknown CREATE TABLE option: ${frag.substring(ts(i).start)}")
+      else throw new IllegalArgumentException(s"unknown CREATE TABLE option: $rest")
     }
     (pkg, code, onCommit)
   }
@@ -324,7 +295,6 @@ final class Engine(val spark: SparkSession)
     lastSeqVal = Some(s.curr)
     s.curr
   }
-  private[sqlfront] var rangeViewId = 0
 
   // Registered row-hook implementations — the batch twin of the reference's
   // api/Trigger.java fire(conn, oldRow, newRow), invoked at the statement
@@ -379,9 +349,8 @@ final class Engine(val spark: SparkSession)
   def register(name: String, df: DataFrame): Unit =
     install(name, catalog.tables.get(name.toLowerCase).fold(TableEntry(df))(_.copy(frame = df)))
 
-  /** Put entry `e` under `name`. Its view leaves out a hidden `_rowid_`:
-    * runSelect swaps the full frame in for statements that reference
-    * `_rowid_` explicitly. */
+  /** Put entry `e` under `name`. SQL reads it without a hidden `_rowid_`,
+    * except in a statement that names `_rowid_` (runSelect). */
   private[sqlfront] def install(name: String, e: TableEntry): Unit =
     catalog = catalog.copy(tables = catalog.tables.updated(name.toLowerCase, e))
 
@@ -773,12 +742,7 @@ final class Engine(val spark: SparkSession)
       case analyzeRe() => status()
       case setVarRe(name, value) =>
         // SET @v = expr (Variable.java:20); substituted at plan time
-        variables(name.toLowerCase) =
-          spark.sql(s"SELECT ${substSequences(substConstants(value))}").head().get(0) match {
-            case s: String => s"'${s.replace("'", "''")}'"
-            case v => String.valueOf(v)
-          }
-        status()
+        variables(name.toLowerCase) = valueLiteral(value); status()
       case scriptRe() =>
         // SCRIPT (dml/Script.java): DDL re-emission as a result set
         import spark.implicits._
@@ -836,7 +800,7 @@ final class Engine(val spark: SparkSession)
         var body = body0
         // positional `?` substitution, skipping any ? inside string literals
         Option(args).toSeq.flatMap(splitTop(_)).map(_.trim).foreach { a =>
-          val spans = literalSpans(body)
+          val spans = Stmt.literalSpans(body)
           val idx = Iterator.iterate(body.indexOf('?'))(i => body.indexOf('?', i + 1))
             .takeWhile(_ >= 0)
             .find(i => !spans.exists(sp => i >= sp._1 && i < sp._2))
@@ -1530,11 +1494,11 @@ final class Engine(val spark: SparkSession)
       case UpdateStmt(name, sets, where, limit) =>
         val t = table(name)
         val cond0 = Option(where).map(w =>
-          expr(substSequences(substConstants(w, Seq(name.toLowerCase)))))
+          sqlColumn(substSequences(substConstants(w, Seq(name.toLowerCase)))))
           .getOrElse(lit(true))
         val setMap = splitTop(sets).map { s =>
           val Array(c, v) = s.split("=", 2)
-          c.trim -> expr(substSequences(substConstants(v.trim, Seq(name.toLowerCase))))
+          c.trim -> sqlColumn(substSequences(substConstants(v.trim, Seq(name.toLowerCase))))
         }.toMap
         val (marked, hit) = victims(t, cond0, limit)
         val out = if (limit == null)
@@ -1553,7 +1517,7 @@ final class Engine(val spark: SparkSession)
       case DeleteStmt(name, where, limit) =>
         val t = table(name)
         val cond0 = Option(where).map(w =>
-          expr(substSequences(substConstants(w, Seq(name.toLowerCase)))))
+          sqlColumn(substSequences(substConstants(w, Seq(name.toLowerCase)))))
           .getOrElse(lit(true))
         val (marked, hit) = victims(t, cond0, limit)
         val out = if (limit == null)

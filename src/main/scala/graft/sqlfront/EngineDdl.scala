@@ -133,23 +133,17 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     * fails loudly (the reference's loop break leads to a syntax error for
     * trailing junk too). */
   private[sqlfront] def parseSeqOptions(frag0: String): SeqOpts = {
-    val frag = frag0.trim
-    val ts = Lex.tokens(frag)
-    var i = 0
+    val c = new Lex.Cursor(frag0.trim)
+    import c._
     var o = SeqOpts()
-    def has: Boolean = i < ts.length
-    def word: String =
-      if (has && ts(i).kind == Lex.Word) ts(i).text(frag).toUpperCase else ""
-    def readIf(w: String): Boolean = { if (word == w) { i += 1; true } else false }
     def readLong(): Long = {
-      val neg = has && ts(i).kind == Lex.Sym && frag.charAt(ts(i).start) == '-'
+      val neg = has && ts(i).kind == Lex.Sym && src.charAt(ts(i).start) == '-'
       if (neg) i += 1
-      require(has && ts(i).kind == Lex.Num,
-        s"expected a number in sequence options at: ${frag.substring(if (has) ts(i).start else frag.length)}")
+      require(has && ts(i).kind == Lex.Num, s"expected a number in sequence options at: $rest")
       // parse sign+digits together: Long.MinValue's magnitude overflows
       // a bare toLong, so -9223372036854775808 must round-trip via SCRIPT
       val v = java.lang.Long.parseLong(
-        (if (neg) "-" else "") + ts(i).text(frag))
+        (if (neg) "-" else "") + ts(i).text(src))
       i += 1
       v
     }
@@ -177,8 +171,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
       else if (readIf("CACHE")) readLong() // accepted, ignored (flush margin)
       else if (readIf("NOCACHE")) ()
       else if (readIf("BELONGS_TO_TABLE")) o = o.copy(belongsToTable = true)
-      else throw new IllegalArgumentException(
-        s"unknown sequence option: ${frag.substring(ts(i).start)}")
+      else throw new IllegalArgumentException(s"unknown sequence option: $rest")
     }
     o
   }
@@ -231,12 +224,12 @@ private[sqlfront] trait EngineDdl { this: Engine =>
           catalog.foreignKeys :+ FkDef(cn, tn, cCols, ref.toLowerCase, rCols))
       case ckParenRe(e) =>
         if (validate)
-          require(noRows(Dml.checkViolations(table(tn), expr(e))),
+          require(noRows(Dml.checkViolations(table(tn), sqlColumn(e))),
             s"CHECK $cn violated by existing rows")
         catalog = catalog.copy(checks = catalog.checks :+ CheckDef(cn, tn, e.trim))
       case ckBareRe(e) =>
         if (validate)
-          require(noRows(Dml.checkViolations(table(tn), expr(e))),
+          require(noRows(Dml.checkViolations(table(tn), sqlColumn(e))),
             s"CHECK $cn violated by existing rows")
         catalog = catalog.copy(checks = catalog.checks :+ CheckDef(cn, tn, e.trim))
       case uqRe(ixName, cols) =>
@@ -291,7 +284,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     val up = maskedUpper(typeSpec)
     val isIdentity = up.contains("IDENTITY") || up.contains("AUTO_INCREMENT")
     val newCol = default.filter(!_.toUpperCase.startsWith("NEXTVAL"))
-      .map(d => expr(substConstants(d, Seq(tn))))
+      .map(d => sqlColumn(substConstants(d, Seq(tn))))
       .getOrElse(lit(null))
       .cast(parseType(typeSpec)).as(cName)
     val cols = t.columns.map(col).toSeq
@@ -511,13 +504,13 @@ private[sqlfront] trait EngineDdl { this: Engine =>
       }
     }
     val inline =
-      try Some(spark.sql(rows.map(_.mkString("(", ", ", ")"))
+      try Some(sqlFrame(rows.map(_.mkString("(", ", ", ")"))
         .mkString("SELECT * FROM VALUES ", ", ", "")))
       catch { case scala.util.control.NonFatal(_) => None }
     inline.filter(_.queryExecution.analyzed.collectLeaves()
         .forall(_.isInstanceOf[LocalRelation]))
       .getOrElse {
-        val df = inline.getOrElse(spark.sql(
+        val df = inline.getOrElse(sqlFrame(
           rows.map(vs => s"SELECT ${vs.mkString(", ")}").mkString(" UNION ALL ")))
         spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
       }
@@ -587,7 +580,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
             col(f.name.toLowerCase).cast(f.dataType).as(f.name)
           else defaults.get(f.name)
             .filter(!_.toUpperCase.startsWith("NEXTVAL"))
-            .map(d => expr(substConstants(d, Seq(tn.toLowerCase)))
+            .map(d => sqlColumn(substConstants(d, Seq(tn.toLowerCase)))
               .cast(f.dataType).as(f.name))
             .getOrElse(lit(null).cast(f.dataType).as(f.name))
         }.toSeq: _*)
@@ -687,7 +680,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
           case StringType => lit("")
           case TimestampType => current_timestamp()
           case DateType => current_date()
-          case _: TimeType => expr("CAST('00:00:00' AS TIME)")
+          case _: TimeType => sqlColumn("CAST('00:00:00' AS TIME)")
           case BooleanType => lit(false)
           case _ => lit(0).cast(f.dataType)
         }
@@ -759,7 +752,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
       .select(t.schema.fields.toSeq.map { f =>
         setPairs.get(f.name) match {
           case Some(e) => when(col("__src_match"),
-              expr(substSequences(substConstants(e, Seq(tn)))).cast(f.dataType))
+              sqlColumn(substSequences(substConstants(e, Seq(tn)))).cast(f.dataType))
             .otherwise(col(f.name)).as(f.name)
           case None => col(f.name)
         }
@@ -850,7 +843,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
           s"${fk.refTable}(${fk.refCols.mkString(",")})")
     }
     catalog.checks.filter(_.table == tn).foreach { ck =>
-      require(noRows(Dml.checkViolations(rows, expr(ck.expr))),
+      require(noRows(Dml.checkViolations(rows, sqlColumn(ck.expr))),
         s"CHECK ${ck.name} violated: ${ck.expr}")
     }
   }

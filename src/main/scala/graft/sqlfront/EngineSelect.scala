@@ -16,22 +16,37 @@ private[sqlfront] trait EngineSelect { this: Engine =>
   private[sqlfront] def runSelect(q0: String): DataFrame = {
     var q = stripForUpdate(q0)
     // _ROWID_ pseudo-column (PseudoColumnTest): integral-PK tables get the
-    // token substituted with the key column; hidden-rowid tables get the
-    // FULL frame swapped in as the view for this statement only.
+    // token substituted with the key column; hidden-rowid tables the
+    // statement names resolve to their FULL frame, for this statement only.
     // Known divergence: `SELECT *` in such a statement shows _rowid_.
-    val restoreHidden = mutable.Buffer.empty[String]
+    var full = Set.empty[String]
     if (referencedOutsideLiterals(q, "_ROWID_")) {
       val refed = catalog.tables.toSeq.filter { case (tn, _) => referencedOutsideLiterals(q, tn) }
-      val hid = refed.collect { case (tn, e) if e.hiddenRowid => tn }
+      full = refed.collect { case (tn, e) if e.hiddenRowid => tn }.toSet
       val pkT = refed.map(_._2.rowid).collect { case RowidKind.Pk(c) => c }
-      if (hid.isEmpty && pkT.size == 1)
+      if (full.isEmpty && pkT.size == 1)
         q = Rw.rewrite(q, Rw.Kw("_ROWID_"))(_ => pkT.head)
-      hid.foreach { tn =>
-        table(tn).createOrReplaceTempView(tn); restoreHidden += tn }
     }
-    try runSelectTranslated(q)
-    finally restoreHidden.foreach(tn =>
-      entry(tn).visible.createOrReplaceTempView(tn))
+    runSelectTranslated(q, full)
+  }
+
+  /** SQL text run through [[Resolve]]: each relation name binds to the
+    * per-statement relation `rels` holds under it, else to the catalog
+    * table of that name, read with its hidden `_rowid_` if the name is in
+    * `full`; any other name is left for Spark. */
+  private[sqlfront] def sqlFrame(text: String, rels: Map[String, DataFrame] = Map.empty,
+      full: Set[String] = Set.empty): DataFrame =
+    Resolve.frame(spark, text, lookup(rels, full))
+
+  /** A WHERE, SET, CHECK or DEFAULT expression, its subqueries bound to
+    * the catalog's tables. */
+  private[sqlfront] def sqlColumn(text: String): Column =
+    Resolve.column(spark, text, lookup(Map.empty, Set.empty))
+
+  private def lookup(rels: Map[String, DataFrame], full: Set[String])(
+      name: String): Option[DataFrame] = {
+    val n = name.toLowerCase
+    rels.get(n).orElse(catalog.tables.get(n).map(e => if (full(n)) e.frame else e.visible))
   }
 
   /** Word-boundary occurrence of `word` outside string literals. */
@@ -83,17 +98,18 @@ private[sqlfront] trait EngineSelect { this: Engine =>
     if (ok) q.substring(0, ts(fi).start) else q
   }
 
-  private[sqlfront] def runSelectTranslated(q: String): DataFrame = {
-    val t = translate(q)
+  private[sqlfront] def runSelectTranslated(q: String, full: Set[String]): DataFrame = {
+    val (t, rels) = translate(q)
+    def run(s: String) = sqlFrame(s, rels, full)
     val df =
-      try spark.sql(t)
+      try run(t)
       catch {
         // H2 resolves select-list aliases in WHERE (`SELECT pk AS A … WHERE
         // A='01'`, SelectTest.java); Spark doesn't — on an unresolved-column
         // failure, retry once with WHERE-clause aliases substituted
         case e: org.apache.spark.sql.AnalysisException
             if String.valueOf(e.getMessage).contains("UNRESOLVED_COLUMN") =>
-          substWhereAliases(t).map(spark.sql).getOrElse(throw e)
+          substWhereAliases(t).map(run).getOrElse(throw e)
       }
     // MySQL-mode lowerCaseIdentifiers (Mode.java:151): result column names
     // fold to lower case (Spark otherwise preserves as-written case)
@@ -240,11 +256,10 @@ private[sqlfront] trait EngineSelect { this: Engine =>
 
   /** INFORMATION_SCHEMA synthesis (MetaTable.java:68 — ids :77-107): the
     * meta tables meaningful for a batch engine, generated from the live
-    * catalog. Registered lazily per reference. */
-  private[sqlfront] def metaView(name: String): String = {
+    * catalog when a statement names one. */
+  private[sqlfront] def metaTable(name: String): DataFrame = {
     import spark.implicits._
-    val view = s"graft_info_$name"
-    val df = name match {
+    name match {
       case "tables" =>
         catalog.tables.keys.toSeq.map(t => ("graft", "public", t, "TABLE", "PARQUET"))
           .toDF("table_catalog", "table_schema", "table_name", "table_type",
@@ -409,8 +424,6 @@ private[sqlfront] trait EngineSelect { this: Engine =>
       case other => throw new IllegalArgumentException(
         s"INFORMATION_SCHEMA.$other not supported")
     }
-    df.createOrReplaceTempView(view)
-    view
   }
 
   /** SCRIPT-style DDL dump (dml/Script.java): re-emittable CREATE TABLE +

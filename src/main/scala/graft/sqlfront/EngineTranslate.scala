@@ -15,8 +15,18 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
 
   // ---- SELECT translation ----
 
-  private[sqlfront] def translate(q0: String): String = {
+  /** `q0` as Spark SQL, and the relations made for this statement alone
+    * (SYSTEM_RANGE, CSVREAD, TABLE(…), INFORMATION_SCHEMA.x) under the
+    * names the text gives them (`__system_range_0`, …). Within the
+    * statement such a name shadows a table of the same name. */
+  private[sqlfront] def translate(q0: String): (String, Map[String, DataFrame]) = {
     var q = q0.trim
+    val rels = mutable.LinkedHashMap.empty[String, DataFrame]
+    def relation(kind: String, df: DataFrame): String = {
+      val n = s"__${kind}_${rels.size}"
+      rels(n) = df
+      n
+    }
     // FROM-first: FROM <from...> SELECT <rest>  (Parser.java:1397) —
     // tokenizer-dispatched: the leading keyword is a TOKEN test (a table
     // named `fromage` can never steer here the way startsWith("FROM") could)
@@ -65,29 +75,23 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
     // Mode-gated syntax (db/Mode.java): MSSQL bracket identifiers.
     if (compatibilityMode == "MSSQLSERVER" || compatibilityMode == "MSSQL")
       q = Rw.rewrite(q, Sy('['), AnyW, Sy(']'))(c => s"`${c(0)}`")
-    // SYSTEM_RANGE(a,b[,s]) → registered range view
+    // SYSTEM_RANGE(a,b[,s]) → a range relation
     q = Rw.rewrite(q, RwKw("SYSTEM_RANGE"), Sy('('), SignedDigits, Sy(','),
         SignedDigits, OptE(Sy(','), SignedDigits), Sy(')')) { c =>
       val (a, b) = (c(0).toLong, c(1).toLong)
       val step = Option(c(2)).map(_.toLong).getOrElse(1L)
-      rangeViewId += 1
-      val v = s"graft_system_range_$rangeViewId"
-      spark.range(a, b + (if (step > 0) 1 else -1), step).toDF("x")
-        .createOrReplaceTempView(v)
-      v
+      relation("system_range",
+        spark.range(a, b + (if (step > 0) 1 else -1), step).toDF("x"))
     }
-    // CSVREAD('path') → registered csv view
+    // CSVREAD('path') → a csv relation
     q = Rw.rewrite(q, RwKw("CSVREAD"), Sy('('),
         RLit(inner => inner.nonEmpty && !inner.contains("'")), Sy(')')) { c =>
-      rangeViewId += 1
-      val v = s"graft_csvread_$rangeViewId"
-      spark.read.option("header", "true").option("inferSchema", "true")
-        .csv(c(0)).createOrReplaceTempView(v)
-      v
+      relation("csvread", spark.read.option("header", "true")
+        .option("inferSchema", "true").csv(c(0)))
     }
     // TABLE(c T=ARRAY[…] …) / TABLE_DISTINCT in FROM position
-    // (expression/function/TableFunction.java:32-160) → registered view
-    q = rewriteTableFunctions(q)
+    // (expression/function/TableFunction.java:32-160) → a literal relation
+    q = rewriteTableFunctions(q, relation)
     // ORDER BY =n → ORDER BY n (Parser.java:1493)
     q = Rw.rewrite(q, RwKw("ORDER"), RwKw("BY"), Sy('='), Digits)(c =>
       s"ORDER BY ${c(0)}")
@@ -146,9 +150,11 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
           case None => "xxhash64(*)"
         })
     }
-    // INFORMATION_SCHEMA.X → synthesized meta view (MetaTable.java:68)
-    q = Rw.rewrite(q, RwKw("INFORMATION_SCHEMA"), Sy('.'), AnyW)(c =>
-      metaView(c(0).toLowerCase))
+    // INFORMATION_SCHEMA.X → synthesized meta table (MetaTable.java:68)
+    q = Rw.rewrite(q, RwKw("INFORMATION_SCHEMA"), Sy('.'), AnyW) { c =>
+      val n = c(0).toLowerCase
+      relation(n, metaTable(n))
+    }
     // LINK_SCHEMA: the reference REGISTERS the function (Function.java:360)
     // but its evaluation throws unsupported (Function.java:1262-1270) — the
     // exact-parity behavior is the same loud error, not a JDBC emulation
@@ -160,7 +166,7 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
     // value driver-side, assign the variable, and substitute the value in
     // place — must run before the @var substitution below so later @v
     // references in the same statement read the new value
-    q = rewriteSetFunction(q)
+    q = rewriteSetFunction(q, rels.toMap)
     // @var substitution (Variable.java:20; unset vars read as NULL, same
     // as the reference's ValueNull for an unset session variable)
     q = Rw.rewrite(q, Sy('@'), AdjAnyW)(c =>
@@ -265,7 +271,7 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
     // error), so this is the fidelity boundary for every pass above —
     // they all see the H2 form, where a quoted identifier is one Word
     // token no keyword pattern can bind into.
-    quotedIdentsToBackticks(q)
+    (quotedIdentsToBackticks(q), rels.toMap)
   }
 
   /** Every double-quoted identifier token → `backticked` (H2 ""-escapes
@@ -310,10 +316,6 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
     q
   }
 
-  /** Spans [start,end) of single-quoted literals ('' is the escape). */
-  private[sqlfront] def literalSpans(s: String): IndexedSeq[(Int, Int)] =
-    Stmt.literalSpans(s)
-
   /** MySQL-mode `||` (Mode.java:148-153 nullConcatIsNull=false; evaluated at
     * Operation.java:125-142): a NULL operand yields the OTHER side, so a
     * chain is NULL only when every operand is NULL. Spark's `||` is
@@ -337,7 +339,7 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
     var changed = true
     while (changed && guard < 64) {
       changed = false; guard += 1
-      val spans = literalSpans(q)
+      val spans = Stmt.literalSpans(q)
       def inLit(i: Int) = spans.exists(sp => i >= sp._1 && i < sp._2)
       def identChar(c: Char) =
         c.isLetterOrDigit || c == '_' || c == '.' || c == '`' || c == '@'
@@ -789,8 +791,9 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
   /** Inline `SET(@v, expr)` (Function.java:364): evaluate driver-side,
     * store the variable, substitute the value. Runs before the statement-
     * level @var substitution, so later @v reads in the same statement see
-    * the assigned value (left-to-right, as the reference evaluates). */
-  private[sqlfront] def rewriteSetFunction(q0: String): String = {
+    * the assigned value (left-to-right, as the reference evaluates).
+    * `rels` are the statement's own relations made so far. */
+  private[sqlfront] def rewriteSetFunction(q0: String, rels: Map[String, DataFrame]): String = {
     var q = q0
     var continue = true
     while (continue) {
@@ -807,11 +810,7 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
           // is never substituted
           val inner = Rw.rewrite(inner0, Rw.Sy('@'), Rw.AdjAnyW)(c =>
             variables.getOrElse(c(0).toLowerCase, "NULL"))
-          val value = spark.sql(
-            s"SELECT ${substSequences(substConstants(inner))}").head().get(0) match {
-            case s: String => s"'${s.replace("'", "''")}'"
-            case v => String.valueOf(v)
-          }
+          val value = valueLiteral(inner, rels)
           variables(caps(0).toLowerCase) = value
           q = q.substring(0, mStart) + value + q.substring(close)
       }
@@ -819,12 +818,24 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
     q
   }
 
+  /** The value of scalar expression `e`, evaluated now on the driver, as
+    * a SQL literal: what `SET @v = e` and `SET(@v, e)` store
+    * (Variable.java holds a value, not an expression). `rels` are the
+    * statement's own relations. */
+  private[sqlfront] def valueLiteral(e: String,
+      rels: Map[String, DataFrame] = Map.empty): String =
+    sqlFrame(s"SELECT ${substSequences(substConstants(e))}", rels).head().get(0) match {
+      case s: String => s"'${s.replace("'", "''")}'"
+      case v => String.valueOf(v)
+    }
+
   /** `TABLE(id INT=ARRAY[1,2], name VARCHAR=('a','b'))` in FROM position →
-    * a registered view built from the literal arrays, null-padded to the
+    * a `relation` built from the literal arrays, null-padded to the
     * longest column exactly like the reference (TableFunction.java:139
     * pads short columns); TABLE_DISTINCT de-duplicates. Needs balanced-
     * paren extraction (ARRAY[…] nests), so not a plain regex rewrite. */
-  private[sqlfront] def rewriteTableFunctions(q0: String): String = {
+  private[sqlfront] def rewriteTableFunctions(q0: String,
+      relation: (String, DataFrame) => String): String = {
     var q = q0
     var search = 0
     var guard = 0
@@ -834,19 +845,9 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
       m0 match {
         case None => return q
         case Some((mStart, mEnd, caps)) =>
-          // find the matching close paren, respecting quotes/nesting
+          // the matching close paren (brackets nest inside parens)
           val open = mEnd - 1
-          var depth = 0; var i = open; var inStr = false; var close = -1
-          while (i < q.length && close < 0) {
-            q.charAt(i) match {
-              case '\'' => inStr = !inStr
-              case '(' | '[' if !inStr => depth += 1
-              case ')' | ']' if !inStr =>
-                depth -= 1; if (depth == 0) close = i
-              case _ =>
-            }
-            i += 1
-          }
+          val close = matchParen(q, open)._1 - 1
           require(close > 0, "unbalanced TABLE(…)")
           val inner = q.substring(open + 1, close)
           val itemRe =
@@ -866,12 +867,9 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
             s"CAST(c$i AS ${tpe.sql}) AS $name"
           }.mkString(", ")
           val anon = cols.indices.map(i => s"c$i").mkString(", ")
-          rangeViewId += 1
-          val v = s"graft_table_fn_$rangeViewId"
-          val df0 = spark.sql(s"SELECT $sel FROM VALUES $tuples AS __t($anon)")
-          val df = if (caps(0).equalsIgnoreCase("TABLE_DISTINCT"))
-            df0.distinct() else df0
-          df.createOrReplaceTempView(v)
+          val df0 = sqlFrame(s"SELECT $sel FROM VALUES $tuples AS __t($anon)")
+          val v = relation(caps(0).toLowerCase,
+            if (caps(0).equalsIgnoreCase("TABLE_DISTINCT")) df0.distinct() else df0)
           q = q.substring(0, mStart) + v + q.substring(close + 1)
           search = mStart + v.length
       }

@@ -46,6 +46,25 @@ private[sqlfront] object Lex {
           src.regionMatches(true, start + 1, word, 0, word.length))
   }
 
+  /** A read position over the tokens of `src`: the reader of the
+    * order-free option tails of CREATE TABLE, SEQUENCE and SERVICE. */
+  final class Cursor(val src: String) {
+    val ts: IndexedSeq[Token] = tokens(src)
+    var i = 0
+    def has: Boolean = i < ts.length
+    /** The word at the position, upper-cased; "" if there is none. */
+    def word: String = if (has && ts(i).kind == Word) ts(i).text(src).toUpperCase else ""
+    def readIf(w: String): Boolean = { if (word == w) { i += 1; true } else false }
+    /** The text from the position on, for error messages. */
+    def rest: String = src.substring(if (has) ts(i).start else src.length)
+    /** The 'string' at the position, unescaped; `what` names the tail. */
+    def readLit(what: String): String = {
+      require(has && ts(i).kind == Lit, s"expected a 'string' in $what options at: $rest")
+      i += 1
+      src.substring(ts(i - 1).start + 1, ts(i - 1).end - 1).replace("''", "'")
+    }
+  }
+
   def tokens(s: String): IndexedSeq[Token] = {
     val out = mutable.ArrayBuffer.empty[Token]
     var i = 0

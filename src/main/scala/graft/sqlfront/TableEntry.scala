@@ -62,8 +62,9 @@ private[sqlfront] final case class TableEntry(
 
   def hiddenRowid: Boolean = rowid == RowidKind.Hidden
 
-  /** The frame as SQL sees it: without a hidden `_rowid_`. */
-  def visible: DataFrame =
+  /** The frame as SQL sees it: without a hidden `_rowid_`. Built once per
+    * entry, since every statement that names the table reads it. */
+  lazy val visible: DataFrame =
     if (hiddenRowid && frame.columns.contains("_rowid_")) frame.drop("_rowid_")
     else frame
 }

@@ -16,6 +16,10 @@ object GraftColumnBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** The session's SQL parser (classic sessionState). */
+  def sqlParser(spark: SparkSession): org.apache.spark.sql.catalyst.parser.ParserInterface =
+    spark.asInstanceOf[classic.SparkSession].sessionState.sqlParser
+
   /** DataFrame over an RDD of Catalyst rows of `schema`, without converting
     * them (classic internalCreateDataFrame is private[sql]). */
   def internalFrame(spark: SparkSession,

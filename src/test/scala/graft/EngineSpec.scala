@@ -1860,4 +1860,48 @@ class EngineSpec extends SparkSpec {
     assert(e.sql("SELECT NEXTVAL('fs')").head().get(0).toString == "4")
     e.sql("COMMIT")
   }
+
+  test("two engines on one session read their own tables and register no view") {
+    def views = spark.catalog.listTables().collect().map(_.name).toSet
+    val before = views
+    val (a, b) = (freshEngine, freshEngine)
+    a.sql("CREATE TABLE foo (id INT PRIMARY KEY, v INT)")
+    a.sql("INSERT INTO foo VALUES (1, 10), (2, 20)")
+    def countA = a.sql("SELECT count(*) FROM foo").head().getLong(0)
+    val miss = intercept[org.apache.spark.sql.AnalysisException](
+      b.sql("SELECT count(*) FROM foo").collect())
+    assert(miss.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"), miss.getMessage)
+    b.sql("CREATE TABLE foo (id INT PRIMARY KEY, v INT)")
+    assert(countA == 2 && b.sql("SELECT count(*) FROM foo").head().getLong(0) == 0)
+    b.sql("DROP TABLE foo")
+    assert(countA == 2)
+    // a CTE shadows the table of its name, except inside its own definition
+    assert(a.sql("WITH foo AS (SELECT 7 AS id) SELECT max(id) FROM foo").head().getInt(0) == 7)
+    assert(a.sql("WITH foo AS (SELECT * FROM foo WHERE id = 2) SELECT count(*) FROM foo")
+      .head().getLong(0) == 1)
+    // per-statement relations live for their statement only
+    val csv = java.nio.file.Files.createTempFile("graft_two_engines", ".csv")
+    try {
+      java.nio.file.Files.write(csv, "k,w\n1,a\n2,b\n".getBytes("UTF-8"))
+      assert(a.sql("SELECT count(*) FROM SYSTEM_RANGE(1, 20)").head().getLong(0) == 20)
+      assert(a.sql(s"SELECT count(*) FROM CSVREAD('$csv')").head().getLong(0) == 2)
+      assert(a.sql("SELECT count(*) FROM TABLE(k INT=ARRAY[1,2,3])").head().getLong(0) == 3)
+      assert(a.sql("SELECT SET(@n, (SELECT count(*) FROM SYSTEM_RANGE(1, 3))), @n")
+        .head().get(1).toString == "3")
+      assert(a.sql("SELECT count(*) FROM INFORMATION_SCHEMA.TABLES WHERE table_name = 'foo'")
+        .head().getLong(0) == 1)
+    } finally java.nio.file.Files.delete(csv)
+    // subqueries of DML read the engine's own tables: B's `other` was
+    // created last and holds other rows
+    a.sql("CREATE TABLE other (id INT, w INT)")
+    a.sql("INSERT INTO other VALUES (2, 7), (3, 9)")
+    b.sql("CREATE TABLE other (id INT, w INT)")
+    b.sql("INSERT INTO other VALUES (1, 100)")
+    a.sql("DELETE FROM foo WHERE id IN (SELECT id FROM other)")
+    a.sql("UPDATE foo SET v = (SELECT max(w) FROM other)")
+    a.sql("INSERT INTO foo VALUES ((SELECT max(id) FROM foo) + 1, 0)")
+    assert(a.sql("SELECT id, v FROM foo ORDER BY id").collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSeq == Seq((1, 9), (2, 0)))
+    assert(views == before, views -- before)
+  }
 }

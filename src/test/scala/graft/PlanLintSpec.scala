@@ -96,9 +96,8 @@ class PlanLintSpec extends SparkSpec {
     "operators/Dml.scala" -> 1, // per-partition count array for ROWNUM/LIMIT semantics
     "operators/TextAnalysis.scala" -> 11, // BPE top-m driver argmax (bounded by merge batch); bm25Idf's per-term df collect (bounded by the literal term universe — the IDF table embeds as plan literals, materialize-then-embed like bloomBitsOf); hashedGramClassCounts' <= dim+1 row model aggregate (weights embed as one double[] plan literal, same shape); dsirSelect's k-row top-k boundary collect (threshold embeds as two plan literals); langIdFit's bounded label-universe distinct + its <= dim+1 row per-class aggregate (models embed as C double[] plan literals); perClassClassifierFit's same bounded pair (label universe + <= dim+1 rows with 2C columns); unigramLmTrain's three vocab-bounded collects (alphabet, capped seed pieces, per-EM piece counts — all dictionary-sized, never corpus-sized)
     "dsl/Model.scala" -> 2, // findList/findOne: the DSL's intentional executors (reference Model.java parity)
-    "sqlfront/Engine.scala" -> 1, // SET @v = (scalar expr): 1-row eval, reference Variable.java parity
     "sqlfront/EngineDdl.scala" -> 3, // 1-row max(_rowid_) agg for identity backfill; VALUES tuples Spark cannot fold, evaluated once (statement-sized); noRows: one Boolean per partition
-    "sqlfront/EngineTranslate.scala" -> 1, // @var scalar substitution: 1-row eval
+    "sqlfront/EngineTranslate.scala" -> 1, // valueLiteral: 1-row eval of SET @v = e and SET(@v, e), reference Variable.java parity
     "streaming/StreamDecontaminate.scala" -> 1, // benchmark gram-set materialization, bounded by the benchmark (KBs-MBs), embedded as a sorted reference array — materialize-then-embed like bloomBitsOf
     "core/ModelStore.scala" -> 2, // registry reads: readAll's collect is bounded by MODEL size (dim / C·dim / merges / k·d / m·kc·subdim / mBits÷64 rows — never the corpus); corpusFingerprint's head() is a 1-row global XOR aggregate
     "operators/Eval.scala" -> 1, // rank-sum offset pass: #partitions driver rows (the packSequences shape), never row-scaled
@@ -137,6 +136,25 @@ class PlanLintSpec extends SparkSpec {
       s"collect() surface drifted — re-audit and update the record with a " +
         s"justification.\nfound:    ${counts.toSeq.sorted.mkString(", ")}\n" +
         s"recorded: ${collectSites.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("no engine code registers a temp view") {
+    // the catalog value is the one registry of tables: a statement binds
+    // its table names from it (sqlfront/Resolve), so a session view would
+    // be a second copy that another engine on the session can read
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val sites = scala.collection.mutable.ArrayBuffer.empty[String]
+    java.nio.file.Files.walk(root).forEach { p =>
+      if (p.toString.endsWith(".scala") && !p.toString.contains("/tools/")) {
+        val lines = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").linesIterator
+        lines.zipWithIndex.foreach { case (l, i) =>
+          if ("\\b(createOrReplaceTempView|createTempView|createGlobalTempView)\\b".r
+              .findFirstIn(l).isDefined)
+            sites += s"${root.relativize(p)}:${i + 1}"
+        }
+      }
+    }
+    assert(sites.isEmpty, sites.mkString(", "))
   }
 
   /** Per-query SHUFFLE-exchange budget (hash/range/single-partition

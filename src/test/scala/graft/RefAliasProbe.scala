@@ -202,6 +202,9 @@ class RefAliasProbe extends SparkSpec {
     val script = en.sql("SCRIPT").collect().map(_.getString(0))
     assert(script.exists(_.startsWith("CREATE ALIAS rev AS '")))
     assert(script.exists(_ == s"""CREATE FORCE AGGREGATE med FOR "$className";"""))
+    // the functions are session-wide: drop en's, so only the replay can
+    // register what en2 calls
+    en.sql("DROP ALL OBJECTS")
     val en2 = new Engine(spark)
     script.foreach(en2.sql(_))
     assert(en2.sql("SELECT rev('xyz')").head().getString(0) == "zyx")
