@@ -10,8 +10,10 @@ import org.apache.spark.sql.execution.datasources.{FileScanRDD, LogicalRelation}
 /** Lineage cut with a selectable durability mode.
   *
   * Iterative operators (LSH dedup, label propagation, recursive CTEs) must
-  * cut lineage every round or plan compilation blows up; HOW they cut it is
-  * a durability trade the caller's cluster dictates:
+  * cut lineage every round or plan compilation blows up; connected
+  * components also cut their edge set once and read its size from the cut's
+  * own job through an `Observation` (a cut runs the observed plan). HOW
+  * they cut is a durability trade the caller's cluster dictates:
   *
   *  - `local` (default): `localCheckpoint` — no disk round-trip, but blocks
   *    live on executors, so an executor loss (or dynamic-allocation

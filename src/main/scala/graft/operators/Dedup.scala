@@ -178,7 +178,9 @@ object Dedup {
 
   /** Transitive MinHash dedup: connected components over the near-dup pair
     * graph (a~b~c collapses to ONE survivor even when a≁c directly) — one
-    * min-id survivor per component via label propagation. */
+    * min-id survivor per component, by union-find on the driver up to
+    * [[ConnectedComponents.DriverEdges]] pair edges and by label
+    * propagation above. */
   def minhashDedupTransitive(
       df: DataFrame,
       idCol: String,
@@ -973,7 +975,7 @@ object Dedup {
     val bPrep = crossPrep(batch, idCol, textCol, cfg)
     val nearVictims = crossMinhashCandidatesPrepped(
         bPrep, corpusPrepped, cfg, maxBucket)
-      .select(col("batch_id").as("__victim")).distinct()
+      .select(col("batch_id").as("__victim"))
     // Exact victims decide on 8-byte hashes, not document text (r13,
     // guide §2.3/§8): the old shape distinct-shuffled the FULL corpus
     // nrm strings, then semi-join-shuffled them again — two corpus-text
@@ -988,11 +990,13 @@ object Dedup {
       xxhash64(col("__nrm")).as("__h"))
     val cMatch = corpusPrepped
       .select(col("__nrm"), xxhash64(col("__nrm")).as("__h"))
-      .join(bEx.select(col("__h")).distinct(), Seq("__h"), "left_semi")
+      .join(bEx.select(col("__h")), Seq("__h"), "left_semi")
     val exactVictims = bEx
       .join(cMatch, Seq("__h", "__nrm"), "left_semi")
       .select(col("__victim"))
-    batch.join(nearVictims.union(exactVictims).distinct(),
+    // semi- and anti-joins ignore duplicates on their build side, so
+    // neither victim set nor the hash set is deduplicated first
+    batch.join(nearVictims.union(exactVictims),
       col(idCol) === col("__victim"), "left_anti")
   }
 

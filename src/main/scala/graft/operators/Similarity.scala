@@ -369,9 +369,10 @@ object Similarity {
     * of cosine-near-duplicate embeddings. Composition of two scale-safe
     * primitives: [[embeddingNearDupPairs]] (LSH bucket equi-join candidates,
     * exact cosine verify) feeding
-    * [[ConnectedComponents.labelPropagation]] (min-label propagation, one
-    * shuffle per round, checkpointed frontier). Returns the surviving rows
-    * of `df` unchanged. */
+    * [[ConnectedComponents.labelPropagation]] (one cut of the pair edges;
+    * union-find on the driver up to [[ConnectedComponents.DriverEdges]]
+    * edges, min-label propagation rounds above). Returns the surviving
+    * rows of `df` unchanged. */
   def semDedup(
       df: DataFrame, idCol: String, vecCol: String,
       threshold: Double = 0.95, dim: Int = 64,

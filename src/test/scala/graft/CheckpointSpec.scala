@@ -26,8 +26,9 @@ class CheckpointSpec extends SparkSpec {
       (Dedup.minhashCandidates(docs, "doc_id", "text",
           Dedup.MinHashConfig(numHashes = 64, bands = 16, threshold = 0.6))
         .collect().toSet,
+       // -1: the distributed path, so the round cuts run in each mode
        ConnectedComponents.labelPropagation(
-          Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("src", "dst"))
+          Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("src", "dst"), 50, -1L)
         .collect().toSet,
        Recursive.fixpoint(spark.range(1, 2).toDF("n")) { f =>
           f.filter($"n" < 10).select(($"n" + 1).as("n"))
@@ -37,8 +38,9 @@ class CheckpointSpec extends SparkSpec {
       (Dedup.minhashCandidates(docs, "doc_id", "text",
           Dedup.MinHashConfig(numHashes = 64, bands = 16, threshold = 0.6))
         .collect().toSet,
+       // -1: the distributed path, so the round cuts run in each mode
        ConnectedComponents.labelPropagation(
-          Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("src", "dst"))
+          Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("src", "dst"), 50, -1L)
         .collect().toSet,
        Recursive.fixpoint(spark.range(1, 2).toDF("n")) { f =>
           f.filter($"n" < 10).select(($"n" + 1).as("n"))

@@ -102,6 +102,7 @@ class PlanLintSpec extends SparkSpec {
     "core/ModelStore.scala" -> 2, // registry reads: readAll's collect is bounded by MODEL size (dim / C·dim / merges / k·d / m·kc·subdim / mBits÷64 rows — never the corpus); corpusFingerprint's head() is a 1-row global XOR aggregate
     "operators/Eval.scala" -> 1, // rank-sum offset pass: #partitions driver rows (the packSequences shape), never row-scaled
     "operators/Incremental.scala" -> 3, // readPackHighWater + readCfg: 1-row state reads; recordedVersion: 1-row lookup in the #batches-sized scoring log
+    "operators/ConnectedComponents.scala" -> 1, // the non-self pair edges, collected only when their count (observed on the cut's own job, before the collect) is at most DriverEdges = 2^18
     "plans/KeyLookup.scala" -> 1 // spansOf: one (min, max, rows) key span per partition of a materialized frame (#partitions rows, the Sampling count-array shape)
   )
 
@@ -171,16 +172,19 @@ class PlanLintSpec extends SparkSpec {
     "d04_simhash_pairs" -> 2,
     "d05_ngram_jaccard" -> 2,
     "d06_embedding_neardup" -> 1,
-    "d07_minhash_dedup_transitive" -> 2,
-    "d08_cross_dedup" -> 7,
+    // d07, d10, d11, d12, d16: small pair graphs come back from connected
+    // components as a local frame, which the final join broadcasts
+    "d07_minhash_dedup_transitive" -> 0,
+    // 7 → 4: no distinct before the victim anti-join or the hash semi-join
+    "d08_cross_dedup" -> 4,
     "d09_segment_dedup" -> 3,
-    "d10_semdedup" -> 2,
-    "d11_dedup_clusters" -> 2,
-    "d12_cluster_stats" -> 3,
+    "d10_semdedup" -> 0,
+    "d11_dedup_clusters" -> 0,
+    "d12_cluster_stats" -> 1,
     "d13_duplicate_spans" -> 2,
     "d14_remove_dup_spans" -> 3,
     "d15_duplication_profile" -> 5,
-    "d16_quality_reps" -> 3,
+    "d16_quality_reps" -> 1,
     "d17_longest_repeat" -> 0, // r7 packed refine: state is checkpointed, the final attach broadcasts
     "d19_semdedup_kmeans" -> 5,
     "m01_media_decode" -> 0,
@@ -189,8 +193,10 @@ class PlanLintSpec extends SparkSpec {
     // r14: 13 → 7 — the representative-survivor subtree is materialized
     // once (Checkpoint.cut) instead of executing 3× inside
     // removeDuplicateSpans' three consumers; the window+join exchanges
-    // moved out of the final plan and run once, eagerly
-    "p01_corpus_prep" -> 7,
+    // moved out of the final plan and run once, eagerly. 7 → 4: small pair
+    // graphs come back from connected components as a local frame, and
+    // the cluster join broadcasts it
+    "p01_corpus_prep" -> 4,
     "p02_embedding_prep" -> 1,
     "p03_media_prep" -> 6,
     "q01_pricing_summary" -> 2,
