@@ -529,7 +529,7 @@ object H2Functions {
     }).asNondeterministic())
     u.register("truncate_value", (d: java.lang.Double, s: Int) => truncateValue(d, s))
     // FORMATDATETIME/PARSEDATETIME (2-4 args): Spark UDFs are single-arity,
-    // so the Engine renames calls by argument count (renameByArity)
+    // so sqlfront.Resolve renames calls by argument count
     u.register("formatdatetime_2",
       (ts: java.sql.Timestamp, f: String) => formatDateTime(ts, f, null, null))
     u.register("formatdatetime_3",

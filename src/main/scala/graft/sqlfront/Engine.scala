@@ -44,14 +44,15 @@ import graft.plans.KeyLookup
   *     string-literal safety is structural, not simulated
   *
   * Every schema object is part of one immutable [[Catalog]] value, held
-  * in one `var` and written only through its setter, which publishes a
-  * temp function per alias and aggregate to the Spark session. Tables are
-  * not published: a statement binds each table name it reads when it
-  * runs, from the value itself ([[Resolve]]), so the session's namespace
-  * holds no copy of them. Each table or view is one [[TableEntry]]: its
-  * frame plus every attribute keyed by the table alone. CREATE adds an
-  * entry once the create succeeds, DROP removes it, RENAME re-keys it, and
-  * the objects with names of their own (indexes, CHECK and FOREIGN KEY
+  * in one `var` and written only through its setter. Nothing of it is
+  * published to the Spark session: a statement binds each table, alias
+  * and aggregate name it uses when it runs, from the value itself
+  * ([[Resolve]]), so the session's namespace holds no copy of them and
+  * two engines on one session share none. Each table or view is one
+  * [[TableEntry]]: its frame plus every attribute keyed by the table
+  * alone. CREATE adds an entry once the create succeeds, DROP removes it,
+  * RENAME re-keys it, and the objects with names of their own (indexes,
+  * CHECK and FOREIGN KEY
   * constraints, triggers, comments, rights) follow it through
   * [[Catalog.moveOwned]]. A transaction snapshot is the value itself;
   * ROLLBACK assigns it back and DROP ALL OBJECTS assigns
@@ -76,30 +77,15 @@ final class Engine(val spark: SparkSession)
   /** Every schema object of this engine. */
   private[sqlfront] def catalog: Catalog = current
 
-  /** The one write of the catalog. It publishes to the Spark session the
-    * temp function of every alias and aggregate added, replaced or removed
-    * since the value it replaces. An alias that fails to register stays
-    * recorded, as CREATE FORCE ALIAS leaves it, and fails at its first use. */
+  /** The one write of the catalog. Inside a transaction it keeps each
+    * value whose table or sequence the new one drops, for [[restore]]. */
   private[sqlfront] def catalog_=(next: Catalog): Unit = {
     val prev = current
     current = next
     if (txn.nonEmpty && (prev.tables.keys.exists(!next.tables.contains(_)) ||
         prev.sequences.keys.exists(!next.sequences.contains(_))))
       dropped :+= prev
-    publish(prev.aliases, next.aliases)(
-      n => spark.sql(s"DROP TEMPORARY FUNCTION IF EXISTS $n"),
-      (n, a) => scala.util.Try(ReflectAlias.register(spark, n, a)))
-    publish(prev.aggregates, next.aggregates)(
-      n => spark.sql(s"DROP TEMPORARY FUNCTION IF EXISTS ${UserAggregate.finisherName(n)}"),
-      (n, cls) => UserAggregate.register(spark, n, cls))
   }
-
-  private def publish[V](prev: Map[String, V], next: Map[String, V])(
-      drop: String => Unit, put: (String, V) => Unit): Unit =
-    if (prev ne next) {
-      prev.keys.foreach(n => if (!next.contains(n)) drop(n))
-      next.foreach { case (n, v) => if (!prev.get(n).contains(v)) put(n, v) }
-    }
 
   /** Instances of IMPLEMENT BY classes, per service definition. */
   private val serviceInstances = mutable.HashMap.empty[ServiceDef, AnyRef]

@@ -3,6 +3,8 @@ package graft.sqlfront
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.Dml
@@ -33,21 +35,26 @@ private[sqlfront] trait EngineSelect { this: Engine =>
   /** SQL text run through [[Resolve]]: each relation name binds to the
     * per-statement relation `rels` holds under it, else to the catalog
     * table of that name, read with its hidden `_rowid_` if the name is in
-    * `full`; any other name is left for Spark. */
+    * `full`; any other name is left for Spark. Each call of a catalog
+    * alias or aggregate binds to that function. */
   private[sqlfront] def sqlFrame(text: String, rels: Map[String, DataFrame] = Map.empty,
       full: Set[String] = Set.empty): DataFrame =
-    Resolve.frame(spark, text, lookup(rels, full))
+    Resolve.frame(spark, text, lookup(rels, full), function)
 
-  /** A WHERE, SET, CHECK or DEFAULT expression, its subqueries bound to
-    * the catalog's tables. */
+  /** A WHERE, SET, CHECK or DEFAULT expression, its subqueries and calls
+    * bound from the catalog. */
   private[sqlfront] def sqlColumn(text: String): Column =
-    Resolve.column(spark, text, lookup(Map.empty, Set.empty))
+    Resolve.column(spark, text, lookup(Map.empty, Set.empty), function)
 
   private def lookup(rels: Map[String, DataFrame], full: Set[String])(
       name: String): Option[DataFrame] = {
     val n = name.toLowerCase
     rels.get(n).orElse(catalog.tables.get(n).map(e => if (full(n)) e.frame else e.visible))
   }
+
+  private def function(name: String, call: UnresolvedFunction): Option[Expression] =
+    catalog.aliases.get(name).map(ReflectAlias.call(name, _, call.arguments))
+      .orElse(catalog.aggregates.get(name).map(UserAggregate.call(name, _, call)))
 
   /** Word-boundary occurrence of `word` outside string literals. */
   private[sqlfront] def referencedOutsideLiterals(q: String, word: String): Boolean =

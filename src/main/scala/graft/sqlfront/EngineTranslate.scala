@@ -173,12 +173,6 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
       variables.getOrElse(c(0).toLowerCase, "NULL"))
     // SAMPLE_SIZE n → LIMIT n (head-sample semantics, Select.java:877)
     q = Rw.rewrite(q, RwKw("SAMPLE_SIZE"), Digits)(c => s"LIMIT ${c(0)}")
-    // CREATE AGGREGATE call sites (db/UserAggregate.java — the reference
-    // feeds the user object the group's values row-at-a-time): NAME(expr)
-    // → graft_ua_name(collect_list(expr)). collect_list's partial buffers
-    // merge map-side; the opaque add/getResult finisher runs once per
-    // group, the reference's own per-group cost model.
-    if (catalog.aggregates.nonEmpty) q = rewriteUserAggregates(q)
     // H2 function-name surface → the registered UDF names / Spark natives
     // (Function.java registry): H2's DATEADD/DATEDIFF take a unit STRING
     // (vs Spark's keyword/2-arg forms), so the quoted-unit call shape maps
@@ -251,15 +245,6 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
       Not(RwKw("OVER")))(_ => rowNum)
     q = Rw.rewrite(q, RwKw("ROWNUM"), Sy('('), Sy(')'))(_ => rowNum)
     q = Rw.rewrite(q, RwKw("ROWNUM"), Not(Sy('(')))(_ => rowNum)
-    // FORMATDATETIME/PARSEDATETIME: rename by arity to the fixed-arity UDFs
-    q = renameByArity(q, "FORMATDATETIME")(n => s"formatdatetime_$n")
-    q = renameByArity(q, "PARSEDATETIME")(n => s"parsedatetime_$n")
-    // ARRAY_GET/ARRAY_LENGTH/ARRAY_CONTAINS with H2 row-value arrays:
-    // `('a','b')` in first-argument position becomes array('a','b');
-    // ARRAY_GET is 1-based with NULL out of range → try_element_at
-    q = rewriteArrayFn(q, "ARRAY_GET", "try_element_at")
-    q = rewriteArrayFn(q, "ARRAY_LENGTH", "cardinality")
-    q = rewriteArrayFn(q, "ARRAY_CONTAINS", "array_contains")
     // CASE(w1, r1, w2, r2, …[, else]) function form (Function.java:890)
     q = rewriteCaseFunction(q)
     // NEXTVAL/CURRVAL + CREATE CONSTANT names
@@ -659,98 +644,6 @@ private[sqlfront] trait EngineTranslate { this: Engine =>
       i += 1
     }
     (if (depth == 0) i else -1, commas)
-  }
-
-  /** `NAME(args…)` → `graft_ua_name(collect_list(struct(args…)))` for
-    * every registered CREATE AGGREGATE name — the call-shaped rewrite loop
-    * with balanced-paren capture. The struct wrapper is load-bearing:
-    * struct(x) is never NULL even when x is, so NULL rows reach add() as
-    * the reference's JavaAggregate feeds them (collect_list alone drops
-    * nulls), and a multi-argument call arrives as one tuple the finisher
-    * unpacks to the reference's Object[] form (JavaAggregate.java:195-207).
-    * A leading DISTINCT distributes over the tuple (distinct argument
-    * combinations, the aggregate-DISTINCT contract). Inner text is
-    * re-scanned, so nested user-aggregate calls in the argument resolve. */
-  private[sqlfront] def rewriteUserAggregates(q0: String): String = {
-    var q = q0
-    catalog.aggregates.keys.foreach { name =>
-      var from = 0
-      var continue = true
-      while (continue) {
-        val (ws, open) = Rw.findCall(q, name, from)
-        if (ws < 0) continue = false
-        else {
-          val (close, _) = matchParen(q, open)
-          if (close < 0) continue = false
-          else {
-            // matchParen's close is the index AFTER the ')'
-            val inner = q.substring(open + 1, close - 1)
-            val iToks = Lex.tokens(inner)
-            val (distinct, body) =
-              if (iToks.nonEmpty && iToks.head.is(inner, "DISTINCT"))
-                ("DISTINCT ", inner.substring(iToks.head.end))
-              else ("", inner)
-            val fn = UserAggregate.finisherName(name)
-            q = q.substring(0, ws) + fn + "(collect_list(" + distinct +
-              "struct(" + body + ")))" + q.substring(close)
-            from = ws + fn.length + "(collect_list(".length
-          }
-        }
-      }
-    }
-    q
-  }
-
-  /** Rename calls of `name` to an arity-specific target — how variable-
-    * arity H2 functions (FORMATDATETIME 2-4 args) map onto Spark's
-    * fixed-arity UDF registration. */
-  private[sqlfront] def renameByArity(q0: String, name: String)(
-      target: Int => String): String = {
-    var q = q0
-    var from = 0
-    var continue = true
-    while (continue) {
-      val (ws, open) = Rw.findCall(q, name, from)
-      if (ws < 0) continue = false
-      else {
-        val (close, commas) = matchParen(q, open)
-        if (close < 0) continue = false
-        else {
-          val newName = target(commas + 1)
-          q = q.substring(0, ws) + newName + "(" + q.substring(open + 1)
-          from = ws + newName.length + 1
-        }
-      }
-    }
-    q
-  }
-
-  /** H2 array functions over row values: `ARRAY_GET(('a','b'), i)` — a
-    * parenthesized list in first-argument position is H2's inline array
-    * (Function.java:905 ARRAY_GET on ValueArray); Spark spells it
-    * array(...). Renames the function and converts that first argument. */
-  private[sqlfront] def rewriteArrayFn(q0: String, h2Name: String,
-      sparkName: String): String = {
-    var q = q0
-    var from = 0
-    var continue = true
-    while (continue) {
-      val (ws, open) = Rw.findCall(q, h2Name, from)
-      if (ws < 0) continue = false
-      else {
-        var i = open + 1
-        while (i < q.length && q.charAt(i).isWhitespace) i += 1
-        val head = q.substring(0, ws) + sparkName + "("
-        q = if (i < q.length && q.charAt(i) == '(') {
-          val (close, _) = matchParen(q, i)
-          if (close < 0) return q
-          head + q.substring(open + 1, i) + "array" + q.substring(i, close) +
-            q.substring(close)
-        } else head + q.substring(open + 1)
-        from = ws + sparkName.length + 1
-      }
-    }
-    q
   }
 
   /** H2 CASE *function* form `CASE(w1, r1, w2, r2[, else])`

@@ -1,6 +1,6 @@
 package graft.sqlfront
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
 import org.apache.spark.sql.types._
 
 
@@ -52,15 +52,31 @@ private[sqlfront] object ReflectAlias {
     }
   }
 
-  /** Register alias `name` as a Spark function. A source alias
-    * (`CREATE ALIAS name AS $$source$$`) compiles a class named after the
-    * alias (FunctionAlias.loadFromSource — USER_PACKAGE "." aliasName;
-    * here unpackaged) whose entry point is its first public static
-    * method. */
-  def register(spark: SparkSession, name: String, a: AliasDef): Unit =
-    registerResolved(spark, name, resolver(name, a))
+  /** The call of alias `name` over `args`: a `ScalaUDF` of its method,
+    * built when the statement binds (nothing is registered). A source
+    * alias (`CREATE ALIAS name AS $$source$$`) compiles a class named
+    * after the alias (FunctionAlias.loadFromSource — USER_PACKAGE "."
+    * aliasName; here unpackaged) whose entry point is its first public
+    * static method. The method is resolved here on the driver, so a FORCE
+    * alias that cannot load fails at its first call with the loader's
+    * error. */
+  def call(name: String, a: AliasDef, args: Seq[Expression]): Expression = {
+    val r = resolver(name, a)
+    val m = r.resolve()
+    val returnType = signature(m)
+    val n = m.getParameterCount
+    require(args.length == n, s"alias $name takes $n arguments, not ${args.length}")
+    val fn = new Fn(r)
+    val f: AnyRef = n match {
+      case 0 => () => fn.call(Array.empty)
+      case 1 => (x: AnyRef) => fn.call(Array(x))
+      case 2 => (x: AnyRef, y: AnyRef) => fn.call(Array(x, y))
+      case 3 => (x: AnyRef, y: AnyRef, z: AnyRef) => fn.call(Array(x, y, z))
+    }
+    ScalaUDF(f, returnType, args, udfName = Some(name))
+  }
 
-  /** The checks [[register]] makes, without registering anything. */
+  /** The checks [[call]] makes, without building a call. */
   def validate(name: String, a: AliasDef): Unit = signature(resolver(name, a).resolve())
 
   private def resolver(name: String, a: AliasDef): Resolver =
@@ -85,61 +101,37 @@ private[sqlfront] object ReflectAlias {
       SourceCompiler.entryMethod(SourceCompiler.compile(name, source), source)
   }
 
-  private def registerResolved(spark: SparkSession, name: String,
-      resolver: Resolver): Unit = {
-    val m = resolver.resolve() // fail fast on the driver
-    val returnType = signature(m)
-    // Serializable wrapper: captures only strings, resolves lazily per JVM.
-    class Fn extends Serializable {
-      @transient private lazy val method = resolver.resolve()
-      // Convert each SQL value to the Java parameter type, as the
-      // reference's FunctionAlias does via Value.convertTo before invoke
-      private def coerce(a: AnyRef, t: Class[_]): AnyRef = a match {
-        case null => null
-        case n: java.lang.Number => t match {
-          case java.lang.Integer.TYPE => Int.box(n.intValue())
-          case c if c == classOf[java.lang.Integer] => Int.box(n.intValue())
-          case java.lang.Long.TYPE => Long.box(n.longValue())
-          case c if c == classOf[java.lang.Long] => Long.box(n.longValue())
-          case java.lang.Double.TYPE => Double.box(n.doubleValue())
-          case c if c == classOf[java.lang.Double] => Double.box(n.doubleValue())
-          case java.lang.Float.TYPE => Float.box(n.floatValue())
-          case c if c == classOf[java.lang.Float] => Float.box(n.floatValue())
-          case java.lang.Short.TYPE => Short.box(n.shortValue())
-          case c if c == classOf[java.lang.Short] => Short.box(n.shortValue())
-          case c if c == classOf[java.math.BigDecimal] => n match {
-            case d: java.math.BigDecimal => d
-            case _ => new java.math.BigDecimal(n.toString)
-          }
-          case c if c == classOf[String] => n.toString
-          case _ => n
+  /** Serializable wrapper: captures only strings, resolves lazily per JVM. */
+  private final class Fn(resolver: Resolver) extends Serializable {
+    @transient private lazy val method = resolver.resolve()
+    // Convert each SQL value to the Java parameter type, as the
+    // reference's FunctionAlias does via Value.convertTo before invoke
+    private def coerce(a: AnyRef, t: Class[_]): AnyRef = a match {
+      case null => null
+      case n: java.lang.Number => t match {
+        case java.lang.Integer.TYPE => Int.box(n.intValue())
+        case c if c == classOf[java.lang.Integer] => Int.box(n.intValue())
+        case java.lang.Long.TYPE => Long.box(n.longValue())
+        case c if c == classOf[java.lang.Long] => Long.box(n.longValue())
+        case java.lang.Double.TYPE => Double.box(n.doubleValue())
+        case c if c == classOf[java.lang.Double] => Double.box(n.doubleValue())
+        case java.lang.Float.TYPE => Float.box(n.floatValue())
+        case c if c == classOf[java.lang.Float] => Float.box(n.floatValue())
+        case java.lang.Short.TYPE => Short.box(n.shortValue())
+        case c if c == classOf[java.lang.Short] => Short.box(n.shortValue())
+        case c if c == classOf[java.math.BigDecimal] => n match {
+          case d: java.math.BigDecimal => d
+          case _ => new java.math.BigDecimal(n.toString)
         }
-        case other if t == classOf[String] => other.toString
-        case other => other
+        case c if c == classOf[String] => n.toString
+        case _ => n
       }
-      def call(args: Array[AnyRef]): AnyRef = {
-        val pts = method.getParameterTypes
-        method.invoke(null, args.zip(pts).map { case (a, t) => coerce(a, t) }: _*)
-      }
+      case other if t == classOf[String] => other.toString
+      case other => other
     }
-    val fn = new Fn
-    import org.apache.spark.sql.api.java._
-    m.getParameterCount match {
-      case 0 => spark.udf.register(name,
-        new UDF0[Any] { def call() = fn.call(Array.empty) }, returnType)
-      case 1 => spark.udf.register(name,
-        new UDF1[AnyRef, Any] { def call(a: AnyRef) = fn.call(Array(a)) },
-        returnType)
-      case 2 => spark.udf.register(name,
-        new UDF2[AnyRef, AnyRef, Any] {
-          def call(a: AnyRef, b: AnyRef) = fn.call(Array(a, b))
-        }, returnType)
-      case 3 => spark.udf.register(name,
-        new UDF3[AnyRef, AnyRef, AnyRef, Any] {
-          def call(a: AnyRef, b: AnyRef, c: AnyRef) = fn.call(Array(a, b, c))
-        }, returnType)
-      case n => throw new IllegalStateException(s"alias arity $n")
+    def call(args: Array[AnyRef]): AnyRef = {
+      val pts = method.getParameterTypes
+      method.invoke(null, args.zip(pts).map { case (a, t) => coerce(a, t) }: _*)
     }
   }
 }
-

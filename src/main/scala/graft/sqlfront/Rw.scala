@@ -204,7 +204,7 @@ private[sqlfront] object Rw {
   /** Char offset of the first occurrence (at/after char offset `from`) of
     * word `name` directly followed by '(' outside literals, plus the char
     * offset of that '(' — the find step of the call-shaped rewrite loops
-    * (renameByArity, CASE(), ARRAY_GET(), SET()). -1s when absent. */
+    * (LOG(), CASE(), SET()). -1s when absent. */
   def findCall(q: String, name: String, from: Int): (Int, Int) = {
     val ts = Lex.tokens(q)
     var i = 0

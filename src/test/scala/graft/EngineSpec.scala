@@ -1904,4 +1904,31 @@ class EngineSpec extends SparkSpec {
       .map(r => (r.getInt(0), r.getInt(1))).toSeq == Seq((1, 9), (2, 0)))
     assert(views == before, views -- before)
   }
+
+  test("two engines on one session call their own aliases and aggregates and register no function") {
+    val (a, b) = (freshEngine, freshEngine)
+    def functions = spark.catalog.listFunctions().collect().map(_.name).toSet
+    val before = functions
+    a.sql("CREATE ALIAS rev AS $$ String rev(String s) { " +
+      "return new StringBuilder(s).reverse().toString(); } $$")
+    a.sql(s"""CREATE AGGREGATE midval FOR "${classOf[MedianFixture].getName}"""")
+    val midval = "SELECT midval(X) FROM SYSTEM_RANGE(1, 5)"
+    def revA = a.sql("SELECT rev('abc')").head().getString(0)
+    assert(revA == "cba" && a.sql(midval).head().getString(0) == "3")
+    for (q <- Seq("SELECT rev('abc')", midval)) {
+      val miss = intercept[org.apache.spark.sql.AnalysisException](b.sql(q).collect())
+      assert(miss.getMessage.contains("UNRESOLVED_ROUTINE"), miss.getMessage)
+    }
+    b.sql("CREATE ALIAS rev AS $$ String rev(String s) { return s + \"!\"; } $$")
+    assert(b.sql("SELECT rev('abc')").head().getString(0) == "abc!" && revA == "cba")
+    b.sql("DROP ALIAS rev")
+    assert(revA == "cba")
+    // a function created in a transaction goes with its ROLLBACK
+    a.sql("BEGIN; CREATE ALIAS shout AS $$ String shout(String s) { return s.toUpperCase(); } $$")
+    assert(a.sql("SELECT shout('abc')").head().getString(0) == "ABC")
+    a.sql("ROLLBACK")
+    intercept[org.apache.spark.sql.AnalysisException](a.sql("SELECT shout('abc')").collect())
+    assert(revA == "cba")
+    assert(functions == before, functions diff before)
+  }
 }

@@ -139,22 +139,35 @@ class PlanLintSpec extends SparkSpec {
         s"recorded: ${collectSites.toSeq.sorted.mkString(", ")}")
   }
 
+  /** `file:line` of every line under `src/main/scala/<dir>` (tools/ aside)
+    * that `pattern` matches. */
+  private def sourceSites(dir: String, pattern: scala.util.matching.Regex): Seq[String] = {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val sites = scala.collection.mutable.ArrayBuffer.empty[String]
+    java.nio.file.Files.walk(root.resolve(dir)).forEach { p =>
+      if (p.toString.endsWith(".scala") && !p.toString.contains("/tools/")) {
+        val lines = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").linesIterator
+        lines.zipWithIndex.foreach { case (l, i) =>
+          if (pattern.findFirstIn(l).isDefined) sites += s"${root.relativize(p)}:${i + 1}"
+        }
+      }
+    }
+    sites.toSeq
+  }
+
   test("no engine code registers a temp view") {
     // the catalog value is the one registry of tables: a statement binds
     // its table names from it (sqlfront/Resolve), so a session view would
     // be a second copy that another engine on the session can read
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val sites = scala.collection.mutable.ArrayBuffer.empty[String]
-    java.nio.file.Files.walk(root).forEach { p =>
-      if (p.toString.endsWith(".scala") && !p.toString.contains("/tools/")) {
-        val lines = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").linesIterator
-        lines.zipWithIndex.foreach { case (l, i) =>
-          if ("\\b(createOrReplaceTempView|createTempView|createGlobalTempView)\\b".r
-              .findFirstIn(l).isDefined)
-            sites += s"${root.relativize(p)}:${i + 1}"
-        }
-      }
-    }
+    val sites = sourceSites("", "\\b(createOrReplaceTempView|createTempView|createGlobalTempView)\\b".r)
+    assert(sites.isEmpty, sites.mkString(", "))
+  }
+
+  test("no SQL front-door code registers or drops a session function") {
+    // aliases and user aggregates bind from the catalog value too
+    // (sqlfront/Resolve), so a session function would be a second copy
+    // that another engine on the session can call
+    val sites = sourceSites("graft/sqlfront", "udf\\.register|(?i)TEMPORARY FUNCTION".r)
     assert(sites.isEmpty, sites.mkString(", "))
   }
 

@@ -56,6 +56,8 @@ class RefAliasProbe extends SparkSpec {
     // "用$$与用单引号有一样的效果" — single quotes are the same string form
     en.sql("CREATE ALIAS shout AS ' String shout(String s) { return s.toUpperCase() + \"!\"; } '")
     assert(en.sql("SELECT shout('abc')").head().getString(0) == "ABC!")
+    val arity = intercept[IllegalArgumentException](en.sql("SELECT shout('a', 'b')").collect())
+    assert(arity.getMessage.contains("alias shout takes 1 arguments, not 2"), arity)
     // @CODE splits custom imports from the body (SourceCompiler.java:159-166)
     en.sql("CREATE ALIAS next_day AS $$ import java.time.*; @CODE " +
       "String next_day(String d) { return LocalDate.parse(d).plusDays(1).toString(); } $$")
@@ -133,6 +135,10 @@ class RefAliasProbe extends SparkSpec {
     // one arg unwraps to the bare (possibly NULL) value — NULL rows kept
     assert(en.sql("SELECT pcat(a) FROM pc_t").head().getString(0)
       == "<x><null>")
+    // DISTINCT and FILTER apply to the rows the user object is fed
+    en.sql("INSERT INTO pc_t VALUES (2, 'x', 30)")
+    assert(en.sql("SELECT pcat(DISTINCT a) FILTER (WHERE a IS NOT NULL) FROM pc_t")
+      .head().getString(0) == "<x>")
   }
 
   test("FORCE alias defers failures to first use; duplicates error without IF NOT EXISTS") {
@@ -141,7 +147,9 @@ class RefAliasProbe extends SparkSpec {
     en.sql("""CREATE FORCE ALIAS ghost FOR "no.such.Cls.m"""")
     assert(en.sql("SELECT alias_name FROM INFORMATION_SCHEMA.FUNCTION_ALIASES")
       .collect().map(_.getString(0)).toSeq == Seq("ghost"))
-    intercept[Exception] { en.sql("SELECT ghost(1)").collect() } // fails at use
+    // fails at use, with the cause the load hit
+    val ghost = intercept[Exception] { en.sql("SELECT ghost(1)").collect() }
+    assert(String.valueOf(ghost.getMessage).contains("no.such.Cls"), ghost)
     // without FORCE the same statement fails at CREATE time
     intercept[Exception] { en.sql("""CREATE ALIAS ghost2 FOR "no.such.Cls.m"""") }
     // an existing alias errors without IF NOT EXISTS, no-ops with it
@@ -202,8 +210,8 @@ class RefAliasProbe extends SparkSpec {
     val script = en.sql("SCRIPT").collect().map(_.getString(0))
     assert(script.exists(_.startsWith("CREATE ALIAS rev AS '")))
     assert(script.exists(_ == s"""CREATE FORCE AGGREGATE med FOR "$className";"""))
-    // the functions are session-wide: drop en's, so only the replay can
-    // register what en2 calls
+    // the replay alone defines what en2 calls: each engine binds its
+    // functions from its own catalog
     en.sql("DROP ALL OBJECTS")
     val en2 = new Engine(spark)
     script.foreach(en2.sql(_))
