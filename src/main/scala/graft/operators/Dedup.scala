@@ -964,7 +964,13 @@ object Dedup {
     * [[crossPrep]] frame — live or read back from persisted dedup
     * state): batch docs that duplicate the prepared corpus exactly
     * (normalized text) or nearly (banded LSH + signature estimate +
-    * exact Jaccard) are dropped. */
+    * exact Jaccard) are dropped.
+    *
+    * The victim ids are broadcast into the final anti-join. This relies
+    * on the incremental contract that the batch (a delta) is small next
+    * to the corpus: the victims are a subset of the batch's ids. The
+    * survivors therefore keep the batch's own partitioning, with no
+    * shuffle on the batch side. */
   def crossDedupPrepped(
       batch: DataFrame,
       idCol: String,
@@ -995,8 +1001,11 @@ object Dedup {
       .join(cMatch, Seq("__h", "__nrm"), "left_semi")
       .select(col("__victim"))
     // semi- and anti-joins ignore duplicates on their build side, so
-    // neither victim set nor the hash set is deduplicated first
-    batch.join(nearVictims.union(exactVictims),
+    // neither victim set nor the hash set is deduplicated first. A
+    // shuffled join would leave the survivors in spark.sql.shuffle.partitions
+    // partitions, so each append of a one-file delta would write that many
+    // files; broadcast, they keep the batch's partitions
+    batch.join(broadcast(nearVictims.union(exactVictims)),
       col(idCol) === col("__victim"), "left_anti")
   }
 

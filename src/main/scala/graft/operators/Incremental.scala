@@ -33,11 +33,18 @@ import graft.operators.Dedup.MinHashConfig
   *    packs exactly as if it had been in the original run).
   *
   * Scale shape: state size ∝ corpus (it IS the dedup index — parquet,
-  * distributed, never driver-side); a delta ingest touches the full state
-  * only through the banded-bucket join and the broadcast-free exact
-  * probes, the same exchange budget as d08's recompute path minus the
-  * corpus-side signature computation (at 100 TB that recompute is the
-  * whole cost — the state read is a column-pruned parquet scan). */
+  * distributed, never driver-side). A delta ingest scans the whole state
+  * four times, each a column-pruned parquet scan: `sig` for the band keys
+  * (pruned to the delta's buckets by a broadcast semi-join, after the
+  * scan), `sig` again for the signature estimate, `sh` for the exact
+  * Jaccard verify and `nrm` for the exact-text probe (pruned to the
+  * delta's text hashes, after the scan). Below the session's 64 MB
+  * broadcast threshold the estimate's `sig` scan and the verify's `sh`
+  * scan are broadcast whole. The survivors keep the delta's partitions
+  * (the victims are broadcast), so an append writes one state file per
+  * delta partition. Compared with d08's recompute path, only the
+  * corpus-side signature computation is gone (at 100 TB that recompute
+  * is the whole cost). */
 object Incremental {
 
   val DedupStateTable = "dedup_state"

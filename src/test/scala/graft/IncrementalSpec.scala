@@ -68,6 +68,62 @@ class IncrementalSpec extends SparkSpec {
     assert(inc == full)
   }
 
+  private def withSQLConf[T](pairs: (String, String)*)(body: => T): T = {
+    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("persisted survivors keep the delta's partitions: an append adds " +
+      "one state file per delta partition, not one per shuffle partition") {
+    withSQLConf("spark.sql.shuffle.partitions" -> "16") {
+      val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
+      val old = docs.filter(col("doc_id") % 10 < 6)
+      val stateDir = tmp()
+      Incremental.writeDedupState(old, "doc_id", "text", cfg, stateDir)
+      val stateFiles = new java.io.File(stateDir,
+        s"${Incremental.DedupStateTable}.parquet")
+      def parts(): Int =
+        stateFiles.listFiles().count(_.getName.startsWith("part-"))
+      var kept = Seq.empty[Long]
+      for (m <- 6 to 8) {
+        // a one-file delta table, as an ingest receives it
+        Tables.save(docs.filter(col("doc_id") % 10 === m).coalesce(1),
+          stateDir, s"delta_$m")
+        val delta = Tables.load(spark, stateDir, s"delta_$m")
+        // persisted as an ingest does: a cached plan keeps its output
+        // partitioning, so a shuffled survivor set stays at 16 partitions
+        val survivors = Incremental
+          .crossDedupAgainstState(delta, "doc_id", "text", stateDir, cfg)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val n = delta.rdd.getNumPartitions
+        assert(survivors.rdd.getNumPartitions == n, s"delta $m")
+        // read before the append, which re-plans every cached frame over
+        // the state
+        kept ++= survivors.select("doc_id").collect().map(_.getLong(0))
+        val before = parts()
+        Incremental.appendDedupState(survivors, "doc_id", "text", cfg,
+          stateDir)
+        assert(parts() - before <= n, s"delta $m")
+        survivors.unpersist(blocking = true)
+      }
+      val next = docs.filter(col("doc_id") % 10 === 9)
+      val inc = Incremental
+        .crossDedupAgainstState(next, "doc_id", "text", stateDir, cfg)
+        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+      val grown = old.union(docs.filter(col("doc_id").isin(kept: _*)))
+      val full = Dedup.crossDedup(next, grown, "doc_id", "text", cfg)
+        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+      assert(inc == full)
+      assert(inc.nonEmpty && inc.size < next.count(),
+        "fixture must exercise both keeps and drops")
+    }
+  }
+
   test("pack continuation: prior run + delta-at-high-water ≡ one combined " +
       "run, offsets and bins row-for-row; high-water round-trips state") {
     // prior ids strictly below delta ids — the append ordering contract

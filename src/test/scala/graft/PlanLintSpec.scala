@@ -188,8 +188,9 @@ class PlanLintSpec extends SparkSpec {
     // d07, d10, d11, d12, d16: small pair graphs come back from connected
     // components as a local frame, which the final join broadcasts
     "d07_minhash_dedup_transitive" -> 0,
-    // 7 → 4: no distinct before the victim anti-join or the hash semi-join
-    "d08_cross_dedup" -> 4,
+    // 7 → 4: no distinct before the victim anti-join or the hash semi-join;
+    // 4 → 2: the victims are broadcast into the anti-join
+    "d08_cross_dedup" -> 2,
     "d09_segment_dedup" -> 3,
     "d10_semdedup" -> 0,
     "d11_dedup_clusters" -> 0,
@@ -478,6 +479,28 @@ class PlanLintSpec extends SparkSpec {
     assert(over.isEmpty,
       s"shuffle-exchange budget exceeded — a lost broadcast or redundant " +
         s"shuffle; fix the plan or justify a bump:\n${over.mkString("\n")}")
+  }
+
+  test("cross-dedup broadcasts its victims into the final anti-join and " +
+      "never shuffles the batch") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // a shuffled anti-join leaves the survivors in shuffle-partition
+    // count, so every append of a delta would write that many files
+    val plan = SparkEntry.allQ.find(_.name == "d08_cross_dedup").get
+      .fn(spark, sf).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    val join = plan.collectFirst { case j: BroadcastHashJoinExec => j }
+    assert(join.exists(j => j.joinType == LeftAnti && j.buildSide == BuildRight),
+      plan.treeString)
+    assert(join.get.right.output.map(_.name) == Seq("__victim"), plan.treeString)
+    assert(join.get.left.collectFirst { case e: ShuffleExchangeExec => e }.isEmpty,
+      plan.treeString)
   }
 
   test("no query exceeds its recorded shuffle-exchange budget") {
